@@ -58,6 +58,7 @@ The grep-able float-bearing-output audit lives in SCALING.md
 
 from __future__ import annotations
 
+import math
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Mapping
 
@@ -123,6 +124,17 @@ def literal_row(
         [tuple(_half_up(values[n], decimals) for n in names)],
         ", ".join(f"{n} double" for n in names),
     )
+
+
+def sql_double(x: float) -> str:
+    """A finite value as a Spark SQL double literal (``repr`` + ``D``:
+    the shortest round-tripping form, so the literal parses back to
+    the identical double). Non-finite values have no literal form —
+    ``nanD`` would parse as a column name — so they raise instead."""
+    v = float(x)
+    if not math.isfinite(v):
+        raise ValueError(f"sql_double: non-finite value {v!r}")
+    return repr(v) + "D"
 
 
 def collect_literal_row(df: DataFrame, decimals: int = 6) -> DataFrame:

@@ -56,7 +56,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.determinism import DEC, _half_up
+from ..functions.determinism import DEC, _half_up, sql_double
 
 _HASH_MULT = 2654435761  # Knuth multiplicative hash (public constant)
 _HASH_MOD = 2147483647
@@ -70,7 +70,7 @@ def _dist_sql(vec_expr: str, centroid: Sequence[float]) -> str:
     One ``array(...)`` SQL literal per centroid — NOT ``F.lit(list)``,
     which creates one py4j Column per element (a known seconds-of-
     driver-time trap at thousands of elements)."""
-    arr = ", ".join(repr(float(x)) + "D" for x in centroid)
+    arr = ", ".join(sql_double(x) for x in centroid)
     return (
         f"aggregate(zip_with({vec_expr}, array({arr}), "
         f"(x, y) -> round((cast(x as double) - y) * (cast(x as double) - y), 6)), "
@@ -84,8 +84,7 @@ def _centroid_literal(centroids: Mapping[int, Sequence[float]]) -> tuple[str, st
     cids), in ascending-cid order."""
     cids = sorted(centroids)
     cb = "array(" + ", ".join(
-        "array(" + ", ".join(repr(float(x)) + "D"
-                             for x in centroids[c]) + ")"
+        "array(" + ", ".join(sql_double(x) for x in centroids[c]) + ")"
         for c in cids
     ) + ")"
     return cb, "array(" + ", ".join(str(c) for c in cids) + ")"

@@ -1,5 +1,6 @@
-"""Optimized Product Quantization (OPQ): a data-trained orthogonal
-rotation in front of the PQ / IVF-PQ stack.
+"""Optimized Product Quantization (OPQ): the data-trained orthogonal
+rotation the PQ and IVF-PQ paths of operators/pq.py apply when built
+with ``opq=True``.
 
 PQ slices vectors into m CONTIGUOUS subspaces and quantizes each
 independently, so its distortion depends on how the data's variance
@@ -16,7 +17,8 @@ assumption). No alternating Procrustes loop: the parametric form
 needs ONE covariance pass instead of per-iteration d×d cross-moment
 passes, and on near-Gaussian data reaches most of the lift.
 
-The 100-TB shape, stage by stage:
+This module is the rotation alone — training, the codegen matvec and
+the `rotation/` wire format. How the index paths compose it:
 
 - **Training** adds exactly ONE bounded-statistics pass over what PQ
   already pays: the d-group mean rollup + d(d+1)/2-group covariance
@@ -36,30 +38,27 @@ The 100-TB shape, stage by stage:
   text class as the IVF-PQ reconstruction-norm table) and y = Rx is a
   transform/zip_with matvec per row, fused into the SAME scan that
   slices and encodes — the coding scan stays one zero-shuffle pass.
-- **Query**: rotate the query (per-row matvec, |Q| rows), build the
-  ADC lookup table from the rotated query against the rotated-space
-  codebooks. Because R is orthogonal, <Rq, Rx> = <q, x> and norms are
-  preserved, so ADC scores in the rotated space estimate the SAME
-  cosine — and the exact re-rank runs in the ORIGINAL space against
-  the untouched corpus, producing bit-identical exact scores to the
-  plain PQ/IVF-PQ paths (dominance comparisons stay apples-to-apples,
-  and the 6-dp rounding of R never touches the reported cosines).
-- **IVF-PQ composition**: the rotation is trained on the RESIDUALS
-  (what the codebooks actually see) and applied inside the existing
-  single coding scan; the coarse probe and the <q, c_cell> term stay
-  in the original space. The reconstruction norm uses the identity
-  ‖c + Rᵀr̂‖ = ‖Rc + r̂‖: feed the ROTATED centroids to the existing
-  norm-table builder and everything downstream is unchanged.
+- **Query**: the ADC lookup table is built from the rotated query
+  against the rotated-space codebooks. Because R is orthogonal,
+  <Rq, Rx> = <q, x> and norms are preserved, so ADC scores in the
+  rotated space estimate the SAME cosine — and the exact re-rank runs
+  in the ORIGINAL space against the untouched corpus, producing
+  bit-identical exact scores to the unrotated paths (the 6-dp
+  rounding of R never touches the reported cosines).
+- **IVF-PQ**: the rotation is trained on the RESIDUALS (what the
+  codebooks actually see) and applied inside the single coding scan;
+  the coarse probe and the <q, c_cell> term stay in the original
+  space, and the reconstruction norm uses ‖c + Rᵀr̂‖ = ‖Rc + r̂‖.
 
 Where it helps: anisotropic corpora (the common case for learned
 embeddings after projection heads) — pinned in tests/test_opq.py with
 a planted-anisotropy fixture where OPQ cuts PQ distortion ~20× and
 strictly lifts recall. Where it can't: the synthetic test embeddings
 are near-isotropic (covariance eigenvalue spread <2×, per-subspace
-variance products already balanced — measured round 12), so at sf0.1
-OPQ is pinned as "no regression vs plain PQ" rather than a lift; and
-composed IVF-PQ recall at a given nprobe is CEILINGED by the probed
-cells (residual PQ already reaches that ceiling exactly, see
+variance products already balanced), so at sf0.1 OPQ is pinned as
+"no regression vs plain PQ" rather than a lift; and composed IVF-PQ
+recall at a given nprobe is CEILINGED by the probed cells (residual
+PQ already reaches that ceiling exactly, see
 tests/test_ann_recall_sf01.py), so no quantizer improvement can raise
 it — OPQ's value there is holding the ceiling at cheaper dials.
 
@@ -74,29 +73,13 @@ import math
 from typing import Mapping, Sequence
 
 import numpy as np
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.determinism import _half_up
+from ..functions.determinism import _half_up, sql_double
 from .clustering import _checked_base
 from .pca import covariance_upper, dim_means
-from .pq import (
-    Codebooks,
-    RawCells,
-    _adc_rerank,
-    _cell_topn_expr,
-    _codes_from_resid,
-    _encode_on_base,
-    _guarded_q_norm,
-    _lut_expr,
-    _norm_table_sql,
-    _prepared_cells,
-    _read_codebooks,
-    _residual_frame,
-    _train_books,
-    _write_codebooks,
-)
-from .similarity import with_norm
 
 Rotation = list[list[float]]  # rows = rotated dims; y = R @ x
 
@@ -179,21 +162,25 @@ def opq_train_rotation(
     dims: int = 64,
     m: int = 8,
     cache: bool = True,
+    n_rows: int | None = None,
 ) -> Rotation:
     """Train an OPQ rotation from a vector frame: one mean pass + one
     covariance pass (both bounded-exchange, see operators/pca.py),
     then driver-side eigen-allocation. Validates through
     `_checked_base` like every trainer (a poisoned vector would
-    silently drop out of the covariance sums)."""
-    base, _, n = _checked_base(
-        df, id_col, vec_col, cache, "opq_train_rotation", dims=dims
-    )
-    if n < 2:
-        raise ValueError(
-            f"opq_train_rotation: needs >= 2 rows, got {n}"
+    silently drop out of the covariance sums); callers holding an
+    already-validated frame pass its row count as ``n_rows`` to skip
+    the re-validation (the ivf_build_index convention)."""
+    if n_rows is None:
+        df, _, n_rows = _checked_base(
+            df, id_col, vec_col, cache, "opq_train_rotation", dims=dims
         )
-    means = dim_means(base, vec_col, n)
-    cov = covariance_upper(base, vec_col, dims, means, n)
+    if n_rows < 2:
+        raise ValueError(
+            f"opq_train_rotation: needs >= 2 rows, got {n_rows}"
+        )
+    means = dim_means(df, vec_col, n_rows)
+    cov = covariance_upper(df, vec_col, dims, means, n_rows)
     return opq_rotation_from_cov(cov, dims, m)
 
 
@@ -208,7 +195,7 @@ def rotation_expr(vec_col: str, rotation: Rotation) -> str:
     is a zip_with dot product — no join, no shuffle, fuses into
     whatever scan projects it."""
     rows = ", ".join(
-        "array(" + ", ".join(repr(float(x)) + "D" for x in row) + ")"
+        "array(" + ", ".join(sql_double(x) for x in row) + ")"
         for row in rotation
     )
     return (
@@ -226,271 +213,6 @@ def rotate_vectors(
     return df.withColumn(vec_col, F.expr(rotation_expr(vec_col, rotation)))
 
 
-def _rotated_centroids(
-    cents_raw: Mapping[int, Sequence[float]], rotation: Rotation
-) -> RawCells:
-    """R @ c per coarse cell, driver-side (n_cells·d² flops on
-    already-collected state). Used for the IVF-PQ reconstruction-norm
-    table via ‖c + Rᵀr̂‖ = ‖Rc + r̂‖."""
-    return {
-        cell: [
-            sum(r * float(x) for r, x in zip(row, vec))
-            for row in rotation
-        ]
-        for cell, vec in cents_raw.items()
-    }
-
-
-# ---------------------------------------------------------------------------
-# OPQ + plain PQ
-# ---------------------------------------------------------------------------
-
-
-def opq_pq_build(
-    corpus: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-) -> tuple[Rotation, Codebooks, DataFrame]:
-    """Train rotation + rotated-space codebooks + codes off ONE
-    validated/checkpointed projection (the pq_ann_topk shared-base
-    discipline: composing the public pieces would re-validate and
-    re-checkpoint the same frame per stage). The rotated projection is
-    itself lazily checkpointed — the covariance pass reads the base
-    once, then training iterations and the coding scan read the
-    rotated copy without re-paying the matvec."""
-    if dims % m:
-        raise ValueError(
-            f"opq_pq_build: dims={dims} not divisible by m={m}"
-        )
-    base, _, n = _checked_base(corpus, id_col, vec_col, True,
-                               "opq_pq_build", dims=dims)
-    means = dim_means(base, vec_col, n)
-    cov = covariance_upper(base, vec_col, dims, means, n)
-    rotation = opq_rotation_from_cov(cov, dims, m)
-    rot = rotate_vectors(base, rotation, vec_col).localCheckpoint(
-        eager=False
-    )
-    books = _train_books(rot, id_col, vec_col, dims, m, ksub,
-                         iterations, n, who="opq_pq_build")
-    codes = _encode_on_base(rot, books, id_col, vec_col, dims)
-    return rotation, books, codes
-
-
-def opq_topk_with_index(
-    queries: DataFrame,
-    rotation: Rotation,
-    codebooks: Codebooks,
-    codes: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    rerank: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-    round_dp: int = 6,
-) -> DataFrame:
-    """Top-k cosine via rotated-space ADC + ORIGINAL-space exact
-    re-rank (see the module docstring: <Rq, Rx> = <q, x>, so the ADC
-    estimate targets the same cosine and the exact stage never sees
-    the rotation). Mirrors pq_topk_with_index with the lut built from
-    the rotated query — projected once as a named column, the
-    CollapseProject multiply-reference rule."""
-    q = (
-        with_norm(queries, vec_col)
-        .withColumn("__rq", F.expr(rotation_expr(vec_col, rotation)))
-        .select(
-            F.col(id_col).alias("query_id"),
-            _guarded_q_norm(vec_col, dims, "opq_topk_with_index").alias(
-                "q_norm"
-            ),
-            F.expr(_lut_expr("__rq", codebooks, dims)).alias("lut"),
-            F.lit(0.0).alias("qc"),
-        )
-    )
-    m = len(codebooks)
-    rnorm = (
-        "sqrt(aggregate(sequence(1, {m}), 0.0D, (a, s) -> "
-        "a + element_at(element_at({nsq}, s), element_at(codes, s))))"
-    ).format(m=m, nsq=_norm_table_sql(codebooks))
-    joined = codes.crossJoin(F.broadcast(q))
-    return _adc_rerank(
-        joined, codebooks, queries, corpus,
-        k=k, rerank=rerank, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-        rnorm_sql=rnorm,
-    )
-
-
-def opq_pq_ann_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    m: int = 8,
-    ksub: int = 16,
-    iterations: int = 2,
-    rerank: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-    round_dp: int = 6,
-) -> DataFrame:
-    """OPQ-rotated PQ ANN in one call (the q250 shape plus the
-    rotation dial). For the build-nightly / query-all-day split use
-    opq_pq_build / save_opq_pq_index and query via
-    opq_topk_with_index."""
-    rotation, books, codes = opq_pq_build(
-        corpus, m=m, ksub=ksub, iterations=iterations,
-        id_col=id_col, vec_col=vec_col, dims=dims,
-    )
-    return opq_topk_with_index(
-        queries, rotation, books, codes, corpus,
-        k=k, rerank=rerank, id_col=id_col, vec_col=vec_col,
-        dims=dims, round_dp=round_dp,
-    )
-
-
-# ---------------------------------------------------------------------------
-# OPQ + IVF-PQ (rotation on residuals, inside the one coding scan)
-# ---------------------------------------------------------------------------
-
-
-def opq_ivfpq_build(
-    corpus: DataFrame,
-    n_cells: int = 32,
-    m: int = 8,
-    ksub: int = 16,
-    iterations: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-) -> tuple[RawCells, Rotation, Codebooks, DataFrame]:
-    """IVF-PQ build with an OPQ rotation trained on the RESIDUALS —
-    what the codebooks actually quantize (rotating raw vectors would
-    optimize the wrong covariance: the coarse quantizer has already
-    absorbed the between-cell structure). Same plan skeleton as
-    ivfpq_build plus one bounded covariance pass over the checkpointed
-    residual frame; the rotation matvec fuses into the residual
-    projection, so coding remains ONE zero-shuffle scan."""
-    if dims % m:
-        raise ValueError(
-            f"opq_ivfpq_build: dims={dims} not divisible by m={m}"
-        )
-    from .similarity import ivf_build_index
-
-    base, _, n = _checked_base(corpus, id_col, vec_col, True,
-                               "opq_ivfpq_build", dims=dims)
-    cents, _ = ivf_build_index(
-        base, n_cells=n_cells, id_col=id_col, vec_col=vec_col, n_rows=n,
-        assignments=False,
-    )
-    cents_raw: RawCells = {
-        int(r["cell"]): [float(x) for x in r["c_vec"]]
-        for r in cents.collect()
-        if float(r["c_norm"]) > 0
-    }
-    resid = _residual_frame(base, cents_raw, id_col, vec_col)
-    resid = resid.localCheckpoint(eager=False)
-    means = dim_means(resid, "rvec", n)
-    cov = covariance_upper(resid, "rvec", dims, means, n)
-    rotation = opq_rotation_from_cov(cov, dims, m)
-    rot = resid.withColumn(
-        "rvec", F.expr(rotation_expr("rvec", rotation))
-    ).localCheckpoint(eager=False)
-    books = _train_books(rot, "id", "rvec", dims, m, ksub,
-                         iterations, n, who="opq_ivfpq_build")
-    coded = _codes_from_resid(
-        rot, books, dims, _rotated_centroids(cents_raw, rotation)
-    )
-    return cents_raw, rotation, books, coded
-
-
-def opq_ivfpq_topk_with_index(
-    queries: DataFrame,
-    cents_raw: Mapping[int, Sequence[float]],
-    rotation: Rotation,
-    books: Codebooks,
-    coded: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    nprobe: int = 8,
-    rerank: int = 150,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-    round_dp: int = 6,
-) -> DataFrame:
-    """Top-k against a prebuilt (possibly reloaded) OPQ-IVF-PQ index.
-    The probe ranking and the coarse term <q, c_cell> stay in the
-    ORIGINAL space (rotation doesn't touch the coarse quantizer); the
-    lut comes from the ROTATED query against the rotated-residual
-    codebooks, and rn2 was coded with rotated centroids, so the ADC
-    decomposition <q, x̂> = <q, c> + <Rq, r̂_rot> holds exactly (up to
-    the 6-dp rotation rounding, which only perturbs candidate order —
-    the exact re-rank is original-space)."""
-    _, cents_norm, _, cnorm = _prepared_cells(cents_raw)
-    q = (
-        with_norm(queries, vec_col)
-        .withColumn("__rq", F.expr(rotation_expr(vec_col, rotation)))
-        .select(
-            F.col(id_col).alias("query_id"),
-            _guarded_q_norm(
-                vec_col, dims, "opq_ivfpq_topk_with_index"
-            ).alias("q_norm"),
-            F.expr(_lut_expr("__rq", books, dims)).alias("lut"),
-            F.explode(
-                F.expr(_cell_topn_expr(vec_col, cents_norm, nprobe))
-            ).alias("p"),
-        )
-        .select(
-            "query_id",
-            "q_norm",
-            "lut",
-            F.col("p.cell").alias("cell"),
-            (-F.col("p.nd") * F.expr(f"element_at({cnorm}, p.pos)"))
-            .alias("qc"),
-        )
-    )
-    joined = coded.join(F.broadcast(q), "cell")
-    return _adc_rerank(
-        joined, books, queries, corpus,
-        k=k, rerank=rerank, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-        rnorm_sql="sqrt(rn2)",
-    )
-
-
-def opq_ivfpq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    n_cells: int = 32,
-    nprobe: int = 8,
-    m: int = 8,
-    ksub: int = 16,
-    iterations: int = 1,
-    rerank: int = 150,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-    round_dp: int = 6,
-) -> DataFrame:
-    """OPQ-rotated IVF-PQ in one call (the q254 shape plus the
-    rotation dial)."""
-    cents_raw, rotation, books, coded = opq_ivfpq_build(
-        corpus, n_cells=n_cells, m=m, ksub=ksub, iterations=iterations,
-        id_col=id_col, vec_col=vec_col, dims=dims,
-    )
-    return opq_ivfpq_topk_with_index(
-        queries, cents_raw, rotation, books, coded, corpus,
-        k=k, nprobe=nprobe, rerank=rerank,
-        id_col=id_col, vec_col=vec_col, dims=dims, round_dp=round_dp,
-    )
-
-
 # ---------------------------------------------------------------------------
 # persistence (build nightly, query all day)
 # ---------------------------------------------------------------------------
@@ -498,76 +220,24 @@ def opq_ivfpq_topk(
 
 def save_opq_rotation(spark, rotation: Rotation, path: str) -> None:
     """Rotation wire format: (i, row) — one parquet row per rotated
-    dimension, 1-indexed, shared by both OPQ index layouts."""
+    dimension, 1-indexed; the `rotation/` directory of a PQ or IVF-PQ
+    index."""
     spark.createDataFrame(
         [(i + 1, list(row)) for i, row in enumerate(rotation)],
         "i int, row array<double>",
     ).write.mode("overwrite").parquet(path)
 
 
-def load_opq_rotation(spark, path: str) -> Rotation:
-    rows = {
-        r["i"]: [float(x) for x in r["row"]]
-        for r in spark.read.parquet(path).collect()
-    }
+def load_opq_rotation(spark, path: str) -> Rotation | None:
+    """The rotation saved at ``path``, or None when none was saved
+    (an index built without OPQ)."""
+    try:
+        rows = {
+            r["i"]: [float(x) for x in r["row"]]
+            for r in spark.read.parquet(path).collect()
+        }
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
     return [rows[i] for i in sorted(rows)]
-
-
-def save_opq_pq_index(
-    spark, rotation: Rotation, codebooks: Codebooks, codes: DataFrame,
-    path: str,
-) -> None:
-    """Persist an OPQ-PQ index: rotation + rotated-space codebooks +
-    codes (the save_pq_index layout plus the rotation)."""
-    save_opq_rotation(spark, rotation, f"{path}/rotation")
-    _write_codebooks(spark, codebooks, f"{path}/codebooks")
-    codes.write.mode("overwrite").parquet(f"{path}/codes")
-
-
-def load_opq_pq_index(
-    spark, path: str
-) -> tuple[Rotation, Codebooks, DataFrame]:
-    """Reload a persisted OPQ-PQ index; reload ≡ rebuild is pinned in
-    tests/test_opq.py."""
-    return (
-        load_opq_rotation(spark, f"{path}/rotation"),
-        _read_codebooks(spark, f"{path}/codebooks"),
-        spark.read.parquet(f"{path}/codes"),
-    )
-
-
-def save_opq_ivfpq_index(
-    spark,
-    cents_raw: Mapping[int, Sequence[float]],
-    rotation: Rotation,
-    codebooks: Codebooks,
-    coded: DataFrame,
-    path: str,
-) -> None:
-    """Persist an OPQ-IVF-PQ index (the save_ivfpq_index layout plus
-    the rotation). RAW centroids remain the wire format; the rotated
-    centroids the norm table needs are re-derived on load."""
-    spark.createDataFrame(
-        [(c, list(v)) for c, v in sorted(cents_raw.items())],
-        "cell int, c_vec array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/cells")
-    save_opq_rotation(spark, rotation, f"{path}/rotation")
-    _write_codebooks(spark, codebooks, f"{path}/codebooks")
-    coded.write.mode("overwrite").parquet(f"{path}/coded")
-
-
-def load_opq_ivfpq_index(
-    spark, path: str
-) -> tuple[RawCells, Rotation, Codebooks, DataFrame]:
-    """Reload a persisted OPQ-IVF-PQ index; reload ≡ rebuild is pinned
-    in tests/test_opq.py."""
-    cents_raw = {
-        int(r["cell"]): [float(x) for x in r["c_vec"]]
-        for r in spark.read.parquet(f"{path}/cells").collect()
-    }
-    return (
-        cents_raw,
-        load_opq_rotation(spark, f"{path}/rotation"),
-        _read_codebooks(spark, f"{path}/codebooks"),
-        spark.read.parquet(f"{path}/coded"),
-    )

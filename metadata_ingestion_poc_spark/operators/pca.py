@@ -34,7 +34,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.determinism import DEC, _half_up
+from ..functions.determinism import DEC, _half_up, sql_double
 
 _Q12 = Decimal("1e-12")
 
@@ -82,7 +82,7 @@ def covariance_rollup(
     d(d+1)/2-group decimal-sum frame BEFORE the bounded collect.
     Exposed so plan contracts pin the real operator's shape (no
     corpus self-join, exchanges bounded by d²)."""
-    marr = ", ".join(repr(float(x)) + "D" for x in means)
+    marr = ", ".join(sql_double(x) for x in means)
     cells = (
         f"flatten(transform(sequence(1, {dims}), i -> "
         f"transform(sequence(i, {dims}), j -> named_struct("

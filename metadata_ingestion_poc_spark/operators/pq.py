@@ -76,8 +76,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.determinism import DEC, _half_up
+from ..functions.determinism import DEC, _half_up, sql_double
 from .clustering import _checked_base, seed_centroids
+from .opq import (
+    Rotation,
+    load_opq_rotation,
+    opq_train_rotation,
+    rotate_vectors,
+    rotation_expr,
+    save_opq_rotation,
+)
 from .similarity import dot, with_norm
 
 Codebooks = dict[int, dict[int, list[float]]]  # sub -> cid -> codeword
@@ -100,15 +108,13 @@ def _book_literal(book: Mapping[int, Sequence[float]],
         dsub = len(next(iter(book.values())))
         zero = "array(" + ", ".join("0.0D" for _ in range(dsub)) + ")"
         rows = [
-            "array(" + ", ".join(repr(float(x)) + "D"
-                                 for x in book[cid]) + ")"
+            "array(" + ", ".join(sql_double(x) for x in book[cid]) + ")"
             if cid in book else zero
             for cid in range(1, max(book) + 1)
         ]
     else:
         rows = [
-            "array(" + ", ".join(repr(float(x)) + "D"
-                                 for x in book[cid]) + ")"
+            "array(" + ", ".join(sql_double(x) for x in book[cid]) + ")"
             for cid in sorted(book)
         ]
     return f"array({', '.join(rows)})"
@@ -322,7 +328,7 @@ def _norm_table_sql(codebooks: Codebooks) -> str:
     for sub in range(1, m + 1):
         book = codebooks[sub]
         vals = ", ".join(
-            repr(sum(v * v for v in book[cid])) + "D"
+            sql_double(sum(v * v for v in book[cid]))
             if cid in book else "0.0D"
             for cid in range(1, max(book) + 1)
         )
@@ -350,6 +356,42 @@ def _lut_expr(vec_col: str, codebooks: Codebooks, dims: int) -> str:
     return f"array({', '.join(subs)})"
 
 
+def _lut_input(
+    queries: DataFrame, vec_col: str, rotation: Rotation | None
+) -> tuple[DataFrame, str]:
+    """``with_norm(queries)`` and the column the ADC lookup table
+    reads: the query vector itself, or under a rotation the rotated
+    query projected once as a named column (the CollapseProject
+    multiply-reference rule)."""
+    q = with_norm(queries, vec_col)
+    if rotation is None:
+        return q, vec_col
+    rq = F.expr(rotation_expr(vec_col, rotation))
+    return q.withColumn("__rq", rq), "__rq"
+
+
+def _rotated(
+    frame: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dims: int,
+    m: int,
+    n: int,
+    opq: bool,
+) -> tuple[Rotation | None, DataFrame]:
+    """(rotation, frame the codebooks train and code on). Without
+    ``opq`` that is ``frame`` itself; with it, the rotation trained on
+    ``frame`` and a lazily checkpointed rotated copy — the covariance
+    pass reads ``frame`` once, then training iterations and the coding
+    scan read the copy without re-paying the matvec."""
+    if not opq:
+        return None, frame
+    rotation = opq_train_rotation(frame, id_col, vec_col, dims, m,
+                                  n_rows=n)
+    rot = rotate_vectors(frame, rotation, vec_col)
+    return rotation, rot.localCheckpoint(eager=False)
+
+
 def pq_topk_with_index(
     queries: DataFrame,
     codes: DataFrame,
@@ -361,18 +403,22 @@ def pq_topk_with_index(
     vec_col: str = "embedding",
     dims: int = 64,
     round_dp: int = 6,
+    rotation: Rotation | None = None,
 ) -> DataFrame:
     """Top-k cosine via ADC over prebuilt codes + exact re-rank.
 
     Scan cost per corpus row: m element_at lookups + a fold (the
     compressed-domain scan); only |Q|·rerank candidate rows ever touch
-    a real vector again (broadcast join, one corpus scan)."""
-    q = with_norm(queries, vec_col).select(
+    a real vector again (broadcast join, one corpus scan). Pass the
+    build's ``rotation`` for an OPQ index: the lookup table then comes
+    from the rotated query, the exact re-rank stays original-space."""
+    q, lut_in = _lut_input(queries, vec_col, rotation)
+    q = q.select(
         F.col(id_col).alias("query_id"),
         _guarded_q_norm(vec_col, dims, "pq_topk_with_index").alias(
             "q_norm"
         ),
-        F.expr(_lut_expr(vec_col, codebooks, dims)).alias("lut"),
+        F.expr(_lut_expr(lut_in, codebooks, dims)).alias("lut"),
         # plain PQ reconstructs x̂ from the codewords alone: no coarse
         # term (qc = 0) — the one-cell degenerate case of the shared
         # IVFADC scorer. ‖x̂‖ comes from the small m·ksub norm-table
@@ -485,6 +531,54 @@ def _adc_rerank(
     )
 
 
+def _pq_build_on_base(
+    corpus: DataFrame,
+    m: int,
+    ksub: int,
+    iterations: int,
+    id_col: str,
+    vec_col: str,
+    dims: int,
+    opq: bool,
+    who: str,
+) -> tuple[DataFrame, Rotation | None, Codebooks, DataFrame]:
+    """:func:`pq_build` plus the validated base it ran on."""
+    if dims % m:
+        raise ValueError(f"{who}: dims={dims} not divisible by m={m}")
+    base, _, n = _checked_base(corpus, id_col, vec_col, True, who,
+                               dims=dims)
+    rotation, rot = _rotated(base, id_col, vec_col, dims, m, n, opq)
+    books = _train_books(rot, id_col, vec_col, dims, m, ksub,
+                         iterations, n, who=who)
+    codes = _encode_on_base(rot, books, id_col, vec_col, dims)
+    return base, rotation, books, codes
+
+
+def pq_build(
+    corpus: DataFrame,
+    m: int = 8,
+    ksub: int = 16,
+    iterations: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dims: int = 64,
+    opq: bool = False,
+) -> tuple[Rotation | None, Codebooks, DataFrame]:
+    """Build a PQ index: (rotation, codebooks, codes). Rotation,
+    codebooks and codes all come off ONE validated/checkpointed
+    projection (the public pq_train + pq_encode pair each validates
+    its own input; composing them would pay the checkpoint twice).
+    ``opq=True`` trains an OPQ rotation (operators/opq.py) and
+    quantizes in the rotated basis; otherwise the rotation is None.
+    Persist with ``save_pq_index``, query with ``pq_topk_with_index``
+    (the build-nightly / query-all-day split)."""
+    _, rotation, books, codes = _pq_build_on_base(
+        corpus, m, ksub, iterations, id_col, vec_col, dims, opq,
+        "pq_build",
+    )
+    return rotation, books, codes
+
+
 def pq_ann_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -497,25 +591,19 @@ def pq_ann_topk(
     vec_col: str = "embedding",
     dims: int = 64,
     round_dp: int = 6,
+    opq: bool = False,
 ) -> DataFrame:
-    """Train + encode + ADC + re-rank in one call (the q250 shape).
-    Validates/checkpoints the corpus projection ONCE and shares it
-    between training and encoding (the public pq_train + pq_encode
-    pair each validates its own input; composing them here would pay
-    the checkpoint twice). For the build-nightly/query-all-day split,
-    use pq_train / pq_encode / save_pq_index and query via
-    pq_topk_with_index."""
-    if dims % m:
-        raise ValueError(f"pq_ann_topk: dims={dims} not divisible by m={m}")
-    base, _, n = _checked_base(corpus, id_col, vec_col, True,
-                               "pq_ann_topk", dims=dims)
-    books = _train_books(base, id_col, vec_col, dims, m, ksub,
-                         iterations, n, who="pq_ann_topk")
-    codes = _encode_on_base(base, books, id_col, vec_col, dims)
+    """Build + ADC + re-rank in one call (the q250 shape; q289 with
+    ``opq=True``). The exact re-rank reads the build's checkpointed
+    base instead of re-scanning the corpus."""
+    base, rotation, books, codes = _pq_build_on_base(
+        corpus, m, ksub, iterations, id_col, vec_col, dims, opq,
+        "pq_ann_topk",
+    )
     return pq_topk_with_index(
         queries, codes, books, base,
         k=k, rerank=rerank, id_col=id_col, vec_col=vec_col,
-        dims=dims, round_dp=round_dp,
+        dims=dims, round_dp=round_dp, rotation=rotation,
     )
 
 
@@ -542,18 +630,28 @@ def _read_codebooks(spark, path: str) -> Codebooks:
 
 
 def save_pq_index(
-    spark, codebooks: Codebooks, codes: DataFrame, path: str
+    spark,
+    codebooks: Codebooks,
+    codes: DataFrame,
+    path: str,
+    rotation: Rotation | None = None,
 ) -> None:
-    """Persist codebooks + codes as parquet (build nightly, query all
-    day — the save_ivf_index operational shape)."""
+    """Persist codebooks + codes (+ the rotation, when there is one)
+    as parquet (build nightly, query all day — the save_ivf_index
+    operational shape)."""
+    if rotation is not None:
+        save_opq_rotation(spark, rotation, f"{path}/rotation")
     _write_codebooks(spark, codebooks, f"{path}/codebooks")
     codes.write.mode("overwrite").parquet(f"{path}/codes")
 
 
-def load_pq_index(spark, path: str) -> tuple[Codebooks, DataFrame]:
-    """Reload a persisted PQ index; reload ≡ rebuild is pinned in
-    tests/test_similarity.py."""
+def load_pq_index(
+    spark, path: str
+) -> tuple[Rotation | None, Codebooks, DataFrame]:
+    """Reload a persisted PQ index in pq_build's shape; reload ≡
+    rebuild is pinned in tests/test_opq.py."""
     return (
+        load_opq_rotation(spark, f"{path}/rotation"),
         _read_codebooks(spark, f"{path}/codebooks"),
         spark.read.parquet(f"{path}/codes"),
     )
@@ -661,11 +759,10 @@ def _prepared_cells(
         c: [float(x) / norms[c] for x in cents_raw[c]] for c in cells
     }
     craw = "array(" + ", ".join(
-        "array(" + ", ".join(repr(float(x)) + "D" for x in cents_raw[c])
-        + ")"
+        "array(" + ", ".join(sql_double(x) for x in cents_raw[c]) + ")"
         for c in cells
     ) + ")"
-    cnorm = "array(" + ", ".join(repr(norms[c]) + "D" for c in cells) + ")"
+    cnorm = "array(" + ", ".join(sql_double(norms[c]) for c in cells) + ")"
     return cells, cents_norm, craw, cnorm
 
 
@@ -683,8 +780,7 @@ def _cell_topn_expr(
     to the IVF coarse quantizer."""
     cells = sorted(cents_norm)
     cb = "array(" + ", ".join(
-        "array(" + ", ".join(repr(float(x)) + "D"
-                             for x in cents_norm[c]) + ")"
+        "array(" + ", ".join(sql_double(x) for x in cents_norm[c]) + ")"
         for c in cells
     ) + ")"
     cell_arr = "array(" + ", ".join(str(c) for c in cells) + ")"
@@ -729,7 +825,7 @@ def _ivfpq_norm3_sql(
                     v = sum(x * x for x in sl)
                 else:
                     v = sum((x + w) * (x + w) for x, w in zip(sl, cw))
-                vals.append(repr(float(v)) + "D")
+                vals.append(sql_double(v))
             subs.append("array(" + ", ".join(vals) + ")")
         per_cell.append(f"array({', '.join(subs)})")
     return f"array({', '.join(per_cell)})"
@@ -749,6 +845,7 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     dims: int = 64,
     round_dp: int = 6,
+    opq: bool = False,
 ) -> DataFrame:
     """IVF-PQ: the composed production ANN architecture (the IVFADC
     form of Jégou et al., public literature) — coarse inverted-file
@@ -772,8 +869,9 @@ def ivfpq_topk(
     bounded literal tables, so the scan floor is nprobe/n_cells of
     the corpus in the COMPRESSED domain. Exact re-rank = |Q|·rerank
     rows broadcast against one corpus scan (the pq_topk_with_index
-    tail)."""
-    cents_raw, books, coded = ivfpq_build(
+    tail). ``opq=True`` adds an OPQ rotation of the residuals (the
+    q290 shape, see ivfpq_build)."""
+    cents_raw, rotation, books, coded = ivfpq_build(
         corpus,
         n_cells=n_cells,
         m=m,
@@ -782,11 +880,13 @@ def ivfpq_topk(
         id_col=id_col,
         vec_col=vec_col,
         dims=dims,
+        opq=opq,
     )
     return ivfpq_topk_with_index(
         queries, cents_raw, books, coded, corpus,
         k=k, nprobe=nprobe, rerank=rerank,
         id_col=id_col, vec_col=vec_col, dims=dims, round_dp=round_dp,
+        rotation=rotation,
     )
 
 
@@ -799,14 +899,22 @@ def ivfpq_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dims: int = 64,
-) -> tuple[RawCells, Codebooks, DataFrame]:
+    opq: bool = False,
+) -> tuple[RawCells, Rotation | None, Codebooks, DataFrame]:
     """The EXPENSIVE phase of IVF-PQ: coarse quantizer training, ONE
     zero-shuffle codegen scan producing the checkpointed
     (id, cell, residual) frame, residual PQ codebook training over it,
     and the coded corpus (id, cell, codes) off the same frame.
-    Returns (RAW centroids, codebooks, coded corpus); persist with
-    ``save_ivfpq_index`` so query batches reuse the index (the
+    Returns (RAW centroids, rotation, codebooks, coded corpus); persist
+    with ``save_ivfpq_index`` so query batches reuse the index (the
     build-nightly / query-all-day shape).
+
+    ``opq=True`` trains an OPQ rotation on the RESIDUALS — what the
+    codebooks actually quantize (rotating raw vectors would optimize
+    the wrong covariance: the coarse quantizer has already absorbed
+    the between-cell structure) — with one bounded covariance pass;
+    the matvec fuses into the residual projection, so coding stays ONE
+    zero-shuffle scan. Without it the rotation is None.
 
     The input is validated/checkpointed once via `_checked_base`
     (fail-loud on ragged/NULL/wrong-dims vectors — a poisoned vector
@@ -835,10 +943,17 @@ def ivfpq_build(
     }
     resid = _residual_frame(base, cents_raw, id_col, vec_col)
     resid = resid.localCheckpoint(eager=False)
-    books = _train_books(resid, "id", "rvec", dims, m, ksub,
+    rotation, rot = _rotated(resid, "id", "rvec", dims, m, n, opq)
+    books = _train_books(rot, "id", "rvec", dims, m, ksub,
                          iterations, n, who="ivfpq_build")
-    return cents_raw, books, _codes_from_resid(resid, books, dims,
-                                                cents_raw)
+    # the norm table wants the centroids in the codebooks' basis:
+    # ‖c + Rᵀr̂‖ = ‖Rc + r̂‖
+    norm_cents = cents_raw if rotation is None else {
+        cell: [sum(r * x for r, x in zip(row, vec)) for row in rotation]
+        for cell, vec in cents_raw.items()
+    }
+    coded = _codes_from_resid(rot, books, dims, norm_cents)
+    return cents_raw, rotation, books, coded
 
 
 def _residual_frame(
@@ -994,30 +1109,38 @@ def save_ivfpq_index(
     codebooks: Codebooks,
     coded: DataFrame,
     path: str,
+    rotation: Rotation | None = None,
 ) -> None:
-    """Persist an IVF-PQ index (RAW coarse centroids + residual PQ
-    codebooks + coded corpus) as parquet. Raw centroids are the wire
-    format: normalized ranking vectors, norms, and the reconstruction
-    tables are all derived from them deterministically on load."""
+    """Persist an IVF-PQ index (RAW coarse centroids + the rotation,
+    when there is one + residual PQ codebooks + coded corpus) as
+    parquet. Raw centroids are the wire format: normalized ranking
+    vectors and norms are derived from them deterministically on
+    load."""
     spark.createDataFrame(
         [(c, list(v)) for c, v in sorted(cents_raw.items())],
         "cell int, c_vec array<double>",
     ).write.mode("overwrite").parquet(f"{path}/cells")
+    if rotation is not None:
+        save_opq_rotation(spark, rotation, f"{path}/rotation")
     _write_codebooks(spark, codebooks, f"{path}/codebooks")
     coded.write.mode("overwrite").parquet(f"{path}/coded")
 
 
 def load_ivfpq_index(
     spark, path: str
-) -> tuple[RawCells, Codebooks, DataFrame]:
-    """Reload a persisted IVF-PQ index; reload ≡ rebuild is pinned in
-    tests/test_similarity.py."""
+) -> tuple[RawCells, Rotation | None, Codebooks, DataFrame]:
+    """Reload a persisted IVF-PQ index in ivfpq_build's shape; reload
+    ≡ rebuild is pinned in tests/test_opq.py."""
     cents_raw = {
         int(r["cell"]): [float(x) for x in r["c_vec"]]
         for r in spark.read.parquet(f"{path}/cells").collect()
     }
-    books = _read_codebooks(spark, f"{path}/codebooks")
-    return cents_raw, books, spark.read.parquet(f"{path}/coded")
+    return (
+        cents_raw,
+        load_opq_rotation(spark, f"{path}/rotation"),
+        _read_codebooks(spark, f"{path}/codebooks"),
+        spark.read.parquet(f"{path}/coded"),
+    )
 
 
 def ivfpq_topk_with_index(
@@ -1033,6 +1156,7 @@ def ivfpq_topk_with_index(
     vec_col: str = "embedding",
     dims: int = 64,
     round_dp: int = 6,
+    rotation: Rotation | None = None,
 ) -> DataFrame:
     """Top-k against a prebuilt (possibly reloaded) IVF-PQ index.
 
@@ -1042,14 +1166,22 @@ def ivfpq_topk_with_index(
     column the coding scan precomputed (see _codes_from_resid).
     <q, c_cell> falls out of the probe ranking for free: the probe
     sorts by the normalized-centroid dot, so the raw dot is that
-    value times the (literal) raw norm."""
+    value times the (literal) raw norm.
+
+    With the build's ``rotation`` the probe and <q, c_cell> stay in
+    the ORIGINAL space (the rotation never touches the coarse
+    quantizer) while the lut comes from the rotated query against the
+    rotated-residual codebooks; rn2 was coded with rotated centroids,
+    so <q, x̂> = <q, c> + <Rq, r̂> holds up to the 6-dp rounding of R,
+    which only perturbs candidate order (the re-rank is exact)."""
     _, cents_norm, _, cnorm = _prepared_cells(cents_raw)
-    q = with_norm(queries, vec_col).select(
+    q, lut_in = _lut_input(queries, vec_col, rotation)
+    q = q.select(
         F.col(id_col).alias("query_id"),
         _guarded_q_norm(vec_col, dims, "ivfpq_topk_with_index").alias(
             "q_norm"
         ),
-        F.expr(_lut_expr(vec_col, books, dims)).alias("lut"),
+        F.expr(_lut_expr(lut_in, books, dims)).alias("lut"),
         F.explode(
             F.expr(_cell_topn_expr(vec_col, cents_norm, nprobe))
         ).alias("p"),

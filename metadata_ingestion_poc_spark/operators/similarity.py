@@ -163,15 +163,22 @@ def ivf_assign(
 
     The centroid frame is bounded by n_cells at every call site, so it
     is collected and entered as ONE nested-array literal; assignment is
-    then a per-row codegen argmin — zero shuffle, zero join (round 15;
-    the previous shape crossJoined the broadcast centroids into an
-    n_cells× row blowup and ranked with a window, which SHUFFLED the
-    whole corpus — vectors attached — by id just to take a per-row
-    top-nprobe). Arithmetic and tie order are unchanged: the same
-    sequential-fold dot, the same ``/(nrm * c_norm)``, and the struct
-    sort on (−sim, cell) equals the old ``desc(cell_sim), asc(cell)``
-    row_number order. Output: (id, cell, cell_rank, vec, nrm).
+    then a per-row codegen argmin — zero shuffle, zero join. The
+    similarity is the sequential-fold dot ``/(nrm * c_norm)`` and the
+    struct sort on (−sim, cell) ranks by descending similarity, ties
+    to the lower cell. Output: (id, cell, cell_rank, vec, nrm).
+
+    Degenerate inputs: an empty centroid frame, or a non-finite
+    centroid component (it has no SQL literal form), raises
+    ValueError. A NaN vector component makes that row's similarities
+    NaN, which sort after every number — its cells come out in cell
+    order. A zero-norm vector or centroid divides by zero: under ANSI
+    mode (Spark 4's default) the query fails with DIVIDE_BY_ZERO; with
+    ANSI off the similarity is NULL, and NULL sorts FIRST, so such a
+    centroid would top every row's probe list.
     """
+    from ..functions.determinism import sql_double
+
     rows = sorted(
         centroids.select("cell", "c_vec", "c_norm").collect(),
         key=lambda r: int(r["cell"]),
@@ -179,12 +186,10 @@ def ivf_assign(
     if not rows:
         raise ValueError("ivf_assign: empty centroid frame")
     cb = "array(" + ", ".join(
-        "array(" + ", ".join(repr(float(x)) + "D" for x in r["c_vec"]) + ")"
+        "array(" + ", ".join(sql_double(x) for x in r["c_vec"]) + ")"
         for r in rows
     ) + ")"
-    cn = "array(" + ", ".join(
-        repr(float(r["c_norm"])) + "D" for r in rows
-    ) + ")"
+    cn = "array(" + ", ".join(sql_double(r["c_norm"]) for r in rows) + ")"
     ca = "array(" + ", ".join(str(int(r["cell"])) for r in rows) + ")"
     k = len(rows)
     dotq = (

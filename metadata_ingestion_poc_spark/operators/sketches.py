@@ -626,21 +626,19 @@ def _run_concurrent(*thunks):
     """Run independent Spark actions from driver threads so their jobs
     overlap (FIFO scheduling back-fills executor slots — guide §2.6).
     Returns their results in submission order; used only for
-    bounded-collect actions. Under Spark Connect there is no
-    SparkContext for ``inheritable_thread_target``'s classic form to
-    propagate, so fall back to sequential execution — the overlap is a
-    latency optimization, never a semantic one."""
+    bounded-collect actions. Under Spark Connect the thunks run
+    sequentially on the calling thread — the overlap is a latency
+    optimization, never a semantic one."""
     from concurrent.futures import ThreadPoolExecutor
 
-    try:
-        from pyspark import inheritable_thread_target
+    from pyspark import inheritable_thread_target
+    from pyspark.sql.utils import is_remote
 
-        wrapped = [inheritable_thread_target(t) for t in thunks]
-    except Exception:  # Spark Connect: no active classic SparkContext
+    if is_remote():
         return [t() for t in thunks]
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(w) for w in wrapped]
+        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
         return [f.result() for f in futures]
 
 

@@ -208,7 +208,7 @@ def _load_all() -> None:
 # (d) the round-14 passthrough de-ROUNDs (q09 q14 q16 q46 q49 q59
 # q103 q154 q166 — J14-verified at 3 SFs, driver credit due);
 # (e) the q122-q153 staleness tail (oracle-bearing entries in
-# registry order). 3 + 3 + 18 + 9 + 17 = 50. Remaining staleness
+# registry order). 3 + 3 + 15 + 9 + 20 = 50. Remaining staleness
 # (q156-q200 not code-changed) defers to the next rotation.
 # ---------------------------------------------------------------------------
 _SWEEP_PRIORITY = [

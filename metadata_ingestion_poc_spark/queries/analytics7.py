@@ -1741,7 +1741,7 @@ def q264_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") >= 100)
     new = emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100))
-    cents, books, coded = ivfpq_build(
+    cents, _, books, coded = ivfpq_build(
         old, n_cells=16, m=8, ksub=16, iterations=1
     )
     coded = ivfpq_index_append(coded, new, cents, books)

@@ -29,7 +29,8 @@ from ..operators.ranktests import (
 )
 
 # ---------------------------------------------------------------------------
-# q289 — OPQ-rotated product-quantization ANN (operators/opq.py): the
+# q289 — OPQ-rotated product-quantization ANN (operators/pq.py
+# pq_ann_topk with opq=True, the rotation from operators/opq.py): the
 # q250 dial with a data-trained orthogonal rotation in front of the
 # subspace slicing (parametric OPQ, Ge et al. CVPR 2013 — eigenvalue
 # allocation over one bounded covariance pass; rotation enters every
@@ -46,18 +47,18 @@ from ..operators.ranktests import (
 
 @query("q289_opq_ann_topk")
 def q289_opq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.opq import opq_pq_ann_topk
+    from ..operators.pq import pq_ann_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 20)
-    return opq_pq_ann_topk(
-        queries_df, emb, k=10, ksub=16, iterations=1, rerank=150
+    return pq_ann_topk(
+        queries_df, emb, k=10, ksub=16, iterations=1, rerank=150, opq=True
     ).orderBy("query_id", "rank")
 
 
 # ---------------------------------------------------------------------------
-# q290 — OPQ-rotated IVF-PQ (operators/opq.py opq_ivfpq_topk): the
-# q254 IVFADC dial with the rotation trained on the RESIDUALS (what
+# q290 — OPQ-rotated IVF-PQ (operators/pq.py ivfpq_topk with opq=True):
+# the q254 IVFADC dial with the rotation trained on the RESIDUALS (what
 # the codebooks actually quantize) and fused into the same single
 # zero-shuffle coding scan; the coarse probe and <q, c_cell> stay in
 # the original space, the reconstruction norm uses ‖c + Rᵀr̂‖ =
@@ -72,13 +73,13 @@ def q289_opq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q290_opq_ivfpq_topk")
 def q290_opq_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.opq import opq_ivfpq_topk
+    from ..operators.pq import ivfpq_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 20)
-    return opq_ivfpq_topk(
+    return ivfpq_topk(
         queries_df, emb, k=10,
-        nprobe=16, m=16, ksub=32, iterations=1, rerank=400,
+        nprobe=16, m=16, ksub=32, iterations=1, rerank=400, opq=True,
     ).orderBy("query_id", "rank")
 
 # ---------------------------------------------------------------------------

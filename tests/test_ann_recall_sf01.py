@@ -104,23 +104,24 @@ def ivfpq_recall(spark, emb01, exact_topk):
 @pytest.fixture(scope="module")
 def opq_recalls(spark, emb01, exact_topk):
     """(OPQ-PQ cheap-dial recall, OPQ-IVF-PQ q290-dial recall)."""
-    from metadata_ingestion_poc_spark.operators.opq import (
-        opq_ivfpq_topk,
-        opq_pq_ann_topk,
+    from metadata_ingestion_poc_spark.operators.pq import (
+        ivfpq_topk,
+        pq_ann_topk,
     )
 
     q = emb01.filter(F.col("vec_id") < 300)
     pq = {
         (r.query_id, r.neighbor_id)
-        for r in opq_pq_ann_topk(
-            q, emb01, k=10, m=8, ksub=16, iterations=1, rerank=150
+        for r in pq_ann_topk(
+            q, emb01, k=10, m=8, ksub=16, iterations=1, rerank=150,
+            opq=True,
         ).collect()
     }
     ivfpq = {
         (r.query_id, r.neighbor_id)
-        for r in opq_ivfpq_topk(
+        for r in ivfpq_topk(
             q, emb01, k=10, nprobe=16, m=16, ksub=32,
-            iterations=1, rerank=400,
+            iterations=1, rerank=400, opq=True,
         ).collect()
     }
     return (

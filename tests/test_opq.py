@@ -1,5 +1,6 @@
 """OPQ rotation: geometry, determinism, the planted-anisotropy lift,
-and index persistence.
+the rotation as an argument of the PQ / IVF-PQ paths, and index
+persistence with and without a rotation.
 
 The lift test is the load-bearing one: the synthetic sf* embeddings
 are near-isotropic (eigenvalue spread <2×), where OPQ ≈ identity by
@@ -17,23 +18,22 @@ from pyspark.sql import functions as F
 
 from metadata_ingestion_poc_spark.operators.opq import (
     _allocate_eigs,
-    load_opq_ivfpq_index,
-    load_opq_pq_index,
-    opq_ivfpq_build,
-    opq_ivfpq_topk,
-    opq_ivfpq_topk_with_index,
-    opq_pq_ann_topk,
-    opq_pq_build,
-    opq_topk_with_index,
     opq_train_rotation,
     rotate_vectors,
-    save_opq_ivfpq_index,
-    save_opq_pq_index,
 )
 from metadata_ingestion_poc_spark.operators.pq import (
+    ivfpq_build,
+    ivfpq_topk,
+    ivfpq_topk_with_index,
+    load_ivfpq_index,
+    load_pq_index,
     pq_ann_topk,
+    pq_build,
     pq_reconstruction_stats,
+    pq_topk_with_index,
     pq_train,
+    save_ivfpq_index,
+    save_pq_index,
 )
 from metadata_ingestion_poc_spark.operators.similarity import cosine_topk
 
@@ -140,7 +140,7 @@ def test_planted_anisotropy_recall_lift(spark, planted):
     }
     got_opq = {
         (r.query_id, r.neighbor_id)
-        for r in opq_pq_ann_topk(q, planted, **dial).collect()
+        for r in pq_ann_topk(q, planted, opq=True, **dial).collect()
     }
     r_id = len(exact & got_id) / len(exact)
     r_opq = len(exact & got_opq) / len(exact)
@@ -153,8 +153,9 @@ def test_planted_anisotropy_recall_lift(spark, planted):
 
 def test_opq_topk_shape_and_ranks(spark, planted):
     q = planted.filter(F.col("vec_id") < 8)
-    out = opq_pq_ann_topk(
-        q, planted, k=5, m=M, ksub=KSUB, iterations=1, rerank=20, dims=D
+    out = pq_ann_topk(
+        q, planted, k=5, m=M, ksub=KSUB, iterations=1, rerank=20, dims=D,
+        opq=True,
     )
     rows = out.collect()
     assert set(out.columns) == {"query_id", "neighbor_id", "cosine",
@@ -167,45 +168,50 @@ def test_opq_topk_shape_and_ranks(spark, planted):
         assert sorted(ranks) == [1, 2, 3, 4, 5]
 
 
-def test_opq_pq_reload_equals_rebuild(spark, planted, tmp_path):
-    rotation, books, codes = opq_pq_build(
-        planted, m=M, ksub=KSUB, iterations=1, dims=D
+@pytest.mark.parametrize("opq", [False, True], ids=["plain", "opq"])
+def test_pq_reload_equals_rebuild(spark, planted, tmp_path, opq):
+    rotation, books, codes = pq_build(
+        planted, m=M, ksub=KSUB, iterations=1, dims=D, opq=opq
     )
-    path = str(tmp_path / "opq_pq_idx")
-    save_opq_pq_index(spark, rotation, books, codes, path)
-    r2, b2, c2 = load_opq_pq_index(spark, path)
+    assert (rotation is not None) == opq
+    path = str(tmp_path / "pq_idx")
+    save_pq_index(spark, books, codes, path, rotation=rotation)
+    r2, b2, c2 = load_pq_index(spark, path)
     assert r2 == rotation
     assert b2 == books
     q = planted.filter(F.col("vec_id") < 10)
-    fresh = opq_topk_with_index(
-        q, rotation, books, codes, planted, k=5, rerank=20, dims=D
+    fresh = pq_topk_with_index(
+        q, codes, books, planted, k=5, rerank=20, dims=D,
+        rotation=rotation,
     ).collect()
-    reloaded = opq_topk_with_index(
-        q, r2, b2, c2, planted, k=5, rerank=20, dims=D
+    reloaded = pq_topk_with_index(
+        q, c2, b2, planted, k=5, rerank=20, dims=D, rotation=r2
     ).collect()
     key = lambda r: (r.query_id, r.rank)
     assert sorted(fresh, key=key) == sorted(reloaded, key=key)
 
 
-def test_opq_ivfpq_reload_equals_rebuild(spark, planted, tmp_path):
-    cents, rotation, books, coded = opq_ivfpq_build(
-        planted, n_cells=8, m=M, ksub=KSUB, iterations=1, dims=D
+@pytest.mark.parametrize("opq", [False, True], ids=["plain", "opq"])
+def test_ivfpq_reload_equals_rebuild(spark, planted, tmp_path, opq):
+    cents, rotation, books, coded = ivfpq_build(
+        planted, n_cells=8, m=M, ksub=KSUB, iterations=1, dims=D, opq=opq
     )
+    assert (rotation is not None) == opq
     coded = coded.localCheckpoint(eager=True)
-    path = str(tmp_path / "opq_ivfpq_idx")
-    save_opq_ivfpq_index(spark, cents, rotation, books, coded, path)
-    c2, r2, b2, coded2 = load_opq_ivfpq_index(spark, path)
+    path = str(tmp_path / "ivfpq_idx")
+    save_ivfpq_index(spark, cents, books, coded, path, rotation=rotation)
+    c2, r2, b2, coded2 = load_ivfpq_index(spark, path)
     assert c2 == cents
     assert r2 == rotation
     assert b2 == books
     q = planted.filter(F.col("vec_id") < 10)
-    fresh = opq_ivfpq_topk_with_index(
-        q, cents, rotation, books, coded, planted,
-        k=5, nprobe=4, rerank=30, dims=D,
+    fresh = ivfpq_topk_with_index(
+        q, cents, books, coded, planted,
+        k=5, nprobe=4, rerank=30, dims=D, rotation=rotation,
     ).collect()
-    reloaded = opq_ivfpq_topk_with_index(
-        q, c2, r2, b2, coded2, planted,
-        k=5, nprobe=4, rerank=30, dims=D,
+    reloaded = ivfpq_topk_with_index(
+        q, c2, b2, coded2, planted,
+        k=5, nprobe=4, rerank=30, dims=D, rotation=r2,
     ).collect()
     key = lambda r: (r.query_id, r.rank)
     assert sorted(fresh, key=key) == sorted(reloaded, key=key)
@@ -213,9 +219,9 @@ def test_opq_ivfpq_reload_equals_rebuild(spark, planted, tmp_path):
 
 def test_opq_ivfpq_topk_one_call(spark, planted):
     q = planted.filter(F.col("vec_id") < 8)
-    rows = opq_ivfpq_topk(
+    rows = ivfpq_topk(
         q, planted, k=5, n_cells=8, nprobe=8, m=M, ksub=KSUB,
-        iterations=1, rerank=50, dims=D,
+        iterations=1, rerank=50, dims=D, opq=True,
     ).collect()
     # nprobe == n_cells probes everything: with a generous rerank the
     # composed path must agree with brute force on the planted corpus
@@ -226,3 +232,42 @@ def test_opq_ivfpq_topk_one_call(spark, planted):
     got = {(r.query_id, r.neighbor_id) for r in rows}
     recall = len(exact & got) / len(exact)
     assert recall >= 0.9, f"full-probe OPQ-IVF-PQ recall low: {recall}"
+
+
+def test_identity_rotation_equals_no_rotation(spark, planted):
+    """An identity rotation adds only exact zeros to each query
+    component, so the lookup table — and with it every returned row —
+    is bit-equal to querying with ``rotation=None``, on both paths."""
+    identity = [[float(i == j) for j in range(D)] for i in range(D)]
+    q = planted.filter(F.col("vec_id") < 10)
+    rows = lambda df: sorted(df.collect(), key=lambda r: (r.query_id, r.rank))
+    _, books, codes = pq_build(planted, m=M, ksub=KSUB, iterations=1,
+                               dims=D)
+    pq_args = (q, codes, books, planted)
+    pq_kw = dict(k=5, rerank=20, dims=D)
+    assert rows(pq_topk_with_index(*pq_args, **pq_kw)) == rows(
+        pq_topk_with_index(*pq_args, rotation=identity, **pq_kw)
+    )
+    cents, _, books, coded = ivfpq_build(
+        planted, n_cells=8, m=M, ksub=KSUB, iterations=1, dims=D
+    )
+    ivf_args = (q, cents, books, coded, planted)
+    ivf_kw = dict(k=5, nprobe=4, rerank=30, dims=D)
+    assert rows(ivfpq_topk_with_index(*ivf_args, **ivf_kw)) == rows(
+        ivfpq_topk_with_index(*ivf_args, rotation=identity, **ivf_kw)
+    )
+
+
+def test_opq_build_needs_two_rows(spark):
+    """A 1-row corpus has no covariance: both OPQ builds raise the
+    rotation trainer's ValueError (plain PQ on the same corpus
+    builds)."""
+    one = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0, 4.0])], "vec_id int, embedding array<double>"
+    )
+    pq_build(one, m=2, ksub=1, iterations=1, dims=4)
+    with pytest.raises(ValueError, match="needs >= 2 rows"):
+        pq_build(one, m=2, ksub=1, iterations=1, dims=4, opq=True)
+    with pytest.raises(ValueError, match="needs >= 2 rows"):
+        ivfpq_build(one, n_cells=1, m=2, ksub=1, iterations=1, dims=4,
+                    opq=True)

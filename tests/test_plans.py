@@ -430,7 +430,7 @@ def test_ivfpq_coded_scan_no_window_no_join(spark, sf_dir):
     from metadata_ingestion_poc_spark.operators.pq import ivfpq_build
 
     emb = load_table(spark, sf_dir, "embeddings")
-    _, _, coded = ivfpq_build(emb, n_cells=8, ksub=8, iterations=1)
+    _, _, _, coded = ivfpq_build(emb, n_cells=8, ksub=8, iterations=1)
     plan = physical_plan(coded)
     for node in (
         "Window",

@@ -104,6 +104,34 @@ def test_lsh_ann_recall_vs_brute_force(spark, emb):
     assert recall >= 0.35, f"ANN recall too low: {recall}"
 
 
+def test_ivf_assign_non_finite_centroid_raises_value_error(spark):
+    """A NaN centroid component has no SQL double literal (``nanD``
+    would parse as a column name): the literal renderer refuses it
+    with a ValueError before any plan is built, while finite values
+    render exactly as ``repr`` + ``D``."""
+    from metadata_ingestion_poc_spark.functions.determinism import (
+        sql_double,
+    )
+    from metadata_ingestion_poc_spark.operators.similarity import (
+        ivf_assign,
+    )
+
+    for x in (0.1, -2.5e-07, 1e300, 3, 0.0):
+        assert sql_double(x) == repr(float(x)) + "D"
+    for bad in (math.nan, math.inf, -math.inf):
+        with pytest.raises(ValueError, match="non-finite"):
+            sql_double(bad)
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id int, embedding array<double>"
+    )
+    cents = spark.createDataFrame(
+        [(1, [math.nan, 1.0], 1.0)],
+        "cell int, c_vec array<double>, c_norm double",
+    )
+    with pytest.raises(ValueError, match="non-finite"):
+        ivf_assign(vecs, cents)
+
+
 def test_ivf_index_save_load_identical_results(spark, sf_dir, tmp_path):
     """Persisted index → reload → query must equal build-and-query
     exactly (everything downstream of the index is deterministic)."""
@@ -163,7 +191,7 @@ def test_pq_index_save_load_identical_results(spark, sf_dir, tmp_path):
     codes = pq_encode(emb, books)
     path = str(tmp_path / "pq_index")
     save_pq_index(spark, books, codes, path)
-    books2, codes2 = load_pq_index(spark, path)
+    _, books2, codes2 = load_pq_index(spark, path)
     assert books2 == books  # 6-dp codewords round-trip parquet exactly
     reloaded = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine)
@@ -300,12 +328,12 @@ def test_ivfpq_index_save_load_identical_results(spark, sf_dir, tmp_path):
         ).collect()
     }
 
-    cents, books, coded = ivfpq_build(
+    cents, _, books, coded = ivfpq_build(
         emb, n_cells=8, ksub=8, iterations=1
     )
     path = str(tmp_path / "ivfpq_index")
     save_ivfpq_index(spark, cents, books, coded, path)
-    cents2, books2, coded2 = load_ivfpq_index(spark, path)
+    cents2, _, books2, coded2 = load_ivfpq_index(spark, path)
     assert cents2 == cents and books2 == books
     reloaded = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine)
@@ -384,7 +412,7 @@ def test_ivfpq_encode_with_index_matches_build_coding(spark, sf_dir):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents, books, coded = ivfpq_build(emb, n_cells=8, ksub=8, iterations=1)
+    cents, _, books, coded = ivfpq_build(emb, n_cells=8, ksub=8, iterations=1)
     built = {(r.id, r.cell, tuple(r.codes)) for r in coded.collect()}
     recoded = {
         (r.id, r.cell, tuple(r.codes))
@@ -415,7 +443,7 @@ def test_ivfpq_maintained_index_full_probe_equals_brute_force(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(SF.col("vec_id") >= 60)
     new = emb.filter((SF.col("vec_id") >= 20) & (SF.col("vec_id") < 60))
-    cents, books, coded = ivfpq_build(old, n_cells=8, ksub=8, iterations=1)
+    cents, _, books, coded = ivfpq_build(old, n_cells=8, ksub=8, iterations=1)
     coded = ivfpq_index_append(coded, new, cents, books)
     coded = ivfpq_index_delete(coded, [i for i in range(20, 200, 10)])
     kept = emb.filter(

@@ -299,3 +299,29 @@ def test_advise_join_estimates_and_recommendations(spark):
     adv2 = advise_join(hot, other, "k", broadcast_threshold_rows=100)
     assert adv2["recommendation"] == "shuffle_salted"
     assert adv2["max_freq_bound_a"] >= 45_000  # the hub key's true count
+
+
+def test_run_concurrent_is_sequential_under_spark_connect(monkeypatch):
+    """Under Spark Connect the thunks run on the calling thread, in
+    submission order, and their results come back in that order."""
+    import threading
+
+    import pyspark.sql.utils
+
+    from metadata_ingestion_poc_spark.operators.sketches import (
+        _run_concurrent,
+    )
+
+    monkeypatch.setattr(pyspark.sql.utils, "is_remote", lambda: True)
+    calls = []
+
+    def thunk(i):
+        def run():
+            calls.append((i, threading.get_ident()))
+            return i * 10
+
+        return run
+
+    assert _run_concurrent(*(thunk(i) for i in range(3))) == [0, 10, 20]
+    me = threading.get_ident()
+    assert calls == [(0, me), (1, me), (2, me)]
