@@ -119,8 +119,6 @@ def run_source(
             hub_df,
             f"{cfg.hub_base}/{source.domain}/{source.entity}",
             source.hub_primary_keys,
-            checkpoint_base=cfg.checkpoint_base,
-            source_id=source.id,
         )
     finally:
         df.unpersist()

@@ -98,7 +98,7 @@ def sql_davg(expr: str, alias: str) -> str:
     )
 
 
-def _half_up(v: float, decimals: int) -> float:
+def half_up(v: float, decimals: int) -> float:
     # HALF_UP, matching SQL ROUND / F.round everywhere else. Python's
     # builtin round() is banker's rounding: a .5-tie cut value would
     # silently shift a band boundary between engines.
@@ -121,7 +121,7 @@ def literal_row(
     """
     names = list(values)
     return spark.createDataFrame(
-        [tuple(_half_up(values[n], decimals) for n in names)],
+        [tuple(half_up(values[n], decimals) for n in names)],
         ", ".join(f"{n} double" for n in names),
     )
 

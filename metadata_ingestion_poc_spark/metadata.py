@@ -14,17 +14,7 @@ from pathlib import Path
 import yaml
 from pydantic import BaseModel, Field, field_validator
 
-KNOWN_SOURCE_TYPES = (
-    "csv",
-    "json",
-    "parquet",
-    "orc",
-    "xml",
-    "binary",
-    "snapshot",
-    "jdbc",
-    "olap",
-)
+from .sources import READERS
 
 
 class Source(BaseModel):
@@ -40,9 +30,9 @@ class Source(BaseModel):
     @field_validator("type")
     @classmethod
     def _known_type(cls, v: str) -> str:
-        if v not in KNOWN_SOURCE_TYPES:
+        if v not in READERS:
             raise ValueError(
-                f"unknown source type {v!r}; expected one of {KNOWN_SOURCE_TYPES}"
+                f"unknown source type {v!r}; expected one of {sorted(READERS)}"
             )
         return v
 

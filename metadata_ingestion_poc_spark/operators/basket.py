@@ -70,7 +70,7 @@ def pair_lift(
         # the lineage and recomputes lost partitions (the 100-TB
         # failure-model requirement). The distinct's output layout is
         # the post-shuffle partitioning (full parallelism), not the
-        # raw input splits the _spread rule in SCALING.md warns
+        # raw input splits the spread rule in SCALING.md warns
         # about. Callers that loop may .unpersist() the result's
         # ancestors when done.
         .persist()

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..execution import spread
 from ..functions.determinism import DEC
 
 # product widths chosen so Spark never hits the 38-digit cap
@@ -48,7 +49,7 @@ def _tokens(df: DataFrame, text_col: str, keep: list[str]) -> DataFrame:
     explode_outer + isNotNull, not explode — a plain explode after a
     computed array projection gets an inferred size()>0 filter pushed
     below the projection with the whole split() inlined twice (the
-    _shingle_index lesson, operators/dedup.py). The split of a trimmed
+    shingle_index lesson, operators/dedup.py). The split of a trimmed
     non-NULL string is never NULL, so outer is value-equal.
     """
     return (
@@ -223,18 +224,16 @@ def gd_train(
     """The logreg_gd training loop, exposed for consumers that need
     the trained weights (AUC, calibration): returns (census rows,
     final weights, n, the checkpointed (x1, x2, y) projection)."""
-    from ..functions.determinism import DEC, _half_up
+    from ..functions.determinism import DEC, half_up
 
-    from .dedup import _spread
-
-    # _spread BEFORE the checkpoint (the round-10 clustering lesson,
+    # spread BEFORE the checkpoint (the round-10 clustering lesson,
     # applied here round 12): a small parquet arrives as a handful of
     # input splits, and the checkpoint PINS that layout — every one
     # of the iters+1 training scans would then run on 2-3 cores
     # regardless of cluster size. Measured at sf0.1: the q269/q271/
     # q272/q279 family dropped ~2x once the checkpoint spread to
     # defaultParallelism. No-op at real scale (stats-gated).
-    b = _spread(
+    b = spread(
         base.selectExpr(
             f"{x1_expr} AS x1", f"{x2_expr} AS x2", f"{y_expr} AS y"
         )
@@ -292,7 +291,7 @@ def gd_train(
         )
         if it < iters:
             w = [
-                _half_up(wj - eta * (float(gj) / n), 6)
+                half_up(wj - eta * (float(gj) / n), 6)
                 for wj, gj in zip(
                     w, (row["g0"], row["g1"], row["g2"])
                 )

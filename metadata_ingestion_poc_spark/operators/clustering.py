@@ -56,10 +56,11 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.determinism import DEC, _half_up, sql_double
+from ..execution import checked_base, spread
+from ..functions.determinism import DEC, half_up, sql_double
 
-_HASH_MULT = 2654435761  # Knuth multiplicative hash (public constant)
-_HASH_MOD = 2147483647
+HASH_MULT = 2654435761  # Knuth multiplicative hash (public constant)
+HASH_MOD = 2147483647
 
 
 def _dist_sql(vec_expr: str, centroid: Sequence[float]) -> str:
@@ -149,8 +150,8 @@ def seed_centroids(
             # scale) would overflow the int64 multiply — silent wrap
             # in Spark, out-of-range error in the SQL twin. Equal to
             # (id*MULT) % MOD for every id by modular arithmetic.
-            ((F.col(id_col) % F.lit(_HASH_MOD)) * F.lit(_HASH_MULT))
-            % F.lit(_HASH_MOD),
+            ((F.col(id_col) % F.lit(HASH_MOD)) * F.lit(HASH_MULT))
+            % F.lit(HASH_MOD),
             F.col(id_col),
         )
         .limit(k)
@@ -159,79 +160,6 @@ def seed_centroids(
     return {
         i + 1: [float(x) for x in r[vec_col]] for i, r in enumerate(rows)
     }
-
-
-def _checked_base(
-    df: DataFrame,
-    id_col: str | None,
-    vec_col: str,
-    cache: bool,
-    op: str,
-    dims: int | None = None,
-) -> tuple[DataFrame, int, int]:
-    """Projected (id, vector) frame + validated dimensionality + count.
-
-    One aggregate over the (optionally checkpointed) projection
-    replaces a separate probe + ragged-scan pair: a vector shorter
-    than the rest (or NULL, or holding a NULL element) would
-    zip_with-pad with NULL and silently poison its distances in BOTH
-    the argmin and the farthest-point traversal — and silently drop
-    out of mean/covariance sums — fail loud instead. ``id_col=None``
-    projects only the vector (the PCA shape); ``dims`` asserts the
-    uniform length matches the caller's declared dimensionality.
-
-    The projection is ``_spread`` first (round-10): a small embeddings
-    parquet arrives as ONE input split, so without it the checkpoint
-    pins a single partition and every distance / covariance scan of
-    the iterative suite runs on one core regardless of cluster size.
-    The stats gate makes it a no-op at real scale, and the decimal
-    discipline is partitioning-invariant by construction."""
-    from .dedup import _spread
-
-    base = _spread(df.select(*([id_col] if id_col else []), vec_col))
-    if cache:
-        # LAZY: the validation aggregate immediately below is the
-        # materializing action, so eager=True would just split one
-        # job into two (the q226 collect-to-literal lesson: job count
-        # dominates at local scale).
-        base = base.localCheckpoint(eager=False)
-    row = base.agg(
-        F.min(F.size(vec_col)).alias("lo"),
-        F.max(F.size(vec_col)).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col(vec_col).isNull(), 1).otherwise(0)).alias(
-            "nulls"
-        ),
-        # element-level probe: one NULL element nulls every zip_with
-        # distance / product term for its row — distinct failure mode
-        # from a NULL vector, checked separately (size(filter) on a
-        # NULL array would itself be NULL, hence the guard).
-        F.sum(
-            F.when(F.col(vec_col).isNull(), 0).otherwise(
-                F.size(F.filter(F.col(vec_col), lambda x: x.isNull()))
-            )
-        ).alias("null_elems"),
-    ).first()
-    if row is None or row["n"] == 0:
-        raise ValueError(f"{op}: empty input")
-    if row["nulls"]:
-        raise ValueError(f"{op}: NULL {vec_col} values")
-    if row["null_elems"]:
-        raise ValueError(
-            f"{op}: {row['null_elems']} NULL element(s) inside "
-            f"{vec_col} vectors"
-        )
-    if row["lo"] != row["hi"]:
-        raise ValueError(
-            f"{op}: ragged {vec_col} — vector lengths span "
-            f"[{row['lo']}, {row['hi']}]"
-        )
-    if dims is not None and row["hi"] != dims:
-        raise ValueError(
-            f"{op}: {vec_col} has {row['hi']} dims, caller declared "
-            f"{dims}"
-        )
-    return base, row["hi"], row["n"]
 
 
 def kmeans_lloyd(
@@ -251,7 +179,7 @@ def kmeans_lloyd(
     cluster id -> list of 6-dp double coordinates after the last
     update. Clusters that lose all members drop out of both.
     """
-    base, dims, _ = _checked_base(df, id_col, vec_col, cache, "kmeans_lloyd")
+    base, dims, _ = checked_base(df, id_col, vec_col, cache, "kmeans_lloyd")
 
     centroids = seed_centroids(base, id_col, vec_col, k)
 
@@ -277,20 +205,18 @@ def kmeans_lloyd(
         )
         centroids = {
             r["__cid"]: [
-                _half_up(float(r[f"__s{i}"]) / r["__n"], 6)
+                half_up(float(r[f"__s{i}"]) / r["__n"], 6)
                 for i in range(1, dims + 1)
             ]
             for r in upd
         }
 
-    from .dedup import _spread
-
     choice = _assign_expr(vec_col, centroids)
-    # _spread the FINAL assignment scan too: it runs over the caller's
+    # spread the FINAL assignment scan too: it runs over the caller's
     # original frame (all columns), which for a small parquet is one
     # split — the k·d-literal distance expression is the CPU floor of
     # the whole operator and must use every core.
-    assigned = _spread(df).withColumn("__choice", F.expr(choice)).select(
+    assigned = spread(df).withColumn("__choice", F.expr(choice)).select(
         "*",
         F.col("__choice").getField("cid").alias("cluster_id"),
         F.col("__choice").getField("d2").alias("d2"),
@@ -327,7 +253,7 @@ def kcenter_greedy(
     projected input once so the k rounds scan a compact copy instead
     of re-executing an expensive upstream plan per round.
     """
-    base, _, _ = _checked_base(df, id_col, vec_col, cache, "kcenter_greedy")
+    base, _, _ = checked_base(df, id_col, vec_col, cache, "kcenter_greedy")
     first = base.orderBy(id_col).limit(1).collect()
     chosen: dict[int, list[float]] = {
         int(first[0][id_col]): [float(x) for x in first[0][vec_col]]

@@ -21,8 +21,7 @@ Spark-specific essentials for ANY iterative algorithm here:
 - `localCheckpoint` (default) stores blocks on executors — fast, but
   an executor loss kills the cached lineage mid-job. For long cluster
   runs pass ``reliable=True`` (uses `df.checkpoint()` to the
-  fault-tolerant checkpoint dir, set one via
-  ``spark.sparkContext.setCheckpointDir``).
+  fault-tolerant checkpoint dir, which ``setCheckpointDir`` sets).
 """
 
 from __future__ import annotations
@@ -32,26 +31,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _cut(df: DataFrame, reliable: bool) -> DataFrame:
-    """Cut lineage: reliable HDFS-style checkpoint or executor-local."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-def _cut_lazy(df: DataFrame, reliable: bool) -> DataFrame:
-    """Cut lineage without triggering a job.
-
-    The caller's next action materializes the checkpoint, so per-round
-    loops pay ONE driver action (the convergence probe) instead of two
-    (eager checkpoint + probe). reliable=True stays eager: a lazy
-    reliable checkpoint recomputes the RDD once for the job and once
-    for the checkpoint write, which costs more than the extra action.
-    """
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=False)
+from ..execution import cut, cut_lazy, parallelism
 
 
 def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
@@ -79,13 +59,8 @@ def _shrinker(edges: DataFrame, n_edges: int):
     computes a partition count ≥ the cluster width and becomes the
     identity — the normal wide path is untouched.
     """
-    spark = edges.sparkSession
-    try:
-        width = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no SparkContext handle
-        return lambda df: df
     p = max(1, -(-n_edges // 500_000))
-    if p >= width:
+    if p >= parallelism(edges.sparkSession):
         return lambda df: df
     return lambda df: df.coalesce(p)
 
@@ -168,8 +143,8 @@ def _cc_star(
 ) -> DataFrame:
     # materialize once: the edge list may be an expensive upstream plan
     # (e.g. the n-gram Jaccard pipeline) that every round re-joins.
-    edges = _cut(e0, reliable)
-    all_nodes = _cut(
+    edges = cut(e0, reliable)
+    all_nodes = cut(
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
         .distinct(),
@@ -183,7 +158,7 @@ def _cc_star(
     for _ in range(max_iter):
         # lazy cut + checksum = one driver action per round: the
         # fingerprint scan is what materializes the checkpoint blocks.
-        edges = _cut_lazy(shrink(_small_star(_large_star(edges))), reliable)
+        edges = cut_lazy(shrink(_small_star(_large_star(edges))), reliable)
         rounds += 1
         cur = _edge_checksum(edges)
         if cur == prev:
@@ -214,12 +189,12 @@ def _cc_star(
 def _cc_propagation(
     e0: DataFrame, max_iter: int, reliable: bool, stats: dict | None
 ) -> DataFrame:
-    sym = _cut(
+    sym = cut(
         e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct(),
         reliable,
     )
-    labels = _cut(
+    labels = cut(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component", F.col("node")),
@@ -267,7 +242,7 @@ def _cc_propagation(
         labels_next = labels
         for _ in range(steps):
             labels_next = _step(labels_next)
-        labels = _cut_lazy(shrink(labels_next), reliable)
+        labels = cut_lazy(shrink(labels_next), reliable)
         rounds += steps
         cur_sum = _label_sum(labels)
         if cur_sum == prev_sum:

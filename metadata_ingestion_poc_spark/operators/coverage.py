@@ -11,7 +11,7 @@ practical algorithm for this family.
 100-TB shape (the kcenter_greedy stateless-literal discipline):
 
 - The (doc, shingle) inverted frame is built once (shingles() +
-  explode_outer, the _shingle_index lesson) and localCheckpointed;
+  explode_outer, the shingle_index lesson) and localCheckpointed;
   every round scans that compact copy.
 - Per round exactly ONE bounded collect (round 15; was two): the
   1-row argmax. The covered set is never collected — "not yet
@@ -36,7 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _spread, shingles
+from .dedup import shingles
+from ..execution import spread
 
 
 def greedy_set_cover(
@@ -55,7 +56,7 @@ def greedy_set_cover(
     truncates the traversal.
     """
     sh = (
-        shingles(_spread(df), n, text_col)
+        shingles(spread(df), n, text_col)
         .select(id_col, F.explode_outer("shingles").alias("s"))
         .filter(F.col("s").isNotNull())
         .localCheckpoint(eager=False)

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..execution import parallelism, spread
+
 # Default stop-shingle cap. Finite BY DEFAULT: a shingle shared by more
 # than this many documents carries no dedup signal but costs O(df²)
 # candidate pairs — an unbounded default is the footgun that melts a
@@ -75,83 +77,6 @@ def shingles(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     ).drop("__toks")
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure CPU-heavy per-row work can use every core.
-
-    A small parquet file arrives as ONE input split, so shingling /
-    signature stages would run on a single core regardless of cluster
-    size. Repartitioning a small doc set is cheap; at real scale the
-    input already has enough splits and this is a no-op.
-
-    Gated on the optimizer's size estimate, not on ``inputFiles()``:
-    a frame whose estimated bytes reach ``target × maxPartitionBytes``
-    already scans as ≥ target splits, so repartitioning it would be a
-    pure extra shuffle — and listing input files for a 100 TB manifest
-    of millions of files is itself a driver-side cost. Only frames the
-    stats say are small (where the shuffle moves little data but buys
-    full-core parallelism for the CPU-bound shingle/hash stages) are
-    repartitioned. Stats-unavailable frames are left untouched.
-    """
-    spark = df.sparkSession
-    try:
-        target = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect session: no SparkContext handle
-        target = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # Connect / non-JVM frame: no stats handle
-        return df
-    if size >= target * _max_partition_bytes(spark):
-        return df
-    return df.repartition(target)
-
-
-def _spread_by(df: DataFrame, *cols: str) -> DataFrame:
-    """Keyed sibling of ``_spread``: hash-layout by ``cols`` with the
-    partition count PINNED to defaultParallelism when the stats say
-    the frame is small. AQE sizes post-shuffle partitions by BYTES,
-    so a small-byte frame collapses onto one or two tasks — which
-    serializes any window/rollup keyed on ``cols`` no matter how much
-    CPU it does per row. An explicitly numbered repartition disables
-    that coalescing; downstream operators keyed on ``cols`` (or a
-    superset) reuse the layout with no second exchange. Large frames
-    (or stats-less ones) get a plain keyed repartition and keep AQE
-    sizing — the production path.
-    """
-    spark = df.sparkSession
-    try:
-        target = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect session: no SparkContext handle
-        return df.repartition(*[F.col(c) for c in cols])
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return df.repartition(*[F.col(c) for c in cols])
-    if size >= target * _max_partition_bytes(spark):
-        return df.repartition(*[F.col(c) for c in cols])
-    return df.repartition(target, *[F.col(c) for c in cols])
-
-
-def _max_partition_bytes(spark) -> int:
-    """`spark.sql.files.maxPartitionBytes` as an int (handles the
-    "134217728b" / "128MB" spellings a bytes-conf can come back as)."""
-    raw = str(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    ).strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    mult, digits = 1, raw.removesuffix("b")
-    if digits and digits[-1] in units:
-        mult, digits = units[digits[-1]], digits[:-1]
-    try:
-        return int(digits) * mult
-    except ValueError:
-        return 134217728
-
-
 def exact_dedup(
     df: DataFrame, key_cols: list[str], order_cols: list[str]
 ) -> DataFrame:
@@ -164,7 +89,7 @@ def exact_dedup(
     )
 
 
-def _shingle_index(
+def shingle_index(
     docs: DataFrame, id_col: str, n: int, max_shingle_df: int | None
 ) -> DataFrame:
     """Inverted index (shingle → doc), stop-shingles pruned."""
@@ -197,7 +122,7 @@ def _shingle_index(
 PAIR_BUCKET_CAP = 1024
 
 
-def _chunked_members(members: DataFrame, cap: int, *keep: str) -> DataFrame:
+def chunked_members(members: DataFrame, cap: int, *keep: str) -> DataFrame:
     """Bound a member-array frame for pair generation: split each
     bucket's SORTED array ``ms`` into ⌈m/cap⌉ contiguous chunks and
     emit one row per unordered chunk pair (ci ≤ cj) carrying
@@ -231,8 +156,8 @@ def _chunked_members(members: DataFrame, cap: int, *keep: str) -> DataFrame:
     )
 
 
-def _chunk_pairs_sql(pair_sql) -> str:
-    """Pair-generation CASE over a `_chunked_members` row.
+def chunk_pairs_sql(pair_sql) -> str:
+    """Pair-generation CASE over a `chunked_members` row.
     ``pair_sql(x, y)`` renders the output pair struct from two member
     exprs, and must be valid for x preceding y in the bucket's sort
     order (which both branches guarantee). The else-branch empty
@@ -269,7 +194,7 @@ def _bucket_pairs(
     """Candidate pairs from bucket co-membership, via ONE shuffle.
 
     groupBy(bucket) → sorted member array → chunked explode of the
-    C(m,2) combinations (see `_chunked_members`: no single row ever
+    C(m,2) combinations (see `chunked_members`: no single row ever
     holds more than cap² pair structs; pair multiplicity — one
     emission per co-membership — is preserved, which
     ngram_jaccard_pairs' n_common count depends on). Replaces the
@@ -278,7 +203,7 @@ def _bucket_pairs(
     stop-bucket pruning remains the scale lever. Emits (a, b) with
     a < b, once per shared bucket.
     """
-    # (round-14 note: a `_spread` of the member arrays before the
+    # (round-14 note: a `spread` of the member arrays before the
     # explode was A/B'd — it helps only when bucket fan-out is huge,
     # e.g. the perceptual-hash banding that now verifies in-stage in
     # multimodal.hamming_banded_pairs, and is break-even-to-negative
@@ -288,10 +213,10 @@ def _bucket_pairs(
         .agg(F.sort_array(F.collect_set(item_col)).alias("ms"))
         .filter(F.size("ms") >= 2)
     )
-    pair = _chunk_pairs_sql(
+    pair = chunk_pairs_sql(
         lambda x, y: f"named_struct('a', {x}, 'b', {y})"
     )
-    pairs = _chunked_members(members, cap).select(
+    pairs = chunked_members(members, cap).select(
         F.explode(F.expr(pair)).alias("p")
     )
     return pairs.select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
@@ -317,8 +242,8 @@ def ngram_jaccard_pairs(
     from the index (finite by default — see DEFAULT_MAX_SHINGLE_DF;
     None opts in to the exact unpruned computation).
     """
-    docs = _spread(docs)
-    idx = _shingle_index(docs, id_col, n, max_shingle_df)
+    docs = spread(docs)
+    idx = shingle_index(docs, id_col, n, max_shingle_df)
     sizes = idx.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
 
     common = (
@@ -374,10 +299,10 @@ def ngram_jaccard_pairs_against(
     # the operational shape: at scale the corpus index is persisted
     # between runs, not rebuilt per consumer — see save_shingle_index /
     # ngram_jaccard_pairs_against_index.
-    idx_b = _shingle_index(_spread(batch), id_col, n, None).localCheckpoint(
+    idx_b = shingle_index(spread(batch), id_col, n, None).localCheckpoint(
         eager=False
     )
-    idx_c = _shingle_index(_spread(corpus), id_col, n, None).localCheckpoint(
+    idx_c = shingle_index(spread(corpus), id_col, n, None).localCheckpoint(
         eager=False
     )
     return _cross_index_pairs(idx_b, idx_c, threshold, max_shingle_df)
@@ -445,7 +370,7 @@ def save_shingle_index(
     count — parquet+zstd column of repeated short strings compresses
     heavily.
     """
-    idx = _shingle_index(_spread(docs), id_col, n, None)
+    idx = shingle_index(spread(docs), id_col, n, None)
     (
         idx.repartition("sh")
         .sortWithinPartitions("sh")
@@ -474,7 +399,7 @@ def ngram_jaccard_pairs_against_index(
     n-token shingles — a mismatch silently yields no candidates, so
     pass the same n; load path validates nothing else).
     """
-    idx_b = _shingle_index(_spread(batch), id_col, n, None).localCheckpoint(
+    idx_b = shingle_index(spread(batch), id_col, n, None).localCheckpoint(
         eager=False
     )
     idx_c = corpus_index.localCheckpoint(eager=False)
@@ -500,7 +425,7 @@ def minhash_signature(
     sets agree on densified slots whenever they agree on the global
     minimum — the property banded LSH needs.
     """
-    with_sh = shingles(_spread(docs), n=n)
+    with_sh = shingles(spread(docs), n=n)
     hashed = with_sh.withColumn(
         "__h", F.transform("shingles", lambda s: F.xxhash64(s))
     ).drop("shingles")
@@ -664,7 +589,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", bits: int = 64) -> DataFram
     projection — NO shuffle, no explode, no UDF — so it scales as a map
     over the corpus. Chunked layout feeds Hamming-band LSH directly.
     """
-    hashed = tokenize(_spread(docs)).withColumn(
+    hashed = tokenize(spread(docs)).withColumn(
         "__th", F.transform("tokens", lambda t: F.xxhash64(t))
     )
     # The hash family stays JVM-side (xxhash64 — deterministic across
@@ -754,8 +679,8 @@ def ngram_containment_pairs(
     when EITHER direction reaches ``threshold``; all ratios ship RAW
     (exact-operand IEEE divisions, the determinism.py safe class).
     """
-    docs = _spread(docs)
-    idx = _shingle_index(docs, id_col, n, max_shingle_df)
+    docs = spread(docs)
+    idx = shingle_index(docs, id_col, n, max_shingle_df)
     sizes = idx.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
 
     common = (
@@ -817,14 +742,14 @@ def prefix_filter_jaccard_pairs(
     num, den = threshold
     if not (0 < num <= den):
         raise ValueError("threshold must be a fraction in (0, 1]")
-    # _spread first: the shingle build is the CPU floor of the whole
+    # spread first: the shingle build is the CPU floor of the whole
     # family and the documents table often arrives as ONE file split.
-    # explode_outer, not explode — the _shingle_index lesson: plain
+    # explode_outer, not explode — the shingle_index lesson: plain
     # explode gets an inferred size()>0 filter pushed below the
     # projection with the whole O(len²) shingle expression inlined,
     # recomputing every shingle array twice.
     sh = (
-        shingles(_spread(df), n, text_col)
+        shingles(spread(df), n, text_col)
         .select(id_col, F.explode_outer("shingles").alias("s"))
         .filter(F.col("s").isNotNull())
     )
@@ -891,18 +816,12 @@ def prefix_filter_jaccard_pairs(
     # array_intersect over both full shingle arrays (the CPU floor of
     # verification: measured 7.7s serial vs 3.2s spread, end-to-end
     # 6.3→3.2s at sf0.1) then runs nearly serially. The stats-gated
-    # _spread cannot make this call: a self-join output's size
+    # spread cannot make this call: a self-join output's size
     # estimate is a row-product overestimate, so the gate always
-    # skips. An explicit round-robin to defaultParallelism is correct
-    # at every scale — the shuffle moves two ids per row while the
-    # stage it feeds does work proportional to pairs/core.
-    try:
-        _target = cand.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect session: no SparkContext handle
-        _target = int(
-            cand.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    cand = cand.repartition(_target)
+    # skips. An explicit round-robin to parallelism is correct at
+    # every scale — the shuffle moves two ids per row while the stage
+    # it feeds does work proportional to pairs/core.
+    cand = cand.repartition(parallelism(cand.sparkSession))
     # Verify with set arrays, not a re-exploded join: each candidate
     # pair carries both (sorted, distinct) shingle arrays and counts
     # the intersection in codegen — no pair×shingles shuffle.

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import spread
+
 
 def _default_block_keys(col: Column) -> list[tuple[str, Column]]:
     toks = F.split(col, r"\s+")
@@ -147,15 +149,13 @@ def qgram_edit_join(
         ).isNull(),
         F.col(str_col),
     )
-    from .dedup import _spread
-
-    # _spread before the checkpoint (round 14): a small input arrives
+    # spread before the checkpoint (round 14): a small input arrives
     # as a handful of splits and the checkpoint PINS that layout — the
     # gram explode, the broadcast-probe pair expansion (the Σ df²
     # floor of the filter), and the per-pair partial aggregation all
     # run inside the probe-side stage, i.e. on those few cores.
     # Stats-gated no-op at real scale.
-    base = _spread(
+    base = spread(
         df.select(
             F.col(id_col).alias("__id"),
             guarded.alias("__s"),

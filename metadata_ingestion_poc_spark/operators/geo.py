@@ -30,7 +30,7 @@ EARTH_RADIUS_KM = 6371.0
 KM_PER_DEG = math.pi * EARTH_RADIUS_KM / 180.0
 
 
-def _quant(col: Column, lo: float, span: float, cells: int) -> Column:
+def quant(col: Column, lo: float, span: float, cells: int) -> Column:
     """floor((v - lo) / span * cells), clamped to [0, cells-1]."""
     q = F.floor((col - F.lit(lo)) / F.lit(span) * F.lit(cells))
     return F.least(F.greatest(q, F.lit(0)), F.lit(cells - 1)).cast("long")
@@ -51,14 +51,14 @@ def geo_cell(lat: Column | str, lon: Column | str, bits: int = 8) -> Column:
     lon = F.col(lon) if isinstance(lon, str) else lon
     cells = 1 << bits
     return zorder_key(
-        _quant(lat, -90.0, 180.0, cells),
-        _quant(lon, -180.0, 360.0, cells),
+        quant(lat, -90.0, 180.0, cells),
+        quant(lon, -180.0, 360.0, cells),
         bits=bits,
     )
 
 
 def quant_sql(expr: str, lo: float, span: float, cells: int) -> str:
-    """DuckDB twin of _quant — the ONE axis-quantization contract every
+    """DuckDB twin of quant — the ONE axis-quantization contract every
     grid consumer (Morton cells, radius join, hotspot clustering) must
     share; private copies drift when the clamp rules change."""
     return (
@@ -129,8 +129,8 @@ def radius_join(
     r_deg = radius_km / KM_PER_DEG
 
     p = points.withColumn(
-        "__pix", _quant(F.col("p_lat"), -90.0, 180.0, cells)
-    ).withColumn("__piy", _quant(F.col("p_lon"), -180.0, 360.0, cells))
+        "__pix", quant(F.col("p_lat"), -90.0, 180.0, cells)
+    ).withColumn("__piy", quant(F.col("p_lon"), -180.0, 360.0, cells))
 
     lat_span = int(math.ceil(r_deg / lat_cell_deg))
     # longitude span depends on each query's latitude — computed
@@ -172,9 +172,9 @@ def radius_join(
     )
     q = (
         queries.withColumn(
-            "__qix", _quant(F.col("q_lat"), -90.0, 180.0, cells)
+            "__qix", quant(F.col("q_lat"), -90.0, 180.0, cells)
         )
-        .withColumn("__qiy", _quant(F.col("q_lon"), -180.0, 360.0, cells))
+        .withColumn("__qiy", quant(F.col("q_lon"), -180.0, 360.0, cells))
         .withColumn(
             "__dx",
             F.explode(F.sequence(F.lit(-lat_span), F.lit(lat_span))),

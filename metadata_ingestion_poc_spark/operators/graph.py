@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import _cut, _cut_lazy
-from ..functions.determinism import _half_up
+from ..execution import cut, cut_lazy
+from ..functions.determinism import half_up
 
 # decimal type for order-independent rank-contribution sums: values
 # are < 1, so 10 integer digits is ample, and 18 fractional digits
@@ -59,7 +59,7 @@ def bfs_hops(
     # satisfies the (u, v) clustering the distinct aggregate needs —
     # Catalyst inserts no second shuffle — and every round's frontier
     # join then reuses this layout.
-    sym = _cut(
+    sym = cut(
         edges.select("u", "v")
         .unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition("u")
@@ -67,13 +67,13 @@ def bfs_hops(
         reliable,
     )
 
-    visited = _cut(
+    visited = cut(
         seeds.select("node").distinct().withColumn("hops", F.lit(0)),
         reliable,
     )
     frontier = visited.select("node")
     for hop in range(1, max_hops + 1):
-        nxt = _cut_lazy(
+        nxt = cut_lazy(
             frontier.join(sym, frontier["node"] == sym["u"])
             .select(F.col("v").alias("node"))
             .distinct()
@@ -85,7 +85,7 @@ def bfs_hops(
             break
         # lazy: the next round's count (or the caller's first action)
         # materializes it — no dedicated job per round
-        visited = _cut_lazy(visited.unionByName(nxt), reliable)
+        visited = cut_lazy(visited.unionByName(nxt), reliable)
         frontier = nxt.select("node")
     return visited
 
@@ -120,7 +120,7 @@ def pagerank(
         raise ValueError(f"iterations must be >= 0, got {iterations}")
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
-    sym = _cut(
+    sym = cut(
         edges.select("u", "v")
         .unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition("u")
@@ -149,7 +149,7 @@ def pagerank(
                 (F.col("rank") / F.col("d")).alias("c"),
             )
         )
-        ranks = _cut(
+        ranks = cut(
             contrib.groupBy("node")
             .agg(F.sum(F.col("c").cast(_CONTRIB_DEC)).alias("s"))
             .select(
@@ -265,7 +265,7 @@ def kcore(
         )
         .distinct()
     )
-    e = _cut(e, reliable)
+    e = cut(e, reliable)
     for _ in range(rounds):
         sym = e.unionByName(
             e.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -276,7 +276,7 @@ def kcore(
             .filter(F.col("d") >= k)
             .select(F.col("a").alias("node"))
         )
-        e = _cut_lazy(
+        e = cut_lazy(
             e.join(
                 keep.withColumnRenamed("node", "a"), "a", "left_semi"
             ).join(keep.withColumnRenamed("node", "b"), "b", "left_semi"),
@@ -327,7 +327,7 @@ def densest_subgraph_peel(
         )
         .distinct()
     )
-    e = _cut(e, reliable)
+    e = cut(e, reliable)
     out: list[tuple[int, int, int, float, float]] = []
     for r in range(1, rounds + 1):
         sym = e.unionByName(
@@ -351,14 +351,14 @@ def densest_subgraph_peel(
                 r,
                 n,
                 n_edges,
-                _half_up(n_edges / n, 6),
-                _half_up(avg, 6),
+                half_up(n_edges / n, 6),
+                half_up(avg, 6),
             )
         )
         keep = deg.filter(F.col("d") > F.lit(avg)).select(
             F.col("a").alias("node")
         )
-        e = _cut_lazy(
+        e = cut_lazy(
             e.join(
                 keep.withColumnRenamed("node", "a"), "a", "left_semi"
             ).join(keep.withColumnRenamed("node", "b"), "b", "left_semi"),

@@ -30,14 +30,14 @@ from decimal import Decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.determinism import _half_up
+from ..functions.determinism import half_up
 
 
 def _sse6(q: int, s: int, cnt: int) -> Decimal:
     """ROUND(Q − S²/cnt, 6) as an exact decimal — the identical IEEE
     tree as the oracle's expression (one integer division, one
     subtraction, then the 6-dp round)."""
-    return Decimal(repr(_half_up(float(q) - float(s * s) / cnt, 6)))
+    return Decimal(repr(half_up(float(q) - float(s * s) / cnt, 6)))
 
 
 def voptimal_from_grid(

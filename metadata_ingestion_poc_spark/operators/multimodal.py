@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..execution import spread
+
 BLOB_SCHEMA = StructType(
     [
         StructField("blob_id", LongType()),
@@ -158,14 +160,12 @@ def sample_frames(blobs: DataFrame, every_n_bytes: int = 32) -> DataFrame:
                 {"blob_id": ids, "frame_idx": idxs, "frame_bytes": chunks}
             )
 
-    from .dedup import _spread
-
-    # _spread BEFORE the fan-out: a small blob table arrives as one
+    # spread BEFORE the fan-out: a small blob table arrives as one
     # input split, so the sampler AND every per-frame consumer
     # downstream (the pHash DCT is the CPU floor of q284) would run
-    # on a single core. Stats-gated no-op at real scale (dedup.py:78);
+    # on a single core. Stats-gated no-op at real scale (execution.spread);
     # spreading blobs (not frames) keeps the shuffle 1× the blob bytes.
-    videos = _spread(blobs.filter(F.col("media_type").startswith("video/")))
+    videos = spread(blobs.filter(F.col("media_type").startswith("video/")))
     return videos.mapInPandas(frames, schema=FRAME_SCHEMA)
 
 
@@ -265,9 +265,7 @@ def phash64(
     distance between hashes tracks perceptual distance, which is what
     the banded near-dup join below exploits."""
     udf = _phash_udf()
-    from .dedup import _spread
-
-    return _spread(blobs).select(
+    return spread(blobs).select(
         F.col(id_col).alias("id"), udf(F.col(content_col)).alias("phash")
     )
 
@@ -383,18 +381,13 @@ def hamming_banded_pairs(
     # final distinct removes multi-band duplicates exactly as before
     # (pinned banded≡brute in tests/test_multimodal.py +
     # tests/test_audio_fp.py).
-    from .dedup import (
-        PAIR_BUCKET_CAP,
-        _chunk_pairs_sql,
-        _chunked_members,
-        _spread,
-    )
+    from .dedup import PAIR_BUCKET_CAP, chunk_pairs_sql, chunked_members
 
-    # _spread the bucket arrays before the C(m,2) explode: the member
+    # spread the bucket arrays before the C(m,2) explode: the member
     # frame is tiny in BYTES (one row per bucket), so AQE coalesces it
     # onto a couple of partitions — and the quadratic pair fan-out +
     # popcount then runs nearly serially. Stats-gated no-op at scale.
-    members = _spread(
+    members = spread(
         banded.groupBy("band", "chunk")
         .agg(
             F.sort_array(
@@ -408,13 +401,13 @@ def hamming_banded_pairs(
     # the enforced form of the stop-bucket lever (see dedup.py
     # PAIR_BUCKET_CAP; pair set and order identical, a bucket with
     # m ≤ cap degenerates to the pre-cap expression).
-    pair = _chunk_pairs_sql(
+    pair = chunk_pairs_sql(
         lambda x, y: (
             f"named_struct('id_a', {x}.doc, 'id_b', {y}.doc, "
             f"'hamming', bit_count({x}.h ^ {y}.h))"
         )
     )
-    pairs = _chunked_members(members, PAIR_BUCKET_CAP).select(
+    pairs = chunked_members(members, PAIR_BUCKET_CAP).select(
         F.explode(F.expr(pair)).alias("p")
     )
     return (
@@ -589,9 +582,7 @@ def audio_fingerprint64(
     """(id, afp long): 64-bit spectral fingerprint of each audio blob.
     ZERO shuffle — a pure Arrow-batched map over the corpus, like
     phash64; the sanctioned UDF case (FFT has no built-in form)."""
-    from .dedup import _spread
-
-    return _spread(blobs).select(
+    return spread(blobs).select(
         F.col(id_col).alias("id"),
         _afp_udf()(F.col(content_col)).alias("afp"),
     )

@@ -77,8 +77,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.determinism import _half_up, sql_double
-from .clustering import _checked_base
+from ..execution import checked_base
+from ..functions.determinism import half_up, sql_double
 from .pca import covariance_upper, dim_means
 
 Rotation = list[list[float]]  # rows = rotated dims; y = R @ x
@@ -149,7 +149,7 @@ def opq_rotation_from_cov(
     ev, vecs = _eigh_desc(cov_upper, dims)
     buckets = _allocate_eigs(ev, m, dims // m)
     return [
-        [_half_up(x, 6) for x in vecs[i]]
+        [half_up(x, 6) for x in vecs[i]]
         for bucket in buckets
         for i in bucket
     ]
@@ -167,12 +167,12 @@ def opq_train_rotation(
     """Train an OPQ rotation from a vector frame: one mean pass + one
     covariance pass (both bounded-exchange, see operators/pca.py),
     then driver-side eigen-allocation. Validates through
-    `_checked_base` like every trainer (a poisoned vector would
+    `checked_base` like every trainer (a poisoned vector would
     silently drop out of the covariance sums); callers holding an
     already-validated frame pass its row count as ``n_rows`` to skip
     the re-validation (the ivf_build_index convention)."""
     if n_rows is None:
-        df, _, n_rows = _checked_base(
+        df, _, n_rows = checked_base(
             df, id_col, vec_col, cache, "opq_train_rotation", dims=dims
         )
     if n_rows < 2:

@@ -34,7 +34,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.determinism import DEC, _half_up, sql_double
+from ..execution import checked_base
+from ..functions.determinism import DEC, half_up, sql_double
 
 _Q12 = Decimal("1e-12")
 
@@ -57,7 +58,7 @@ def dim_means(df: DataFrame, vec_col: str, n: int) -> list[float]:
     )
     by_pos = {r["pos"]: r["s"] for r in rows}
     return [
-        _half_up(float(by_pos[p]) / n, 6) for p in sorted(by_pos)
+        half_up(float(by_pos[p]) / n, 6) for p in sorted(by_pos)
     ]
 
 
@@ -70,7 +71,7 @@ def covariance_upper(
     The collect is bounded at d(d+1)/2 rows by construction."""
     rows = covariance_rollup(df, vec_col, dims, means).collect()
     return {
-        (r["i"], r["j"]): _half_up(float(r["s"]) / (n - 1), 6)
+        (r["i"], r["j"]): half_up(float(r["s"]) / (n - 1), 6)
         for r in rows
     }
 
@@ -92,7 +93,7 @@ def covariance_rollup(
         f" * (cast(element_at({vec_col}, j) as double)"
         f" - element_at(array({marr}), j)), 6)))))"
     )
-    # explode_outer, not explode — the dedup.py _shingle_index lesson:
+    # explode_outer, not explode — the dedup.py shingle_index lesson:
     # plain explode over a computed array gets an inferred size()>0
     # filter pushed below the projection with the WHOLE d(d+1)/2
     # product expression inlined, re-evaluating it twice per row. The
@@ -119,7 +120,7 @@ def power_iteration(
     for (i, j), c in cov_upper.items():
         if i != j:
             full[(j, i)] = c
-    v = [_half_up(1.0 / dims ** 0.5, 6)] * dims
+    v = [half_up(1.0 / dims ** 0.5, 6)] * dims
     norm = 0.0
     for _ in range(iterations):
         # The product of two 6-dp decimals is EXACTLY a 12-dp decimal,
@@ -141,7 +142,7 @@ def power_iteration(
         ]
         norm = float(
             sum(
-                (Decimal(repr(_half_up(x * x, 6))) for x in u), Decimal(0)
+                (Decimal(repr(half_up(x * x, 6))) for x in u), Decimal(0)
             )
         ) ** 0.5
         if norm == 0.0:
@@ -150,8 +151,8 @@ def power_iteration(
             # than dividing by zero — the documented degenerate
             # contract (constant data never reaches the SQL replay).
             return v, 0.0
-        v = [_half_up(x / norm, 6) for x in u]
-    return v, _half_up(norm, 6)
+        v = [half_up(x / norm, 6) for x in u]
+    return v, half_up(norm, 6)
 
 
 def pca_top_component(
@@ -163,13 +164,11 @@ def pca_top_component(
     means and covariance jobs scan a compact columnar copy instead of
     re-executing an expensive upstream plan per pass (the
     kmeans_lloyd discipline); ``cache=False`` opts out. Input is
-    validated through clustering's ``_checked_base`` (NULL vectors,
+    validated through ``execution.checked_base`` (NULL vectors,
     NULL elements, ragged or mis-declared lengths all fail loud —
     element_at would otherwise return NULL and F.sum silently drop
     those terms, quietly skewing means and covariance)."""
-    from .clustering import _checked_base
-
-    base, _, n = _checked_base(
+    base, _, n = checked_base(
         df, None, vec_col, cache, "pca_top_component", dims=dims
     )
     if n < 2:

@@ -17,7 +17,7 @@ The 100-TB shape, stage by stage:
 
 - **Training** is Lloyd's per subspace — but run JOINTLY: the m
   subspace problems are independent yet share every scan, so one
-  iteration is ONE pass over the (checkpointed, _spread) projection
+  iteration is ONE pass over the (checkpointed, spread) projection
   computing all m argmins in codegen, one explode to
   (subspace, code, slice) rows, and ONE m·ksub-group exchange behind
   map-side combine (the kmeans_lloyd update discipline — the exchange
@@ -31,7 +31,7 @@ The 100-TB shape, stage by stage:
   `array<int>`, m bytes-ish per vector: the 64-dim float corpus
   compresses ~32×, which is the point — the ADC scan reads codes, not
   vectors. Every encode path validates its input through the
-  clustering `_checked_base` discipline first: a ragged, NULL, or
+  `execution.checked_base` discipline first: a ragged, NULL, or
   NULL-element vector would zip_with-pad with NULL and emit
   arbitrary codes silently — fail loud instead.
 - **Query (ADC)**: per query, a lookup table of partial dot products
@@ -76,8 +76,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.determinism import DEC, _half_up, sql_double
-from .clustering import _checked_base, seed_centroids
+from ..execution import checked_base
+from ..functions.determinism import DEC, half_up, sql_double
+from .clustering import seed_centroids
 from .opq import (
     Rotation,
     load_opq_rotation,
@@ -149,7 +150,7 @@ def _sub_assign(vec_expr: str, book: Mapping[int, Sequence[float]]) -> str:
 
 
 def _guarded_q_norm(vec_col: str, dims: int, who: str) -> Column:
-    """Query-frame fail-loud guard, mirroring the `_checked_base`
+    """Query-frame fail-loud guard, mirroring the `checked_base`
     discipline without a separate validation job (query sets are
     per-row-cheap to check inline): a NULL / ragged / wrong-dims /
     NULL-element / zero-norm query vector trips `assert_true` the
@@ -182,7 +183,7 @@ def _train_books(
     who: str = "pq_train",
 ) -> Codebooks:
     """Joint-Lloyd training loop over an ALREADY-validated base frame
-    (the `_checked_base` output — pq_train wraps this for raw vectors;
+    (the `checked_base` output — pq_train wraps this for raw vectors;
     ivfpq_build calls it directly on the checkpointed residual frame
     so validation and materialization are paid once, not per stage)."""
     dsub = dims // m
@@ -240,7 +241,7 @@ def _train_books(
         books = {sub: {} for sub in range(1, m + 1)}
         for r in upd:
             books[r["sub"]][r["code"]] = [
-                _half_up(float(r[f"s{i}"]) / r["n"], 6)
+                half_up(float(r[f"s{i}"]) / r["n"], 6)
                 for i in range(1, dsub + 1)
             ]
     return books
@@ -266,7 +267,7 @@ def pq_train(
     """
     if dims % m:
         raise ValueError(f"pq_train: dims={dims} not divisible by m={m}")
-    base, _, n = _checked_base(df, id_col, vec_col, cache, "pq_train",
+    base, _, n = checked_base(df, id_col, vec_col, cache, "pq_train",
                                dims=dims)
     return _train_books(base, id_col, vec_col, dims, m, ksub, iterations, n)
 
@@ -309,12 +310,12 @@ def pq_encode(
     """(id, codes array<int>): each vector's nearest codeword per
     subspace. Pure codegen against array literals — zero shuffle, no
     join (the kmeans assignment property, m times over slices).
-    Routed through `_checked_base(dims=...)` first: a ragged, NULL-
+    Routed through `checked_base(dims=...)` first: a ragged, NULL-
     element, or wrong-dims frame would zip_with-pad with NULL and
     silently emit arbitrary codes — the validation aggregate fails
     loud instead (the same discipline as pq_train / the clustering
     operators)."""
-    base, _, _ = _checked_base(df, id_col, vec_col, cache, "pq_encode",
+    base, _, _ = checked_base(df, id_col, vec_col, cache, "pq_encode",
                                dims=dims)
     return _encode_on_base(base, codebooks, id_col, vec_col, dims)
 
@@ -545,7 +546,7 @@ def _pq_build_on_base(
     """:func:`pq_build` plus the validated base it ran on."""
     if dims % m:
         raise ValueError(f"{who}: dims={dims} not divisible by m={m}")
-    base, _, n = _checked_base(corpus, id_col, vec_col, True, who,
+    base, _, n = checked_base(corpus, id_col, vec_col, True, who,
                                dims=dims)
     rotation, rot = _rotated(base, id_col, vec_col, dims, m, n, opq)
     books = _train_books(rot, id_col, vec_col, dims, m, ksub,
@@ -672,9 +673,9 @@ def pq_reconstruction_stats(
     replays end-to-end, which is what makes the joint-Lloyd trainer
     oracle-provable rather than rows-only. ONE scan (all m argmin
     structs in codegen), one explode, one m·ksub-group exchange —
-    validated through `_checked_base(dims=...)` like every encode
+    validated through `checked_base(dims=...)` like every encode
     path (a poisoned frame must fail loud, not skew the census)."""
-    base, _, _ = _checked_base(df, id_col, vec_col, cache,
+    base, _, _ = checked_base(df, id_col, vec_col, cache,
                                "pq_reconstruction_stats", dims=dims)
     return _census_on_base(base, codebooks, vec_col, dims)
 
@@ -727,14 +728,14 @@ def pq_train_with_stats(
 ) -> tuple[Codebooks, DataFrame]:
     """Train codebooks AND return the post-training census off ONE
     validated/checkpointed projection — the q251 shape. Composing the
-    public pq_train + pq_reconstruction_stats pays _checked_base
+    public pq_train + pq_reconstruction_stats pays checked_base
     (checkpoint + validation aggregate) twice for the identical frame;
     this is the shared-base path, like pq_ann_topk for train+encode."""
     if dims % m:
         raise ValueError(
             f"pq_train_with_stats: dims={dims} not divisible by m={m}"
         )
-    base, _, n = _checked_base(df, id_col, vec_col, cache,
+    base, _, n = checked_base(df, id_col, vec_col, cache,
                                "pq_train_with_stats", dims=dims)
     books = _train_books(base, id_col, vec_col, dims, m, ksub,
                          iterations, n, who="pq_train_with_stats")
@@ -916,7 +917,7 @@ def ivfpq_build(
     the matvec fuses into the residual projection, so coding stays ONE
     zero-shuffle scan. Without it the rotation is None.
 
-    The input is validated/checkpointed once via `_checked_base`
+    The input is validated/checkpointed once via `checked_base`
     (fail-loud on ragged/NULL/wrong-dims vectors — a poisoned vector
     would otherwise encode silently) and that base feeds BOTH the
     coarse Lloyd refinement and the residual scan. The residual frame
@@ -930,7 +931,7 @@ def ivfpq_build(
         )
     from .similarity import ivf_build_index
 
-    base, _, n = _checked_base(corpus, id_col, vec_col, True,
+    base, _, n = checked_base(corpus, id_col, vec_col, True,
                                "ivfpq_build", dims=dims)
     cents, _ = ivf_build_index(
         base, n_cells=n_cells, id_col=id_col, vec_col=vec_col, n_rows=n,
@@ -1043,13 +1044,13 @@ def ivfpq_encode_with_index(
     new batches encode in ONE zero-shuffle codegen scan and the result
     is bit-identical to what ivfpq_build would have produced for the
     same rows (pinned in tests/test_similarity.py). Validation runs
-    through `_checked_base(dims=...)` like every encode path."""
+    through `checked_base(dims=...)` like every encode path."""
     if dims % len(books):
         raise ValueError(
             f"ivfpq_encode_with_index: dims={dims} not divisible by "
             f"m={len(books)}"
         )
-    base, _, _ = _checked_base(df, id_col, vec_col, cache,
+    base, _, _ = checked_base(df, id_col, vec_col, cache,
                                "ivfpq_encode_with_index", dims=dims)
     return _codes_from_resid(
         _residual_frame(base, cents_raw, id_col, vec_col), books, dims,

@@ -34,7 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.determinism import DEC, _half_up
+from ..execution import spread
+from ..functions.determinism import DEC, half_up
 
 
 def huber_irls(
@@ -61,12 +62,10 @@ def huber_irls(
         raise ValueError(
             f"delta must be positive on the 6-dp grid: {delta}"
         )
-    from .dedup import _spread
-
-    # _spread before the checkpoint (the classify.py gd_train note):
+    # spread before the checkpoint (the classify.py gd_train note):
     # without it the checkpoint pins the input's 2-3 parquet splits
     # and every IRLS scan runs nearly single-core.
-    b = _spread(
+    b = spread(
         base.selectExpr(
             f"CAST({x_expr} AS DOUBLE) AS x",
             f"CAST({y_expr} AS DOUBLE) AS y",
@@ -103,12 +102,12 @@ def huber_irls(
         swxx, swxy = float(row["swxx"]), float(row["swxy"])
         # the identical IEEE tree as the oracle's t{i} CTE, then the
         # chain rule: round at 6 dp before re-entering the plan
-        b1 = _half_up(
+        b1 = half_up(
             (sw * swxy - swx * swy) / (sw * swxx - swx * swx), 6
         )
-        b0 = _half_up((swy - b1 * swx) / sw, 6)
+        b0 = half_up((swy - b1 * swx) / sw, 6)
         census.append(
-            (it, b0, b1, int(row["n_down"]), _half_up(sw, 6))
+            (it, b0, b1, int(row["n_down"]), half_up(sw, 6))
         )
     return base.sparkSession.createDataFrame(
         census, "iter int, b0 double, b1 double, n_down long, sum_w double"

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..execution import spread
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -65,18 +67,16 @@ def cosine_topk(
     Output: (query_id, neighbor_id, cosine, rank); self-matches
     excluded; ties broken by neighbor id so the result is total-ordered.
     """
-    from .dedup import _spread
-
     q = with_norm(queries, vec_col).select(
         F.col(id_col).alias("query_id"),
         F.col("__vec").alias("q_vec"),
         F.col("__norm").alias("q_norm"),
     )
-    # _spread the probe side (round 14): a small corpus parquet is one
+    # spread the probe side (round 14): a small corpus parquet is one
     # input split, so the |Q|×|C| dot-product sweep — the CPU floor of
     # exact search — would run on a single core. Stats-gated no-op at
     # real scale.
-    c = with_norm(_spread(corpus.select(id_col, vec_col)), vec_col).select(
+    c = with_norm(spread(corpus.select(id_col, vec_col)), vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col("__vec").alias("c_vec"),
         F.col("__norm").alias("c_norm"),
@@ -290,7 +290,7 @@ def ivf_build_index(
     with ``save_ivf_index`` so query batches reuse the index instead
     of rebuilding (the operational shape at scale: build nightly,
     query all day). Callers that already counted the corpus (every
-    `_checked_base` wrapper has n in hand) pass ``n_rows`` to skip the
+    `checked_base` wrapper has n in hand) pass ``n_rows`` to skip the
     redundant count job.
     """
     n = corpus.count() if n_rows is None else n_rows

@@ -25,6 +25,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import run_concurrent, spread
+
 
 def cms_build(
     df: DataFrame,
@@ -608,7 +610,7 @@ def ams_f2(
     # the sketch scan and the exact audit rollup share no inputs'
     # results — submit both jobs at once so the audit back-fills the
     # cluster during the sketch scan's tail (guide §2.6 overlap)
-    sa, exact = _run_concurrent(
+    sa, exact = run_concurrent(
         lambda: _sign_sums(df, key_expr, reps), _exact
     )
     gs = [
@@ -620,26 +622,6 @@ def ams_f2(
         [(g, gs[g], est, exact) for g in range(groups)],
         "g int, sum_e long, est_f2 double, exact_f2 long",
     ).orderBy("g")
-
-
-def _run_concurrent(*thunks):
-    """Run independent Spark actions from driver threads so their jobs
-    overlap (FIFO scheduling back-fills executor slots — guide §2.6).
-    Returns their results in submission order; used only for
-    bounded-collect actions. Under Spark Connect the thunks run
-    sequentially on the calling thread — the overlap is a latency
-    optimization, never a semantic one."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-    from pyspark.sql.utils import is_remote
-
-    if is_remote():
-        return [t() for t in thunks]
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
-        return [f.result() for f in futures]
 
 
 def _ams_validate(reps: int, groups: int) -> None:
@@ -658,10 +640,10 @@ def _sign_sums(df: DataFrame, key_expr: str, reps: int) -> list[int]:
 
     Round-14 shape (identical integers, ~7× faster measured at sf0.1):
 
-    - the projected key is ``_spread`` first — a small parquet arrives
+    - the projected key is ``spread`` first — a small parquet arrives
       as ONE input split, so the md5 + reps-aggregate scan (the CPU
       floor of the sketch) would otherwise run on a single core; the
-      stats gate makes this a no-op at real scale (dedup.py:78);
+      stats gate makes this a no-op at real scale (execution.spread);
     - the nibble parity is extracted ONCE per row via ``translate``
       (hex digit → its parity character) instead of reps
       ``conv(substring, 16, 10)`` base conversions, and each aggregate
@@ -682,14 +664,12 @@ def _sign_sums_frame(df: DataFrame, key_expr: str, reps: int) -> DataFrame:
     of this collect-style operator (the operator's public result is a
     driver-assembled frame whose explain shows only an ExistingRDD
     shell — tools/internal_plans.py dumps this frame instead)."""
-    from .dedup import _spread
-
     parity = (
         "translate(md5(CAST(k AS STRING)), '0123456789abcdef',"
         " '0101010101010101')"
     )
     return (
-        _spread(df.selectExpr(f"({key_expr}) AS k"))
+        spread(df.selectExpr(f"({key_expr}) AS k"))
         .selectExpr(f"{parity} AS t")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -780,10 +760,10 @@ def ams_join_size(
         lambda: _sign_sums(df_b, key_b, reps),
     ]
     if audit:
-        results = _run_concurrent(*thunks, _exact)
+        results = run_concurrent(*thunks, _exact)
         sa, sb, exact = results[0], results[1], results[2]
     else:
-        sa, sb = _run_concurrent(*thunks)
+        sa, sb = run_concurrent(*thunks)
     gs = [
         sum(sa[j] * sb[j] for j in range(g * per, (g + 1) * per))
         for g in range(groups)

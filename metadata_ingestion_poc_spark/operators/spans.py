@@ -53,7 +53,7 @@ def positional_grams(
     keeps the split() single-eval (same hazard as dedup.shingles — an
     inline split inside the lambda re-evaluates per element).
     explode_outer for the same inferred-filter reason as
-    dedup._shingle_index.
+    dedup.shingle_index.
     """
     toks_df = docs.withColumn(
         "__toks", F.split(F.lower(F.trim(F.col(text_col))), r"\s+")

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .dedup import tokenize
+from ..execution import spread
 
 # Tiny marker-word sets for the heuristic language scorer. The corpus
 # is synthetic word salad, so these act as a deterministic scoring
@@ -302,13 +303,11 @@ def winnow_fingerprints(
     """
     if k < 1 or w < 1:
         raise ValueError(f"k and w must be >= 1, got k={k}, w={w}")
-    from .dedup import _spread
-
-    # project + _spread first (round 14): the per-document md5 k-gram
+    # project + spread first (round 14): the per-document md5 k-gram
     # build and window-min sweep are the CPU floor of the operator,
     # and a small docs parquet arrives as 1-3 input splits that the
     # two checkpoints would otherwise pin. Stats-gated no-op at scale.
-    toks_df = _spread(docs.select(id_col, text_col)).withColumn(
+    toks_df = spread(docs.select(id_col, text_col)).withColumn(
         "__toks", F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     )
     toks = F.col("__toks")
@@ -499,7 +498,7 @@ def tfidf_cosine_pairs(
     """
     from ..functions.determinism import DEC
 
-    # explode_outer, not explode (the _shingle_index lesson): plain
+    # explode_outer, not explode (the shingle_index lesson): plain
     # explode gets an inferred size()>0 filter pushed below the
     # projection, re-evaluating the tokenize split per row.
     toks = (

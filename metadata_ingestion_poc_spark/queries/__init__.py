@@ -114,7 +114,7 @@ def _load_all() -> None:
 #
 # Round-10 rotation (window N=50), per the round-9 verdict: (a) the
 # 6 queries whose code or oracle text changed in round 10 (clustering
-# _spread/validation reroute; q249/q245 advisor edge fixes); (b) the
+# spread/validation reroute; q249/q245 advisor edge fixes); (b) the
 # 11 round-10-new q250-q258 + q260-q261 (PQ family, RRF, set cover, source
 # overlap, weighted sample, split leakage, effective size, token
 # dispersion, densest subgraph — a q259 vocab-growth draft was REMOVED as a degenerate

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from . import query
 from ..catalog import load_table
+from ..execution import spread
 from ..functions.determinism import DEC
 from ._util import davg, dsum, sql_davg, sql_dsum
 
@@ -1058,12 +1059,12 @@ def q199_token_budget_allocation(
     """,
 )
 def q200_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _spread, shingles
+    from ..operators.dedup import shingles
 
-    # _spread: the docs parquet is one input split — without it all
+    # spread: the docs parquet is one input split — without it all
     # shingling runs on a single core (the dedup-family lesson)
-    d = _spread(load_table(spark, sf_dir, "documents"))
-    # explode_outer, not explode (the _shingle_index lesson): plain
+    d = spread(load_table(spark, sf_dir, "documents"))
+    # explode_outer, not explode (the shingle_index lesson): plain
     # explode gets an inferred size()>0 filter pushed below the
     # projection with the whole O(len²) shingle expression inlined,
     # evaluating it twice per row. And NO .distinct() after it

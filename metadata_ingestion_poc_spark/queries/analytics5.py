@@ -43,8 +43,8 @@ from ._util import DEC, collect_literal_row
 # parallel and stays entirely inside whole-stage codegen.
 # ---------------------------------------------------------------------------
 
-_CHUNK_W = 32
-_CHUNK_S = 24
+CHUNK_W = 32
+CHUNK_S = 24
 
 
 @query(
@@ -55,24 +55,24 @@ _CHUNK_S = 24
     n AS (SELECT doc_id, toks, len(toks) AS n_tok FROM t),
     c AS (SELECT doc_id, toks, n_tok,
                  unnest(generate_series(
-                     0, (greatest(n_tok - {_CHUNK_W}, 0) + {_CHUNK_S - 1})
-                            // {_CHUNK_S})) AS chunk_idx
+                     0, (greatest(n_tok - {CHUNK_W}, 0) + {CHUNK_S - 1})
+                            // {CHUNK_S})) AS chunk_idx
           FROM n)
     SELECT doc_id, chunk_idx::BIGINT AS chunk_idx,
-           (chunk_idx * {_CHUNK_S})::BIGINT AS chunk_start,
-           len(list_slice(toks, chunk_idx * {_CHUNK_S} + 1,
-                          chunk_idx * {_CHUNK_S} + {_CHUNK_W}))::BIGINT
+           (chunk_idx * {CHUNK_S})::BIGINT AS chunk_start,
+           len(list_slice(toks, chunk_idx * {CHUNK_S} + 1,
+                          chunk_idx * {CHUNK_S} + {CHUNK_W}))::BIGINT
                AS n_tokens,
            array_to_string(
-               list_slice(toks, chunk_idx * {_CHUNK_S} + 1,
-                          chunk_idx * {_CHUNK_S} + {_CHUNK_W}), ' ')
+               list_slice(toks, chunk_idx * {CHUNK_S} + 1,
+                          chunk_idx * {CHUNK_S} + {CHUNK_W}), ' ')
                AS chunk_text
     FROM c
     ORDER BY doc_id, chunk_idx
     """,
 )
 def q214_rag_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    W, S = _CHUNK_W, _CHUNK_S
+    W, S = CHUNK_W, CHUNK_S
     toks = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 == 0)

@@ -306,18 +306,18 @@ _KNN_BITS = 5
 )
 def q231_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.geo import radius_join
-    from .geo_queries import _CUST_LAT, _CUST_LON, _sup_points
+    from .geo_queries import CUST_LAT, CUST_LON, sup_points
 
     qs = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % 20 == 0)
         .select(
             "c_custkey",
-            F.expr(_CUST_LAT).alias("q_lat"),
-            F.expr(_CUST_LON).alias("q_lon"),
+            F.expr(CUST_LAT).alias("q_lat"),
+            F.expr(CUST_LON).alias("q_lon"),
         )
     )
-    ps = _sup_points(spark, sf_dir)  # (s_suppkey, p_lat, p_lon)
+    ps = sup_points(spark, sf_dir)  # (s_suppkey, p_lat, p_lon)
     pairs = radius_join(qs, ps, _KNN_RADIUS_KM, bits=_KNN_BITS)
     w = Window.partitionBy("c_custkey").orderBy("distance_km", "s_suppkey")
     return (
@@ -931,7 +931,7 @@ def q237_km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 # construction.
 # ---------------------------------------------------------------------------
 
-from .analytics5 import _CHUNK_S, _CHUNK_W  # noqa: E402 — shared contract
+from .analytics5 import CHUNK_S, CHUNK_W  # noqa: E402 — shared contract
 
 
 @query(
@@ -943,12 +943,12 @@ from .analytics5 import _CHUNK_S, _CHUNK_W  # noqa: E402 — shared contract
     n AS (SELECT doc_id, source, toks, len(toks) AS n_tok FROM t),
     c AS (SELECT doc_id, source,
                  array_to_string(
-                     list_slice(toks, i * {_CHUNK_S} + 1,
-                                i * {_CHUNK_S} + {_CHUNK_W}), ' ')
+                     list_slice(toks, i * {CHUNK_S} + 1,
+                                i * {CHUNK_S} + {CHUNK_W}), ' ')
                    AS chunk_text
           FROM n, LATERAL (SELECT unnest(generate_series(
-                   0, (greatest(n_tok - {_CHUNK_W}, 0) + {_CHUNK_S - 1})
-                          // {_CHUNK_S})) AS i)),
+                   0, (greatest(n_tok - {CHUNK_W}, 0) + {CHUNK_S - 1})
+                          // {CHUNK_S})) AS i)),
     cs AS (SELECT chunk_text, source,
                   COUNT(*)::BIGINT AS n_inst,
                   COUNT(DISTINCT doc_id)::BIGINT AS nd
@@ -968,7 +968,7 @@ from .analytics5 import _CHUNK_S, _CHUNK_W  # noqa: E402 — shared contract
     """,
 )
 def q238_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    W, S = _CHUNK_W, _CHUNK_S
+    W, S = CHUNK_W, CHUNK_S
     toks = (
         load_table(spark, sf_dir, "documents")
         .select(
@@ -1266,7 +1266,7 @@ def q240_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same integer adjacency.
 # ---------------------------------------------------------------------------
 
-from ..operators.geo import _quant as _geo_quant  # noqa: E402
+from ..operators.geo import quant as _geo_quant  # noqa: E402
 from ..operators.geo import quant_sql as _geo_quant_sql  # noqa: E402
 
 _HOT_BITS = 5

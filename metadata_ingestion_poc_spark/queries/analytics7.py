@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 
 from . import query
 from ..catalog import load_table
-from ..functions.determinism import DEC, _half_up
+from ..execution import spread
+from ..functions.determinism import DEC, half_up
 
 # ---------------------------------------------------------------------------
 # q242 — k-means clustering of the embeddings table (Lloyd's, k=8,
@@ -56,8 +57,8 @@ _KM_DIMS = 64
 # the one audited copy of the seed/sample hash — the oracles below
 # and the Spark paths must stay numerically identical
 from ..operators.clustering import (  # noqa: E402
-    _HASH_MOD as _KM_HASH_MOD,
-    _HASH_MULT as _KM_HASH_MULT,
+    HASH_MOD as _KM_HASH_MOD,
+    HASH_MULT as _KM_HASH_MULT,
 )
 
 
@@ -158,11 +159,11 @@ def q242_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         [
             (
                 cid,
-                _half_up(
+                half_up(
                     float(
                         sum(
                             (
-                                Decimal(repr(_half_up(v * v, 6)))
+                                Decimal(repr(half_up(v * v, 6)))
                                 for v in c
                             ),
                             Decimal(0),
@@ -564,12 +565,10 @@ def q247_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, centroids = kmeans_lloyd(
         emb, "vec_id", "embedding", k=_KM_K, iterations=_KM_ITERS
     )
-    from ..operators.dedup import _spread
-
     srt = F.expr(nearest_two_expr("embedding", centroids))
-    # _spread: the silhouette pass re-scans the one-split parquet with
+    # spread: the silhouette pass re-scans the one-split parquet with
     # the O(k·d) sorted-distance expression — single-core without it
-    two = _spread(emb).select(
+    two = spread(emb).select(
         F.element_at(srt, 1).alias("nearest"),
         F.get(srt, 1).alias("second"),  # 0-based get -> NULL if k = 1
     ).select(
@@ -683,7 +682,7 @@ def q248_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 rank,
                 vid,
-                None if r2 is None else _half_up(float(r2), 6),
+                None if r2 is None else half_up(float(r2), 6),
             )
             for rank, vid, r2 in sel
         ],
@@ -860,7 +859,7 @@ def q251_pq_train_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # shared-base path: train + census validate/checkpoint the
     # projection ONCE (round 11 — composing pq_train +
-    # pq_reconstruction_stats paid _checked_base twice)
+    # pq_reconstruction_stats paid checked_base twice)
     _, census = pq_train_with_stats(
         emb, dims=_KM_DIMS, m=_PQ_M, ksub=_PQ_KSUB, iterations=_PQ_ITERS
     )
@@ -1147,11 +1146,11 @@ def q254_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q255_source_overlap_matrix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.dedup import _spread, shingles
+    from ..operators.dedup import shingles
 
     d = load_table(spark, sf_dir, "documents")
     ss = (
-        shingles(_spread(d), 3, "text")
+        shingles(spread(d), 3, "text")
         .select("source", F.explode_outer("shingles").alias("s"))
         .filter(F.col("s").isNotNull())
         .distinct()
@@ -1440,15 +1439,13 @@ def q258_effective_corpus_size(
     """,
 )
 def q260_token_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _spread
-
-    # _spread: the documents parquet arrives as ONE split, and the
+    # spread: the documents parquet arrives as ONE split, and the
     # tokenize+explode map side must use every core. explode_outer +
-    # isNotNull, not explode — the _shingle_index lesson (an inferred
+    # isNotNull, not explode — the shingle_index lesson (an inferred
     # size()>0 filter would inline the split() twice). The split of a
     # trimmed non-NULL string is never NULL, so outer is value-equal.
     d = (
-        _spread(load_table(spark, sf_dir, "documents"))
+        spread(load_table(spark, sf_dir, "documents"))
         .select(
             "source",
             F.explode_outer(

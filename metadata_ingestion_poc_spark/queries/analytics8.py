@@ -22,9 +22,10 @@ from pyspark.sql import functions as F
 
 from . import query
 from ..catalog import load_table
+from ..execution import spread
 from ..operators.clustering import (
-    _HASH_MOD as _KM_HASH_MOD,
-    _HASH_MULT as _KM_HASH_MULT,
+    HASH_MOD as _KM_HASH_MOD,
+    HASH_MULT as _KM_HASH_MULT,
 )
 
 # ---------------------------------------------------------------------------
@@ -99,9 +100,7 @@ from ..operators.clustering import (
 )
 def q266_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.classify import naive_bayes_model, naive_bayes_score
-    from ..operators.dedup import _spread
-
-    docs = _spread(load_table(spark, sf_dir, "documents")).localCheckpoint(
+    docs = spread(load_table(spark, sf_dir, "documents")).localCheckpoint(
         eager=False
     )  # reused: train counts, priors, scoring, and the label join-back
     model, priors = naive_bayes_model(docs, "text", "lang", alpha=1.0)
@@ -823,10 +822,8 @@ def q273_ridge_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fold",
         )
     )
-    from ..operators.dedup import _spread
-
-    # _spread before the checkpoint (the classify.py gd_train note)
-    r = _spread(r).localCheckpoint(
+    # spread before the checkpoint (the classify.py gd_train note)
+    r = spread(r).localCheckpoint(
         eager=False
     )  # reused: fold stats + eval scan
     fs = r.groupBy("fold").agg(
@@ -2231,14 +2228,12 @@ def _qr_oracle(iters: int) -> str:
 
 @query("q283_quantile_regression", oracle=_qr_oracle(_QR_ITERS))
 def q283_quantile_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.determinism import _half_up
+    from ..functions.determinism import half_up
 
-    from ..operators.dedup import _spread
-
-    # _spread before the checkpoint (the classify.py gd_train note):
+    # spread before the checkpoint (the classify.py gd_train note):
     # the checkpoint otherwise pins lineitem's 2-3 input splits and
     # every subgradient scan runs nearly single-core.
-    b = _spread(
+    b = spread(
         load_table(spark, sf_dir, "lineitem").selectExpr(
             f"{_QR_X1} AS x1", f"{_QR_Y} AS y"
         )
@@ -2259,8 +2254,8 @@ def q283_quantile_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         if it < _QR_ITERS:
             eta = _QR_ETA0 / (it + 1)
             w = [
-                _half_up(w[0] - eta * (float(st["g0"]) / n), 6),
-                _half_up(w[1] - eta * (float(st["g1"]) / n), 6),
+                half_up(w[0] - eta * (float(st["g0"]) / n), 6),
+                half_up(w[1] - eta * (float(st["g1"]) / n), 6),
             ]
     return spark.createDataFrame(
         rows, "iter int, w0 double, w1 double, pinball double"
@@ -2517,14 +2512,12 @@ def _seq_patterns(types: list[str]) -> list[list[str]]:
 def q287_sequence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.dedup import _spread, _spread_by
-
-    # _spread_by pins the user_id exchange at defaultParallelism for a
+    # the keyed spread pins the user_id exchange at parallelism for a
     # small frame (AQE sizes post-shuffle partitions by BYTES and
     # collapses the whole window + session rollup onto one task —
     # measured 2.9s serial at sf0.1); the window and the groupBy below
     # both key on user_id, so they reuse this single exchange.
-    ev = _spread_by(load_table(spark, sf_dir, "events"), "user_id")
+    ev = spread(load_table(spark, sf_dir, "events"), "user_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sess = (
         ev.withColumn(
@@ -2590,9 +2583,9 @@ def q287_sequence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
         # on this sparse fixture they're ~95% of sessions — dropping
         # them BEFORE the 150-way candidate explode cuts the fold
         # work ~20x (support denominators still count every session).
-        # _spread: the surviving sessions are few BYTES, so AQE would
+        # spread: the surviving sessions are few BYTES, so AQE would
         # run the 150-way explode + containment fold on 1-2 tasks.
-        _spread(sess.filter(F.size("arr") >= 2))
+        spread(sess.filter(F.size("arr") >= 2))
         .select(F.explode(cand).alias("c"), "arr")
         .filter(contains)
         .groupBy(

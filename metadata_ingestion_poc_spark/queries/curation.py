@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..execution import spread
 from . import query
 
 
@@ -346,16 +347,16 @@ def q118_sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q119_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _shingle_index, _spread
+    from ..operators.dedup import shingle_index
 
-    # _spread: documents arrive as one split; without it the shingle
-    # explode runs on a single core. _shingle_index carries the
+    # spread: documents arrive as one split; without it the shingle
+    # explode runs on a single core. shingle_index carries the
     # explode_outer guard against InferFiltersFromGenerate re-inlining
     # the O(len²) shingle expression. A window over the gram partition
     # replaces the grams⋈gram_df self-join, so the explode+distinct
     # subtree is computed once instead of once per join branch.
-    d = _spread(load_table(spark, sf_dir, "documents"))
-    grams = _shingle_index(d, "doc_id", 3, None).select(
+    d = spread(load_table(spark, sf_dir, "documents"))
+    grams = shingle_index(d, "doc_id", 3, None).select(
         F.col("doc").alias("doc_id"), F.col("sh").alias("gram")
     )
     per_gram = grams.withColumn(

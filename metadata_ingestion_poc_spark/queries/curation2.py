@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..execution import spread
 from ..operators.similarity import dot, with_norm
 from . import query
 
@@ -76,9 +77,9 @@ _SHINGLE5 = (
     """,
 )
 def q120_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _spread, shingles
+    from ..operators.dedup import shingles
 
-    d = _spread(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"))
     sh = (
         shingles(d, n=5)
         .select("doc_id", F.explode_outer("shingles").alias("s"))

@@ -61,9 +61,9 @@ _STOPWORDS = ("the", "a", "of", "to", "and")
 # q75/q117's so the three samplers are independent); the id is folded
 # mod a prime before the multiply so the product fits int64 at any
 # corpus size.
-_SPLIT_PRIME = 1000003
-_SPLIT_MULT = 3266489917  # murmur3 fmix c2
-_TRAIN_PM, _VAL_PM = 800, 900
+SPLIT_PRIME = 1000003
+SPLIT_MULT = 3266489917  # murmur3 fmix c2
+TRAIN_PM, VAL_PM = 800, 900
 
 
 def _tok_table(d: DataFrame) -> DataFrame:
@@ -470,10 +470,10 @@ def q136_cross_source_contamination(
     oracle=f"""
     WITH s AS (
       SELECT source, doc_id, n_chars,
-             CASE WHEN (doc_id % {_SPLIT_PRIME}) * {_SPLIT_MULT} % 1000
-                       < {_TRAIN_PM} THEN 'train'
-                  WHEN (doc_id % {_SPLIT_PRIME}) * {_SPLIT_MULT} % 1000
-                       < {_VAL_PM} THEN 'val'
+             CASE WHEN (doc_id % {SPLIT_PRIME}) * {SPLIT_MULT} % 1000
+                       < {TRAIN_PM} THEN 'train'
+                  WHEN (doc_id % {SPLIT_PRIME}) * {SPLIT_MULT} % 1000
+                       < {VAL_PM} THEN 'val'
                   ELSE 'test' END AS split
       FROM documents)
     SELECT source, split, count(*)::BIGINT AS n_docs,
@@ -486,12 +486,12 @@ def q136_cross_source_contamination(
 def q137_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     r = F.pmod(
-        F.pmod(F.col("doc_id"), F.lit(_SPLIT_PRIME)) * F.lit(_SPLIT_MULT),
+        F.pmod(F.col("doc_id"), F.lit(SPLIT_PRIME)) * F.lit(SPLIT_MULT),
         F.lit(1000),
     )
     split = (
-        F.when(r < _TRAIN_PM, "train")
-        .when(r < _VAL_PM, "val")
+        F.when(r < TRAIN_PM, "train")
+        .when(r < VAL_PM, "val")
         .otherwise("test")
     )
     return (

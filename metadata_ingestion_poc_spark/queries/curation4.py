@@ -46,7 +46,7 @@ from ..operators.spans import (
     duplicated_spans_against,
     self_repeated_spans,
 )
-from . import curation3 as _c3
+from .curation3 import SPLIT_MULT, SPLIT_PRIME, TRAIN_PM
 from . import query
 
 # Span-dedup dials for the synthetic corpus: 8-token grams, report
@@ -283,7 +283,7 @@ def q142_neardup_degree_histogram(
     oracle=rf"""
     WITH s AS (
       SELECT doc_id, text,
-             (doc_id % {_c3._SPLIT_PRIME}) * {_c3._SPLIT_MULT} % 1000 AS r
+             (doc_id % {SPLIT_PRIME}) * {SPLIT_MULT} % 1000 AS r
       FROM documents),
     toks AS (
       SELECT doc_id, r, string_split_regex(lower(trim(text)), '\s+') AS l
@@ -300,7 +300,7 @@ def q142_neardup_degree_histogram(
       SELECT a.doc_id AS eval_doc, b.doc_id AS train_doc,
              a.pos AS pa, a.pos - b.pos AS d
       FROM capped a JOIN capped b USING (g)
-      WHERE a.r >= {_c3._TRAIN_PM} AND b.r < {_c3._TRAIN_PM}),
+      WHERE a.r >= {TRAIN_PM} AND b.r < {TRAIN_PM}),
     isl AS (
       SELECT eval_doc, train_doc, d, pa,
              pa - row_number()
@@ -321,13 +321,13 @@ def q142_neardup_degree_histogram(
 def q143_eval_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     r = F.pmod(
-        F.pmod(F.col("doc_id"), F.lit(_c3._SPLIT_PRIME))
-        * F.lit(_c3._SPLIT_MULT),
+        F.pmod(F.col("doc_id"), F.lit(SPLIT_PRIME))
+        * F.lit(SPLIT_MULT),
         F.lit(1000),
     )
     d = d.withColumn("__r", r)
-    eval_docs = d.filter(F.col("__r") >= _c3._TRAIN_PM).drop("__r")
-    train_docs = d.filter(F.col("__r") < _c3._TRAIN_PM).drop("__r")
+    eval_docs = d.filter(F.col("__r") >= TRAIN_PM).drop("__r")
+    train_docs = d.filter(F.col("__r") < TRAIN_PM).drop("__r")
     return (
         duplicated_spans_against(
             eval_docs, train_docs,

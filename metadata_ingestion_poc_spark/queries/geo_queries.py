@@ -31,15 +31,15 @@ from ..operators.geo import geo_cell, geo_cell_sql, haversine_km, radius_join
 # exact 2-dp synthetic coordinates: lat in [-60, 60), lon in [-180, 180)
 _SUP_LAT = "(s_suppkey * 7919 % 12000) / 100.0 - 60.0"
 _SUP_LON = "(s_suppkey * 104729 % 36000) / 100.0 - 180.0"
-_CUST_LAT = "(c_custkey * 6151 % 12000) / 100.0 - 60.0"
-_CUST_LON = "(c_custkey * 9973 % 36000) / 100.0 - 180.0"
+CUST_LAT = "(c_custkey * 6151 % 12000) / 100.0 - 60.0"
+CUST_LON = "(c_custkey * 9973 % 36000) / 100.0 - 180.0"
 
 _CELL_BITS = 4
 _RADIUS_KM = 1500.0
 _JOIN_BITS = 5
 
 
-def _sup_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sup_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         F.expr(_SUP_LAT).alias("p_lat"),
@@ -63,7 +63,7 @@ def _sup_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q221_geo_cell_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _sup_points(spark, sf_dir)
+    p = sup_points(spark, sf_dir)
     return (
         p.groupBy(
             geo_cell(F.col("p_lat"), F.col("p_lon"), _CELL_BITS).alias(
@@ -92,7 +92,7 @@ ROUND(2.0 * 6371.0 * asin(sqrt(
     "q222_geo_radius_join",
     oracle=f"""
     WITH q AS (SELECT c_custkey,
-                      {_CUST_LAT} AS lat, {_CUST_LON} AS lon
+                      {CUST_LAT} AS lat, {CUST_LON} AS lon
                FROM customer WHERE c_custkey % 20 = 0),
     p AS (SELECT s_suppkey,
                  {_SUP_LAT} AS lat, {_SUP_LON} AS lon
@@ -113,12 +113,12 @@ def q222_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") % 20 == 0)
         .select(
             "c_custkey",
-            F.expr(_CUST_LAT).alias("q_lat"),
-            F.expr(_CUST_LON).alias("q_lon"),
+            F.expr(CUST_LAT).alias("q_lat"),
+            F.expr(CUST_LON).alias("q_lon"),
         )
     )
     pairs = radius_join(
-        qs, _sup_points(spark, sf_dir), _RADIUS_KM, bits=_JOIN_BITS
+        qs, sup_points(spark, sf_dir), _RADIUS_KM, bits=_JOIN_BITS
     )
     return (
         pairs.groupBy("c_custkey")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, MapType, StringType
 
 from ..catalog import load_table
+from ..execution import spread
 from ..operators.similarity import dot, with_norm
 from ..operators.skew import salted_agg
 from . import query
@@ -99,7 +100,6 @@ def q57_cosine_near_dup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query("q58_cosine_near_dup_lsh")
 def q58_cosine_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _spread
     from ..operators.similarity import hyperplane_signatures
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -126,9 +126,9 @@ def q58_cosine_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # where the old exchange carried ids only — the explicit
     # trade-off of §8 ("move heavy bytes once") taken in reverse
     # because it deletes two corpus-wide shuffles and a distinct of
-    # the unverified candidate set; the _spread keeps the quadratic
+    # the unverified candidate set; the spread keeps the quadratic
     # verify stage on every core and no-ops at scale.
-    members = _spread(
+    members = spread(
         banded.groupBy("tbl", "bucket")
         .agg(
             F.sort_array(
@@ -143,13 +143,13 @@ def q58_cosine_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.dedup import (
         PAIR_BUCKET_CAP,
-        _chunk_pairs_sql,
-        _chunked_members,
+        chunk_pairs_sql,
+        chunked_members,
     )
 
     # chunked explode (dedup.PAIR_BUCKET_CAP): a hot bucket never
     # materializes more than cap² pair structs in one row
-    pair = _chunk_pairs_sql(
+    pair = chunk_pairs_sql(
         lambda a, b: (
             f"named_struct("
             f"'id_a', {a}.doc, 'id_b', {b}.doc, "
@@ -158,7 +158,7 @@ def q58_cosine_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" / ({a}.n * {b}.n), 6))"
         )
     )
-    pairs = _chunked_members(members, PAIR_BUCKET_CAP).select(
+    pairs = chunked_members(members, PAIR_BUCKET_CAP).select(
         F.explode(F.expr(pair)).alias("p")
     )
     return (

@@ -95,13 +95,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def has_delta(spark: SparkSession) -> bool:
-    """True if Delta Lake classes are on the session's classpath."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-
-        return True
-    except ImportError:
-        return False

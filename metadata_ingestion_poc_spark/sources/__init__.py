@@ -11,81 +11,34 @@ until a sink action runs.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
 ReaderFn = Callable[[SparkSession, dict], DataFrame]
 
 
-def csv_reader(spark: SparkSession, options: dict) -> DataFrame:
-    opts = dict(options)
-    path = opts.pop("path")
-    opts.pop("hub_columns", None)
-    # optional explicit schema (DDL string) — required for PERMISSIVE
-    # corrupt-record capture on csv (the corrupt column must be
-    # declared); metadata-driven like every other option.
-    schema = opts.pop("schema", None)
-    reader = spark.read.options(**opts)
-    if schema:
-        reader = reader.schema(schema)
-    return reader.csv(path)
-
-
-def json_reader(spark: SparkSession, options: dict) -> DataFrame:
+def read_files(fmt: str, spark: SparkSession, options: dict) -> DataFrame:
+    """Read a file-based Spark source ``fmt`` (any name
+    ``spark.read.format`` accepts). ``path`` is the load path and
+    ``schema`` an optional DDL schema (csv/json need one for PERMISSIVE
+    corrupt-record capture: the corrupt column must be declared);
+    ``hub_columns`` is HUB projection metadata, not a Spark option.
+    Every other option passes through verbatim."""
     opts = dict(options)
     path = opts.pop("path")
     opts.pop("hub_columns", None)
     schema = opts.pop("schema", None)
-    reader = spark.read.options(**opts)
-    if schema:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def parquet_reader(spark: SparkSession, options: dict) -> DataFrame:
-    opts = dict(options)
-    path = opts.pop("path")
-    opts.pop("hub_columns", None)
-    return spark.read.options(**opts).parquet(path)
-
-
-def orc_reader(spark: SparkSession, options: dict) -> DataFrame:
-    opts = dict(options)
-    path = opts.pop("path")
-    opts.pop("hub_columns", None)
-    return spark.read.options(**opts).orc(path)
-
-
-def binary_reader(spark: SparkSession, options: dict) -> DataFrame:
-    """Blob ingestion (images/audio/any file) via Spark's binaryFile
-    source: one row per file with (path, modificationTime, length,
-    content). ``pathGlobFilter`` narrows by extension. The multimodal
-    operators (operators/multimodal.py) consume the ``content`` binary
-    column directly.
-    """
-    opts = dict(options)
-    path = opts.pop("path")
-    opts.pop("hub_columns", None)
-    return (
-        spark.read.format("binaryFile").options(**opts).load(path)
-    )
-
-
-def xml_reader(spark: SparkSession, options: dict) -> DataFrame:
-    """XML ingestion via Spark 4's built-in xml source. ``rowTag``
-    selects the repeated record element (default "row"); remaining
-    options pass through verbatim (schema, mode, etc.), matching the
-    other readers' contract.
-    """
-    opts = dict(options)
-    path = opts.pop("path")
-    opts.pop("hub_columns", None)
-    opts.setdefault("rowTag", "row")
-    schema = opts.pop("schema", None)
-    reader = spark.read.format("xml").options(**opts)
+    reader = spark.read.format(fmt).options(**opts)
     if schema:
         reader = reader.schema(schema)
     return reader.load(path)
+
+
+def xml_reader(spark: SparkSession, options: dict) -> DataFrame:
+    """XML via Spark 4's built-in xml source; ``rowTag`` selects the
+    repeated record element (default "row")."""
+    return read_files("xml", spark, {"rowTag": "row", **options})
 
 
 def jdbc_reader(spark: SparkSession, options: dict) -> DataFrame:
@@ -155,7 +108,7 @@ def avro_format_name(spark: SparkSession) -> str:
 def avro_reader(spark: SparkSession, options: dict) -> DataFrame:
     """Avro container files (see avro_format_name for the alias
     resolution this environment needs)."""
-    return spark.read.format(avro_format_name(spark)).load(options["path"])
+    return read_files(avro_format_name(spark), spark, options)
 
 
 def snapshot_reader(spark: SparkSession, options: dict) -> DataFrame:
@@ -165,21 +118,19 @@ def snapshot_reader(spark: SparkSession, options: dict) -> DataFrame:
     from .snapshot_source import register_snapshot_source
 
     register_snapshot_source(spark)
-    opts = dict(options)
-    path = opts.pop("path")
-    opts.pop("hub_columns", None)
-    return (
-        spark.read.format("snapshot").options(**opts).option("path", path).load()
-    )
+    return read_files("snapshot", spark, options)
 
 
 READERS: dict[str, ReaderFn] = {
-    "csv": csv_reader,
-    "json": json_reader,
-    "parquet": parquet_reader,
-    "orc": orc_reader,
+    "csv": partial(read_files, "csv"),
+    "json": partial(read_files, "json"),
+    "parquet": partial(read_files, "parquet"),
+    "orc": partial(read_files, "orc"),
     "xml": xml_reader,
-    "binary": binary_reader,
+    # one row per file: (path, modificationTime, length, content);
+    # ``pathGlobFilter`` narrows by extension. The multimodal operators
+    # consume ``content`` directly.
+    "binary": partial(read_files, "binaryFile"),
     "avro": avro_reader,
     "snapshot": snapshot_reader,
     "jdbc": jdbc_reader,

@@ -113,11 +113,11 @@ def static_enrichment(
     to streaming inputs), which is what gives the registered query
     its DuckDB oracle (the q70 shared-plan pattern).
     """
-    from .windows import _with_watermark
+    from .windows import with_watermark
 
     ev = events
     if ev.isStreaming:
-        ev = _with_watermark(ev, watermark)
+        ev = with_watermark(ev, watermark)
     enriched = ev.join(
         F.broadcast(dim.select(F.col(dim_key).alias(stream_key), dim_attr)),
         stream_key,

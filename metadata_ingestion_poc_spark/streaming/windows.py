@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.determinism import DEC
 
 
-def _with_watermark(events: DataFrame, watermark: str) -> DataFrame:
+def with_watermark(events: DataFrame, watermark: str) -> DataFrame:
     """Watermarks require TIMESTAMP (tz-aware); the catalog's ntz event
     time is cast losslessly under the engine's UTC session timezone."""
     return events.withColumn(
@@ -28,7 +28,7 @@ def tumbling_counts(
 ) -> DataFrame:
     """Events per (event_type, tumbling window): count + exact value sum."""
     if watermark:
-        events = _with_watermark(events, watermark)
+        events = with_watermark(events, watermark)
     return (
         events.groupBy(F.window("ts", width).alias("w"), "event_type")
         .agg(
@@ -54,7 +54,7 @@ def sliding_counts(
 ) -> DataFrame:
     """Sliding-window event counts (each event lands in width/slide windows)."""
     if watermark:
-        events = _with_watermark(events, watermark)
+        events = with_watermark(events, watermark)
     return (
         events.groupBy(F.window("ts", width, slide).alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -73,7 +73,7 @@ def session_stats(
     Session end follows Spark semantics: last event time + gap.
     """
     if watermark:
-        events = _with_watermark(events, watermark)
+        events = with_watermark(events, watermark)
     return (
         events.groupBy("user_id", F.session_window("ts", gap).alias("w"))
         .agg(

@@ -111,8 +111,6 @@ def write_hub(
     df: DataFrame,
     path: str,
     keys: list[str],
-    checkpoint_base: str | None = None,  # reserved for streaming sinks
-    source_id: str | None = None,
 ) -> None:
     """Keyed upsert into the HUB zone (Delta when available)."""
     if _delta_available(spark):

@@ -13,8 +13,8 @@ import pytest
 
 from metadata_ingestion_poc_spark.queries import QUERIES
 from metadata_ingestion_poc_spark.queries.analytics5 import (
-    _CHUNK_S,
-    _CHUNK_W,
+    CHUNK_S,
+    CHUNK_W,
 )
 
 
@@ -34,10 +34,10 @@ def test_rag_chunks_cover_and_overlap(chunks):
         rs.sort(key=lambda r: r.chunk_idx)
         assert [r.chunk_idx for r in rs] == list(range(len(rs)))
         for r in rs[:-1]:
-            assert r.n_tokens == _CHUNK_W, (doc_id, r)
+            assert r.n_tokens == CHUNK_W, (doc_id, r)
         for r in rs:
-            assert r.chunk_start == r.chunk_idx * _CHUNK_S
-            assert 1 <= r.n_tokens <= _CHUNK_W
+            assert r.chunk_start == r.chunk_idx * CHUNK_S
+            assert 1 <= r.n_tokens <= CHUNK_W
             assert len(r.chunk_text.split(" ")) == r.n_tokens
 
 
@@ -54,7 +54,7 @@ def test_rag_chunking_short_doc_single_chunk(spark, sf_dir, chunks):
             "doc_id",
             F.size(F.split(F.trim("text"), " ")).alias("n_tok"),
         )
-        .filter(F.col("n_tok") <= _CHUNK_W)
+        .filter(F.col("n_tok") <= CHUNK_W)
         .collect()
     )
     assert src, "corpus must contain docs shorter than one window"

@@ -208,8 +208,8 @@ def test_continuous_percentiles_rejects_out_of_range_p(spark):
 def test_chunk_dedup_conserves_chunks_and_bounds(spark, sf_dir):
     from metadata_ingestion_poc_spark.catalog import load_table
     from metadata_ingestion_poc_spark.queries.analytics5 import (
-        _CHUNK_S,
-        _CHUNK_W,
+        CHUNK_S,
+        CHUNK_W,
     )
 
     rows = QUERIES["q238_chunk_dedup"](spark, sf_dir).collect()
@@ -226,7 +226,7 @@ def test_chunk_dedup_conserves_chunks_and_bounds(spark, sf_dir):
         .select(F.size(F.split(F.trim("text"), " ")).alias("n"))
         .collect()
     ):
-        want += (max(n_tok.n - _CHUNK_W, 0) + _CHUNK_S - 1) // _CHUNK_S + 1
+        want += (max(n_tok.n - CHUNK_W, 0) + CHUNK_S - 1) // CHUNK_S + 1
     assert sum(r.n_chunks for r in rows) == want
 
 

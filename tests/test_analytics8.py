@@ -74,8 +74,8 @@ def test_ridge_cv_matches_numpy_loo_fit(spark):
     import numpy as np
 
     from metadata_ingestion_poc_spark.operators.clustering import (
-        _HASH_MOD,
-        _HASH_MULT,
+        HASH_MOD,
+        HASH_MULT,
     )
     from metadata_ingestion_poc_spark.queries.analytics8 import q273_ridge_cv
 
@@ -96,7 +96,7 @@ def test_ridge_cv_matches_numpy_loo_fit(spark):
     rows = [
         (r["q"], r["d"], r["p"])
         for r in li
-        if ((r["key"] % _HASH_MOD) * _HASH_MULT % _HASH_MOD) % 5 != 0
+        if ((r["key"] % HASH_MOD) * HASH_MULT % HASH_MOD) % 5 != 0
     ]
     X = np.array([[1.0, round(q, 2), round(d, 2)] for q, d, _ in rows])
     y = np.array([round(p, 2) for _, _, p in rows])
@@ -118,7 +118,7 @@ def test_dp_noise_mechanism(spark):
     import math
 
     from metadata_ingestion_poc_spark.operators.clustering import (
-        _HASH_MOD, _HASH_MULT,
+        HASH_MOD, HASH_MULT,
     )
     from metadata_ingestion_poc_spark.queries.analytics8 import (
         _DP_B_CHARS, _DP_B_COUNT, _DP_CLIP, q275_dp_noisy_release,
@@ -128,8 +128,8 @@ def test_dp_noise_mechanism(spark):
     assert len(rows) > 50  # ~sources x langs
 
     def lap(seed, scale):
-        u = (((seed % _HASH_MOD) * _HASH_MULT) % _HASH_MOD + 1) / (
-            _HASH_MOD + 1
+        u = (((seed % HASH_MOD) * HASH_MULT) % HASH_MOD + 1) / (
+            HASH_MOD + 1
         )
         mag = round(math.log(1.0 - 2.0 * abs(u - 0.5)), 6)
         return -scale * mag if u >= 0.5 else scale * mag
@@ -282,7 +282,7 @@ def test_als_user_step_matches_numpy(spark):
     import numpy as np
 
     from metadata_ingestion_poc_spark.operators.clustering import (
-        _HASH_MOD, _HASH_MULT,
+        HASH_MOD, HASH_MULT,
     )
     from metadata_ingestion_poc_spark.queries.analytics8 import (
         _ALS_LAMBDA, q277_als_user_step,
@@ -297,8 +297,8 @@ def test_als_user_step_matches_numpy(spark):
 
     def factor(pk, which):
         seed = pk + which * 1000000007
-        u = (((seed % _HASH_MOD) * _HASH_MULT) % _HASH_MOD + 1) / (
-            _HASH_MOD + 1
+        u = (((seed % HASH_MOD) * HASH_MULT) % HASH_MOD + 1) / (
+            HASH_MOD + 1
         )
         return round(u - 0.5, 6)
 

@@ -176,7 +176,7 @@ def test_checked_base_rejects_null_element_inside_vector(spark):
 
 def test_pca_validates_input_like_clustering(spark):
     """Round-10 advisor fix: pca_top_component now goes through
-    _checked_base — NULL vectors, NULL elements, ragged lengths and a
+    checked_base — NULL vectors, NULL elements, ragged lengths and a
     mis-declared dims all raise instead of silently skewing the
     covariance (element_at -> NULL terms dropped by F.sum)."""
     from metadata_ingestion_poc_spark.operators.pca import pca_top_component

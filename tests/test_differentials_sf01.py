@@ -344,9 +344,9 @@ def test_geo_knn_sf01_rank_contiguity_under_rmax(spark):
         _KNN_RADIUS_KM,
     )
     from metadata_ingestion_poc_spark.queries.geo_queries import (
-        _CUST_LAT,
-        _CUST_LON,
-        _sup_points,
+        CUST_LAT,
+        CUST_LON,
+        sup_points,
     )
 
     got = {}
@@ -360,11 +360,11 @@ def test_geo_knn_sf01_rank_contiguity_under_rmax(spark):
         .filter(F.col("c_custkey") % 20 == 0)
         .select(
             "c_custkey",
-            F.expr(_CUST_LAT).alias("q_lat"),
-            F.expr(_CUST_LON).alias("q_lon"),
+            F.expr(CUST_LAT).alias("q_lat"),
+            F.expr(CUST_LON).alias("q_lon"),
         )
     )
-    ps = _sup_points(spark, SF01)
+    ps = sup_points(spark, SF01)
     dist = F.round(
         haversine_km(
             F.col("q_lat"), F.col("q_lon"), F.col("p_lat"), F.col("p_lon")

@@ -265,6 +265,19 @@ def test_xml_source_type_accepted_in_metadata():
     assert s.type == "xml"
 
 
+def test_source_types_are_the_registered_readers():
+    """The YAML validator accepts exactly the registered reader kinds:
+    avro validates, an unregistered kind is still rejected."""
+    from pydantic import ValidationError
+
+    from metadata_ingestion_poc_spark.metadata import Source
+
+    fields = dict(id="a1", domain="d", entity="e", options={"path": "/x"})
+    assert Source(type="avro", **fields).type == "avro"
+    with pytest.raises(ValidationError, match="unknown source type"):
+        Source(type="feather", **fields)
+
+
 def test_run_reports_observed_metrics(spark, lake):
     tmp, yaml_path = lake
     seen = {}

@@ -1,10 +1,13 @@
-"""Private-import ratchet: the package's relative imports of private
-(underscore) names may only shrink.
+"""Layering rules for the package.
 
-Every relative ``from … import _name`` in the package is collected as
-an (importing module, private name) pair and must appear in
-``ALLOWED`` below. A new private cross-module import fails this test;
-removing one is always allowed — delete its entry here with it.
+- No module uses another module's private (underscore) names: every
+  relative ``from … import _name``, and every ``module._name`` through
+  a relative ``from … import module``, must appear in ``ALLOWED``
+  below, which is empty and may only stay so.
+- Spark Connect and JVM handles stay in ``execution.py``: no file
+  under ``operators/`` or ``queries/`` mentions ``is_remote``,
+  ``sparkContext`` or ``_jdf``, and ``is_remote`` appears nowhere
+  else in the package.
 """
 
 from __future__ import annotations
@@ -17,52 +20,36 @@ PACKAGE = (
 )
 
 # importing module (dotted, relative to the package) -> private names
-ALLOWED: dict[str, set[str]] = {
-    "operators.classify": {"_half_up", "_spread"},
-    "operators.clustering": {"_half_up", "_spread"},
-    "operators.coverage": {"_spread"},
-    "operators.fuzzy": {"_spread"},
-    "operators.graph": {"_cut", "_cut_lazy", "_half_up"},
-    "operators.histogram": {"_half_up"},
-    "operators.multimodal": {
-        "_chunk_pairs_sql", "_chunked_members", "_spread",
-    },
-    "operators.opq": {"_checked_base", "_half_up"},
-    "operators.pca": {"_checked_base", "_half_up"},
-    "operators.pq": {"_checked_base", "_half_up"},
-    "operators.robust": {"_half_up", "_spread"},
-    "operators.similarity": {"_spread"},
-    "operators.sketches": {"_spread"},
-    "operators.text": {"_spread"},
-    "queries.analytics4": {"_spread"},
-    "queries.analytics6": {
-        "_CHUNK_S", "_CHUNK_W", "_CUST_LAT", "_CUST_LON", "_quant",
-        "_sup_points",
-    },
-    "queries.analytics7": {"_HASH_MOD", "_HASH_MULT", "_half_up", "_spread"},
-    "queries.analytics8": {
-        "_HASH_MOD", "_HASH_MULT", "_half_up", "_spread", "_spread_by",
-    },
-    "queries.curation": {"_shingle_index", "_spread"},
-    "queries.curation2": {"_spread"},
-    "queries.llm_ops2": {
-        "_chunk_pairs_sql", "_chunked_members", "_spread",
-    },
-    "streaming.joins": {"_with_watermark"},
-}
+ALLOWED: dict[str, set[str]] = {}
+
+
+def _modules():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE)
+        yield rel, path.read_text()
 
 
 def _private_imports() -> set[tuple[str, str]]:
     pairs = set()
-    for path in sorted(PACKAGE.rglob("*.py")):
-        module = ".".join(path.relative_to(PACKAGE).with_suffix("").parts)
-        for node in ast.walk(ast.parse(path.read_text())):
+    for rel, text in _modules():
+        module = ".".join(rel.with_suffix("").parts)
+        tree = ast.parse(text)
+        aliases = set()
+        for node in ast.walk(tree):
             if isinstance(node, ast.ImportFrom) and node.level > 0:
-                pairs.update(
-                    (module, alias.name)
-                    for alias in node.names
-                    if alias.name.startswith("_")
-                )
+                for alias in node.names:
+                    if alias.name.startswith("_"):
+                        pairs.add((module, alias.name))
+                    aliases.add(alias.asname or alias.name)
+        pairs.update(
+            (module, node.attr)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in aliases
+            and node.attr.startswith("_")
+            and not node.attr.startswith("__")
+        )
     return pairs
 
 
@@ -70,3 +57,17 @@ def test_private_imports_only_shrink():
     allowed = {(m, n) for m, names in ALLOWED.items() for n in names}
     new = sorted(_private_imports() - allowed)
     assert not new, f"private cross-module imports not in ALLOWED: {new}"
+
+
+def test_connect_and_jvm_handles_stay_in_execution():
+    found = []
+    for rel, text in _modules():
+        if rel.parts[0] in ("operators", "queries"):
+            found += [
+                (str(rel), word)
+                for word in ("is_remote", "sparkContext", "_jdf")
+                if word in text
+            ]
+        elif "is_remote" in text and rel != Path("execution.py"):
+            found.append((str(rel), "is_remote"))
+    assert not found, f"execution handles outside execution.py: {found}"

@@ -68,10 +68,10 @@ def test_wholestage_codegen_covers_q1(spark, sf_dir):
 def test_no_inferred_filter_recompute_in_shingles(spark, sf_dir):
     """Guard against InferFiltersFromGenerate re-inlining the O(len²)
     shingle expression below the projection (see operators/dedup.py)."""
-    from metadata_ingestion_poc_spark.operators.dedup import _shingle_index
+    from metadata_ingestion_poc_spark.operators.dedup import shingle_index
 
     docs = load_table(spark, sf_dir, "documents")
-    idx = _shingle_index(docs, "doc_id", 3, None)
+    idx = shingle_index(docs, "doc_id", 3, None)
     opt = idx._jdf.queryExecution().optimizedPlan().toString()
     assert opt.count("split(") <= 2, "shingle expression duplicated in plan"
 
@@ -306,7 +306,7 @@ def test_kmeans_assignment_is_codegen_only(spark, sf_dir):
         "CartesianProduct",
     ):
         assert node not in plan, node
-    # round-10: the only exchange allowed is _spread's stats-gated
+    # round-10: the only exchange allowed is spread's stats-gated
     # ROUND-ROBIN repartition (full-core scans of a one-split parquet
     # at local scale; a no-op at real scale). A key-partitioned
     # exchange here would mean the zero-shuffle assignment regressed.
@@ -372,7 +372,7 @@ def test_asof_forward_attribution_plan_pinned(spark, sf_dir):
 def test_pq_encode_is_codegen_only(spark, sf_dir):
     """Round-10 contract (operators/pq.py): PQ encoding bakes the
     codebooks into nested-array literals — the coded frame must
-    contain NO join and no key-partitioned exchange (only _spread's
+    contain NO join and no key-partitioned exchange (only spread's
     stats-gated round-robin repartition, a no-op at real scale). A
     codebook JOIN here means the zero-shuffle encoding regressed."""
     import re

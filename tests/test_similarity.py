@@ -224,7 +224,7 @@ def test_pq_codes_invariant_under_repartition(spark, sf_dir):
 
 
 def test_pq_validation_fails_loud(spark):
-    """dims % m != 0 and undersized corpora raise (the _checked_base
+    """dims % m != 0 and undersized corpora raise (the checked_base
     discipline extends to PQ training)."""
     from metadata_ingestion_poc_spark.operators.pq import pq_train
 
@@ -238,7 +238,7 @@ def test_pq_validation_fails_loud(spark):
 
 def test_pq_encode_validation_fails_loud(spark):
     """Round-11 (advisor): pq_encode / pq_reconstruction_stats /
-    ivfpq_build route through _checked_base — a ragged, NULL-element,
+    ivfpq_build route through checked_base — a ragged, NULL-element,
     or wrong-dims frame would zip_with-pad with NULL and silently emit
     arbitrary codes (d2 goes NULL under array_min); every encode path
     must fail loud instead."""
@@ -355,8 +355,8 @@ def test_pq_codebook_gap_positional_lookup(spark):
     exact brute force regardless of ADC quality — a pure plumbing
     invariant that fails if gap indexing is off by one."""
     from metadata_ingestion_poc_spark.operators.clustering import (
-        _HASH_MOD,
-        _HASH_MULT,
+        HASH_MOD,
+        HASH_MULT,
     )
     from metadata_ingestion_poc_spark.operators.pq import (
         pq_encode,
@@ -365,7 +365,7 @@ def test_pq_codebook_gap_positional_lookup(spark):
     )
 
     ids = list(range(12))
-    order = sorted(ids, key=lambda i: ((i % _HASH_MOD) * _HASH_MULT) % _HASH_MOD)
+    order = sorted(ids, key=lambda i: ((i % HASH_MOD) * HASH_MULT) % HASH_MOD)
     s0, s1, s2 = order[:3]  # the 3 seed ids, in cid order 1..3
     rows = []
     for i in ids:

@@ -308,9 +308,7 @@ def test_run_concurrent_is_sequential_under_spark_connect(monkeypatch):
 
     import pyspark.sql.utils
 
-    from metadata_ingestion_poc_spark.operators.sketches import (
-        _run_concurrent,
-    )
+    from metadata_ingestion_poc_spark.execution import run_concurrent
 
     monkeypatch.setattr(pyspark.sql.utils, "is_remote", lambda: True)
     calls = []
@@ -322,6 +320,6 @@ def test_run_concurrent_is_sequential_under_spark_connect(monkeypatch):
 
         return run
 
-    assert _run_concurrent(*(thunk(i) for i in range(3))) == [0, 10, 20]
+    assert run_concurrent(*(thunk(i) for i in range(3))) == [0, 10, 20]
     me = threading.get_ident()
     assert calls == [(0, me), (1, me), (2, me)]
