@@ -83,16 +83,24 @@ def cut_lazy(df: DataFrame, reliable: bool) -> DataFrame:
 
 
 def run_concurrent(*thunks):
-    """Run independent Spark actions from driver threads so their jobs
+    """Run independent Spark work from driver threads so its jobs
     overlap (FIFO scheduling back-fills executor slots — guide §2.6).
-    Returns their results in submission order; used only for
-    bounded-collect actions. Under Spark Connect the thunks run
-    sequentially on the calling thread — the overlap is a latency
-    optimization, never a semantic one."""
-    if pyspark.sql.utils.is_remote():
+
+    Returns the results in submission order; the first exception, in
+    submission order, is raised once every thunk has finished. At most
+    ``parallelism`` of the active session run at once. Worker threads
+    inherit the caller's local properties, so its job tags and job
+    group own every job they submit. Callers: the sketch operators'
+    bounded collects and ``framework.run``'s ingestion lanes (whole
+    source ingests, several actions each). Under Spark Connect, and
+    for a single thunk, the thunks run sequentially on the calling
+    thread — the overlap is a latency optimization, never a semantic
+    one."""
+    if len(thunks) < 2 or pyspark.sql.utils.is_remote():
         return [t() for t in thunks]
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+    workers = min(len(thunks), parallelism(SparkSession.active()))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
         futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
         return [f.result() for f in futures]
 

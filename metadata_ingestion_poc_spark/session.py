@@ -17,10 +17,51 @@ layer falls back to a pure-Spark merge (see writer.py).
 from __future__ import annotations
 
 import os
+import re
 
+import pyspark
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+CODE_CACHE_FLAG = "-XX:ReservedCodeCacheSize="
+JAVA_OPTION_KEYS = (
+    "spark.driver.extraJavaOptions",
+    "spark.executor.extraJavaOptions",
+)
+
+
+def spark_defaults() -> dict[str, str]:
+    """The properties spark-submit loads from ``spark-defaults.conf``
+    (in ``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``); empty when
+    there is no such file."""
+    home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            lines = [line.strip() for line in f]
+    except OSError:
+        return {}
+    out = {}
+    for line in lines:
+        m = re.match(r"([^\s=:]+)\s*[\s=:]\s*(.*)", line)
+        if m and line[0] not in "#!":
+            out[m[1]] = m[2].strip()
+    return out
+
+
+def java_options(conf: dict[str, str], code_cache: str) -> dict[str, str]:
+    """Driver and executor ``extraJavaOptions``: the user's own value
+    (``conf``, else spark-defaults.conf) with the reserved code cache
+    size appended, unless that value already sets one."""
+    defaults = spark_defaults()
+    out = {}
+    for key in JAVA_OPTION_KEYS:
+        user = conf.get(key, defaults.get(key, ""))
+        if CODE_CACHE_FLAG not in user:
+            user = f"{user} {CODE_CACHE_FLAG}{code_cache}".strip()
+        out[key] = user
+    return out
 
 
 def get_spark(
@@ -40,28 +81,27 @@ def get_spark(
     master = master or os.environ.get("SPARK_MASTER", f"local[{DEFAULT_CPUS}]")
     shuffle = shuffle_partitions or DEFAULT_CPUS
 
-    # JIT code cache (round 15): a long-lived JVM running hundreds of
+    # Reserved JIT code cache: the driver and executor JVMs get at
+    # least `code_cache` of it. A long-lived JVM running hundreds of
     # DISTINCT codegen-heavy plans (this engine's literal-table ANN
-    # scans are the extreme case) saturates HotSpot's default 240 MB
-    # reserved code cache mid-run; UseCodeCacheFlushing then silently
-    # thrashes the hottest compiled methods, and the most codegen-
-    # heavy queries degrade 50-90% (measured: q290 in-suite 15.1 s at
-    # the default vs 8.2 s at 512m while its isolated time never
-    # moved — the full-suite A/B is in OPTIMIZATION_r15.md). Applied
-    # to driver AND executors (local mode runs codegen in the driver
-    # JVM; a cluster compiles the same classes in every executor).
-    # Only effective when this process launches the JVM — a
-    # pre-existing gateway (driver harness, test session reuse) keeps
-    # its own value, which is exactly the non-invasive behavior the
-    # driver contract needs.
-    code_cache = os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m")
-    jit_opts = f"-XX:ReservedCodeCacheSize={code_cache}"
+    # scans are the extreme case) saturates HotSpot's default 240 MB;
+    # UseCodeCacheFlushing then silently thrashes the hottest compiled
+    # methods and the most codegen-heavy queries degrade 50-90% (the
+    # A/B is in OPTIMIZATION_r15.md). Executors get it too: a cluster
+    # compiles the same classes in every executor. The flag is added
+    # to the user's own JVM options, never in place of them, and a
+    # user value that already sizes the cache wins. Only effective
+    # when this process launches the JVM — a pre-existing gateway
+    # (driver harness, test session reuse) keeps its own value, which
+    # is exactly the non-invasive behavior the driver contract needs.
+    conf = dict(extra_conf or {})
+    conf.update(
+        java_options(conf, os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m"))
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.driver.extraJavaOptions", jit_opts)
-        .config("spark.executor.extraJavaOptions", jit_opts)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -89,7 +129,7 @@ def get_spark(
     except ImportError:
         pass
 
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()

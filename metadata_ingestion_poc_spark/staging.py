@@ -16,7 +16,10 @@ Marker files/dirs all start with ``_`` so Spark's file-listing treats
 them as hidden and never reads them as data.
 
 Single-writer contract (same as the reference's POC writer): two
-concurrent writers to the same path can still race; at cluster scale
+concurrent writers to the same path can still race. Within one
+``framework.run`` the lanes guarantee one writer per target: sources
+that share a RAW, HUB or quarantine path run in one lane, one after
+another. Across processes nothing guards the path; at cluster scale
 this pattern is replaced by a transactional table format (Delta —
 see writer.py), which provides the same swap via its commit log.
 """

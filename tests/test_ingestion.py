@@ -358,3 +358,206 @@ def test_avro_reader_roundtrip(spark, tmp_path):
     assert sorted((r.id, r.name, r.score) for r in got.collect()) == [
         (i, str(i), i * 2.5) for i in range(10)
     ]
+
+
+# -- lanes: independent sources run concurrently ------------------------------
+
+
+def _yaml(tmp, name: str, sources: list[dict]) -> str:
+    """A sources file over the ``lake`` fixture's zones (YAML is a
+    superset of JSON)."""
+    import json
+
+    path = tmp / name
+    path.write_text(
+        json.dumps(
+            {
+                "version": 1,
+                "defaults": {
+                    "raw_base": f"{tmp}/lake/raw",
+                    "hub_base": f"{tmp}/lake/hub",
+                },
+                "sources": sources,
+            }
+        )
+    )
+    return str(path)
+
+
+def _csv(sid, entity, path, domain="crm"):
+    return {
+        "id": sid, "type": "csv", "domain": domain, "entity": entity,
+        "options": {"path": str(path), "header": True, "inferSchema": True},
+        "hub_primary_keys": ["person_id"],
+    }
+
+
+def _clicks(tmp):
+    return {
+        "id": "clicks_json", "type": "json", "domain": "web",
+        "entity": "clicks", "options": {"path": f"{tmp}/in/clicks.json"},
+    }
+
+
+def test_lanes_group_sources_that_share_a_path(tmp_path):
+    """The lane rule alone, no Spark: a shared target, an input under
+    another source's HUB, or a glob over it joins a lane, transitively;
+    a path that only shares a string prefix (``a`` and ``a_old``) does
+    not."""
+    from metadata_ingestion_poc_spark.config import Config
+    from metadata_ingestion_poc_spark.framework import lanes
+    from metadata_ingestion_poc_spark.metadata import Source
+
+    cfg = Config.from_defaults(
+        {"raw_base": f"{tmp_path}/raw", "hub_base": f"{tmp_path}/hub"}
+    )
+
+    def src(domain, entity, path):
+        return Source(id=f"{domain}_{entity}", type="parquet", domain=domain,
+                      entity=entity, options={"path": path})
+
+    sources = [
+        src("d", "a", f"{tmp_path}/in/a"),
+        src("e", "b", f"{tmp_path}/in/b"),
+        src("d", "a", f"{tmp_path}/in/a2"),
+        src("f", "c", f"{tmp_path}/hub/e/b/part-0.parquet"),
+        src("g", "h", f"{tmp_path}/hub/f/c*"),
+        src("k", "z", f"{tmp_path}/hub/d/a_old"),
+    ]
+    assert lanes(sources, cfg) == [[0, 2], [1, 3, 4], [5]]
+
+
+def test_run_same_target_in_yaml_order(spark, lake):
+    tmp, _ = lake
+    (tmp / "in" / "people_v2.csv").write_text(
+        "person_id,name,country\n1,Ada Lovelace,UK\n"
+    )
+    yaml_path = _yaml(tmp, "same_target.yaml", [
+        _csv("people_v1", "people", tmp / "in" / "people.csv"),
+        _clicks(tmp),
+        _csv("people_v2", "people", tmp / "in" / "people_v2.csv"),
+    ])
+    ran = run(spark, yaml_path, ingest_date="2026-08-13")
+    assert ran == ["people_v1", "clicks_json", "people_v2"]
+    hub = read_hub(spark, f"{tmp}/lake/hub/crm/people")
+    assert {r.person_id: r.name for r in hub.collect()} == {
+        1: "Ada Lovelace", 2: "Grace", 3: "Anna-María",
+    }
+    assert spark.read.parquet(f"{tmp}/lake/raw/crm/people").count() == 4
+
+
+def test_run_source_reading_another_hub_runs_after_it(spark, lake):
+    tmp, _ = lake
+    copy = {
+        "id": "people_copy", "type": "parquet", "domain": "crm",
+        "entity": "people_copy",
+        "options": {"path": f"{tmp}/lake/hub/crm/people"},
+        "hub_primary_keys": ["person_id"],
+    }
+    yaml_path = _yaml(tmp, "chained.yaml", [
+        _csv("people_csv", "people", tmp / "in" / "people.csv"),
+        _clicks(tmp),
+        copy,
+    ])
+    run(spark, yaml_path, ingest_date="2026-08-13")
+    hub = read_hub(spark, f"{tmp}/lake/hub/crm/people_copy")
+    assert sorted(r.person_id for r in hub.collect()) == [1, 2, 3]
+
+
+def test_run_failure_stops_only_its_lane(spark, lake):
+    """A failing source stops its own lane; the other lanes land, the
+    sink sees every success in YAML order, and the first failure in
+    YAML order is raised."""
+    tmp, _ = lake
+    yaml_path = _yaml(tmp, "failing.yaml", [
+        _csv("people_csv", "people", tmp / "in" / "people.csv"),
+        _csv("missing_a", "a", tmp / "in" / "missing_a.csv", domain="x"),
+        _csv("after_a", "a", tmp / "in" / "people.csv", domain="x"),
+        _csv("missing_b", "b", tmp / "in" / "missing_b.csv", domain="y"),
+        _clicks(tmp),
+    ])
+    seen = []
+    with pytest.raises(Exception, match="missing_a.csv") as err:
+        run(spark, yaml_path, ingest_date="2026-08-13",
+            metrics_sink=lambda sid, m: seen.append(sid))
+    assert seen == ["people_csv", "clicks_json"]
+    assert any("missing_b" in note for note in err.value.__notes__)
+    assert read_hub(spark, f"{tmp}/lake/hub/crm/people").count() == 3
+    assert read_hub(spark, f"{tmp}/lake/hub/web/clicks").count() == 2
+    assert not (tmp / "lake" / "hub" / "x").exists()  # after_a never ran
+
+
+def test_run_lanes_equal_a_source_by_source_loop(spark, lake):
+    """RAW, HUB and quarantine after a concurrent ``run`` hold the same
+    rows as a ``run_source`` loop over the same sources."""
+    from metadata_ingestion_poc_spark.config import Config
+    from metadata_ingestion_poc_spark.framework import run_source
+    from metadata_ingestion_poc_spark.metadata import load_sources
+
+    tmp, yaml_path = lake
+    with open(tmp / "in" / "clicks.json", "a") as f:
+        f.write("{not json\n")
+    run(spark, yaml_path, ingest_date="2026-08-13")
+    loop = Config.from_defaults(
+        {"raw_base": f"{tmp}/loop/raw", "hub_base": f"{tmp}/loop/hub"}
+    )
+    for source in load_sources(yaml_path).sources:
+        if source.enabled:
+            run_source(spark, source, loop, ingest_date="2026-08-13")
+
+    def rows(path):
+        df = spark.read.parquet(path).drop("_ingest_ts_utc")
+        return sorted(map(repr, df.select(*sorted(df.columns)).collect()))
+
+    zones = [f"{z}/{t}" for z in ("raw", "hub")
+             for t in ("crm/people", "web/clicks", "sales/cube")]
+    for zone in zones + ["raw_quarantine/web/clicks"]:
+        assert rows(f"{tmp}/lake/{zone}") == rows(f"{tmp}/loop/{zone}"), zone
+    assert len(rows(f"{tmp}/lake/raw_quarantine/web/clicks")) == 1
+
+
+def test_caller_job_tag_owns_every_job_run_submits(spark, lake):
+    """Lanes run on worker threads that inherit the caller's job tags,
+    so a tag added before ``run`` owns all of its jobs."""
+    tmp, yaml_path = lake
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+
+    def jobs() -> set[int]:
+        jvm_sc.listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    before = jobs()
+    sc.addJobTag("ingest-lanes")
+    try:
+        run(spark, yaml_path, ingest_date="2026-08-13")
+    finally:
+        sc.removeJobTag("ingest-lanes")
+    submitted = jobs() - before
+    tagged = {int(j) for j in jvm_sc.statusTracker().getJobIdsForTag("ingest-lanes")}
+    assert submitted and submitted <= tagged
+
+
+def test_run_is_sequential_under_spark_connect(lake, monkeypatch):
+    """Under Spark Connect the lanes run one after another on the
+    calling thread, in YAML order, with the same result."""
+    import threading
+
+    import pyspark.sql.utils
+
+    from metadata_ingestion_poc_spark import framework
+
+    tmp, yaml_path = lake
+    monkeypatch.setattr(pyspark.sql.utils, "is_remote", lambda: True)
+    calls = []
+
+    def fake_run_source(spark, source, cfg, ingest_date):
+        calls.append((source.id, threading.get_ident()))
+        return {"rows_ingested": 1}
+
+    monkeypatch.setattr(framework, "run_source", fake_run_source)
+    seen = []
+    ids = ["people_csv", "clicks_json", "sales_olap"]
+    assert run(None, yaml_path, metrics_sink=lambda s, m: seen.append(s)) == ids
+    assert calls == [(sid, threading.get_ident()) for sid in ids]
+    assert seen == ids
