@@ -221,7 +221,7 @@ def rotate_vectors(
 def save_opq_rotation(spark, rotation: Rotation, path: str) -> None:
     """Rotation wire format: (i, row) — one parquet row per rotated
     dimension, 1-indexed; the `rotation/` directory of a PQ or IVF-PQ
-    index."""
+    index. Zero rows (an empty `rotation`) record "no rotation"."""
     spark.createDataFrame(
         [(i + 1, list(row)) for i, row in enumerate(rotation)],
         "i int, row array<double>",
@@ -229,8 +229,8 @@ def save_opq_rotation(spark, rotation: Rotation, path: str) -> None:
 
 
 def load_opq_rotation(spark, path: str) -> Rotation | None:
-    """The rotation saved at ``path``, or None when none was saved
-    (an index built without OPQ)."""
+    """The rotation saved at ``path``, or None for an index built
+    without OPQ (zero rows, or no ``path`` in older layouts)."""
     try:
         rows = {
             r["i"]: [float(x) for x in r["row"]]
@@ -240,4 +240,4 @@ def load_opq_rotation(spark, path: str) -> Rotation | None:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return None
-    return [rows[i] for i in sorted(rows)]
+    return [rows[i] for i in sorted(rows)] or None

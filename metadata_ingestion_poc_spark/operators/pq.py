@@ -637,11 +637,10 @@ def save_pq_index(
     path: str,
     rotation: Rotation | None = None,
 ) -> None:
-    """Persist codebooks + codes (+ the rotation, when there is one)
-    as parquet (build nightly, query all day — the save_ivf_index
-    operational shape)."""
-    if rotation is not None:
-        save_opq_rotation(spark, rotation, f"{path}/rotation")
+    """Persist codebooks + codes + the rotation (zero rows for none,
+    so a re-save never keeps an earlier one) as parquet (build
+    nightly, query all day — the save_ivf_index operational shape)."""
+    save_opq_rotation(spark, rotation or [], f"{path}/rotation")
     _write_codebooks(spark, codebooks, f"{path}/codebooks")
     codes.write.mode("overwrite").parquet(f"{path}/codes")
 
@@ -1113,7 +1112,7 @@ def save_ivfpq_index(
     rotation: Rotation | None = None,
 ) -> None:
     """Persist an IVF-PQ index (RAW coarse centroids + the rotation,
-    when there is one + residual PQ codebooks + coded corpus) as
+    zero rows for none + residual PQ codebooks + coded corpus) as
     parquet. Raw centroids are the wire format: normalized ranking
     vectors and norms are derived from them deterministically on
     load."""
@@ -1121,8 +1120,7 @@ def save_ivfpq_index(
         [(c, list(v)) for c, v in sorted(cents_raw.items())],
         "cell int, c_vec array<double>",
     ).write.mode("overwrite").parquet(f"{path}/cells")
-    if rotation is not None:
-        save_opq_rotation(spark, rotation, f"{path}/rotation")
+    save_opq_rotation(spark, rotation or [], f"{path}/rotation")
     _write_codebooks(spark, codebooks, f"{path}/codebooks")
     coded.write.mode("overwrite").parquet(f"{path}/coded")
 

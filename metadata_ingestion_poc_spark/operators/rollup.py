@@ -10,8 +10,9 @@ Delivery contract: foreachBatch is AT-LEAST-once (a crashed
 micro-batch is replayed with the same batch_id), so the fold must be
 idempotent per batch. Callers pass the foreachBatch ``batch_id``; the
 rollup dir keeps a ``_folded/<batch_id>`` marker per folded batch and
-a replayed batch is a no-op. The markers are written into the staging
-dir BEFORE the swap, so data and fold-log commit atomically together.
+a replayed batch is a no-op. A fold writes its new marker into the
+staging dir and staging.commit_swap carries the earlier ones over, so
+data and fold-log commit atomically and every rewrite keeps the log.
 Late data is handled naturally — it lands in its own window's bucket
 and merges in.
 
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.determinism import DEC
-from ..staging import commit_swap, recover, staging_dir
+from ..staging import batch_ids, commit_swap, recover, staging_dir
 
 
 def rollup_batch(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -51,14 +52,6 @@ def rollup_batch(events: DataFrame, width: str = "1 hour") -> DataFrame:
 
 
 _FOLDED = "_folded"
-
-
-def folded_batch_ids(path: str) -> set[str]:
-    """Batch ids already folded into the rollup at `path`."""
-    marker_dir = Path(path) / _FOLDED
-    if not marker_dir.exists():
-        return set()
-    return {p.name for p in marker_dir.iterdir()}
 
 
 def fold_into_rollup(
@@ -84,7 +77,7 @@ def fold_into_rollup(
     """
     target = Path(path)
     recover(target)
-    if batch_id is not None and str(batch_id) in folded_batch_ids(path):
+    if batch_id is not None and str(batch_id) in batch_ids(path, _FOLDED):
         return
 
     partial = rollup_batch(batch, width)
@@ -100,18 +93,14 @@ def fold_into_rollup(
                 F.sum("sum_value").alias("sum_value"),
             )
         )
-    prior_ids = folded_batch_ids(path)
 
     staging = staging_dir(target)
     merged.write.mode("overwrite").parquet(str(staging))
-    # fold-log travels with the data: markers land in staging before
-    # the swap, so a crash can't commit one without the other.
-    marker_dir = staging / _FOLDED
-    marker_dir.mkdir(exist_ok=True)
-    for bid in prior_ids:
-        (marker_dir / bid).touch()
+    # fold-log travels with the data: the marker lands in staging
+    # before the swap, so a crash can't commit one without the other.
     if batch_id is not None:
-        (marker_dir / str(batch_id)).touch()
+        (staging / _FOLDED).mkdir(exist_ok=True)
+        (staging / _FOLDED / str(batch_id)).touch()
     commit_swap(target, staging)
 
 

@@ -100,9 +100,52 @@ def _read_manifest(table: Path, version: int) -> dict:
         return json.load(f)
 
 
+def _publish(path: Path, obj) -> None:
+    """Write `obj` as JSON at `path` atomically (temp file, fsync,
+    ``os.replace``): readers see the old file or the new one."""
+    tmp = path.with_name(f"_tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def _next_version(table: Path) -> int:
+    versions = snapshot_versions(str(table))
+    return versions[-1] + 1 if versions else 1
+
+
+def _commit(
+    table: Path,
+    parent: int | None,
+    mode: str,
+    files: list[dict],
+    partition_by: list[str],
+    batch_id: int | str | None = None,
+) -> int:
+    """Publish version latest + 1 listing `files` and return it; every
+    commit records every manifest field."""
+    version = _next_version(table)
+    _publish(
+        _manifest_path(table, version),
+        {
+            "version": version,
+            "parent": parent,
+            "mode": mode,
+            "files": files,
+            "total_rows": sum(f["rows"] for f in files),
+            "partition_by": partition_by,
+            "batch_id": None if batch_id is None else str(batch_id),
+        },
+    )
+    return version
+
+
 def snapshot_manifest(table_path: str, version: int | None = None) -> dict:
     """The manifest dict of `version` (default: latest). Keys:
-    version, parent, mode, files [{path, rows}], total_rows."""
+    version, parent, mode, files [{path, rows}], total_rows,
+    partition_by, batch_id (older manifests may lack the last two)."""
     table = Path(table_path)
     versions = snapshot_versions(table_path)
     if not versions:
@@ -166,7 +209,7 @@ def snapshot_write(
         if marker is not None:
             return marker
     parent = versions[-1] if versions else None
-    new_version = (parent or 0) + 1
+    new_version = _next_version(table)
     if mode == "append" and parent is not None:
         parent_parts = _read_manifest(table, parent).get("partition_by", [])
         if partition_by != parent_parts:
@@ -195,20 +238,13 @@ def snapshot_write(
 
     files = []
     for i, src in enumerate(produced):
-        rel_dir = src.parent.relative_to(scratch)
-        name = f"v{new_version:05d}-{i:03d}.parquet"
-        dst_dir = _data_dir(table) / rel_dir
+        dst_dir = _data_dir(table) / src.parent.relative_to(scratch)
         dst_dir.mkdir(parents=True, exist_ok=True)
-        dst = dst_dir / name
+        dst = dst_dir / f"v{new_version:05d}-{i:03d}.parquet"
         shutil.move(str(src), str(dst))
-        rel = (
-            f"{_DATA_DIR}/{rel_dir}/{name}"
-            if str(rel_dir) != "."
-            else f"{_DATA_DIR}/{name}"
-        )
         files.append(
             {
-                "path": rel,
+                "path": str(dst.relative_to(table)),
                 "rows": pq.ParquetFile(dst).metadata.num_rows,
             }
         )
@@ -216,27 +252,8 @@ def snapshot_write(
 
     if mode == "append" and parent is not None:
         files = _read_manifest(table, parent)["files"] + files
-
-    # 3. publish: temp write + atomic rename — the ONLY step that
-    #    changes what readers see
-    manifest = {
-        "version": new_version,
-        "parent": parent,
-        "mode": mode,
-        "files": files,
-        "total_rows": sum(f["rows"] for f in files),
-    }
-    if partition_by:
-        manifest["partition_by"] = partition_by
-    if batch_id is not None:
-        manifest["batch_id"] = str(batch_id)
-    tmp = _manifest_dir(table) / f"_tmp-{uuid.uuid4().hex}.json"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _manifest_path(table, new_version))
-    return new_version
+    # 3. publish — the ONLY step that changes what readers see
+    return _commit(table, parent, mode, files, partition_by, batch_id)
 
 
 def snapshot_read(
@@ -249,19 +266,71 @@ def snapshot_read(
     and vacuum refuses to break un-vacuumed versions).
     """
     m = snapshot_manifest(table_path, version)
-    table = Path(table_path)
     if not m["files"]:
-        # empty snapshot — preserve an empty-but-typed scan by reading
-        # the parent version's schema if any file ever existed
+        # a version listing no files has no footer to take a schema
+        # from, so there is nothing typed to read
         raise ValueError(
             f"version {m['version']} of {table_path} lists no files"
         )
+    paths = [str(Path(table_path) / f["path"]) for f in m["files"]]
+    return _scan(spark, table_path, m, paths)
+
+
+def _scan(
+    spark: SparkSession, table_path: str, m: dict, paths: list[str]
+) -> DataFrame:
     reader = spark.read
     if m.get("partition_by"):
         # basePath reconstructs the hive partition columns from the
         # dir names; filters on them prune at file-listing time
-        reader = reader.option("basePath", str(table / _DATA_DIR))
-    return reader.parquet(*[str(table / f["path"]) for f in m["files"]])
+        reader = reader.option("basePath", str(Path(table_path) / _DATA_DIR))
+    return reader.parquet(*paths)
+
+
+def snapshot_added_files(
+    table_path: str, from_version: int, to_version: int | None = None
+) -> list[str]:
+    """Paths of the data files ADDED after `from_version` (0: before
+    the first commit) up to `to_version` (default latest).
+
+    A rewrite commit (overwrite/rollback/compact) in the range raises
+    ValueError: its added files are not added rows. A version in the
+    range whose manifest vacuum expired raises FileNotFoundError: the
+    range can no longer be checked for rewrites.
+    """
+    table = Path(table_path)
+    versions = snapshot_versions(table_path)
+    latest = versions[-1] if versions else 0
+    to_v = latest if to_version is None else to_version
+    if to_v < from_version:
+        raise ValueError(f"to_version {to_v} < from_version {from_version}")
+    span = range(max(from_version, 1), to_v + 1)
+    known = set(versions)
+    for v in span:
+        if v not in known:
+            raise FileNotFoundError(
+                f"version {v} not in {versions} at {table_path}"
+            )
+    manifests = [_read_manifest(table, v) for v in span]
+    base: set[str] = set()
+    if from_version:
+        base = {f["path"] for f in manifests.pop(0)["files"]}
+    for m in manifests:
+        # A parent-less commit (first version, even if written with
+        # mode='overwrite') rewrote nothing — every file it lists is
+        # added data, so it is append-equivalent here.
+        if m["mode"] != "append" and m.get("parent") is not None:
+            raise ValueError(
+                f"version {m['version']} of {table_path} is "
+                f"mode={m['mode']}; incremental reads cover append-only "
+                "ranges (read the snapshots and diff by key, or restart "
+                "a stream from a fresh checkpoint after the rewrite)"
+            )
+    return [
+        str(table / f["path"])
+        for f in (manifests[-1]["files"] if manifests else [])
+        if f["path"] not in base
+    ]
 
 
 def snapshot_changes(
@@ -276,75 +345,29 @@ def snapshot_changes(
     For append-only commits this is exactly the new data, so a
     downstream job processes only the delta instead of rescanning the
     table (the 100 TB incremental-ETL contract; same idea as Delta's
-    CDF restricted to appends). If any commit in the range rewrote
-    files (overwrite/rollback/compact), added files don't mean added
-    rows — that range raises instead of silently double-counting.
+    CDF restricted to appends); ranges raise as snapshot_added_files.
     """
-    table = Path(table_path)
-    versions = snapshot_versions(table_path)
-    to_v = versions[-1] if to_version is None else to_version
-    # from_version=0 means "since before the first commit" — the same
-    # convention the streaming source's startingVersion uses.
-    for v in (from_version, to_v):
-        if v != 0 and v not in versions:
-            raise FileNotFoundError(
-                f"version {v} not in {versions} at {table_path}"
-            )
-    if to_v < from_version:
-        raise ValueError(f"to_version {to_v} < from_version {from_version}")
-    for v in versions:
-        if from_version < v <= to_v:
-            m = _read_manifest(table, v)
-            mode = m["mode"]
-            # A parent-less commit (first version, even if written
-            # with mode='overwrite') rewrote nothing — every file it
-            # lists is added data, so it is append-equivalent here.
-            if mode != "append" and m.get("parent") is not None:
-                raise ValueError(
-                    f"version {v} is mode={mode}; snapshot_changes only "
-                    "supports append-only ranges (read the snapshots and "
-                    "diff by key instead)"
-                )
-    base = (
-        {f["path"] for f in _read_manifest(table, from_version)["files"]}
-        if from_version != 0
-        else set()
-    )
-    added = [
-        f["path"]
-        for f in _read_manifest(table, to_v)["files"]
-        if f["path"] not in base
-    ]
+    added = snapshot_added_files(table_path, from_version, to_version)
     if not added:
         # empty-but-typed frame with the table's schema
-        return snapshot_read(spark, table_path, to_v).limit(0)
-    return spark.read.parquet(*[str(table / p) for p in added])
+        return snapshot_read(spark, table_path, to_version).limit(0)
+    m = snapshot_manifest(table_path, to_version)
+    return _scan(spark, table_path, m, added)
 
 
 def snapshot_rollback(table_path: str, version: int) -> int:
-    """Publish a NEW version with `version`'s exact file list.
+    """Publish a NEW version with `version`'s exact file list and
+    partitioning.
 
     Roll-forward-style rollback (as in Delta RESTORE): history is
     preserved, nothing is deleted, and the rollback itself is one
     atomic manifest publish.
     """
-    table = Path(table_path)
     m = snapshot_manifest(table_path, version)
-    new_version = snapshot_versions(table_path)[-1] + 1
-    manifest = {
-        "version": new_version,
-        "parent": m["version"],
-        "mode": "rollback",
-        "files": m["files"],
-        "total_rows": m["total_rows"],
-    }
-    tmp = _manifest_dir(table) / f"_tmp-{uuid.uuid4().hex}.json"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _manifest_path(table, new_version))
-    return new_version
+    return _commit(
+        Path(table_path), m["version"], "rollback", m["files"],
+        m.get("partition_by", []),
+    )
 
 
 def snapshot_compact(
@@ -383,20 +406,13 @@ def snapshot_vacuum(table_path: str, keep_last: int = 1) -> dict:
     # then delete manifests — a crash in between leaves both records
     # (harmless); the reverse order could lose the idempotency marker.
     markers = _read_batch_markers(table)
-    dirty = False
+    known = len(markers)
     for v in expired:
-        m = _read_manifest(table, v)
-        bid = m.get("batch_id")
-        if bid is not None and bid not in markers:
-            markers[bid] = v
-            dirty = True
-    if dirty:
-        tmp = _manifest_dir(table) / f"_tmp-{uuid.uuid4().hex}.json"
-        with open(tmp, "w") as f:
-            json.dump(markers, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, _batch_marker_path(table))
+        bid = _read_manifest(table, v).get("batch_id")
+        if bid is not None:
+            markers.setdefault(bid, v)
+    if len(markers) > known:
+        _publish(_batch_marker_path(table), markers)
 
     for v in expired:
         os.remove(_manifest_path(table, v))
@@ -406,7 +422,7 @@ def snapshot_vacuum(table_path: str, keep_last: int = 1) -> dict:
         referenced.update(f["path"] for f in _read_manifest(table, v)["files"])
     removed = []
     for p in sorted(_data_dir(table).rglob("*.parquet")):
-        rel = f"{_DATA_DIR}/{p.relative_to(_data_dir(table))}"
+        rel = str(p.relative_to(table))
         if rel not in referenced:
             os.remove(p)
             removed.append(rel)

@@ -12,14 +12,13 @@ snapshot versions.
   file list — no directory listing, so concurrent commits can never
   tear a read.
 - streaming: offsets are `{"version": N}`. Each micro-batch reads
-  exactly the files ADDED in (start, end] — the snapshot_changes
-  contract — so a restart from the checkpoint resumes at a version
-  boundary and immutable data files make replays byte-identical:
-  source-side exactly-once to match snapshot_sink's sink-side.
-  A rewrite commit (overwrite/rollback/compact) inside an unread
-  range fails the stream with a clear error rather than
-  double-counting rows (same caveat as Delta's streaming source
-  without ignoreChanges; stream append-only tables).
+  exactly the files ADDED in (start, end] (snapshot_added_files),
+  so a restart from the checkpoint resumes at a version boundary and
+  immutable data files make replays byte-identical: source-side
+  exactly-once to match snapshot_sink's sink-side. A rewrite commit
+  or a vacuumed manifest inside an unread range fails the stream
+  rather than double-counting rows (same caveat as Delta's streaming
+  source without ignoreChanges; stream append-only tables).
 
 Scale notes: all planning work is O(#files) JSON reads on the
 driver; data moves only on executors (pyarrow batch iteration, which
@@ -32,7 +31,6 @@ this Spark version — project early after load if the table is wide.
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 from pyspark.sql.datasource import (
@@ -42,7 +40,11 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from ..snapshots import snapshot_manifest, snapshot_versions
+from ..snapshots import (
+    snapshot_added_files,
+    snapshot_manifest,
+    snapshot_versions,
+)
 
 
 class _FilePartition(InputPartition):
@@ -66,36 +68,6 @@ def _reject_partitioned(m: dict, table_path: str) -> None:
             "format('snapshot') reads unpartitioned tables — use "
             "snapshots.snapshot_read for partitioned ones"
         )
-
-
-def _added_files(table_path: str, start_v: int, end_v: int) -> list[str]:
-    """Data-file paths added in (start_v, end_v]; append-only ranges
-    only (a rewrite commit raises — changed files ≠ changed rows)."""
-    table = Path(table_path)
-    for v in range(start_v + 1, end_v + 1):
-        m = snapshot_manifest(table_path, v)
-        _reject_partitioned(m, table_path)
-        # A parent-less commit (version 1, even with mode='overwrite')
-        # rewrote nothing — it is append-equivalent, so a table whose
-        # first version was an overwrite can still stream from
-        # startingVersion 0.
-        if m["mode"] != "append" and m.get("parent") is not None:
-            raise ValueError(
-                f"version {v} of {table_path} is mode={m['mode']}; the "
-                "snapshot stream source reads append-only ranges — "
-                "restart the stream from a fresh checkpoint after "
-                "rewrites (compaction/overwrite/rollback)"
-            )
-    base = (
-        {f["path"] for f in snapshot_manifest(table_path, start_v)["files"]}
-        if start_v > 0
-        else set()
-    )
-    return [
-        str(table / f["path"])
-        for f in snapshot_manifest(table_path, end_v)["files"]
-        if f["path"] not in base
-    ]
 
 
 class _SnapshotBatchReader(DataSourceReader):
@@ -127,12 +99,14 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         return {"version": versions[-1] if versions else 0}
 
     def partitions(self, start, end):
-        return [
-            _FilePartition(p)
-            for p in _added_files(
-                self.table_path, start["version"], end["version"]
-            )
-        ]
+        paths = snapshot_added_files(
+            self.table_path, start["version"], end["version"]
+        )
+        if paths:
+            # an append-only range shares its end version's layout
+            m = snapshot_manifest(self.table_path, end["version"])
+            _reject_partitioned(m, self.table_path)
+        return [_FilePartition(p) for p in paths]
 
     def read(self, partition):
         return _read_file(partition)

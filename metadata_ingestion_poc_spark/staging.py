@@ -15,6 +15,11 @@ closes it:
 Marker files/dirs all start with ``_`` so Spark's file-listing treats
 them as hidden and never reads them as data.
 
+Batch ledgers (``_folded/``, ``_admitted/``: one empty file per
+batch id) are such subdirectories and belong to the table, so
+:func:`commit_swap` carries them into every rewrite; a writer adds
+only its new id to staging.
+
 Single-writer contract (same as the reference's POC writer): two
 concurrent writers to the same path can still race. Within one
 ``framework.run`` the lanes guarantee one writer per target: sources
@@ -30,6 +35,9 @@ import shutil
 from pathlib import Path
 
 COMMIT_MARKER = "_COMMITTED"
+# Spark's own bookkeeping: a write's scratch and a file sink's log,
+# which names data files a rewrite replaces — never carried over
+_SPARK_DIRS = ("_temporary", "_spark_metadata")
 
 
 def staging_dir(target: Path) -> Path:
@@ -76,13 +84,24 @@ def recover(target: Path) -> None:
         shutil.rmtree(staging)
 
 
+def batch_ids(path: str, ledger: str) -> set[str]:
+    """Batch ids in the `ledger` subdirectory of the table at `path`."""
+    marker_dir = Path(path) / ledger
+    if not marker_dir.exists():
+        return set()
+    return {p.name for p in marker_dir.iterdir()}
+
 def commit_swap(target: Path, staging: Path) -> None:
     """Replace `target` with a fully-written `staging` dir.
 
-    Marks staging committed first, renames the live dir aside, moves
-    staging in, then drops the old copy — every crash point leaves a
-    state :func:`recover` completes.
+    Merges the live dir's ``_`` subdirectories (not Spark's own) into
+    staging, marks staging committed, renames the live dir aside,
+    moves staging in, then drops the old copy — every crash point
+    leaves a state :func:`recover` completes.
     """
+    for d in target.glob("_*"):
+        if d.is_dir() and d.name not in _SPARK_DIRS:
+            shutil.copytree(d, staging / d.name, dirs_exist_ok=True)
     (staging / COMMIT_MARKER).touch()
     old = _old_dir(target)
     if old.exists():

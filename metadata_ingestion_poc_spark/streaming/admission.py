@@ -11,8 +11,8 @@ stream_upsert_to_hub / stream_fold_rollup.
 Idempotency mirrors operators/rollup.py: the corpus dir keeps an
 ``_admitted/<batch_id>`` marker per admitted batch (underscore-prefixed
 → invisible to parquet reads), markers travel through the same
-crash-safe staging swap as the data, and an at-least-once replay of a
-micro-batch is a no-op.
+crash-safe staging swap as the data (which carries the earlier ones
+over), and an at-least-once replay of a micro-batch is a no-op.
 
 Gate order matters at scale: the exact hash dedup (cheap, one shuffle)
 runs before the n-gram near-dup (index build), and the cross-set probe
@@ -30,17 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import DEFAULT_MAX_SHINGLE_DF
-from ..staging import commit_swap, recover, staging_dir
+from ..staging import batch_ids, commit_swap, recover, staging_dir
 
 _ADMITTED = "_admitted"
-
-
-def admitted_batch_ids(path: str) -> set[str]:
-    """Batch ids already admitted into the corpus at `path`."""
-    marker_dir = Path(path) / _ADMITTED
-    if not marker_dir.exists():
-        return set()
-    return {p.name for p in marker_dir.iterdir()}
 
 
 def admit_batch(
@@ -71,7 +63,7 @@ def admit_batch(
     """
     target = Path(path)
     recover(target)
-    if batch_id is not None and str(batch_id) in admitted_batch_ids(path):
+    if batch_id is not None and str(batch_id) in batch_ids(path, _ADMITTED):
         return
 
     from ..operators.dedup import (
@@ -129,15 +121,11 @@ def admit_batch(
         else survivors
     )
 
-    prior_ids = admitted_batch_ids(path)
     staging = staging_dir(target)
     merged.write.mode("overwrite").parquet(str(staging))
-    marker_dir = staging / _ADMITTED
-    marker_dir.mkdir(exist_ok=True)
-    for bid in prior_ids:
-        (marker_dir / bid).touch()
     if batch_id is not None:
-        (marker_dir / str(batch_id)).touch()
+        (staging / _ADMITTED).mkdir(exist_ok=True)
+        (staging / _ADMITTED / str(batch_id)).touch()
     commit_swap(target, staging)
 
 

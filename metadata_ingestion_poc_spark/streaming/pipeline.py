@@ -63,6 +63,13 @@ def stream_upsert_to_hub(
     reject that); when ``order_col`` is given, each batch is reduced to
     the latest row per key (max order_col, ties broken arbitrarily by
     that column only) before merging — latest-wins upsert semantics.
+
+    Delivery contract: foreachBatch replays a crashed micro-batch
+    (at-least-once). With ``keys`` the upsert is replay-idempotent by
+    construction: a replay replaces the same keys with the same rows.
+    A keyless HUB is a plain append (see writer.write_hub), so a
+    replayed micro-batch appends its rows again — at-least-once
+    table contents.
     """
     from ..operators.dedup import exact_dedup
 

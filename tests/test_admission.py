@@ -4,9 +4,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from metadata_ingestion_poc_spark.staging import batch_ids
 from metadata_ingestion_poc_spark.streaming.admission import (
     admit_batch,
-    admitted_batch_ids,
     stream_corpus_admission,
 )
 
@@ -45,7 +45,7 @@ def test_admission_gates(spark, tmp_path):
     )
     ids1 = {r.doc_id for r in spark.read.parquet(path).collect()}
     assert ids1 == {1, 3, 12}
-    assert admitted_batch_ids(path) == {"0", "1"}
+    assert batch_ids(path, "_admitted") == {"0", "1"}
 
 
 def test_admission_replay_is_noop(spark, tmp_path):

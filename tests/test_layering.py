@@ -8,6 +8,9 @@
   under ``operators/`` or ``queries/`` mentions ``is_remote``,
   ``sparkContext`` or ``_jdf``, and ``is_remote`` appears nowhere
   else in the package.
+- One atomic publish: ``os.replace`` and ``os.fsync`` are called from
+  exactly one function in the package, so every file that must land
+  whole (manifests, ledgers) is written by the same code.
 """
 
 from __future__ import annotations
@@ -71,3 +74,34 @@ def test_connect_and_jvm_handles_stay_in_execution():
         elif "is_remote" in text and rel != Path("execution.py"):
             found.append((str(rel), "is_remote"))
     assert not found, f"execution handles outside execution.py: {found}"
+
+
+def _os_call_sites(names: set[str]) -> set[tuple[str, str]]:
+    """(module, enclosing function) of every ``os.<name>(...)`` call."""
+    sites = set()
+
+    def visit(node, rel, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = f"{scope}.{node.name}" if scope else node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "os"
+            and node.func.attr in names
+        ):
+            sites.add((rel, scope or "<module>"))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, scope)
+
+    for rel, text in _modules():
+        visit(ast.parse(text), str(rel), "")
+    return sites
+
+
+def test_one_atomic_publish():
+    sites = _os_call_sites({"replace", "fsync"})
+    assert len(sites) == 1, (
+        f"os.replace/os.fsync called from more than one function "
+        f"(route them through the one publish): {sorted(sites)}"
+    )

@@ -20,6 +20,7 @@ from metadata_ingestion_poc_spark.operators.opq import (
     _allocate_eigs,
     opq_train_rotation,
     rotate_vectors,
+    save_opq_rotation,
 )
 from metadata_ingestion_poc_spark.operators.pq import (
     ivfpq_build,
@@ -38,6 +39,8 @@ from metadata_ingestion_poc_spark.operators.pq import (
 from metadata_ingestion_poc_spark.operators.similarity import cosine_topk
 
 D, M, KSUB, N = 16, 4, 8, 400
+STALE_ROTATION = [[1.0 if i == D - 1 - j else 0.0 for j in range(D)]
+                  for i in range(D)]
 
 
 def _planted_rows():
@@ -175,6 +178,9 @@ def test_pq_reload_equals_rebuild(spark, planted, tmp_path, opq):
     )
     assert (rotation is not None) == opq
     path = str(tmp_path / "pq_idx")
+    # an earlier OPQ save at the same path: a plain re-save must not
+    # reload its rotation beside the new codebooks
+    save_opq_rotation(spark, STALE_ROTATION, f"{path}/rotation")
     save_pq_index(spark, books, codes, path, rotation=rotation)
     r2, b2, c2 = load_pq_index(spark, path)
     assert r2 == rotation
@@ -199,6 +205,7 @@ def test_ivfpq_reload_equals_rebuild(spark, planted, tmp_path, opq):
     assert (rotation is not None) == opq
     coded = coded.localCheckpoint(eager=True)
     path = str(tmp_path / "ivfpq_idx")
+    save_opq_rotation(spark, STALE_ROTATION, f"{path}/rotation")
     save_ivfpq_index(spark, cents, books, coded, path, rotation=rotation)
     c2, r2, b2, coded2 = load_ivfpq_index(spark, path)
     assert c2 == cents

@@ -3,11 +3,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from metadata_ingestion_poc_spark.catalog import load_table
+from metadata_ingestion_poc_spark.operators.maintenance import compact
 from metadata_ingestion_poc_spark.operators.rollup import (
     fold_into_rollup,
     read_rollup,
     rollup_batch,
 )
+from metadata_ingestion_poc_spark.staging import batch_ids
 
 
 def test_incremental_rollup_equals_full_recompute(spark, sf_dir, tmp_path):
@@ -74,3 +76,20 @@ def test_rollup_replayed_batch_is_idempotent(spark, sf_dir, tmp_path):
     # a genuinely new batch id still folds
     fold_into_rollup(spark, b0.limit(10), path, batch_id=2)
     assert _snapshot(spark, path) != want
+
+
+def test_compaction_keeps_fold_ledger(spark, sf_dir, tmp_path):
+    # compaction rewrites the rollup through the staging swap; the
+    # fold ledger must survive it, or a replayed batch double-counts
+    ev = load_table(spark, sf_dir, "events")
+    path = str(tmp_path / "rollup4")
+    b0 = ev.filter(F.col("event_id") % 2 == 1)
+    b1 = ev.filter(F.col("event_id") % 2 == 0)
+    fold_into_rollup(spark, b0, path, batch_id=0)
+    fold_into_rollup(spark, b1, path, batch_id=1)
+    want = _snapshot(spark, path)
+
+    compact(spark, path)
+    assert batch_ids(path, "_folded") == {"0", "1"}
+    fold_into_rollup(spark, b0, path, batch_id=0)  # replay after compact
+    assert _snapshot(spark, path) == want

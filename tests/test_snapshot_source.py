@@ -121,6 +121,19 @@ def test_stream_fails_on_rewrite_range(spark, table, tmp_path):
         _run_stream(spark, table, ckpt, lambda b, i: None)
 
 
+def test_vacuumed_range_raises_like_snapshot_changes(spark, table, tmp_path):
+    # once vacuum has expired a manifest of the range, neither
+    # incremental reader can check it for rewrites: both raise
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    S.snapshot_write(_df(spark, 15, 18, "c"), table)
+    S.snapshot_vacuum(table, keep_last=1)
+    with pytest.raises(FileNotFoundError, match="version 1 not in"):
+        S.snapshot_changes(spark, table, 0)
+    with pytest.raises(StreamingQueryException, match="version 1 not in"):
+        _run_stream(spark, table, str(tmp_path / "ckpt5"), lambda b, i: None)
+
+
 def test_source_to_sink_round_trip_exactly_once(spark, table, tmp_path):
     from metadata_ingestion_poc_spark.streaming.snapshot_sink import (
         snapshot_sink,

@@ -61,6 +61,22 @@ def test_rollback_preserves_history(spark, tmp_path):
     assert _rows(S.snapshot_read(spark, t, 2)) == _rows(_df(spark, 0, 3, "b"))
 
 
+def test_rollback_keeps_partitioning(spark, tmp_path):
+    t = str(tmp_path / "tbl")
+    S.snapshot_write(_df(spark, 0, 5, "a"), t, partition_by=["tag"])
+    S.snapshot_write(_df(spark, 0, 3, "b"), t, mode="overwrite")
+    S.snapshot_rollback(t, 1)
+    assert S.snapshot_manifest(t)["partition_by"] == ["tag"]
+    got = S.snapshot_read(spark, t)
+    assert set(got.columns) == {"id", "tag"}
+    assert _rows(got) == _rows(_df(spark, 0, 5, "a"))
+    # the rolled-back layout accepts a matching partitioned append
+    S.snapshot_write(_df(spark, 5, 7, "c"), t, partition_by=["tag"])
+    assert _rows(S.snapshot_read(spark, t)) == _rows(
+        _df(spark, 0, 5, "a").union(_df(spark, 5, 7, "c"))
+    )
+
+
 def test_pinned_reader_survives_commit_and_compaction(spark, tmp_path):
     t = str(tmp_path / "tbl")
     S.snapshot_write(_df(spark, 0, 8, "a"), t)
@@ -316,6 +332,10 @@ def test_partitioned_write_read_and_pruning(spark, tmp_path):
         "PartitionFilters"
     )[1][:120]
     assert got.filter(F.col("tag") == "a").count() == 10
+    # incremental reads keep the partition column too
+    assert _rows(S.snapshot_changes(spark, t, 1)) == _rows(
+        _df(spark, 10, 14, "b")
+    )
 
 
 def test_partitioned_append_must_match_parent(spark, tmp_path):

@@ -3,7 +3,8 @@
 Simulates every crash point of commit_swap by reconstructing the
 on-disk state it leaves behind, then asserts recover() restores a
 complete table with either the old or the new contents — never a
-missing or half-written one.
+missing or half-written one — and with the batch ledger that belongs
+to those contents: the old ledger, or the old ledger plus the new id.
 """
 
 from __future__ import annotations
@@ -18,19 +19,29 @@ import pytest
 
 from metadata_ingestion_poc_spark.staging import (
     COMMIT_MARKER,
+    batch_ids,
     commit_swap,
     recover,
     staging_dir,
 )
 
+LEDGER = "_folded"
 
-def _mk_table(path: Path, tag: str) -> None:
+
+def _mk_table(path: Path, tag: str, ledger: tuple[str, ...] = ()) -> None:
     path.mkdir(parents=True)
     (path / "part-0.parquet").write_text(tag)
+    for bid in ledger:
+        (path / LEDGER).mkdir(exist_ok=True)
+        (path / LEDGER / bid).touch()
 
 
 def _read_tag(path: Path) -> str:
     return (path / "part-0.parquet").read_text()
+
+
+# live table: batch 0 folded; staging: the rewrite that folds batch 1
+_LEDGER_AFTER = {"old": {"0"}, "new": {"0", "1"}}
 
 
 def test_commit_swap_happy_path(tmp_path):
@@ -42,6 +53,27 @@ def test_commit_swap_happy_path(tmp_path):
     assert _read_tag(live) == "new"
     assert not stg.exists()
     assert not (tmp_path / "t__old").exists()
+
+
+def test_commit_swap_carries_ledgers(tmp_path):
+    # every _-prefixed subdir of the live table is merged into the new
+    # one (with what the writer put in staging), except Spark's own
+    live = tmp_path / "t"
+    _mk_table(live, "old", ledger=("0", "1"))
+    (live / "_admitted").mkdir()
+    (live / "_admitted" / "7").touch()
+    (live / "_temporary" / "0").mkdir(parents=True)
+    (live / "_spark_metadata").mkdir()
+    (live / "_spark_metadata" / "0").write_text("part-0.parquet")
+    stg = staging_dir(live)
+    _mk_table(stg, "new", ledger=("2",))
+    commit_swap(live, stg)
+    assert _read_tag(live) == "new"
+    assert batch_ids(str(live), LEDGER) == {"0", "1", "2"}
+    assert batch_ids(str(live), "_admitted") == {"7"}
+    assert not (live / "_temporary").exists()
+    assert not (live / "_spark_metadata").exists()
+    assert batch_ids(str(live), "_none") == set()
 
 
 def test_commit_swap_initial_write(tmp_path):
@@ -133,6 +165,12 @@ from metadata_ingestion_poc_spark import staging as st
 target = Path(sys.argv[1])
 crash = sys.argv[2]
 orig_move = shutil.move
+orig_copytree = shutil.copytree
+
+def copytree(src, dst, **kw):
+    orig_copytree(src, dst, **kw)
+    if crash == "after_ledger":
+        os.kill(os.getpid(), 9)
 
 def move(src, dst):
     if crash == "before_aside":
@@ -144,6 +182,7 @@ def move(src, dst):
         os.kill(os.getpid(), 9)
 
 shutil.move = move
+shutil.copytree = copytree
 st.commit_swap(target, st.staging_dir(target))
 """
 
@@ -151,6 +190,9 @@ st.commit_swap(target, st.staging_dir(target))
 @pytest.mark.parametrize(
     "crash,expect",
     [
+        # killed after the ledger copy, before the marker: staging is
+        # uncommitted, so the old copy (and its ledger) survives
+        ("after_ledger", "old"),
         # killed after the marker but before any move: old copy survives
         ("before_aside", "old"),
         # killed between rename-aside and move-in — the window where no
@@ -163,9 +205,9 @@ st.commit_swap(target, st.staging_dir(target))
 def test_sigkill_mid_swap_recovers(tmp_path, crash, expect):
     repo = str(Path(__file__).resolve().parents[1])
     live = tmp_path / "t"
-    _mk_table(live, "old")
+    _mk_table(live, "old", ledger=("0",))
     stg = staging_dir(live)
-    _mk_table(stg, "new")
+    _mk_table(stg, "new", ledger=("1",))
 
     proc = subprocess.run(
         [sys.executable, "-c", _CRASH_CHILD.format(repo=repo),
@@ -183,6 +225,7 @@ def test_sigkill_mid_swap_recovers(tmp_path, crash, expect):
     recover(live)
     assert live.exists()
     assert _read_tag(live) == expect
+    assert batch_ids(str(live), LEDGER) == _LEDGER_AFTER[expect]
     assert not staging_dir(live).exists()
     assert not (tmp_path / "t__old").exists()
     # a second writer arriving later must see a normal table
@@ -193,16 +236,19 @@ def test_sigkill_mid_swap_recovers(tmp_path, crash, expect):
 def test_every_crash_point_leaves_a_recoverable_table(tmp_path):
     # exhaustive: replay commit_swap's step sequence, crash after each
     # step, recover, and assert a complete table with old or new data.
-    steps = ["marker", "rename_aside", "move_in", "cleanup"]
+    steps = ["ledger", "marker", "rename_aside", "move_in", "cleanup"]
     for crash_after in range(len(steps) + 1):
         root = tmp_path / f"case{crash_after}"
         root.mkdir()
         live, old = root / "t", root / "t__old"
-        _mk_table(live, "old")
+        _mk_table(live, "old", ledger=("0",))
         stg = staging_dir(live)
-        _mk_table(stg, "new")
+        _mk_table(stg, "new", ledger=("1",))
         for step in steps[:crash_after]:
-            if step == "marker":
+            if step == "ledger":
+                shutil.copytree(live / LEDGER, stg / LEDGER,
+                                dirs_exist_ok=True)
+            elif step == "marker":
                 (stg / COMMIT_MARKER).touch()
             elif step == "rename_aside":
                 shutil.move(str(live), str(old))
@@ -213,5 +259,8 @@ def test_every_crash_point_leaves_a_recoverable_table(tmp_path):
         recover(live)
         assert live.exists(), f"table lost at crash point {crash_after}"
         tag = _read_tag(live)
-        expect = "old" if crash_after < 2 else "new"
+        expect = "old" if crash_after < 3 else "new"
         assert tag == expect, f"crash point {crash_after}: got {tag}"
+        assert batch_ids(str(live), LEDGER) == _LEDGER_AFTER[expect], (
+            f"crash point {crash_after}: ledger does not match {tag} data"
+        )
