@@ -8,8 +8,8 @@ layout produces the identical value; results are rounded and cast back
 to double for stable hashing. SQL equivalent:
 ``ROUND(SUM(CAST(x AS DECIMAL(28,6))), 6)::DOUBLE``.
 
-Scalar-expression rule (the q276 lesson, REVISED round 13 after two
-consecutive driver reds empirically refuted the round-12 version):
+Scalar-expression rule (the q276 lesson: a float cell hashes the same
+only if every engine, at every version, computes the identical bits):
 
 1. EXACT cells are the only hash-SAFE story. Integers, integer pairs
    (exact rationals, q276), FLOOR-pinned integer micro-grids (q297),
@@ -35,13 +35,12 @@ consecutive driver reds empirically refuted the round-12 version):
    correctly rounded). ALSO hazard: WIDE-integer→double conversion —
    DECIMAL(38,0)/HUGEINT→double is implementation-defined (DuckDB
    composes upper·2^64 + lower in double arithmetic, a DOUBLE
-   rounding; Spark's BigDecimal.doubleValue rounds once), the exact
-   residual surface q276's best-split rank exercised through round
-   13. Never convert a >64-bit integer to double anywhere a hashed
+   rounding; Spark's BigDecimal.doubleValue rounds once), so a rank
+   such as q276's best split must not read one. Never convert a >64-bit integer to double anywhere a hashed
    cell or a rank/argmax depends on it — extract decimal digits with
    exact integer division instead (``div`` on DECIMAL(38,0) ≡ ``//``
-   on HUGEINT ≡ Python ``//``, verified bit-identical; the q276
-   round-14 rank key). Rounding a chain at 6 dp REDUCES but does not
+   on HUGEINT ≡ Python ``//``, verified bit-identical; q276's rank
+   key is built this way). Rounding a chain at 6 dp REDUCES but does not
    ELIMINATE cross-version risk: a value within ~1e-9 of a 6-dp
    boundary still flips. Where such a cell must ship (exp/ln
    outputs), keep ROUND(6) and accept the documented residual risk —
@@ -135,6 +134,20 @@ def sql_double(x: float) -> str:
     if not math.isfinite(v):
         raise ValueError(f"sql_double: non-finite value {v!r}")
     return repr(v) + "D"
+
+
+def sql_array(values) -> str:
+    """A (nested) list as ONE Spark SQL array literal — the form every
+    centroid, codebook, rotation and norm table enters a plan in: a
+    float through :func:`sql_double` (so NaN/inf raise), an int bare.
+    One literal per array, never ``F.lit(list)``, which creates one
+    py4j Column per element (seconds of driver time at thousands of
+    elements)."""
+    if isinstance(values, (list, tuple)):
+        return "array(" + ", ".join(sql_array(v) for v in values) + ")"
+    if isinstance(values, int) and not isinstance(values, bool):
+        return str(values)
+    return sql_double(values)
 
 
 def collect_literal_row(df: DataFrame, decimals: int = 6) -> DataFrame:

@@ -10,11 +10,13 @@ Spark-first for the 100-TB shape:
   argmin expression per row, no join, no explode, no Python. (A
   centroid JOIN would broadcast anyway; the literal form also keeps
   every iteration's plan flat — see lineage note below.)
-- **The update step is ONE narrow exchange per iteration.** ``groupBy
-  (cluster) . agg(d per-dim decimal sums + count)`` has k groups, so
-  map-side partial aggregation reduces each of the N input partitions
-  to ≤ k·(d+1) values before the shuffle; the exchange carries
-  kilobytes at any data scale.
+- **The update step is ONE narrow exchange per iteration**
+  (`lloyd_train`, the joint trainer product quantization also runs;
+  k-means is its one-subspace case). ``groupBy(cluster) . agg(d
+  per-dim decimal sums + count)`` has k groups, so map-side partial
+  aggregation reduces each of the N input partitions to ≤ k·(d+1)
+  values before the shuffle; the exchange carries kilobytes at any
+  data scale.
 - **No lineage growth.** Each round collects the k·(d+1) update row
   (bounded by construction — k rows) and re-creates the next
   centroids as literals, so iteration t+1's plan reads the
@@ -57,68 +59,51 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..execution import checked_base, spread
-from ..functions.determinism import DEC, half_up, sql_double
+from ..functions.determinism import DEC, half_up, sql_array
 
 HASH_MULT = 2654435761  # Knuth multiplicative hash (public constant)
 HASH_MOD = 2147483647
 
+Codebooks = dict[int, dict[int, list[float]]]  # sub -> cid -> codeword
 
-def _dist_sql(vec_expr: str, centroid: Sequence[float]) -> str:
-    """Exact-decimal squared distance between a vector column and a
-    literal centroid: each term rounded at 6 dp, decimal-summed in
-    array order (associative, so order is irrelevant to the value).
 
-    One ``array(...)`` SQL literal per centroid — NOT ``F.lit(list)``,
-    which creates one py4j Column per element (a known seconds-of-
-    driver-time trap at thousands of elements)."""
-    arr = ", ".join(sql_double(x) for x in centroid)
+def d2_expr(vec_expr: str, cw: str) -> str:
+    """Exact-decimal squared distance between two array expressions
+    (``cw`` is usually the lambda variable over a codeword literal):
+    each term rounded at 6 dp, decimal-summed in array order
+    (associative, so order is irrelevant to the value).
+
+    Written ONCE inside a lambda over ONE nested-array literal: the
+    per-centroid-unrolled form (k separate aggregate expressions)
+    builds thousands of Catalyst nodes at k=8·d=64 and pays seconds of
+    analysis + codegen per Lloyd round; the lambda form is ~50 nodes
+    for identical arithmetic."""
     return (
-        f"aggregate(zip_with({vec_expr}, array({arr}), "
+        f"aggregate(zip_with({vec_expr}, {cw}, "
         f"(x, y) -> round((cast(x as double) - y) * (cast(x as double) - y), 6)), "
         f"cast(0 as decimal(28,6)), "
         f"(acc, v) -> cast(acc + cast(v as decimal(28,6)) as decimal(28,6)))"
     )
-
-
-def _centroid_literal(centroids: Mapping[int, Sequence[float]]) -> tuple[str, str]:
-    """(nested array literal of centroids, int array literal of their
-    cids), in ascending-cid order."""
-    cids = sorted(centroids)
-    cb = "array(" + ", ".join(
-        "array(" + ", ".join(sql_double(x) for x in centroids[c]) + ")"
-        for c in cids
-    ) + ")"
-    return cb, "array(" + ", ".join(str(c) for c in cids) + ")"
 
 
 def _struct_dists_expr(
     vec_col: str, centroids: Mapping[int, Sequence[float]]
 ) -> str:
-    """Array of (d2, cid) structs over all centroids — the shared
-    core of the argmin and nearest-two forms.
-
-    The centroids enter as ONE nested-array literal with the exact-
-    decimal distance written ONCE inside a zip_with lambda (round-10,
-    the operators/pq.py lesson): the per-centroid-unrolled form (k
-    separate aggregate expressions) builds thousands of Catalyst
-    nodes at k=8·d=64 and pays seconds of analysis + codegen per
-    Lloyd round; this form is ~50 nodes for identical arithmetic
-    (same 6-dp rounds, same decimal fold, same (d2, cid) order)."""
-    cb, cid_arr = _centroid_literal(centroids)
-    dist = (
-        f"aggregate(zip_with({vec_col}, cw, "
-        f"(x, y) -> round((cast(x as double) - y) * (cast(x as double) - y), 6)), "
-        f"cast(0 as decimal(28,6)), "
-        f"(acc, v) -> cast(acc + cast(v as decimal(28,6)) as decimal(28,6)))"
-    )
+    """Array of (d2, cid) structs over all centroids in ascending-cid
+    order — the shared core of the argmin and nearest-two forms.
+    ``vec_col`` should be a plain projected column (it is referenced
+    once per centroid inside the lambda — the CollapseProject lesson),
+    not an inline slice()."""
+    cids = sorted(centroids)
     return (
-        f"zip_with({cb}, sequence(1, {len(centroids)}), "
-        f"(cw, i) -> named_struct('d2', {dist}, "
-        f"'cid', element_at({cid_arr}, i)))"
+        f"zip_with({sql_array([centroids[c] for c in cids])}, "
+        f"sequence(1, {len(cids)}), "
+        f"(cw, i) -> named_struct('d2', {d2_expr(vec_col, 'cw')}, "
+        f"'cid', element_at({sql_array(cids)}, i)))"
     )
 
 
-def _assign_expr(
+def assign_expr(
     vec_col: str, centroids: Mapping[int, Sequence[float]]
 ) -> str:
     """argmin_{cid} dist²(vec, centroid_cid) as a struct (d2, cid):
@@ -134,6 +119,29 @@ def nearest_two_expr(
     is the assigned centroid, element 2 the runner-up (silhouette's
     `b`). Same total order as the argmin: (exact decimal d2, cid)."""
     return f"array_sort({_struct_dists_expr(vec_col, centroids)})"
+
+
+def slice_expr(vec_col: str, sub: int, dsub: int) -> str:
+    """1-based contiguous slice of subspace `sub` (1..m)."""
+    return f"slice({vec_col}, {(sub - 1) * dsub + 1}, {dsub})"
+
+
+def subspace_slices(
+    frame: DataFrame, vec_col: str, dims: int, m: int, *keep
+) -> DataFrame:
+    """``keep`` plus the m subspace slices of ``vec_col`` as columns
+    ``__s1..__sm``. Projected ONCE as named columns: each is
+    referenced once per codeword inside its argmin lambda, and a
+    multiply-referenced alias stays single-eval (CollapseProject),
+    where an inline slice() would re-copy per codeword."""
+    dsub = dims // m
+    return frame.select(
+        *keep,
+        *[
+            F.expr(slice_expr(vec_col, sub, dsub)).alias(f"__s{sub}")
+            for sub in range(1, m + 1)
+        ],
+    )
 
 
 def seed_centroids(
@@ -162,6 +170,74 @@ def seed_centroids(
     }
 
 
+def lloyd_train(
+    base: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dims: int,
+    m: int,
+    k: int,
+    iterations: int,
+) -> Codebooks:
+    """Lloyd's over the m contiguous subspaces of an already-validated
+    base (the `checked_base` output), run JOINTLY: k-means is m = 1,
+    product quantization m > 1. Returns sub -> cid -> 6-dp codeword.
+
+    Seeds are the k lowest-id-hash vectors (`seed_centroids`), sliced
+    — fewer than k rows seed fewer clusters. Each iteration is ONE
+    scan computing all m argmins in codegen, one explode to
+    (sub, code, slice) rows and ONE m·k-group exchange behind map-side
+    combine (dsub decimal sums + a count per group — kilobytes at any
+    scale), then a bounded m·k-row collect re-literalized as the next
+    codewords ``HALF_UP(round(sum/count, 6))``, so plans stay flat with
+    no lineage. A codeword that loses every member drops out."""
+    dsub = dims // m
+    seeds = seed_centroids(base, id_col, vec_col, k)
+    books: Codebooks = {
+        sub: {
+            cid: vec[(sub - 1) * dsub:(sub - 1) * dsub + dsub]
+            for cid, vec in seeds.items()
+        }
+        for sub in range(1, m + 1)
+    }
+    sliced = subspace_slices(base, vec_col, dims, m)
+    for _ in range(iterations):
+        entries = ", ".join(
+            f"named_struct('sub', {sub}, "
+            f"'code', {assign_expr(f'__s{sub}', books[sub])}.cid, "
+            f"'sl', __s{sub})"
+            for sub in range(1, m + 1)
+        )
+        upd = (
+            sliced.select(
+                F.explode_outer(F.expr(f"array({entries})")).alias("e")
+            )
+            .filter(F.col("e").isNotNull())
+            .groupBy(
+                F.col("e.sub").alias("sub"), F.col("e.code").alias("code")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                *[
+                    F.sum(
+                        F.element_at(F.col("e.sl"), i)
+                        .cast("double")
+                        .cast(DEC)
+                    ).alias(f"s{i}")
+                    for i in range(1, dsub + 1)
+                ],
+            )
+            .collect()
+        )
+        books = {sub: {} for sub in range(1, m + 1)}
+        for r in upd:
+            books[r["sub"]][r["code"]] = [
+                half_up(float(r[f"s{i}"]) / r["n"], 6)
+                for i in range(1, dsub + 1)
+            ]
+    return books
+
+
 def kmeans_lloyd(
     df: DataFrame,
     id_col: str,
@@ -171,7 +247,8 @@ def kmeans_lloyd(
     cache: bool = True,
 ) -> tuple[DataFrame, dict[int, list[float]]]:
     """Run ``iterations`` Lloyd update rounds from the deterministic
-    seeds, then assign every row to its final centroid.
+    seeds (`lloyd_train` with one subspace), then assign every row to
+    its final centroid.
 
     Returns ``(assigned, centroids)`` where ``assigned`` is the input
     frame plus ``cluster_id`` (int) and ``d2`` (DECIMAL(28,6) exact
@@ -180,38 +257,8 @@ def kmeans_lloyd(
     update. Clusters that lose all members drop out of both.
     """
     base, dims, _ = checked_base(df, id_col, vec_col, cache, "kmeans_lloyd")
-
-    centroids = seed_centroids(base, id_col, vec_col, k)
-
-    for _ in range(iterations):
-        choice = _assign_expr(vec_col, centroids)
-        # ONE exchange: k groups, map-side combine; d decimal sums +
-        # a count per group. The k-row collect is bounded by k.
-        upd = (
-            base.select(F.expr(choice).getField("cid").alias("__cid"), vec_col)
-            .groupBy("__cid")
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                *[
-                    F.sum(
-                        F.element_at(F.col(vec_col), i)
-                        .cast("double")
-                        .cast(DEC)
-                    ).alias(f"__s{i}")
-                    for i in range(1, dims + 1)
-                ],
-            )
-            .collect()
-        )
-        centroids = {
-            r["__cid"]: [
-                half_up(float(r[f"__s{i}"]) / r["__n"], 6)
-                for i in range(1, dims + 1)
-            ]
-            for r in upd
-        }
-
-    choice = _assign_expr(vec_col, centroids)
+    centroids = lloyd_train(base, id_col, vec_col, dims, 1, k, iterations)[1]
+    choice = assign_expr(vec_col, centroids)
     # spread the FINAL assignment scan too: it runs over the caller's
     # original frame (all columns), which for a small parquet is one
     # split — the k·d-literal distance expression is the CPU floor of
@@ -242,7 +289,7 @@ def kcenter_greedy(
     accumulates: no checkpoints, no growing lineage, O(k²·d) work per
     row total (k is small by definition).
 
-    Determinism: distances are the exact-decimal d2 of `_dist_sql`;
+    Determinism: distances are the exact-decimal d2 of `d2_expr`;
     the argmax total order is (md2 DESC, id ASC); the first seed is
     the minimum id; already-chosen ids are excluded, so a duplicate
     VECTOR can still be picked (under a distinct id, with radius 0)
@@ -261,15 +308,11 @@ def kcenter_greedy(
     out: list[tuple[int, int, object]] = [(1, int(first[0][id_col]), None)]
     for r in range(2, k + 1):
         # min over the literal seeds in ONE nested-literal transform
-        # (the _struct_dists_expr codegen-size rationale); decimal min
-        # is order-independent, so this equals the unrolled least()
+        # (the d2_expr codegen-size rationale); decimal min is
+        # order-independent, so this equals the unrolled least()
         md2 = (
-            f"array_min(transform("
-            f"{_centroid_literal(dict(enumerate(chosen.values())))[0]}, "
-            f"cw -> aggregate(zip_with({vec_col}, cw, "
-            f"(x, y) -> round((cast(x as double) - y) * (cast(x as double) - y), 6)), "
-            f"cast(0 as decimal(28,6)), "
-            f"(acc, v) -> cast(acc + cast(v as decimal(28,6)) as decimal(28,6)))))"
+            f"array_min(transform({sql_array(list(chosen.values()))}, "
+            f"cw -> {d2_expr(vec_col, 'cw')}))"
         )
         top = (
             base.filter(~F.col(id_col).isin(*chosen.keys()))

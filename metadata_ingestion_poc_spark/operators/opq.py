@@ -78,7 +78,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..execution import checked_base
-from ..functions.determinism import half_up, sql_double
+from ..functions.determinism import half_up, sql_array
 from .pca import covariance_upper, dim_means
 
 Rotation = list[list[float]]  # rows = rotated dims; y = R @ x
@@ -194,12 +194,8 @@ def rotation_expr(vec_col: str, rotation: Rotation) -> str:
     nested array literal (d² 6-dp doubles) and each output component
     is a zip_with dot product — no join, no shuffle, fuses into
     whatever scan projects it."""
-    rows = ", ".join(
-        "array(" + ", ".join(sql_double(x) for x in row) + ")"
-        for row in rotation
-    )
     return (
-        f"transform(array({rows}), rw -> "
+        f"transform({sql_array(rotation)}, rw -> "
         f"aggregate(zip_with(rw, {vec_col}, "
         f"(r, x) -> r * cast(x as double)), 0.0D, (a, v) -> a + v))"
     )

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..execution import checked_base
-from ..functions.determinism import DEC, half_up, sql_double
+from ..functions.determinism import DEC, half_up, sql_array
 
 _Q12 = Decimal("1e-12")
 
@@ -83,15 +83,15 @@ def covariance_rollup(
     d(d+1)/2-group decimal-sum frame BEFORE the bounded collect.
     Exposed so plan contracts pin the real operator's shape (no
     corpus self-join, exchanges bounded by d²)."""
-    marr = ", ".join(sql_double(x) for x in means)
+    marr = sql_array(means)
     cells = (
         f"flatten(transform(sequence(1, {dims}), i -> "
         f"transform(sequence(i, {dims}), j -> named_struct("
         f"'i', i, 'j', j, 'p', round("
         f"(cast(element_at({vec_col}, i) as double)"
-        f" - element_at(array({marr}), i))"
+        f" - element_at({marr}, i))"
         f" * (cast(element_at({vec_col}, j) as double)"
-        f" - element_at(array({marr}), j)), 6)))))"
+        f" - element_at({marr}, j)), 6)))))"
     )
     # explode_outer, not explode — the dedup.py shingle_index lesson:
     # plain explode over a computed array gets an inferred size()>0

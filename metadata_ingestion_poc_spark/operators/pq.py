@@ -23,8 +23,8 @@ The 100-TB shape, stage by stage:
   map-side combine (the kmeans_lloyd update discipline — the exchange
   carries m·ksub·(dsub+1) values per input partition, kilobytes at any
   scale). Per round the bounded m·ksub·(dsub+1) state is collected and
-  re-literalized, so plans stay flat with no lineage (m separate
-  kmeans_lloyd calls would cost m× the scans for identical results).
+  re-literalized, so plans stay flat with no lineage. The trainer is
+  `clustering.lloyd_train`, of which k-means is the m = 1 case.
 - **Encoding** is pure codegen, zero shuffle: the m·ksub codewords are
   baked into ONE array-literal argmin expression per subspace — the
   kmeans assignment property, m times over slices. Codes are
@@ -77,8 +77,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..execution import checked_base
-from ..functions.determinism import DEC, half_up, sql_double
-from .clustering import seed_centroids
+from ..functions.determinism import sql_array
+from .clustering import (
+    Codebooks,
+    assign_expr,
+    lloyd_train,
+    slice_expr,
+    subspace_slices,
+)
 from .opq import (
     Rotation,
     load_opq_rotation,
@@ -89,64 +95,17 @@ from .opq import (
 )
 from .similarity import dot, with_norm
 
-Codebooks = dict[int, dict[int, list[float]]]  # sub -> cid -> codeword
 RawCells = dict[int, list[float]]  # cell -> RAW (unnormalized) centroid
 
 
-def _slice_expr(vec_col: str, sub: int, dsub: int) -> str:
-    """1-based contiguous slice of subspace `sub` (1..m)."""
-    return f"slice({vec_col}, {(sub - 1) * dsub + 1}, {dsub})"
-
-
-def _book_literal(book: Mapping[int, Sequence[float]],
-                  gap_filled: bool) -> str:
-    """Codebook as ONE nested array literal. ``gap_filled`` pads
-    missing cids (clusters that lost all members) with zero vectors so
-    element_at stays POSITIONAL — only valid for lookup tables that
-    codes (which never reference a gap) index into; the assignment
-    argmin must NOT see gap entries (a zero codeword could win)."""
-    if gap_filled:
-        dsub = len(next(iter(book.values())))
-        zero = "array(" + ", ".join("0.0D" for _ in range(dsub)) + ")"
-        rows = [
-            "array(" + ", ".join(sql_double(x) for x in book[cid]) + ")"
-            if cid in book else zero
-            for cid in range(1, max(book) + 1)
-        ]
-    else:
-        rows = [
-            "array(" + ", ".join(sql_double(x) for x in book[cid]) + ")"
-            for cid in sorted(book)
-        ]
-    return f"array({', '.join(rows)})"
-
-
-def _sub_assign(vec_expr: str, book: Mapping[int, Sequence[float]]) -> str:
-    """argmin (d2, cid) struct for one subspace.
-
-    The codebook enters as ONE nested-array literal and the exact-
-    decimal distance is written ONCE inside a zip_with lambda — the
-    per-codeword-unrolled form (ksub separate aggregate expressions,
-    the kmeans _assign_expr shape) costs Catalyst seconds of analysis
-    and codegen at m·ksub expressions per scan; this form is ~50
-    nodes per subspace for identical arithmetic and the identical
-    (d2, cid) total order. ``vec_expr`` should be a plain projected
-    column (multiply-referenced inside the lambda — the shingles
-    CollapseProject lesson), not an inline slice()."""
-    cids = sorted(book)
-    cid_arr = "array(" + ", ".join(str(c) for c in cids) + ")"
-    dist = (
-        f"aggregate(zip_with({vec_expr}, cw, "
-        f"(x, y) -> round((cast(x as double) - y) * (cast(x as double) - y), 6)), "
-        f"cast(0 as decimal(28,6)), "
-        f"(acc, v) -> cast(acc + cast(v as decimal(28,6)) as decimal(28,6)))"
+def _codes_col(books: Codebooks) -> Column:
+    """``codes`` array<int>: each row's nearest codeword per subspace,
+    over the ``__s1..__sm`` columns of `subspace_slices`."""
+    codes = ", ".join(
+        f"{assign_expr(f'__s{sub}', books[sub])}.cid"
+        for sub in range(1, len(books) + 1)
     )
-    return (
-        f"array_min(zip_with({_book_literal(book, False)}, "
-        f"sequence(1, {len(cids)}), "
-        f"(cw, i) -> named_struct('d2', {dist}, "
-        f"'cid', element_at({cid_arr}, i))))"
-    )
+    return F.expr(f"array({codes})").cast("array<int>").alias("codes")
 
 
 def _guarded_q_norm(vec_col: str, dims: int, who: str) -> Column:
@@ -182,69 +141,12 @@ def _train_books(
     n: int,
     who: str = "pq_train",
 ) -> Codebooks:
-    """Joint-Lloyd training loop over an ALREADY-validated base frame
-    (the `checked_base` output — pq_train wraps this for raw vectors;
-    ivfpq_build calls it directly on the checkpointed residual frame
-    so validation and materialization are paid once, not per stage)."""
-    dsub = dims // m
+    """`lloyd_train` over an ALREADY-validated base frame of ``n``
+    rows (the `checked_base` output), which must hold at least ksub
+    rows: unlike k-means, a codebook may not start short."""
     if n < ksub:
         raise ValueError(f"{who}: {n} rows < ksub={ksub}")
-    seeds = seed_centroids(base, id_col, vec_col, ksub)
-    books: Codebooks = {
-        sub: {
-            cid: vec[(sub - 1) * dsub:(sub - 1) * dsub + dsub]
-            for cid, vec in seeds.items()
-        }
-        for sub in range(1, m + 1)
-    }
-    # slices projected ONCE as named columns: each is referenced ksub
-    # times inside its argmin lambda, and a multiply-referenced alias
-    # stays single-eval (CollapseProject), where an inline slice()
-    # would re-copy per codeword.
-    sliced = base.select(
-        *[
-            F.expr(_slice_expr(vec_col, sub, dsub)).alias(f"__s{sub}")
-            for sub in range(1, m + 1)
-        ]
-    )
-    for _ in range(iterations):
-        # ONE scan: per row, an array of (sub, code, slice) structs —
-        # all m argmins in codegen — exploded to m rows and rolled up
-        # to m·ksub groups with dsub decimal sums + a count each.
-        entries = ", ".join(
-            f"named_struct('sub', {sub}, "
-            f"'code', {_sub_assign(f'__s{sub}', books[sub])}.cid, "
-            f"'sl', __s{sub})"
-            for sub in range(1, m + 1)
-        )
-        upd = (
-            sliced.select(
-                F.explode_outer(F.expr(f"array({entries})")).alias("e")
-            )
-            .filter(F.col("e").isNotNull())
-            .groupBy(
-                F.col("e.sub").alias("sub"), F.col("e.code").alias("code")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.sum(
-                        F.element_at(F.col("e.sl"), i)
-                        .cast("double")
-                        .cast(DEC)
-                    ).alias(f"s{i}")
-                    for i in range(1, dsub + 1)
-                ],
-            )
-            .collect()
-        )
-        books = {sub: {} for sub in range(1, m + 1)}
-        for r in upd:
-            books[r["sub"]][r["code"]] = [
-                half_up(float(r[f"s{i}"]) / r["n"], 6)
-                for i in range(1, dsub + 1)
-            ]
-    return books
+    return lloyd_train(base, id_col, vec_col, dims, m, ksub, iterations)
 
 
 def pq_train(
@@ -280,23 +182,10 @@ def _encode_on_base(
     dims: int,
 ) -> DataFrame:
     """Coding scan over an already-validated base (see pq_encode)."""
-    m = len(codebooks)
-    dsub = dims // m
-    sliced = base.select(
-        F.col(id_col).alias("id"),
-        *[
-            F.expr(_slice_expr(vec_col, sub, dsub)).alias(f"__s{sub}")
-            for sub in range(1, m + 1)
-        ],
+    sliced = subspace_slices(
+        base, vec_col, dims, len(codebooks), F.col(id_col).alias("id")
     )
-    codes = ", ".join(
-        f"{_sub_assign(f'__s{sub}', codebooks[sub])}.cid"
-        for sub in range(1, m + 1)
-    )
-    return sliced.select(
-        "id",
-        F.expr(f"array({codes})").cast("array<int>").alias("codes"),
-    )
+    return sliced.select("id", _codes_col(codebooks))
 
 
 def pq_encode(
@@ -324,31 +213,32 @@ def _norm_table_sql(codebooks: Codebooks) -> str:
     """Literal array: nsq[sub][cid] = ‖codeword‖² (reconstruction
     norm contributions, queried with m element_at lookups per row).
     Positional, gap-filled: codes never reference a dropped cid."""
-    m = len(codebooks)
-    subs = []
-    for sub in range(1, m + 1):
-        book = codebooks[sub]
-        vals = ", ".join(
-            sql_double(sum(v * v for v in book[cid]))
-            if cid in book else "0.0D"
+    return sql_array([
+        [
+            sum(v * v for v in book[cid]) if cid in book else 0.0
             for cid in range(1, max(book) + 1)
-        )
-        subs.append(f"array({vals})")
-    return f"array({', '.join(subs)})"
+        ]
+        for _, book in sorted(codebooks.items())
+    ])
 
 
 def _lut_expr(vec_col: str, codebooks: Codebooks, dims: int) -> str:
     """Per-query ADC lookup table: lut[sub][cid] = <q_sub, codeword>.
     m·ksub·dsub work per QUERY row, evaluated once before broadcast.
-    Codebooks enter as gap-filled nested literals with the dot product
-    written once per subspace (see _sub_assign on why the unrolled
-    per-codeword form is a Catalyst planning trap)."""
+    Codebooks enter as nested literals with the dot product written
+    once per subspace (see clustering.d2_expr on why the unrolled
+    per-codeword form is a Catalyst planning trap), gap-filled with
+    zero vectors where a cid lost all members so element_at stays
+    POSITIONAL — codes never reference a gap."""
     m = len(codebooks)
     dsub = dims // m
     subs = []
     for sub in range(1, m + 1):
-        q = _slice_expr(vec_col, sub, dsub)
-        cb = _book_literal(codebooks[sub], True)
+        q = slice_expr(vec_col, sub, dsub)
+        book = codebooks[sub]
+        cb = sql_array([
+            book.get(cid, [0.0] * dsub) for cid in range(1, max(book) + 1)
+        ])
         subs.append(
             f"transform({cb}, cw -> "
             f"aggregate(zip_with({q}, cw, "
@@ -685,15 +575,9 @@ def _census_on_base(
     """Census scan over an already-validated base (see
     pq_reconstruction_stats)."""
     m = len(codebooks)
-    dsub = dims // m
-    sliced = base.select(
-        *[
-            F.expr(_slice_expr(vec_col, sub, dsub)).alias(f"__s{sub}")
-            for sub in range(1, m + 1)
-        ]
-    )
+    sliced = subspace_slices(base, vec_col, dims, m)
     entries = ", ".join(
-        f"named_struct('sub', {sub}, 'a', {_sub_assign(f'__s{sub}', codebooks[sub])})"
+        f"named_struct('sub', {sub}, 'a', {assign_expr(f'__s{sub}', codebooks[sub])})"
         for sub in range(1, m + 1)
     )
     return (
@@ -758,11 +642,8 @@ def _prepared_cells(
     cents_norm = {
         c: [float(x) / norms[c] for x in cents_raw[c]] for c in cells
     }
-    craw = "array(" + ", ".join(
-        "array(" + ", ".join(sql_double(x) for x in cents_raw[c]) + ")"
-        for c in cells
-    ) + ")"
-    cnorm = "array(" + ", ".join(sql_double(norms[c]) for c in cells) + ")"
+    craw = sql_array([cents_raw[c] for c in cells])
+    cnorm = sql_array([norms[c] for c in cells])
     return cells, cents_norm, craw, cnorm
 
 
@@ -779,11 +660,8 @@ def _cell_topn_expr(
     shuffle, no join: the kmeans literal-assignment property applied
     to the IVF coarse quantizer."""
     cells = sorted(cents_norm)
-    cb = "array(" + ", ".join(
-        "array(" + ", ".join(sql_double(x) for x in cents_norm[c]) + ")"
-        for c in cells
-    ) + ")"
-    cell_arr = "array(" + ", ".join(str(c) for c in cells) + ")"
+    cb = sql_array([cents_norm[c] for c in cells])
+    cell_arr = sql_array(cells)
     dotq = (
         f"aggregate(zip_with({vec_col}, cw, "
         f"(x, y) -> cast(x as double) * y), 0.0D, (a, v) -> a + v)"
@@ -810,25 +688,20 @@ def _ivfpq_norm3_sql(
     (codeword = 0) to stay positional; codes never reference them."""
     m = len(books)
     dsub = dims // m
-    cells = sorted(cents_raw)
     per_cell = []
-    for cell in cells:
+    for cell in sorted(cents_raw):
         c = [float(x) for x in cents_raw[cell]]
         subs = []
         for sub in range(1, m + 1):
             sl = c[(sub - 1) * dsub:(sub - 1) * dsub + dsub]
             book = books[sub]
-            vals = []
-            for cid in range(1, max(book) + 1):
-                cw = book.get(cid)
-                if cw is None:
-                    v = sum(x * x for x in sl)
-                else:
-                    v = sum((x + w) * (x + w) for x, w in zip(sl, cw))
-                vals.append(sql_double(v))
-            subs.append("array(" + ", ".join(vals) + ")")
-        per_cell.append(f"array({', '.join(subs)})")
-    return f"array({', '.join(per_cell)})"
+            subs.append([
+                sum((x + w) * (x + w) for x, w in zip(sl, book[cid]))
+                if cid in book else sum(x * x for x in sl)
+                for cid in range(1, max(book) + 1)
+            ])
+        per_cell.append(subs)
+    return sql_array(per_cell)
 
 
 def ivfpq_topk(
@@ -946,13 +819,7 @@ def ivfpq_build(
     rotation, rot = _rotated(resid, "id", "rvec", dims, m, n, opq)
     books = _train_books(rot, "id", "rvec", dims, m, ksub,
                          iterations, n, who="ivfpq_build")
-    # the norm table wants the centroids in the codebooks' basis:
-    # ‖c + Rᵀr̂‖ = ‖Rc + r̂‖
-    norm_cents = cents_raw if rotation is None else {
-        cell: [sum(r * x for r, x in zip(row, vec)) for row in rotation]
-        for cell, vec in cents_raw.items()
-    }
-    coded = _codes_from_resid(rot, books, dims, norm_cents)
+    coded = _codes_from_resid(rot, books, dims, cents_raw, rotation)
     return cents_raw, rotation, books, coded
 
 
@@ -989,9 +856,13 @@ def _codes_from_resid(
     books: Codebooks,
     dims: int,
     cents_raw: Mapping[int, Sequence[float]],
+    rotation: Rotation | None,
 ) -> DataFrame:
-    """(id, cell, codes, rn2) off a residual frame — pure codegen
-    argmins against the codebook literals, zero shuffle. `rn2` is the
+    """(id, cell, codes, rn2) off a residual frame whose ``rvec`` is in
+    the codebooks' basis (rotated when ``rotation`` is given) — pure
+    codegen argmins against the codebook literals, zero shuffle. The
+    ONE coding path: ivfpq_build and ivfpq_encode_with_index both call
+    it, so their codes and norms cannot drift apart. `rn2` is the
     reconstruction norm² ‖c_cell + r̂‖², a pure function of
     (cell, codes), PRECOMPUTED here and stored in the index (8 bytes
     per row) so the ADC query scan reads a column instead of folding
@@ -1000,32 +871,22 @@ def _codes_from_resid(
     costs driver time at m=16/ksub=32 (the q254 dial); amortizing it
     into the one-time coding scan is the FAISS store-the-norm shape."""
     m = len(books)
-    dsub = dims // m
-    sliced = resid.select(
-        "id",
-        "cell",
-        "pos",
-        *[
-            F.expr(_slice_expr("rvec", sub, dsub)).alias(f"__s{sub}")
-            for sub in range(1, m + 1)
-        ],
-    )
-    codes_expr = ", ".join(
-        f"{_sub_assign(f'__s{sub}', books[sub])}.cid"
-        for sub in range(1, m + 1)
-    )
-    norm3 = _ivfpq_norm3_sql(cents_raw, books, dims)
+    sliced = subspace_slices(resid, "rvec", dims, m, "id", "cell", "pos")
+    # the norm table wants the centroids in the codebooks' basis:
+    # ‖c + Rᵀr̂‖ = ‖Rc + r̂‖
+    norm_cents = cents_raw if rotation is None else {
+        cell: [sum(r * x for r, x in zip(row, vec)) for row in rotation]
+        for cell, vec in cents_raw.items()
+    }
+    norm3 = _ivfpq_norm3_sql(norm_cents, books, dims)
     rn2 = (
         "aggregate(sequence(1, {m}), 0.0D, (a, s) -> "
         "a + element_at(element_at(element_at({nsq}, pos), s), "
         "element_at(codes, s)))"
     ).format(m=m, nsq=norm3)
-    return sliced.select(
-        "id",
-        "cell",
-        "pos",
-        F.expr(f"array({codes_expr})").cast("array<int>").alias("codes"),
-    ).select("id", "cell", "codes", F.expr(rn2).alias("rn2"))
+    return sliced.select("id", "cell", "pos", _codes_col(books)).select(
+        "id", "cell", "codes", F.expr(rn2).alias("rn2")
+    )
 
 
 def ivfpq_encode_with_index(
@@ -1036,14 +897,18 @@ def ivfpq_encode_with_index(
     vec_col: str = "embedding",
     dims: int = 64,
     cache: bool = False,
+    rotation: Rotation | None = None,
 ) -> DataFrame:
     """Code rows against an EXISTING index (no retraining): the
     incremental-ingest primitive — cell assignment, residual, and PQ
-    codes are a pure per-row function of (centroids, codebooks), so
-    new batches encode in ONE zero-shuffle codegen scan and the result
-    is bit-identical to what ivfpq_build would have produced for the
-    same rows (pinned in tests/test_similarity.py). Validation runs
-    through `checked_base(dims=...)` like every encode path."""
+    codes are a pure per-row function of (centroids, rotation,
+    codebooks), so new batches encode in ONE zero-shuffle codegen scan
+    and the result is bit-identical to what ivfpq_build would have
+    produced for the same rows (pinned in tests/test_similarity.py,
+    plain and OPQ). Pass the build's ``rotation`` for an OPQ index:
+    the residuals are then rotated into the codebooks' basis.
+    Validation runs through `checked_base(dims=...)` like every encode
+    path."""
     if dims % len(books):
         raise ValueError(
             f"ivfpq_encode_with_index: dims={dims} not divisible by "
@@ -1051,10 +916,10 @@ def ivfpq_encode_with_index(
         )
     base, _, _ = checked_base(df, id_col, vec_col, cache,
                                "ivfpq_encode_with_index", dims=dims)
-    return _codes_from_resid(
-        _residual_frame(base, cents_raw, id_col, vec_col), books, dims,
-        cents_raw,
-    )
+    resid = _residual_frame(base, cents_raw, id_col, vec_col)
+    if rotation is not None:
+        resid = rotate_vectors(resid, rotation, "rvec")
+    return _codes_from_resid(resid, books, dims, cents_raw, rotation)
 
 
 def ivfpq_index_append(
@@ -1065,16 +930,19 @@ def ivfpq_index_append(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dims: int = 64,
+    rotation: Rotation | None = None,
 ) -> DataFrame:
     """Append a batch to a built IVF-PQ index WITHOUT retraining —
     the build-nightly / append-hourly operational shape: quantizer
     quality drifts only as the data distribution drifts, so
-    deployments append between (re)builds. Returns the new coded
-    corpus; persist with save_ivfpq_index. (The plain-PQ equivalent
-    is just ``codes.union(pq_encode(new, books))`` — no cell axis.)"""
+    deployments append between (re)builds. Pass the build's
+    ``rotation`` for an OPQ index. Returns the new coded corpus;
+    persist with save_ivfpq_index. (The plain-PQ equivalent is just
+    ``codes.union(pq_encode(new, books))`` — no cell axis.)"""
     return coded.unionByName(
         ivfpq_encode_with_index(
-            new_rows, cents_raw, books, id_col, vec_col, dims
+            new_rows, cents_raw, books, id_col, vec_col, dims,
+            rotation=rotation,
         )
     )
 

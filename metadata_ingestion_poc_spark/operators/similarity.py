@@ -72,10 +72,10 @@ def cosine_topk(
         F.col("__vec").alias("q_vec"),
         F.col("__norm").alias("q_norm"),
     )
-    # spread the probe side (round 14): a small corpus parquet is one
-    # input split, so the |Q|×|C| dot-product sweep — the CPU floor of
-    # exact search — would run on a single core. Stats-gated no-op at
-    # real scale.
+    # spread the probe side: a small corpus parquet is one input
+    # split, so the |Q|×|C| dot-product sweep — the CPU floor of exact
+    # search — would run on a single core. Stats-gated no-op at real
+    # scale.
     c = with_norm(spread(corpus.select(id_col, vec_col)), vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col("__vec").alias("c_vec"),
@@ -177,7 +177,7 @@ def ivf_assign(
     ANSI off the similarity is NULL, and NULL sorts FIRST, so such a
     centroid would top every row's probe list.
     """
-    from ..functions.determinism import sql_double
+    from ..functions.determinism import sql_array
 
     rows = sorted(
         centroids.select("cell", "c_vec", "c_norm").collect(),
@@ -185,12 +185,9 @@ def ivf_assign(
     )
     if not rows:
         raise ValueError("ivf_assign: empty centroid frame")
-    cb = "array(" + ", ".join(
-        "array(" + ", ".join(sql_double(x) for x in r["c_vec"]) + ")"
-        for r in rows
-    ) + ")"
-    cn = "array(" + ", ".join(sql_double(r["c_norm"]) for r in rows) + ")"
-    ca = "array(" + ", ".join(str(int(r["cell"])) for r in rows) + ")"
+    cb = sql_array([r["c_vec"] for r in rows])
+    cn = sql_array([r["c_norm"] for r in rows])
+    ca = sql_array([int(r["cell"]) for r in rows])
     k = len(rows)
     dotq = (
         "aggregate(zip_with(vec, cw, (x, y) -> x * y), 0.0D, "
@@ -264,11 +261,10 @@ def _refine_centroids(
             )
             .withColumn("c_norm", norm(F.col("c_vec")))
         )
-        # LAZY (round 15): the next consumer — the following
-        # iteration's centroid collect, or the caller's own
-        # cents.collect() — is the materializing action; an eager
-        # checkpoint here would add one count job per iteration for
-        # an n_cells-row frame.
+        # LAZY: the next consumer — the following iteration's
+        # centroid collect, or the caller's own cents.collect() — is
+        # the materializing action; an eager checkpoint here would add
+        # one count job per iteration for an n_cells-row frame.
         cents = new.localCheckpoint(eager=False)
     return cents
 
@@ -308,9 +304,9 @@ def ivf_build_index(
         .select("cell", "c_vec", "c_norm")
     )
     # n_cells rows: the single-partition window and the checkpoint are
-    # both O(n_cells), independent of corpus size. LAZY (round 15):
-    # the first consumer (the refine loop's centroid collect, or the
-    # caller's) materializes it — eager would add a count job.
+    # both O(n_cells), independent of corpus size. LAZY: the first
+    # consumer (the refine loop's centroid collect, or the caller's)
+    # materializes it — eager would add a count job.
     cents = cents.localCheckpoint(eager=False)
     if refine_iters > 0:
         cents = _refine_centroids(

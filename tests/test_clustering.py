@@ -12,8 +12,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from metadata_ingestion_poc_spark.operators.clustering import (
+    assign_expr,
     kcenter_greedy,
-    _assign_expr,
     kmeans_lloyd,
     seed_centroids,
 )
@@ -73,7 +73,7 @@ def test_assignment_tie_breaks_on_lower_cid(spark):
     df = spark.createDataFrame([([1.0, 0.0],)], "vec array<double>")
     choice = df.select(
         F.expr(
-            _assign_expr("vec", {2: [0.0, 0.0], 5: [2.0, 0.0]})
+            assign_expr("vec", {2: [0.0, 0.0], 5: [2.0, 0.0]})
         ).alias("c")
     ).first()["c"]
     assert choice["cid"] == 2

@@ -11,11 +11,16 @@
 - One atomic publish: ``os.replace`` and ``os.fsync`` are called from
   exactly one function in the package, so every file that must land
   whole (manifests, ledgers) is written by the same code.
+- One quantizer kernel: the exact-decimal squared-distance lambda is
+  written in exactly one function, and no hand-rolled
+  ``"array(" + ", ".join(`` literal renderer exists outside
+  ``functions/determinism.py`` (``sql_array`` is the one renderer).
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 PACKAGE = (
@@ -104,4 +109,53 @@ def test_one_atomic_publish():
     assert len(sites) == 1, (
         f"os.replace/os.fsync called from more than one function "
         f"(route them through the one publish): {sorted(sites)}"
+    )
+
+
+D2_LAMBDA = "round((cast(x as double) - y) * (cast(x as double) - y), 6)"
+
+
+def _functions_with_text(needle: str) -> set[tuple[str, str]]:
+    """(module, innermost enclosing function) of every string constant
+    or f-string part that contains ``needle``."""
+    sites = set()
+
+    def visit(node, rel, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = f"{scope}.{node.name}" if scope else node.name
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and needle in node.value
+        ):
+            sites.add((rel, scope or "<module>"))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, scope)
+
+    for rel, text in _modules():
+        visit(ast.parse(text), str(rel), "")
+    return sites
+
+
+def test_one_exact_decimal_distance():
+    sites = _functions_with_text(D2_LAMBDA)
+    assert len(sites) == 1, (
+        f"the exact-decimal d2 lambda is written in more than one "
+        f"function (build it with clustering.d2_expr): {sorted(sites)}"
+    )
+
+
+ARRAY_RENDERER = re.compile(r"""(["'])array\(\1\s*\+\s*(["']), \2\.join\(""")
+
+
+def test_one_array_literal_renderer():
+    found = [
+        (str(rel), text.count("\n", 0, m.start()) + 1)
+        for rel, text in _modules()
+        if rel != Path("functions/determinism.py")
+        for m in ARRAY_RENDERER.finditer(text)
+    ]
+    assert not found, (
+        f"hand-rolled array literal renderers (use "
+        f"determinism.sql_array): {found}"
     )

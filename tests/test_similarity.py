@@ -132,6 +132,29 @@ def test_ivf_assign_non_finite_centroid_raises_value_error(spark):
         ivf_assign(vecs, cents)
 
 
+def test_sql_array_renders_nested_literals():
+    """One literal renderer: floats through sql_double, ints bare,
+    nesting as nested array(...) — the exact text the centroid and
+    codebook literals had, so plans stay byte-identical."""
+    from metadata_ingestion_poc_spark.functions.determinism import (
+        sql_array,
+    )
+
+    assert (
+        sql_array([[1.0, -2.5e-07], [0.1, 1e300]])
+        == "array(array(1.0D, -2.5e-07D), array(0.1D, 1e+300D))"
+    )
+    assert sql_array([1, 5, 12]) == "array(1, 5, 12)"
+    # a gap-filled codebook row (a cid that lost every member)
+    assert (
+        sql_array([[0.5, 2.0], [0.0, 0.0]])
+        == "array(array(0.5D, 2.0D), array(0.0D, 0.0D))"
+    )
+    for bad in (math.nan, math.inf, -math.inf):
+        with pytest.raises(ValueError, match="non-finite"):
+            sql_array([[1.0], [bad]])
+
+
 def test_ivf_index_save_load_identical_results(spark, sf_dir, tmp_path):
     """Persisted index → reload → query must equal build-and-query
     exactly (everything downstream of the index is deterministic)."""
@@ -400,23 +423,28 @@ def test_pq_codebook_gap_positional_lookup(spark):
     assert got == exact
 
 
-def test_ivfpq_encode_with_index_matches_build_coding(spark, sf_dir):
-    """Round-11 contract: coding is a pure per-row function of the
-    frozen (centroids, codebooks) — encoding the SAME rows through
+@pytest.mark.parametrize("opq", [False, True], ids=["plain", "opq"])
+def test_ivfpq_encode_with_index_matches_build_coding(spark, sf_dir, opq):
+    """Coding is a pure per-row function of the frozen (centroids,
+    rotation, codebooks) — encoding the SAME rows through
     ivfpq_encode_with_index must reproduce the build's own coded
-    corpus bit-for-bit, which is what makes append-without-retrain
-    sound."""
+    corpus bit-for-bit, reconstruction norm included, which is what
+    makes append-without-retrain sound for plain and OPQ indexes."""
     from metadata_ingestion_poc_spark.operators.pq import (
         ivfpq_build,
         ivfpq_encode_with_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents, _, books, coded = ivfpq_build(emb, n_cells=8, ksub=8, iterations=1)
-    built = {(r.id, r.cell, tuple(r.codes)) for r in coded.collect()}
+    cents, rotation, books, coded = ivfpq_build(
+        emb, n_cells=8, ksub=8, iterations=1, opq=opq
+    )
+    built = {(r.id, r.cell, tuple(r.codes), r.rn2) for r in coded.collect()}
     recoded = {
-        (r.id, r.cell, tuple(r.codes))
-        for r in ivfpq_encode_with_index(emb, cents, books).collect()
+        (r.id, r.cell, tuple(r.codes), r.rn2)
+        for r in ivfpq_encode_with_index(
+            emb, cents, books, rotation=rotation
+        ).collect()
     }
     assert recoded == built
 
