@@ -112,11 +112,10 @@ def shingle_index(
     return idx
 
 
-# Hard cap on the members-per-side of any single pair-generation row
-# (round 15, replacing the docstring-only stop-bucket lever): one
-# low-entropy bucket with 10⁵ members used to build all C(m,2) ≈
-# 5·10⁹ pair structs inside ONE row before exploding — an executor
-# OOM at scale no configuration can absorb. With the chunked explode
+# Hard cap on the members-per-side of any single pair-generation row:
+# unchunked, one low-entropy bucket with 10⁵ members would build all
+# C(m,2) ≈ 5·10⁹ pair structs inside ONE row before exploding — an
+# executor OOM at scale no configuration can absorb. With the chunked explode
 # below, no row ever materializes more than cap² pair structs
 # (~25 MB at the default), whatever the bucket size.
 PAIR_BUCKET_CAP = 1024
@@ -203,11 +202,11 @@ def _bucket_pairs(
     stop-bucket pruning remains the scale lever. Emits (a, b) with
     a < b, once per shared bucket.
     """
-    # (round-14 note: a `spread` of the member arrays before the
-    # explode was A/B'd — it helps only when bucket fan-out is huge,
-    # e.g. the perceptual-hash banding that now verifies in-stage in
-    # multimodal.hamming_banded_pairs, and is break-even-to-negative
-    # for the shingle consumers here, so it was reverted.)
+    # No `spread` of the member arrays before the explode: measured,
+    # it helps only when bucket fan-out is huge (e.g. the perceptual-
+    # hash banding, which verifies in-stage in
+    # multimodal.hamming_banded_pairs) and is break-even-to-negative
+    # for the shingle consumers here.
     members = (
         df.groupBy(*bucket_cols)
         .agg(F.sort_array(F.collect_set(item_col)).alias("ms"))
@@ -220,6 +219,24 @@ def _bucket_pairs(
         F.explode(F.expr(pair)).alias("p")
     )
     return pairs.select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+
+
+def _shingle_overlap(
+    docs: DataFrame, id_col: str, n: int, max_shingle_df: int | None
+) -> DataFrame:
+    """(doc_a, doc_b, n_common, n_a, n_b) for every doc pair sharing a
+    shingle: the exact shared-shingle count from the inverted index
+    (ONE bucket shuffle) beside each side's shingle count."""
+    idx = shingle_index(spread(docs), id_col, n, max_shingle_df)
+    sizes = idx.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+    common = (
+        _bucket_pairs(idx, ["sh"], "doc")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return common.join(sa, "doc_a").join(sb, "doc_b")
 
 
 def ngram_jaccard_pairs(
@@ -242,24 +259,12 @@ def ngram_jaccard_pairs(
     from the index (finite by default — see DEFAULT_MAX_SHINGLE_DF;
     None opts in to the exact unpruned computation).
     """
-    docs = spread(docs)
-    idx = shingle_index(docs, id_col, n, max_shingle_df)
-    sizes = idx.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-
-    common = (
-        _bucket_pairs(idx, ["sh"], "doc")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_overlap(docs, id_col, n, max_shingle_df)
         .withColumn(
             # raw: ONE IEEE division of exact int64 counts (the
-            # determinism.py safe class — the ROUND(·,6) here was the
-            # cross-version hash-hazard shape, dropped round 14)
+            # determinism.py safe class); a ROUND(·,6) here would be
+            # the cross-version hash-hazard shape
             "jaccard",
             F.col("n_common")
             / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
@@ -679,20 +684,8 @@ def ngram_containment_pairs(
     when EITHER direction reaches ``threshold``; all ratios ship RAW
     (exact-operand IEEE divisions, the determinism.py safe class).
     """
-    docs = spread(docs)
-    idx = shingle_index(docs, id_col, n, max_shingle_df)
-    sizes = idx.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-
-    common = (
-        _bucket_pairs(idx, ["sh"], "doc")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_overlap(docs, id_col, n, max_shingle_df)
         # raw exact-operand divisions (see ngram_jaccard_pairs)
         .withColumn("containment_a", F.col("n_common") / F.col("n_a"))
         .withColumn("containment_b", F.col("n_common") / F.col("n_b"))
@@ -810,7 +803,7 @@ def prefix_filter_jaccard_pairs(
         )
         .distinct()
     )
-    # Repartition the candidate pairs before verification (round 14):
+    # Repartition the candidate pairs before verification:
     # the pair frame is tiny in BYTES (two ids per row), so AQE
     # coalesces it onto 1-4 partitions — and the per-pair
     # array_intersect over both full shingle arrays (the CPU floor of

@@ -74,7 +74,6 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..execution import checked_base
 from ..functions.determinism import sql_array
@@ -93,7 +92,7 @@ from .opq import (
     rotation_expr,
     save_opq_rotation,
 )
-from .similarity import dot, with_norm
+from .similarity import exact_topk, pair_side, topk_per_query, with_norm
 
 RawCells = dict[int, list[float]]  # cell -> RAW (unnormalized) centroid
 
@@ -352,9 +351,10 @@ def _adc_rerank(
     norm ‖x̂‖ — reads: plain PQ folds the small m·ksub norm-table
     literal over `codes`; IVF-PQ reads the `rn2` column its coding
     scan precomputed (sqrt(rn2)). `qc` is the coarse-centroid dot term
-    (0 for plain PQ). Everything downstream — tie order, rounding,
-    rerank semantics — lives HERE once, so the two entry points cannot
-    drift apart."""
+    (0 for plain PQ). The candidate cut and the exact re-rank are
+    `similarity.topk_per_query` and `similarity.exact_topk`, shared
+    with every other vector top-k path, so no two paths can drift
+    apart in tie order, rounding or zero-norm handling."""
     m = len(codebooks)
     # approx dot = qc + Σ_sub lut[sub][code_sub]; aggregate over the
     # 1..m index sequence keeps it codegen.
@@ -362,7 +362,6 @@ def _adc_rerank(
         "qc + aggregate(sequence(1, {m}), 0.0D, (a, s) -> "
         "a + element_at(element_at(lut, s), element_at(codes, s)))"
     ).format(m=m)
-    rnorm = rnorm_sql
     scored = (
         joined.filter(F.col("id") != F.col("query_id"))
         .select(
@@ -375,51 +374,22 @@ def _adc_rerank(
             # candidate race rather than crashing or winning.
             (
                 F.expr(f"({adc})")
-                / F.expr(f"nullif(q_norm * ({rnorm}), 0.0D)")
+                / F.expr(f"nullif(q_norm * ({rnorm_sql}), 0.0D)")
             ).alias("adc_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    cands = (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= rerank)
-        .select("query_id", "neighbor_id")
+    cands = topk_per_query(scored, "adc_cosine", rerank).select(
+        "query_id", "neighbor_id"
     )
     # exact re-rank: |Q|·rerank candidate rows, broadcast against ONE
     # corpus scan; re-join the (broadcast-small) query vectors too.
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("__vec").alias("c_vec"),
-        F.col("__norm").alias("c_norm"),
-    )
-    qv = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("__vec").alias("q_vec"),
-        F.col("__norm").alias("q_norm"),
-    )
-    exact = (
-        c.join(F.broadcast(cands), "neighbor_id")
+    qv = pair_side(queries, "q", id_col, vec_col)
+    pairs = (
+        pair_side(corpus, "n", id_col, vec_col)
+        .join(F.broadcast(cands), "neighbor_id")
         .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                round_dp,
-            ).alias("cosine"),
-        )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return exact_topk(pairs, k, round_dp)
 
 
 def _pq_build_on_base(

@@ -16,7 +16,10 @@ Three paths, per SURVEY.md §2 B10 — `ann_topk` dispatches, IVF default:
   across runs/partitionings (no RNG state to ship).
 
 All arithmetic is JVM higher-order functions (zip_with/aggregate) over
-double-cast arrays — no UDF, stays in codegen.
+double-cast arrays — no UDF, stays in codegen. Each path (and the PQ
+paths in operators/pq.py) generates its own candidate pairs and ends
+in the same exact re-rank, `exact_topk`, whose per-query cut
+`topk_per_query` also cuts the PQ candidates.
 """
 
 from __future__ import annotations
@@ -54,6 +57,65 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("__vec", v).withColumn("__norm", norm(F.col("__vec")))
 
 
+def pair_side(
+    df: DataFrame, side: str, id_col: str, vec_col: str, *extra: Column
+) -> DataFrame:
+    """One side of a candidate pair frame: ``query_id, q_vec, q_norm``
+    (``side="q"``) or ``neighbor_id, n_vec, n_norm`` (``side="n"``),
+    the vector double-cast and normed once, plus ``extra`` columns."""
+    return with_norm(df, vec_col).select(
+        F.col(id_col).alias("query_id" if side == "q" else "neighbor_id"),
+        F.col("__vec").alias(f"{side}_vec"),
+        F.col("__norm").alias(f"{side}_norm"),
+        *extra,
+    )
+
+
+def topk_per_query(df: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Keep each query's top ``k`` rows by ``score_col`` descending
+    (NULL last), ties to the lower ``neighbor_id``, numbered 1..k in
+    ``rank`` — a total order, so the result is deterministic."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score_col), F.asc("neighbor_id")
+    )
+    return df.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def exact_topk(
+    pairs: DataFrame, k: int, round_dp: int = 6, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """The exact re-rank every vector top-k path ends in: score each
+    candidate pair of ``pairs`` (``query_id, neighbor_id, q_vec, q_norm,
+    n_vec, n_norm``, see :func:`pair_side`) by cosine rounded at
+    ``round_dp`` and keep :func:`topk_per_query`'s top ``k``. Output:
+    (query_id, neighbor_id, *carry, cosine, rank).
+
+    Degenerate inputs: a zero-norm or NULL query vector fails the
+    query with an assert naming ``norm > 0`` (its every cosine would
+    be undefined); a zero-norm neighbor gets a NULL cosine and ranks
+    after every scored neighbor of its query.
+    """
+    cosine = F.when(
+        F.assert_true(
+            F.col("q_norm") > 0,
+            F.lit("exact_topk: query vectors must be non-NULL with norm > 0"),
+        ).isNull(),
+        F.round(
+            dot(F.col("q_vec"), F.col("n_vec"))
+            / F.nullif(F.col("q_norm") * F.col("n_norm"), F.lit(0.0)),
+            round_dp,
+        ),
+    )
+    scored = pairs.select(
+        "query_id", "neighbor_id", *carry, cosine.alias("cosine")
+    )
+    return topk_per_query(scored, "cosine", k).select(
+        "query_id", "neighbor_id", *carry, "cosine", "rank"
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -66,42 +128,18 @@ def cosine_topk(
 
     Output: (query_id, neighbor_id, cosine, rank); self-matches
     excluded; ties broken by neighbor id so the result is total-ordered.
+    Zero-norm vectors follow :func:`exact_topk`.
     """
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("__vec").alias("q_vec"),
-        F.col("__norm").alias("q_norm"),
-    )
+    q = pair_side(queries, "q", id_col, vec_col)
     # spread the probe side: a small corpus parquet is one input
     # split, so the |Q|×|C| dot-product sweep — the CPU floor of exact
     # search — would run on a single core. Stats-gated no-op at real
     # scale.
-    c = with_norm(spread(corpus.select(id_col, vec_col)), vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("__vec").alias("c_vec"),
-        F.col("__norm").alias("c_norm"),
+    c = pair_side(spread(corpus.select(id_col, vec_col)), "n", id_col, vec_col)
+    pairs = c.crossJoin(F.broadcast(q)).filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                round_dp,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return exact_topk(pairs, k, round_dp)
 
 
 def _planes(dim: int, n_planes: int, n_tables: int):
@@ -358,28 +396,12 @@ def ivf_topk_with_index(
         F.col("vec").alias("q_vec"),
         F.col("nrm").alias("q_norm"),
     )
-    scored = (
+    pairs = (
         query_cells.join(corpus_cells, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                round_dp,
-            ).alias("cosine"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return exact_topk(pairs, k, round_dp)
 
 
 def ivf_ann_topk(
@@ -463,41 +485,21 @@ def lsh_ann_topk(
     """
     sig_udf = hyperplane_signatures(dim=dim, n_planes=n_planes, n_tables=n_tables)
 
-    def banded(df: DataFrame, role: str) -> DataFrame:
-        out = with_norm(df, vec_col).select(
-            F.col(id_col).alias(f"{role}_id"),
-            F.col("__vec").alias(f"{role}_vec"),
-            F.col("__norm").alias(f"{role}_norm"),
-            F.posexplode(sig_udf(F.col(vec_col))).alias("tbl", "bucket"),
-        )
-        return out
+    def banded(df: DataFrame, side: str) -> DataFrame:
+        # the UDF reads the raw vector column: its input type is fixed
+        bands = F.posexplode(sig_udf(F.col(vec_col))).alias("tbl", "bucket")
+        return pair_side(df, side, id_col, vec_col, bands)
 
-    qb = banded(queries, "query")
-    cb = banded(corpus, "neighbor")
-    candidates = (
-        qb.join(cb, ["tbl", "bucket"])
+    pairs = (
+        banded(queries, "q")
+        .join(banded(corpus, "n"), ["tbl", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "query_vec", "query_norm",
-                "neighbor_id", "neighbor_vec", "neighbor_norm")
-        .dropDuplicates(["query_id", "neighbor_id"])
         .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("query_vec"), F.col("neighbor_vec"))
-                / (F.col("query_norm") * F.col("neighbor_norm")),
-                round_dp,
-            ).alias("cosine"),
+            "query_id", "q_vec", "q_norm", "neighbor_id", "n_vec", "n_norm"
         )
+        .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return exact_topk(pairs, k, round_dp)
 
 
 def ann_topk(
@@ -662,11 +664,7 @@ def mmr_diverse_topk(
     cands = cosine_topk(
         queries, corpus, k=n_candidates, id_col=id_col, vec_col=vec_col
     ).select("query_id", "neighbor_id", F.col("cosine").alias("rel"))
-    vecs = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("__vec").alias("n_vec"),
-        F.col("__norm").alias("n_norm"),
-    )
+    vecs = pair_side(corpus, "n", id_col, vec_col)
     # candidates are |Q|·n_candidates rows — broadcast them into ONE
     # corpus scan to fetch the candidate vectors. Fail loud BEFORE the
     # grouped map: a zero-norm candidate (or the NULL relevance a

@@ -829,46 +829,22 @@ def q158_cluster_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q159_hard_negative_mining(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.similarity import dot, with_norm
+    from ..operators.similarity import exact_topk, pair_side
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = with_norm(emb.filter(F.col("vec_id") < 20)).select(
-        F.col("vec_id").alias("query_id"),
+    q = pair_side(
+        emb.filter(F.col("vec_id") < 20), "q", "vec_id", "embedding",
         F.col("label").alias("q_label"),
-        F.col("__vec").alias("q_vec"),
-        F.col("__norm").alias("q_norm"),
     )
-    c = with_norm(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("__vec").alias("c_vec"),
-        F.col("__norm").alias("c_norm"),
+    c = pair_side(
+        emb, "n", "vec_id", "embedding", F.col("label").alias("neighbor_label")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(
-            (F.col("neighbor_id") != F.col("query_id"))
-            & (F.col("neighbor_label") != F.col("q_label"))
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round(
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine"),
-        )
+    pairs = c.crossJoin(F.broadcast(q)).filter(
+        (F.col("neighbor_id") != F.col("query_id"))
+        & (F.col("neighbor_label") != F.col("q_label"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "neighbor_label", "cosine", "rank")
-        .orderBy("query_id", "rank")
+    return exact_topk(pairs, 5, carry=("neighbor_label",)).orderBy(
+        "query_id", "rank"
     )
 
 

@@ -613,7 +613,9 @@ def q247_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distances, no join/shuffle) + a top-1 reduction; plans are
 # stateless so nothing accumulates across rounds. The oracle unrolls
 # the traversal with MATERIALIZED running-min CTEs — exact decimals
-# make incremental LEAST equal to Spark's min-over-all-literals.
+# make incremental LEAST equal to Spark's min-over-all-literals. Each
+# round joins every row's dims against the chosen center's dims only
+# (filtered before the join), so a round is n·d rows, not n²·d.
 # ---------------------------------------------------------------------------
 
 _KC_K = 6
@@ -629,8 +631,9 @@ def _kcenter_oracle(k: int, dims: int) -> str:
         SELECT a.id,
                SUM(CAST(ROUND((a.v - b.v) * (a.v - b.v), 6)
                         AS DECIMAL(28,6))) AS md2
-        FROM edims a JOIN edims b
-          ON b.dim = a.dim AND b.id = (SELECT id FROM s1)
+        FROM edims a JOIN (
+            SELECT dim, v FROM edims WHERE id = (SELECT id FROM s1)) b
+          ON b.dim = a.dim
         GROUP BY a.id)"""
     chosen = ["s1"]
     for r in range(2, k + 1):
@@ -648,8 +651,9 @@ def _kcenter_oracle(k: int, dims: int) -> str:
             SELECT a.id,
                    SUM(CAST(ROUND((a.v - b.v) * (a.v - b.v), 6)
                             AS DECIMAL(28,6))) AS d2
-            FROM edims a JOIN edims b
-              ON b.dim = a.dim AND b.id = (SELECT id FROM s{r})
+            FROM edims a JOIN (
+                SELECT dim, v FROM edims WHERE id = (SELECT id FROM s{r})) b
+              ON b.dim = a.dim
             GROUP BY a.id) d ON d.id = m.id)"""
         chosen.append(f"s{r}")
     parts = [

@@ -79,7 +79,11 @@ def running_user_totals(events: DataFrame, timeout_ms: int = 0) -> DataFrame:
     timeout_ms > 0 enables ProcessingTimeTimeout: a key idle for that
     long is evicted at a later micro-batch. REQUIRED on unbounded key
     domains — with NoTimeout (the 0 default, fine for bounded keys)
-    state grows forever.
+    state grows forever. With timeout_ms > 0 an ``availableNow``
+    stream does not end by itself: it keeps running no-data batches
+    to check timeouts, and ``processAllAvailable()`` is no reliable
+    wait either. ``stop()`` it once a no-data batch shows the input
+    is in.
     """
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout

@@ -15,6 +15,9 @@
   written in exactly one function, and no hand-rolled
   ``"array(" + ", ".join(`` literal renderer exists outside
   ``functions/determinism.py`` (``sql_array`` is the one renderer).
+- One exact re-rank: the rounded exact-cosine division and the
+  per-query top-k window are each written in exactly one function
+  (``similarity.exact_topk`` and ``similarity.topk_per_query``).
 """
 
 from __future__ import annotations
@@ -22,6 +25,8 @@ from __future__ import annotations
 import ast
 import re
 from pathlib import Path
+
+import pytest
 
 PACKAGE = (
     Path(__file__).resolve().parents[1] / "metadata_ingestion_poc_spark"
@@ -115,25 +120,39 @@ def test_one_atomic_publish():
 D2_LAMBDA = "round((cast(x as double) - y) * (cast(x as double) - y), 6)"
 
 
+SIMPLE_STATEMENTS = (
+    ast.Expr, ast.Assign, ast.AnnAssign, ast.AugAssign, ast.Return
+)
+
+
 def _functions_with_text(needle: str) -> set[tuple[str, str]]:
     """(module, innermost enclosing function) of every string constant
-    or f-string part that contains ``needle``."""
+    or f-string part that contains ``needle``, and of every simple
+    statement whose source, normalized by ``ast.unparse`` (one line,
+    single quotes), contains it."""
     sites = set()
+    words = re.findall(r"\w+", needle)
 
-    def visit(node, rel, scope):
+    def visit(node, rel, scope, code):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             scope = f"{scope}.{node.name}" if scope else node.name
         if (
             isinstance(node, ast.Constant)
             and isinstance(node.value, str)
             and needle in node.value
+        ) or (
+            code
+            and isinstance(node, SIMPLE_STATEMENTS)
+            and needle in ast.unparse(node)
         ):
             sites.add((rel, scope or "<module>"))
         for child in ast.iter_child_nodes(node):
-            visit(child, rel, scope)
+            visit(child, rel, scope, code)
 
     for rel, text in _modules():
-        visit(ast.parse(text), str(rel), "")
+        # unparse only files that hold every word of the needle
+        code = all(w in text for w in words)
+        visit(ast.parse(text), str(rel), "", code)
     return sites
 
 
@@ -158,4 +177,25 @@ def test_one_array_literal_renderer():
     assert not found, (
         f"hand-rolled array literal renderers (use "
         f"determinism.sql_array): {found}"
+    )
+
+
+# q252's RRF ranks an UNROUNDED cosine through a shared
+# ``Window.partitionBy("query_id")``; neither needle matches it.
+ROUNDED_COSINE = "round(dot("
+QUERY_TOPK_WINDOW = "Window.partitionBy('query_id').orderBy("
+
+
+@pytest.mark.parametrize(
+    "needle, what",
+    [
+        (ROUNDED_COSINE, "rounded exact-cosine division (use exact_topk)"),
+        (QUERY_TOPK_WINDOW, "per-query top-k window (use topk_per_query)"),
+    ],
+    ids=["cosine", "window"],
+)
+def test_one_exact_rerank(needle, what):
+    sites = _functions_with_text(needle)
+    assert len(sites) == 1, (
+        f"the {what} is written in more than one function: {sorted(sites)}"
     )

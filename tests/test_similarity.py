@@ -328,6 +328,35 @@ def test_pq_zero_norm_query_fails_loud(spark):
         ).collect()
 
 
+def test_exact_rerank_zero_norm_contract(spark):
+    """The one exact re-rank's degenerate-input contract, on the exact
+    path and the PQ re-rank: a zero-norm neighbor gets a NULL cosine
+    and ranks after every scored neighbor (it is not dropped), and a
+    zero-norm query fails with an assert naming ``norm > 0``."""
+    from metadata_ingestion_poc_spark.operators.pq import pq_ann_topk
+
+    rows = [(i, [float(i + j + 1) for j in range(6)]) for i in range(20)]
+    rows.append((99, [0.0] * 6))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = df.filter(F.col("vec_id") < 2)
+    for got in (
+        cosine_topk(queries, df, k=20),
+        pq_ann_topk(queries, df, k=20, m=3, ksub=4, rerank=20, dims=6),
+    ):
+        rows_of = {0: [], 1: []}
+        for r in got.orderBy("rank").collect():
+            rows_of[r.query_id].append((r.neighbor_id, r.cosine))
+        for qid, ranked in rows_of.items():
+            assert len(ranked) == 20  # 19 other vectors + the zero one
+            assert ranked[-1] == (99, None)
+            assert all(cos is not None for _, cos in ranked[:-1])
+    zq = spark.createDataFrame(
+        [(98, [0.0] * 6)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="norm > 0"):
+        cosine_topk(zq, df, k=3).collect()
+
+
 def test_ivfpq_index_save_load_identical_results(spark, sf_dir, tmp_path):
     """Reload ≡ rebuild for the persisted IVF-PQ index (cells +
     codebooks + coded corpus) — completes the build-nightly /

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import time
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -141,11 +143,23 @@ def test_stateful_with_timeout_conf_runs_end_to_end(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    n_users = spark.sql(
-        "SELECT COUNT(DISTINCT user_id) n FROM state_timeout_test"
-    ).first().n
-    assert n_users == ev.select("user_id").distinct().count()
+    # with a processing-time timeout an availableNow query keeps
+    # running no-data batches to check timeouts, so it never ends by
+    # itself and processAllAvailable() never returns: wait for the
+    # first no-data batch (it runs only once every file is committed
+    # to the sink), then stop the query
+    try:
+        deadline = time.monotonic() + 120
+        while time.monotonic() < deadline and not any(
+            p["numInputRows"] == 0 for p in q.recentProgress
+        ):
+            time.sleep(0.2)
+        n_users = spark.sql(
+            "SELECT COUNT(DISTINCT user_id) n FROM state_timeout_test"
+        ).first().n
+        assert n_users == ev.select("user_id").distinct().count()
+    finally:
+        q.stop()
 
 
 def test_tws_twin_matches_batch_or_skips_without_protobuf(
