@@ -202,18 +202,21 @@ def ivf_assign(
     The centroid frame is bounded by n_cells at every call site, so it
     is collected and entered as ONE nested-array literal; assignment is
     then a per-row codegen argmin — zero shuffle, zero join. The
-    similarity is the sequential-fold dot ``/(nrm * c_norm)`` and the
-    struct sort on (−sim, cell) ranks by descending similarity, ties
-    to the lower cell. Output: (id, cell, cell_rank, vec, nrm).
+    similarity is the sequential-fold dot ``/ nullif(nrm * c_norm, 0)``
+    and the struct sort on (unscored, −sim, cell) ranks by descending
+    similarity, ties to the lower cell. Output: (id, cell, cell_rank,
+    vec, nrm).
 
     Degenerate inputs: an empty centroid frame, or a non-finite
     centroid component (it has no SQL literal form), raises
     ValueError. A NaN vector component makes that row's similarities
     NaN, which sort after every number — its cells come out in cell
-    order. A zero-norm vector or centroid divides by zero: under ANSI
-    mode (Spark 4's default) the query fails with DIVIDE_BY_ZERO; with
-    ANSI off the similarity is NULL, and NULL sorts FIRST, so such a
-    centroid would top every row's probe list.
+    order. A zero-norm vector or centroid has no similarity, in either
+    ANSI mode: that pair ranks after every scored cell, so a zero-norm
+    centroid is probed last and a zero-norm vector takes its cells in
+    cell order. The re-rank then applies ``exact_topk``'s contract: a
+    zero-norm neighbor ranks last with a NULL cosine, and a zero-norm
+    query fails with an assert naming ``norm > 0``.
     """
     from ..functions.determinism import sql_array
 
@@ -231,10 +234,11 @@ def ivf_assign(
         "aggregate(zip_with(vec, cw, (x, y) -> x * y), 0.0D, "
         "(acc, v) -> acc + v)"
     )
+    den = f"nullif(nrm * element_at({cn}, i), 0.0D)"
     top = (
         f"slice(array_sort(zip_with({cb}, sequence(1, {k}), "
-        f"(cw, i) -> named_struct("
-        f"'ns', -(({dotq}) / (nrm * element_at({cn}, i))), "
+        f"(cw, i) -> named_struct('unscored', isnull({den}), "
+        f"'ns', -(({dotq}) / {den}), "
         f"'cell', element_at({ca}, i)))), 1, {min(nprobe, k)})"
     )
     v = with_norm(df, vec_col).select(

@@ -8,12 +8,12 @@ rounds).  This gate re-proves the SAME fixed-round contract at 10x the
 graph (20,000 nodes, ~115 mean degree, cascade 20000 -> ... -> 17303)
 — the scale where a wrong semi-join restriction, a lineage cut that
 drops a round, or an off-by-one in the degree threshold would diverge
-while the small graph happens to agree.  Comparison reuses the exact
-canonicalization + order-insensitive hash from tools/check.py, so a
+while the small graph happens to agree.  Oracle comparisons go through
+``tools.check.check``, the harness that mirrors the driver's, so a
 pass here means the driver's harness would pass too.
 
 Runtime ~40 s (Spark iterative peel + DuckDB materialized-CTE unroll),
-which is why it lives here rather than in the per-round sweep window.
+which is why it lives here rather than in the sf0.01 sweep.
 """
 
 from __future__ import annotations
@@ -25,14 +25,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.check import table_hash  # noqa: E402
+from tools.check import check, oracle_connection  # noqa: E402
 
 from metadata_ingestion_poc_spark.queries import QUERIES  # noqa: E402
-from metadata_ingestion_poc_spark.queries.analytics4 import (  # noqa: E402
-    _KCORE_K,
-    _KCORE_ROUNDS,
-    _kcore_oracle,
-)
 
 SF01 = os.environ.get("SPARK_GRAFT_SF01_DIR", "/root/testdata/sf0.1")
 
@@ -42,36 +37,20 @@ pytestmark = pytest.mark.skipif(
 
 
 def test_kcore_sf01_matches_unrolled_cte_oracle(spark):
-    import duckdb
-
-    sdf = QUERIES["q189_kcore_decomposition"](spark, SF01)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{SF01}/lineitem.parquet')"
-    )
-    res = con.execute(_kcore_oracle(_KCORE_K, _KCORE_ROUNDS))
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-
-    assert len(srows) == len(drows), (len(srows), len(drows))
-    assert sorted(scols) == sorted(dcols)
+    out = check(spark, oracle_connection(SF01), "q189_kcore_decomposition", SF01)
+    assert out.status == "match", out.detail
     # the cascade must actually peel — a no-op kcore that returns the
     # whole graph would still hash-match a broken oracle
-    assert 0 < len(srows) < 20_000
-    assert table_hash(scols, srows) == table_hash(dcols, drows)
+    assert 0 < len(out.rows) < 20_000
 
 
 def test_decile_lift_sf01_complete(spark):
-    """Round-7 regression gate: q180 at sf0.1 lost deciles 5-10 when
+    """q180 at sf0.1 keeps all ten deciles and every order: if
     global_row_number's offset collect and final join evaluated the
     range shuffle twice (nondeterministic sampling seed + AQE
-    coalescing -> pid mismatch -> inner-join row loss). The operator
-    now checkpoints one layout; this pins the visible symptom at the
-    scale where it bit."""
+    coalescing -> pid mismatch -> inner-join row loss), deciles would
+    go missing. The operator checkpoints one layout; this pins the
+    visible symptom at the scale where the double evaluation shows."""
     from metadata_ingestion_poc_spark.catalog import load_table
 
     rows = QUERIES["q180_decile_lift"](spark, SF01).collect()
@@ -86,33 +65,14 @@ def test_pagerank_sf01_matches_unrolled_oracle(spark):
     its sparsest (partner-in-cap probability shrinks with the key
     space) — the regime where a damping/deg-join bug could leave the
     small-SF result intact."""
-    import duckdb
-
-    from metadata_ingestion_poc_spark.queries.analytics3 import (
-        _PR_ITERS,
-        _pagerank_oracle,
-    )
-
-    sdf = QUERIES["q168_pagerank"](spark, SF01)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{SF01}/lineitem.parquet')"
-    )
-    res = con.execute(_pagerank_oracle(_PR_ITERS))
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    assert len(srows) == len(drows) and len(srows) > 0
-    assert sorted(scols) == sorted(dcols)
-    assert table_hash(scols, srows) == table_hash(dcols, drows)
+    out = check(spark, oracle_connection(SF01), "q168_pagerank", SF01)
+    assert out.status == "match", out.detail
+    assert len(out.rows) > 0
 
 
 def test_salted_agg_sf01_adversarial_skew_differential(spark):
-    """VERDICT r7 #6: the salted aggregation's failure modes are
-    data-shape-dependent — prove it at sf0.1 under ADVERSARIAL skew
+    """The salted aggregation's failure modes are data-shape-dependent
+    — prove it at sf0.1 under ADVERSARIAL skew
     (~99% of 600k lineitem rows remapped onto one key, the shape AQE
     statistics misjudge). The salted two-phase result must equal the
     plain one-phase groupBy EXACTLY (decimal sums), and the hot key's
@@ -167,8 +127,7 @@ def test_salted_agg_sf01_adversarial_skew_differential(spark):
 
 
 def test_radius_join_sf01_high_latitude_antimeridian_differential(spark):
-    """VERDICT r7 #6: q222's swept differential lives at benign
-    latitudes; this one derives sf0.1 coordinates pinned to [80, 90)
+    """q222's swept differential lives at benign latitudes; this one derives sf0.1 coordinates pinned to [80, 90)
     where longitude cells shrink by up to 170x, longitudes span the
     full ring (antimeridian wrap), and the polar-cap full-ring rule
     engages. Banding must equal the in-engine brute-force cross join
@@ -230,45 +189,25 @@ def test_radius_join_sf01_high_latitude_antimeridian_differential(spark):
 
 
 def test_kmeans_sf01_matches_unrolled_oracle(spark):
-    """VERDICT r8 #2: the k-means trajectory at sf0.1 (2,000 vectors,
-    4x the swept scale) must replay exactly in the unrolled
-    MATERIALIZED-CTE oracle — the scale where a nondeterministic
-    seed order, a banker's-rounded centroid update, or a dropped
-    empty cluster would diverge while 500 rows happen to agree."""
-    import duckdb
+    """The k-means trajectory at sf0.1 (2,000 vectors, 4x the swept
+    scale) must replay exactly in the unrolled MATERIALIZED-CTE
+    oracle — the scale where a nondeterministic seed order, a
+    banker's-rounded centroid update, or a dropped empty cluster
+    would diverge while 500 rows happen to agree."""
+    from metadata_ingestion_poc_spark.queries.analytics7 import _KM_K
 
-    from metadata_ingestion_poc_spark.queries.analytics7 import (
-        _KM_DIMS,
-        _KM_ITERS,
-        _KM_K,
-        _kmeans_oracle,
-    )
-
-    sdf = QUERIES["q242_kmeans_clusters"](spark, SF01)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{SF01}/embeddings.parquet')"
-    )
-    res = con.execute(_kmeans_oracle(_KM_K, _KM_ITERS, _KM_DIMS))
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    assert len(srows) == len(drows) and 1 < len(srows) <= _KM_K
-    assert sorted(scols) == sorted(dcols)
+    out = check(spark, oracle_connection(SF01), "q242_kmeans_clusters", SF01)
+    assert out.status == "match", out.detail
+    assert 1 < len(out.rows) <= _KM_K
     # the clustering must be non-degenerate: >1 cluster got members
-    sizes = sorted(r[1] for r in srows)
+    sizes = sorted(r[1] for r in out.rows)
     assert sizes[-1] < sum(sizes)
-    assert table_hash(scols, srows) == table_hash(dcols, drows)
 
 
 def test_radius_join_sf01_polar_fine_grid_differential(spark):
-    """VERDICT r8 #7: pins the round-8 polar full-ring rule at sf0.1
-    with a FINE grid (bits=11, 0.088-deg cells) and a sub-35 km
-    radius — the exact regime where the pre-fix code missed
-    cross-pole pairs (cells at lon 0 vs lon 180 are metres apart
+    """Pins the polar full-ring rule at sf0.1 with a FINE grid
+    (bits=11, 0.088-deg cells) and a sub-35 km radius — the exact
+    regime where banding without the rule misses cross-pole pairs (cells at lon 0 vs lon 180 are metres apart
     through the pole but maximally distant in cell space). Banding
     must equal the in-engine brute-force cross join exactly."""
     import pyspark.sql.functions as F
@@ -330,7 +269,7 @@ def test_radius_join_sf01_polar_fine_grid_differential(spark):
 
 
 def test_geo_knn_sf01_rank_contiguity_under_rmax(spark):
-    """VERDICT r8 #7: q231's contract is 'the k nearest WITHIN R_max'
+    """q231's contract is 'the k nearest WITHIN R_max'
     — under truncation the returned set must still be a PREFIX of the
     true distance ranking (ranks 1..min(k, m) with no gaps), which a
     candidate-generation miss would silently break while the swept
@@ -402,92 +341,36 @@ def test_geo_knn_sf01_rank_contiguity_under_rmax(spark):
 
 
 def test_prefix_filter_sf01_zero_recall_vs_brute_force(spark):
-    """Round-10 gate (VERDICT r9 item 6): the prefix-filter exact
-    similarity join vs the brute-force all-common-shingles oracle at
+    """The prefix-filter exact similarity join vs the brute-force all-common-shingles oracle at
     sf0.1 (100k docs). The driver sweep proves zero recall loss at
     10k docs; this re-proves it at the scale where a pruning bug
     would actually bite — the integer length filter
     (den·|a| ≥ num·|b|) and the positional filter's ceil-div alpha
     both tighten with document count, and an off-by-one in either
     silently drops qualifying pairs while the toy corpus agrees."""
-    import duckdb
-
-    from metadata_ingestion_poc_spark.queries import ORACLES
-
-    sdf = QUERIES["q249_prefix_filter_jaccard"](spark, SF01)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF01}/documents.parquet')"
-    )
-    res = con.execute(ORACLES["q249_prefix_filter_jaccard"])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-
-    assert len(srows) == len(drows), (len(srows), len(drows))
-    assert sorted(scols) == sorted(dcols)
+    out = check(spark, oracle_connection(SF01), "q249_prefix_filter_jaccard", SF01)
+    assert out.status == "match", out.detail
     # the join must find real pairs — an over-pruned empty result
     # would vacuously hash-match an equally broken oracle
-    assert len(srows) > 0
-    assert table_hash(scols, srows) == table_hash(dcols, drows)
-
-
-def _sf01_oracle_differential(spark, name, view_sql):
-    """Shared kcore-style gate: run the registered query at sf0.1 and
-    hash-compare against its own DuckDB oracle on the same parquet."""
-    import duckdb
-
-    from metadata_ingestion_poc_spark.queries import ORACLES
-
-    sdf = QUERIES[name](spark, SF01)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    con = duckdb.connect()
-    for stmt in view_sql:
-        con.execute(stmt)
-    res = con.execute(ORACLES[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-
-    assert len(srows) == len(drows), (name, len(srows), len(drows))
-    assert sorted(scols) == sorted(dcols), name
-    assert len(srows) > 0, name
-    assert table_hash(scols, srows) == table_hash(dcols, drows), name
-    return len(srows)
+    assert len(out.rows) > 0
 
 
 def test_greedy_set_cover_sf01_matches_unrolled_rounds(spark):
-    """Round-10 gate: the greedy max-coverage trajectory at 5k docs —
-    where the covered-literal probe and the (gain DESC, doc_id)
-    argmax run against a far larger gain frame than the sweep's 500
-    docs — must replay the oracle's unrolled MATERIALIZED rounds
-    exactly."""
-    n = _sf01_oracle_differential(
-        spark,
-        "q253_greedy_set_cover",
-        [
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{SF01}/documents.parquet')"
-        ],
-    )
-    assert n == 5  # full-length trajectory, no premature truncation
+    """The greedy max-coverage trajectory at 5k docs — where the
+    covered-literal probe and the (gain DESC, doc_id) argmax run
+    against a far larger gain frame than the sweep's 500 docs — must
+    replay the oracle's unrolled MATERIALIZED rounds exactly."""
+    out = check(spark, oracle_connection(SF01), "q253_greedy_set_cover", SF01)
+    assert out.status == "match", out.detail
+    assert len(out.rows) > 0
+    assert len(out.rows) == 5  # full-length trajectory, no premature truncation
 
 
 def test_densest_subgraph_sf01_matches_unrolled_rounds(spark):
-    """Round-10 gate: the adaptive avg-degree peel on the uncapped
-    co-purchase graph at sf0.1 (~20k nodes) — the scale where a
-    threshold-comparison or truncation bug would diverge while the
-    toy graph agrees."""
-    n = _sf01_oracle_differential(
-        spark,
-        "q261_densest_subgraph",
-        [
-            "CREATE VIEW lineitem AS SELECT * FROM "
-            f"read_parquet('{SF01}/lineitem.parquet')"
-        ],
-    )
-    assert n == 4  # all rounds survive on this graph
+    """The adaptive avg-degree peel on the uncapped co-purchase graph
+    at sf0.1 (~20k nodes) — the scale where a threshold-comparison or
+    truncation bug would diverge while the toy graph agrees."""
+    out = check(spark, oracle_connection(SF01), "q261_densest_subgraph", SF01)
+    assert out.status == "match", out.detail
+    assert len(out.rows) > 0
+    assert len(out.rows) == 4  # all rounds survive on this graph

@@ -18,19 +18,24 @@
 - One exact re-rank: the rounded exact-cosine division and the
   per-query top-k window are each written in exactly one function
   (``similarity.exact_topk`` and ``similarity.topk_per_query``).
+- Tools and tests check the checkout they run from: none names the
+  checkout's absolute path, and each tool puts its own checkout first
+  on ``sys.path``.
 """
 
 from __future__ import annotations
 
 import ast
 import re
+import shutil
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
 
-PACKAGE = (
-    Path(__file__).resolve().parents[1] / "metadata_ingestion_poc_spark"
-)
+CHECKOUT = Path(__file__).resolve().parents[1]
+PACKAGE = CHECKOUT / "metadata_ingestion_poc_spark"
 
 # importing module (dotted, relative to the package) -> private names
 ALLOWED: dict[str, set[str]] = {}
@@ -199,3 +204,49 @@ def test_one_exact_rerank(needle, what):
     assert len(sites) == 1, (
         f"the {what} is written in more than one function: {sorted(sites)}"
     )
+
+
+def test_no_absolute_checkout_path():
+    needle = re.compile(re.escape(str(CHECKOUT)) + r"(?![\w.-])")
+    files = [
+        *(CHECKOUT / "tools").rglob("*.py"),
+        *(CHECKOUT / "tests").rglob("*.py"),
+        CHECKOUT / "bench.py",
+    ]
+    hits = sorted(
+        str(p.relative_to(CHECKOUT)) for p in files if needle.search(p.read_text())
+    )
+    assert not hits, (
+        f"{hits} name this checkout's absolute path; derive it from "
+        "__file__ so a copied checkout checks its own code"
+    )
+
+
+def test_tools_import_the_checkout_they_run_from(tmp_path):
+    """Each tool loaded from a copied checkout imports the copy's
+    package and driver entry, even when started from another tree."""
+    skip = shutil.ignore_patterns("__pycache__")
+    for name in ("metadata_ingestion_poc_spark", "tools"):
+        shutil.copytree(CHECKOUT / name, tmp_path / name, ignore=skip)
+    shutil.copy(CHECKOUT / "__spark_entry__.py", tmp_path)
+    # sys.path as when the tool runs as a script: its own directory
+    # first, then the tree the probe starts from
+    probe = (
+        "import importlib, importlib.util, sys\n"
+        "sys.path.insert(0, sys.argv[1])\n"
+        "importlib.import_module(sys.argv[2])\n"
+        "import metadata_ingestion_poc_spark\n"
+        "print(metadata_ingestion_poc_spark.__file__)\n"
+        "print(importlib.util.find_spec('__spark_entry__').origin)\n"
+    )
+    for tool in sorted((tmp_path / "tools").glob("*.py")):
+        got = subprocess.run(
+            [sys.executable, "-c", probe, str(tool.parent), tool.stem],
+            cwd=CHECKOUT,
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.split()
+        assert len(got) == 2, (tool.name, got)
+        for path in got:
+            assert Path(path).is_relative_to(tmp_path), (tool.name, path)

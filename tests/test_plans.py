@@ -517,7 +517,12 @@ def test_plan_audit_is_total_over_the_registry():
     import re
 
     plans = sorted(
-        glob.glob("/root/repo/PLANS_r*.txt"),
+        glob.glob(
+            os.path.join(
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                "PLANS_r*.txt",
+            )
+        ),
         key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
     )
     assert plans, "no PLANS_r*.txt committed"

@@ -1,11 +1,11 @@
 """Registry output-schema contract: every cell the harness hashes
 must be SCALAR. The external driver's canonicalizer sorts a pandas
 frame over all output columns and hard-errors on unhashable list
-cells (the q293 round-12 red — `TypeError: unhashable type: 'list'`),
-so a complex-typed output column is a harness contract violation even
-when the values are correct. Complement: tools/check.py's canon() now
-raises on list/tuple/dict cells, so the local mirror can never accept
-more than the driver again.
+cells (`TypeError: unhashable type: 'list'`), so a complex-typed
+output column is a harness contract violation even when the values
+are correct. Complement: tools/check.py's canon() raises on
+list/tuple/dict cells, so the local mirror never accepts more than
+the driver.
 """
 
 from __future__ import annotations
@@ -17,16 +17,15 @@ from metadata_ingestion_poc_spark.queries import QUERIES
 _COMPLEX = ("array", "map", "struct")
 
 
-def test_no_complex_types_in_any_registered_output(spark, sf_dir):
+def test_no_complex_types_in_any_registered_output(registry_schema):
     """Build every registered query's DataFrame and reject ArrayType /
     MapType / StructType output columns. Schema-only (nothing is
     collected beyond what query construction itself materializes)."""
     bad: dict[str, dict[str, str]] = {}
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_dir)
+    for name in QUERIES:
         offenders = {
             f.name: f.dataType.simpleString()
-            for f in df.schema.fields
+            for f in registry_schema(name).fields
             if f.dataType.simpleString().startswith(_COMPLEX)
         }
         if offenders:
@@ -38,36 +37,28 @@ def test_no_complex_types_in_any_registered_output(spark, sf_dir):
 
 
 def test_mirror_canon_rejects_complex_cells():
-    import importlib.util
+    from tools.check import canon
 
-    spec = importlib.util.spec_from_file_location(
-        "check", "/root/repo/tools/check.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    assert mod.canon(True) == "1"
-    assert mod.canon(3) == "3"
+    assert canon(True) == "1"
+    assert canon(3) == "3"
     with pytest.raises(TypeError, match="complex-typed"):
-        mod.canon([1, 2])
+        canon([1, 2])
     with pytest.raises(TypeError, match="complex-typed"):
-        mod.canon(("a",))
+        canon(("a",))
     with pytest.raises(TypeError, match="complex-typed"):
-        mod.canon({"k": 1})
+        canon({"k": 1})
 
 
 def test_round6_chain_exposure_only_ever_shrinks():
     """Ratchet on the q276 hazard class: ROUND(·,6) over a non-exact,
     non-transcendental chain is the expression shape that diverges
-    across engine VERSIONS (two consecutive driver reds before round
-    13 migrated q276/q297/q293 to exact emissions). New oracles must
+    across engine VERSIONS (q276/q297/q293 diverged that way until they
+    moved to exact emissions). New oracles must
     not grow the exposure — prefer exact integer pairs / FLOOR
     micro-grids / raw single divisions (functions/determinism.py);
     lower the pin when migrating more. Text-level classification
     (tools/float_audit.py), no Spark session needed."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from float_audit import _select_items, classify
+    from tools.float_audit import _select_items, classify
 
     from metadata_ingestion_poc_spark.queries import ORACLES
 

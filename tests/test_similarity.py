@@ -8,6 +8,7 @@ import pytest
 from metadata_ingestion_poc_spark.catalog import load_table
 from metadata_ingestion_poc_spark.operators.similarity import (
     cosine_topk,
+    ivf_ann_topk,
     lsh_ann_topk,
 )
 
@@ -330,10 +331,15 @@ def test_pq_zero_norm_query_fails_loud(spark):
 
 def test_exact_rerank_zero_norm_contract(spark):
     """The one exact re-rank's degenerate-input contract, on the exact
-    path and the PQ re-rank: a zero-norm neighbor gets a NULL cosine
-    and ranks after every scored neighbor (it is not dropped), and a
-    zero-norm query fails with an assert naming ``norm > 0``."""
-    from metadata_ingestion_poc_spark.operators.pq import pq_ann_topk
+    path, the PQ re-rank and the IVF and IVF-PQ paths (every cell
+    probed, so the zero vector is a candidate): a zero-norm neighbor
+    gets a NULL cosine and ranks after every scored neighbor (it is
+    not dropped), and a zero-norm query fails with an assert naming
+    ``norm > 0``."""
+    from metadata_ingestion_poc_spark.operators.pq import (
+        ivfpq_topk,
+        pq_ann_topk,
+    )
 
     rows = [(i, [float(i + j + 1) for j in range(6)]) for i in range(20)]
     rows.append((99, [0.0] * 6))
@@ -342,6 +348,11 @@ def test_exact_rerank_zero_norm_contract(spark):
     for got in (
         cosine_topk(queries, df, k=20),
         pq_ann_topk(queries, df, k=20, m=3, ksub=4, rerank=20, dims=6),
+        ivf_ann_topk(queries, df, k=20, n_cells=4, nprobe=4),
+        ivfpq_topk(
+            queries, df, k=20, n_cells=4, nprobe=4, m=3, ksub=4,
+            rerank=20, dims=6,
+        ),
     ):
         rows_of = {0: [], 1: []}
         for r in got.orderBy("rank").collect():

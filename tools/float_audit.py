@@ -29,10 +29,12 @@ Usage: python tools/float_audit.py [--write] [--sf-dir DIR]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 _TRANSCENDENTAL = re.compile(r"\b(exp|ln|log|log2|log10|pow|power)\s*\(", re.I)
 _DECSUM = re.compile(r"round\s*\(\s*(cast\s*\()?\s*sum\s*\(", re.I)
@@ -141,7 +143,7 @@ def main() -> None:
     lines.append("<!-- FLOAT_AUDIT_END -->")
     block = "\n".join(lines)
     if args.write:
-        path = "/root/repo/SCALING.md"
+        path = os.path.join(ROOT, "SCALING.md")
         src = open(path).read()
         begin, end = (
             "<!-- FLOAT_AUDIT_BEGIN (generated by tools/float_audit.py) -->",
