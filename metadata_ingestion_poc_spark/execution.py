@@ -43,22 +43,45 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     ``parallelism × spark.sql.files.maxPartitionBytes``: a larger frame
     already scans as at least that many splits, so it is returned
     as is (no ``cols``) or plainly keyed with AQE sizing (``cols``).
-    The gate reads stats, not ``inputFiles()``, which would list every
-    file of a large manifest on the driver. A frame without stats (a
-    Spark Connect frame) is treated as large.
+    A frame without stats (a Spark Connect frame) is treated as large.
     """
-    spark = df.sparkSession
-    target = parallelism(spark)
+    target = parallelism(df.sparkSession)
     keys = [F.col(c) for c in cols]
-    try:
-        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        conf = spark._jsparkSession.sessionState().conf()
-        small = int(size) < target * conf.filesMaxPartitionBytes()
-    except Exception:  # Spark Connect / non-JVM frame: no stats handle
-        small = False
-    if small:
+    est = _estimate(df)
+    if est is not None and est[0] < target * est[1]:
         return df.repartition(target, *keys)
     return df.repartition(*keys) if keys else df
+
+
+def coalesce_to_size(df: DataFrame) -> DataFrame:
+    """Coalesce a small frame to as many partitions as its bytes fill.
+
+    The count is ``ceil(estimate / spark.sql.files.maxPartitionBytes)``,
+    so writing the result leaves one file per split-sized slice, not
+    one per core. It applies only below ``parallelism``: a frame of
+    more bytes already scans as about that many splits. A frame
+    without stats (a Spark Connect frame, or a streaming micro-batch
+    whose source reports none) is returned as is.
+    """
+    est = _estimate(df)
+    if est is None:
+        return df
+    size, split = est
+    n = max(1, -(-size // split))
+    return df.coalesce(n) if n < parallelism(df.sparkSession) else df
+
+
+def _estimate(df: DataFrame) -> tuple[int, int] | None:
+    """The optimizer's size estimate of ``df`` in bytes and
+    ``spark.sql.files.maxPartitionBytes``, or None when the frame has
+    no stats handle. Reads stats, not ``inputFiles()``, which would
+    list every file of a large manifest on the driver."""
+    try:
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        return int(size), conf.filesMaxPartitionBytes()
+    except Exception:  # Spark Connect / non-JVM frame: no stats handle
+        return None
 
 
 def cut(df: DataFrame, reliable: bool) -> DataFrame:

@@ -16,7 +16,10 @@ Three paths, per SURVEY.md §2 B10 — `ann_topk` dispatches, IVF default:
   across runs/partitionings (no RNG state to ship).
 
 All arithmetic is JVM higher-order functions (zip_with/aggregate) over
-double-cast arrays — no UDF, stays in codegen. Each path (and the PQ
+double-cast arrays — no UDF, no Python worker. These functions are
+``CodegenFallback``: they run interpreted inside otherwise generated
+code, so their per-element cost dominates the vector queries (ROADMAP
+direction 2 records the profile). Each path (and the PQ
 paths in operators/pq.py) generates its own candidate pairs and ends
 in the same exact re-rank, `exact_topk`, whose per-query cut
 `topk_per_query` also cuts the PQ candidates.

@@ -84,11 +84,11 @@ def q57_cosine_near_dup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id_b"), F.col("e").alias("eb"), F.col("n").alias("nb")
     )
     cos = dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    # the id test first: the join condition's AND short-circuits, so
+    # the interpreted dot product runs only on pairs with id_a < id_b
     return (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= 0.3)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+        a.join(F.broadcast(b), (F.col("id_a") < F.col("id_b")) & (cos >= 0.3))
+        .select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
         .orderBy("id_a", "id_b")
     )
 

@@ -15,6 +15,11 @@ closes it:
 Marker files/dirs all start with ``_`` so Spark's file-listing treats
 them as hidden and never reads them as data.
 
+The ``_COMMITTED`` marker may carry a record of the table (the HUB
+merge stores its schema there, so a reader needs no schema-inference
+job) plus the data files the commit wrote. The record is trusted only
+while the table still holds exactly those files.
+
 Batch ledgers (``_folded/``, ``_admitted/``: one empty file per
 batch id) are such subdirectories and belong to the table, so
 :func:`commit_swap` carries them into every rewrite; a writer adds
@@ -31,6 +36,7 @@ see writer.py), which provides the same swap via its commit log.
 
 from __future__ import annotations
 
+import json
 import shutil
 from pathlib import Path
 
@@ -91,18 +97,49 @@ def batch_ids(path: str, ledger: str) -> set[str]:
         return set()
     return {p.name for p in marker_dir.iterdir()}
 
-def commit_swap(target: Path, staging: Path) -> None:
+
+def data_files(table: Path) -> list[str]:
+    """Sorted names in `table` that Spark reads as data: every name
+    not starting with ``_`` or ``.``."""
+    return sorted(p.name for p in table.iterdir() if p.name[0] not in "_.")
+
+
+def commit_record(table: Path) -> dict | None:
+    """The record the last :func:`commit_swap` wrote into `table`'s
+    marker, while `table` still holds exactly the data files it lists.
+    None when the marker is absent, empty or torn, or when a file was
+    added or removed since."""
+    try:
+        record = json.loads((table / COMMIT_MARKER).read_text())
+        current = data_files(table)
+    except (OSError, ValueError):
+        return None
+    if isinstance(record, dict) and record.get("files") == current:
+        return record
+    return None
+
+
+def commit_swap(target: Path, staging: Path, record: dict | None = None) -> None:
     """Replace `target` with a fully-written `staging` dir.
 
     Merges the live dir's ``_`` subdirectories (not Spark's own) into
     staging, marks staging committed, renames the live dir aside,
     moves staging in, then drops the old copy — every crash point
     leaves a state :func:`recover` completes.
+
+    A `record` (a JSON-able dict) is written into the marker with
+    ``files``, the :func:`data_files` of staging, added. The marker's
+    existence alone is the commit: a torn record still recovers, and
+    :func:`commit_record` then returns None.
     """
     for d in target.glob("_*"):
         if d.is_dir() and d.name not in _SPARK_DIRS:
             shutil.copytree(d, staging / d.name, dirs_exist_ok=True)
-    (staging / COMMIT_MARKER).touch()
+    marker = staging / COMMIT_MARKER
+    if record is None:
+        marker.touch()
+    else:
+        marker.write_text(json.dumps({**record, "files": data_files(staging)}))
     old = _old_dir(target)
     if old.exists():
         shutil.rmtree(old)

@@ -12,9 +12,16 @@ with two deliberate upgrades:
   merge condition would be literal false → every row inserts, i.e.
   append (overwrite on initial load).
 
-Scale notes: the HUB merge shuffles both sides on the key columns;
-at 100 TB you bucket the HUB table by the keys (or rely on Delta's
-dynamic file pruning) so the merge only rewrites touched files.
+Scale notes: the HUB merge anti-joins the table against the batch's
+key columns as they arrive (no ``distinct``, so no shuffle): a batch
+small enough to broadcast makes the merge one scan of the table with
+no exchange. The rewrite is sized by bytes (``coalesce_to_size``), so
+a small HUB is one file, not one per core. The merge records the
+table's schema in its commit marker, so neither it nor ``read_hub``
+runs a schema-inference job while the table holds the files that
+commit wrote. It still rewrites the whole table: at 100 TB you bucket
+the HUB table by the keys (or rely on Delta's dynamic file pruning)
+so the merge only rewrites touched files.
 """
 
 from __future__ import annotations
@@ -22,9 +29,10 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .staging import commit_swap, recover, staging_dir
+from .execution import coalesce_to_size
+from .staging import commit_record, commit_swap, recover, staging_dir
 
 
 def write_raw(df: DataFrame, path: str, partitions: list[str]) -> None:
@@ -95,15 +103,27 @@ def _write_hub_parquet_merge(
         df.write.mode("overwrite").parquet(path)
         return
 
-    existing = spark.read.parquet(path)
-    kept = existing.join(
-        df.select(*keys).distinct(), on=keys, how="left_anti"
-    )
+    # left-anti keeps the same rows whatever duplicate keys the right
+    # side holds, so the batch's keys need no distinct (and no shuffle)
+    kept = _read_table(spark, path).join(df.select(*keys), on=keys, how="left_anti")
     merged = kept.unionByName(df, allowMissingColumns=True)
 
     staging = staging_dir(target)
-    merged.write.mode("overwrite").parquet(str(staging))
-    commit_swap(target, staging)
+    coalesce_to_size(merged).write.mode("overwrite").parquet(str(staging))
+    # the union with a parquet read is nullable throughout, as Spark
+    # infers the written files back
+    commit_swap(target, staging, {"schema": merged.schema.jsonValue()})
+
+
+def _read_table(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet table at `path`. While the table holds exactly the
+    files its last merge committed, it is read with the schema that
+    commit recorded; otherwise (no record, a torn one, or a file
+    added or removed since) Spark infers the schema, which costs a job."""
+    record = commit_record(Path(path))
+    if record is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(record["schema"])).parquet(path)
 
 
 def write_hub(
@@ -126,4 +146,4 @@ def read_hub(spark: SparkSession, path: str) -> DataFrame:
         if DeltaTable.isDeltaTable(spark, path):
             return spark.read.format("delta").load(path)
     recover(Path(path))
-    return spark.read.parquet(path)
+    return _read_table(spark, path)

@@ -1,4 +1,5 @@
-"""Plan-level pins for ``execution.spread`` and ``parallelism``.
+"""Plan-level pins for ``execution.spread``, ``coalesce_to_size`` and
+``parallelism``.
 
 Every test here inspects a physical plan or a conf; none runs a job.
 """
@@ -10,7 +11,7 @@ from contextlib import contextmanager
 
 import pyspark.sql.utils
 
-from metadata_ingestion_poc_spark.execution import parallelism, spread
+from metadata_ingestion_poc_spark.execution import coalesce_to_size, parallelism, spread
 
 MAX_BYTES = "spark.sql.files.maxPartitionBytes"
 
@@ -78,3 +79,15 @@ def test_parallelism_under_spark_connect_is_shuffle_partitions(
         assert parallelism(spark) == spark.sparkContext.defaultParallelism
         monkeypatch.setattr(pyspark.sql.utils, "is_remote", lambda: True)
         assert parallelism(spark) == shuffle
+
+
+def test_coalesce_to_size_reads_the_runtime_split_size(spark):
+    """spark.range(n) is estimated at 8·n bytes: one split's worth at
+    the default maxPartitionBytes, so it coalesces to one partition;
+    with the setting lowered to 8·n / parallelism it fills a split per
+    core and keeps its partitions."""
+    n, p = 1000, parallelism(spark)
+    assert "Coalesce 1" in plan(coalesce_to_size(spark.range(n, numPartitions=p)))
+    with conf(spark, MAX_BYTES, str(8 * n // p)):
+        df = spark.range(n, numPartitions=p)
+        assert coalesce_to_size(df) is df

@@ -18,6 +18,9 @@
 - One exact re-rank: the rounded exact-cosine division and the
   per-query top-k window are each written in exactly one function
   (``similarity.exact_topk`` and ``similarity.topk_per_query``).
+- One HUB table reader: ``writer.py`` reads parquet (``….read.parquet``
+  or ``….read.schema(…).parquet``) only inside ``_read_table``, which
+  uses the schema a merge recorded while it still describes the table.
 - Tools and tests check the checkout they run from: none names the
   checkout's absolute path, and each tool puts its own checkout first
   on ``sys.path``.
@@ -119,6 +122,32 @@ def test_one_atomic_publish():
     assert len(sites) == 1, (
         f"os.replace/os.fsync called from more than one function "
         f"(route them through the one publish): {sorted(sites)}"
+    )
+
+
+def _reads_parquet(call: ast.Call) -> bool:
+    """True for ``<x>.read.parquet(...)`` and ``<x>.read.<…>(…).parquet(...)``."""
+    if not (isinstance(call.func, ast.Attribute) and call.func.attr == "parquet"):
+        return False
+    node = call.func.value
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute) and node.attr == "read":
+            return True
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return False
+
+
+def test_writer_reads_parquet_in_one_table_reader():
+    tree = ast.parse((PACKAGE / "writer.py").read_text())
+    readers = {
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call) and _reads_parquet(node)
+    }
+    assert readers == {"_read_table"}, (
+        f"writer.py reads parquet outside its one table reader: {sorted(readers)}"
     )
 
 

@@ -20,6 +20,7 @@ import pytest
 from metadata_ingestion_poc_spark.staging import (
     COMMIT_MARKER,
     batch_ids,
+    commit_record,
     commit_swap,
     recover,
     staging_dir,
@@ -181,9 +182,20 @@ def move(src, dst):
     if crash == "after_movein" and str(dst) == str(target):
         os.kill(os.getpid(), 9)
 
+orig_write_text = Path.write_text
+
+def write_text(self, data, *a, **kw):
+    if crash == "torn_record":
+        with open(self, "w") as f:
+            f.write(data[: len(data) // 2])
+        os.kill(os.getpid(), 9)
+    return orig_write_text(self, data, *a, **kw)
+
+Path.write_text = write_text
 shutil.move = move
 shutil.copytree = copytree
-st.commit_swap(target, st.staging_dir(target))
+record = {{"schema": "s"}} if len(sys.argv) > 3 else None
+st.commit_swap(target, st.staging_dir(target), record)
 """
 
 
@@ -231,6 +243,85 @@ def test_sigkill_mid_swap_recovers(tmp_path, crash, expect):
     # a second writer arriving later must see a normal table
     recover(live)
     assert _read_tag(live) == expect
+
+
+@pytest.mark.parametrize(
+    "crash,expect",
+    [
+        # killed half-way through writing the record: the marker exists
+        # but is torn, and the live table is intact, so it survives
+        ("torn_record", "old"),
+        ("before_aside", "old"),
+        ("after_aside", "new"),
+        ("after_movein", "new"),
+    ],
+)
+def test_sigkill_mid_swap_with_record_recovers(tmp_path, crash, expect):
+    # the same kills with a record in the marker: the record changes
+    # nothing about which copy survives, and survives with the new one
+    repo = str(Path(__file__).resolve().parents[1])
+    live = tmp_path / "t"
+    _mk_table(live, "old", ledger=("0",))
+    stg = staging_dir(live)
+    _mk_table(stg, "new", ledger=("1",))
+
+    proc = subprocess.run(
+        [sys.executable, "-c", _CRASH_CHILD.format(repo=repo),
+         str(live), crash, "record"],
+        capture_output=True,
+        timeout=60,
+    )
+    assert proc.returncode == -9, (
+        f"child should die by SIGKILL, got {proc.returncode}: "
+        f"{proc.stderr.decode()}"
+    )
+    recover(live)
+    assert _read_tag(live) == expect
+    assert batch_ids(str(live), LEDGER) == _LEDGER_AFTER[expect]
+    assert not staging_dir(live).exists()
+    assert not (tmp_path / "t__old").exists()
+    want = {"schema": "s", "files": ["part-0.parquet"]} if expect == "new" else None
+    assert commit_record(live) == want
+
+
+def test_torn_record_still_commits(tmp_path):
+    # the marker's existence is the commit: a rewrite whose record is
+    # torn (the rename reached the disk, the marker's bytes did not)
+    # completes the swap, and the record is then ignored
+    live, old = tmp_path / "t", tmp_path / "t__old"
+    _mk_table(old, "old", ledger=("0",))
+    stg = staging_dir(live)
+    _mk_table(stg, "new", ledger=("0", "1"))
+    (stg / COMMIT_MARKER).write_text('{"schema": {"fields": [')
+    recover(live)
+    assert _read_tag(live) == "new"
+    assert batch_ids(str(live), LEDGER) == _LEDGER_AFTER["new"]
+    assert not old.exists()
+    assert commit_record(live) is None
+
+
+def test_commit_record_tracks_the_data_files(tmp_path):
+    # a record holds only while the table has exactly the data files it
+    # lists; hidden names (Spark's _SUCCESS, .crc files, ledgers) and
+    # a marker without a record do not count
+    live = tmp_path / "t"
+    _mk_table(live, "old")
+    stg = staging_dir(live)
+    _mk_table(stg, "new", ledger=("1",))
+    (stg / ".part-0.parquet.crc").touch()
+    (stg / "_SUCCESS").touch()
+    commit_swap(live, stg, {"schema": "s"})
+    assert commit_record(live) == {"schema": "s", "files": ["part-0.parquet"]}
+    (live / "part-1.parquet").write_text("foreign")
+    assert commit_record(live) is None
+    (live / "part-1.parquet").unlink()
+    (live / "part-0.parquet").unlink()
+    assert commit_record(live) is None
+
+    _mk_table(stg, "newer")
+    commit_swap(live, stg)
+    assert (live / COMMIT_MARKER).exists()
+    assert commit_record(live) is None
 
 
 def test_every_crash_point_leaves_a_recoverable_table(tmp_path):
