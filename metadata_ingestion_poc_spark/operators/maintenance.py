@@ -2,9 +2,10 @@
 
 Streaming sinks and incremental folds leave many small files; scans
 then pay per-file open cost and lose row-group pruning. ``compact``
-rewrites a parquet dir into ~target-size files through the crash-safe
-staging swap (same contract as the writers: every crash point leaves a
-complete table).
+rewrites a parquet dir into ~target-size files through
+writer.rewrite_table, the crash-safe staging swap every writer uses
+(every crash point leaves a complete table, and the rewrite records
+the schema, so the next read of the table infers nothing).
 
 ``zorder_cols`` additionally lays rows out on a Z-curve (Morton
 order) over the given columns: each column is linearly bucketed into
@@ -24,7 +25,7 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..staging import commit_swap, recover, staging_dir
+from ..writer import read_table, rewrite_table
 
 
 def zorder_value(
@@ -92,8 +93,9 @@ def compact(
     tight multi-column bounding box (file-skipping layout).
     """
     target = Path(path)
-    recover(target)
-    df = spark.read.parquet(path)
+    df = read_table(spark, path)
+    if df is None:
+        raise FileNotFoundError(f"no table at {path}")
     total = sum(
         f.stat().st_size for f in target.rglob("*.parquet") if f.is_file()
     )
@@ -111,7 +113,5 @@ def compact(
     else:
         out = df.repartition(n)
 
-    staging = staging_dir(target)
-    out.write.mode("overwrite").parquet(str(staging))
-    commit_swap(target, staging)
+    rewrite_table(out, path)
     return len([f for f in target.glob("*.parquet") if f.is_file()])

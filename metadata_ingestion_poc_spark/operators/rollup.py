@@ -10,9 +10,10 @@ Delivery contract: foreachBatch is AT-LEAST-once (a crashed
 micro-batch is replayed with the same batch_id), so the fold must be
 idempotent per batch. Callers pass the foreachBatch ``batch_id``; the
 rollup dir keeps a ``_folded/<batch_id>`` marker per folded batch and
-a replayed batch is a no-op. A fold writes its new marker into the
-staging dir and staging.commit_swap carries the earlier ones over, so
-data and fold-log commit atomically and every rewrite keeps the log.
+a replayed batch is a no-op. A fold rewrites the table through
+writer.rewrite_table, which writes its new marker into the staging dir
+while staging.commit_swap carries the earlier ones over, so data and
+fold-log commit atomically and every rewrite keeps the log.
 Late data is handled naturally — it lands in its own window's bucket
 and merges in.
 
@@ -23,13 +24,12 @@ plus a keyed merge into the rollup — cost is O(batch), not O(history).
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.determinism import DEC
-from ..staging import batch_ids, commit_swap, recover, staging_dir
+from ..staging import batch_ids
+from ..writer import read_table, rewrite_table
 
 
 def rollup_batch(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -75,40 +75,28 @@ def fold_into_rollup(
     double-counts. Pass foreachBatch's epoch id here. None (ad-hoc
     batch folds) skips the bookkeeping.
     """
-    target = Path(path)
-    recover(target)
+    existing = read_table(spark, path)
     if batch_id is not None and str(batch_id) in batch_ids(path, _FOLDED):
         return
 
     partial = rollup_batch(batch, width)
-    if not target.exists():
-        merged = partial
-    else:
-        existing = spark.read.parquet(path)
-        merged = (
-            existing.unionByName(partial)
-            .groupBy("window_start", "event_type")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("sum_value").alias("sum_value"),
-            )
+    merged = partial if existing is None else (
+        existing.unionByName(partial)
+        .groupBy("window_start", "event_type")
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("sum_value").alias("sum_value"),
         )
-
-    staging = staging_dir(target)
-    merged.write.mode("overwrite").parquet(str(staging))
-    # fold-log travels with the data: the marker lands in staging
-    # before the swap, so a crash can't commit one without the other.
-    if batch_id is not None:
-        (staging / _FOLDED).mkdir(exist_ok=True)
-        (staging / _FOLDED / str(batch_id)).touch()
-    commit_swap(target, staging)
+    )
+    rewrite_table(merged, path, (_FOLDED, batch_id))
 
 
 def read_rollup(spark: SparkSession, path: str) -> DataFrame:
     """Rollup with derived columns (avg at read time — exact, since
     sum and count merged exactly)."""
-    recover(Path(path))
-    r = spark.read.parquet(path)
+    r = read_table(spark, path)
+    if r is None:
+        raise FileNotFoundError(f"no rollup table at {path}")
     return r.select(
         "window_start",
         "event_type",

@@ -15,10 +15,12 @@ closes it:
 Marker files/dirs all start with ``_`` so Spark's file-listing treats
 them as hidden and never reads them as data.
 
-The ``_COMMITTED`` marker may carry a record of the table (the HUB
-merge stores its schema there, so a reader needs no schema-inference
-job) plus the data files the commit wrote. The record is trusted only
-while the table still holds exactly those files.
+The ``_COMMITTED`` marker may carry a record of the table plus the
+data files the commit wrote. Every staged table (the HUB, the rollup,
+the admitted corpus, a compacted table) is rewritten by
+``writer.rewrite_table``, which stores the table's schema there, so
+``writer.read_table`` needs no schema-inference job. The record is
+trusted only while the table still holds exactly those files.
 
 Batch ledgers (``_folded/``, ``_admitted/``: one empty file per
 batch id) are such subdirectories and belong to the table, so

@@ -11,8 +11,9 @@ stream_upsert_to_hub / stream_fold_rollup.
 Idempotency mirrors operators/rollup.py: the corpus dir keeps an
 ``_admitted/<batch_id>`` marker per admitted batch (underscore-prefixed
 → invisible to parquet reads), markers travel through the same
-crash-safe staging swap as the data (which carries the earlier ones
-over), and an at-least-once replay of a micro-batch is a no-op.
+crash-safe rewrite as the data (writer.rewrite_table, whose swap
+carries the earlier ones over), and an at-least-once replay of a
+micro-batch is a no-op.
 
 Gate order matters at scale: the exact hash dedup (cheap, one shuffle)
 runs before the n-gram near-dup (index build), and the cross-set probe
@@ -23,14 +24,13 @@ rebuilt per batch because the fixture corpus is small.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import DEFAULT_MAX_SHINGLE_DF
-from ..staging import batch_ids, commit_swap, recover, staging_dir
+from ..staging import batch_ids
+from ..writer import read_table, rewrite_table
 
 _ADMITTED = "_admitted"
 
@@ -61,8 +61,7 @@ def admit_batch(
        doc is rejected, even when its whole-document Jaccard is far
        below threshold — the pasted-excerpt case gate 3 cannot see.
     """
-    target = Path(path)
-    recover(target)
+    corpus = read_table(spark, path)
     if batch_id is not None and str(batch_id) in batch_ids(path, _ADMITTED):
         return
 
@@ -88,9 +87,7 @@ def admit_batch(
         "left_anti",
     )
 
-    exists = target.exists()
-    if exists:
-        corpus = spark.read.parquet(path)
+    if corpus is not None:
         hits = ngram_jaccard_pairs_against(
             b, corpus, id_col=id_col, n=n, threshold=threshold,
             max_shingle_df=max_shingle_df,
@@ -115,18 +112,8 @@ def admit_batch(
             )
 
     survivors = b.select(*cols)
-    merged = (
-        spark.read.parquet(path).unionByName(survivors)
-        if exists
-        else survivors
-    )
-
-    staging = staging_dir(target)
-    merged.write.mode("overwrite").parquet(str(staging))
-    if batch_id is not None:
-        (staging / _ADMITTED).mkdir(exist_ok=True)
-        (staging / _ADMITTED / str(batch_id)).touch()
-    commit_swap(target, staging)
+    merged = survivors if corpus is None else corpus.unionByName(survivors)
+    rewrite_table(merged, path, (_ADMITTED, batch_id))
 
 
 def stream_corpus_admission(

@@ -18,9 +18,14 @@
 - One exact re-rank: the rounded exact-cosine division and the
   per-query top-k window are each written in exactly one function
   (``similarity.exact_topk`` and ``similarity.topk_per_query``).
-- One HUB table reader: ``writer.py`` reads parquet (``….read.parquet``
-  or ``….read.schema(…).parquet``) only inside ``_read_table``, which
-  uses the schema a merge recorded while it still describes the table.
+- One staged table: the HUB, the rollup, the admitted corpus and
+  compaction read their table only through ``writer.read_table``, which
+  uses the schema the last rewrite recorded while it still describes
+  the table, and replace it only through ``writer.rewrite_table``: no
+  parquet read (``….read.parquet`` or ``….read.schema(…).parquet``) in
+  those modules outside the two, whose other read resolves the record,
+  and no ``staging_dir``/``commit_swap`` call outside ``staging.py``
+  but in ``rewrite_table``.
 - Tools and tests check the checkout they run from: none names the
   checkout's absolute path, and each tool puts its own checkout first
   on ``sys.path``.
@@ -137,17 +142,53 @@ def _reads_parquet(call: ast.Call) -> bool:
     return False
 
 
-def test_writer_reads_parquet_in_one_table_reader():
-    tree = ast.parse((PACKAGE / "writer.py").read_text())
-    readers = {
+STAGED_TABLE_MODULES = (
+    "writer.py",
+    "operators/rollup.py",
+    "operators/maintenance.py",
+    "streaming/admission.py",
+)
+
+
+def _call_sites(rel: str, hit) -> set[str]:
+    """Enclosing functions of every call in `rel` for which `hit` holds."""
+    tree = ast.parse((PACKAGE / rel).read_text())
+    return {
         fn.name
         for fn in ast.walk(tree)
         if isinstance(fn, ast.FunctionDef)
         for node in ast.walk(fn)
-        if isinstance(node, ast.Call) and _reads_parquet(node)
+        if isinstance(node, ast.Call) and hit(node)
     }
-    assert readers == {"_read_table"}, (
-        f"writer.py reads parquet outside its one table reader: {sorted(readers)}"
+
+
+def _calls(name: str):
+    def hit(call: ast.Call) -> bool:
+        func = call.func
+        return (isinstance(func, ast.Name) and func.id == name) or (
+            isinstance(func, ast.Attribute) and func.attr == name
+        )
+
+    return hit
+
+
+def test_staged_tables_have_one_reader_and_one_rewrite():
+    readers = {
+        (rel, fn) for rel in STAGED_TABLE_MODULES for fn in _call_sites(rel, _reads_parquet)
+    }
+    # rewrite_table's one read resolves the schema it records
+    assert readers == {("writer.py", "read_table"), ("writer.py", "rewrite_table")}, (
+        f"a staged table is read outside writer.read_table: {sorted(readers)}"
+    )
+    swaps = {
+        (str(rel), fn)
+        for rel, _ in _modules()
+        if rel != Path("staging.py")
+        for name in ("staging_dir", "commit_swap")
+        for fn in _call_sites(str(rel), _calls(name))
+    }
+    assert swaps == {("writer.py", "rewrite_table")}, (
+        f"a table is swapped outside writer.rewrite_table: {sorted(swaps)}"
     )
 
 
