@@ -1,23 +1,35 @@
-"""Deduplication operators for training-data pipelines.
+"""Deduplication operators for training-data pipelines: four
+signatures, one pair generator.
 
-Four tiers, all pure DataFrame built-ins (no pyspark.ml dependency, no
-Python in the row path — everything stays in whole-stage codegen):
+Every self-join near-dup turns a signature into buckets and emits its
+candidate pairs through `bucket_pairs` (group by bucket → sorted member
+set → chunked C(m,2) explode, one shuffle, no row above cap² pairs):
 
-- exact_dedup:        hash-groupBy keep-first (deterministic winner)
-- ngram_jaccard_pairs: exact n-gram Jaccard via inverted shingle index
-- minhash_lsh_pairs:  MinHash signatures + banded LSH candidate
-                      generation + exact Jaccard verification
-- simhash_pairs:      64-bit SimHash + Hamming-band LSH
+- shingle sets:   ngram_jaccard_pairs / ngram_containment_pairs bucket
+                  on the shingle (inverted index), exact counts
+- MinHash:        minhash_lsh_pairs buckets on banded signatures, then
+                  verifies with exact shingle-set Jaccard
+- 64-bit Hamming: hamming_banded_pairs buckets on pigeonhole bands and
+                  verifies in the explode (SimHash here, pHash and the
+                  audio fingerprint in multimodal.py) — lossless
+- hyperplane signs: the cosine LSH of queries/llm_ops2.py q58 buckets
+                  on sign patterns and verifies in the explode
+
+Outside that generator: exact_dedup (hash-groupBy keep-first),
+prefix_filter_jaccard_pairs (its prefix self-join is itself the pruning)
+and the batch-vs-corpus joins, whose pairs cross two sets.
 
 Scale notes (the reason for each design):
 - exact: one shuffle on the dedup key; row_number not dropDuplicates,
   because dropDuplicates keeps an *arbitrary* row (first seen per
   partition) — non-deterministic under retries/repartition.
-- jaccard/minhash/simhash candidate generation is join-on-bucket, so
-  cost is Σ bucket² not n². High-frequency shingles are the skew
-  hazard; `max_shingle_df` drops shingles that occur in more than
-  that many docs from the *index* (stop-shingles carry no dedup
-  signal but create quadratic hot buckets at 100 TB).
+- bucket-pair cost is Σ bucket² not n². High-frequency shingles are the
+  skew hazard; `max_shingle_df` drops shingles that occur in more than
+  that many docs from the *index* (stop-shingles carry no dedup signal
+  but create quadratic hot buckets at 100 TB), and PAIR_BUCKET_CAP
+  bounds what any one bucket row may materialize.
+- everything stays in JVM built-ins except the SimHash vote, an
+  Arrow-batched pandas UDF (see `simhash`).
 """
 
 from __future__ import annotations
@@ -115,29 +127,60 @@ def shingle_index(
 # Hard cap on the members-per-side of any single pair-generation row:
 # unchunked, one low-entropy bucket with 10⁵ members would build all
 # C(m,2) ≈ 5·10⁹ pair structs inside ONE row before exploding — an
-# executor OOM at scale no configuration can absorb. With the chunked explode
-# below, no row ever materializes more than cap² pair structs
-# (~25 MB at the default), whatever the bucket size.
+# executor OOM at scale no configuration can absorb. With the chunked
+# explode in `bucket_pairs`, no row ever materializes more than cap²
+# pair structs (~25 MB at the default), whatever the bucket size.
 PAIR_BUCKET_CAP = 1024
 
 
-def chunked_members(members: DataFrame, cap: int, *keep: str) -> DataFrame:
-    """Bound a member-array frame for pair generation: split each
-    bucket's SORTED array ``ms`` into ⌈m/cap⌉ contiguous chunks and
-    emit one row per unordered chunk pair (ci ≤ cj) carrying
-    ``ma`` = chunk ci and ``mb`` = chunk cj (NULL when ci = cj).
-    Every unordered member pair lands in exactly ONE output row:
-    within its chunk when both sides share it, else in the single
-    (ci, cj) row — so downstream pair generation (C(|ma|,2) within,
-    |ma|·|mb| across) is bit-identical to the unchunked C(m,2)
-    explode, including order (slices of a sorted array are sorted,
-    and every ma element precedes every mb element). A bucket with
-    m ≤ cap degenerates to one row with ma = ms — the pre-cap plan.
-    No extra exchange: the chunk fan-out is a codegen explode in the
-    same stage as the rollup."""
+def bucket_pairs(
+    df: DataFrame,
+    bucket_cols: list[str],
+    member,
+    pair_sql,
+    spread_members: bool = False,
+    cap: int | None = None,
+) -> DataFrame:
+    """Candidate pairs from bucket co-membership, via ONE shuffle — the
+    one pair generator of every near-dup join.
+
+    groupBy(bucket) → sorted set of ``member`` (an id column, or a
+    struct whose first field is the id, so the sort is by id) →
+    single-member buckets dropped → chunked explode of the C(m,2)
+    combinations. ``pair_sql(x, y)`` renders the output pair struct
+    from two member exprs; x precedes y in the bucket's sort order, so
+    an id pair comes out with a < b. The result is that struct's
+    fields, one row per (pair, shared bucket): the multiplicity
+    ngram_jaccard_pairs' n_common count depends on.
+
+    Chunking: each sorted member array is split into ⌈m/cap⌉
+    contiguous chunks and one row is emitted per unordered chunk pair
+    (ci ≤ cj), carrying ``ma`` = chunk ci and ``mb`` = chunk cj (NULL
+    when ci = cj). Every member pair lands in exactly one such row —
+    C(|ma|,2) within, |ma|·|mb| across — so the pair set and order are
+    those of the unchunked explode, while no row ever holds more than
+    cap² pair structs. A bucket with m ≤ cap is one row with ma = ms.
+    ``cap=None`` reads PAIR_BUCKET_CAP at call time. The chunk fan-out
+    is a codegen explode in the rollup's stage: no extra exchange.
+
+    ``spread_members`` lays the member frame out over every core
+    (`execution.spread`, a no-op for a large frame) before the
+    explode. It pays when the pair expression does real work (the
+    in-stage Hamming and cosine verifiers): the frame is one small row
+    per bucket, so AQE coalesces it onto a couple of partitions and the
+    quadratic fan-out runs nearly serially. Measured break-even-to-
+    negative for the id-only shingle and MinHash callers.
+    """
+    cap = PAIR_BUCKET_CAP if cap is None else cap
+    members = (
+        df.groupBy(*bucket_cols)
+        .agg(F.sort_array(F.collect_set(member)).alias("ms"))
+        .filter(F.size("ms") >= 2)
+    )
+    if spread_members:
+        members = spread(members)
     nc = f"((size(ms) - 1) div {cap})"
-    return members.select(
-        *keep,
+    chunks = members.select(
         "ms",
         F.explode(
             F.expr(
@@ -147,22 +190,14 @@ def chunked_members(members: DataFrame, cap: int, *keep: str) -> DataFrame:
             )
         ).alias("cp"),
     ).select(
-        *keep,
         F.expr(f"slice(ms, cp.ci * {cap} + 1, {cap})").alias("ma"),
         F.expr(
             f"if(cp.ci = cp.cj, null, slice(ms, cp.cj * {cap} + 1, {cap}))"
         ).alias("mb"),
     )
-
-
-def chunk_pairs_sql(pair_sql) -> str:
-    """Pair-generation CASE over a `chunked_members` row.
-    ``pair_sql(x, y)`` renders the output pair struct from two member
-    exprs, and must be valid for x preceding y in the bucket's sort
-    order (which both branches guarantee). The else-branch empty
-    array covers a trailing one-member chunk; CASE's lazy branch
-    evaluation keeps the within-branch (whose sequence would be
-    descending) from ever running on it."""
+    # The else-branch empty array covers a trailing one-member chunk;
+    # CASE's lazy branch evaluation keeps the within-branch (whose
+    # sequence would be descending) from ever running on it.
     within = (
         "flatten(transform(sequence(0, size(ma) - 2), i -> "
         "transform(sequence(i + 1, size(ma) - 1), j -> "
@@ -177,48 +212,20 @@ def chunk_pairs_sql(pair_sql) -> str:
         + pair_sql("x", "y")
         + ")))"
     )
-    return (
+    pair = (
         f"case when mb is not null then {cross} "
         f"when size(ma) >= 2 then {within} "
         f"else array() end"
     )
+    return chunks.select(F.explode(F.expr(pair)).alias("p")).select("p.*")
 
 
-def _bucket_pairs(
-    df: DataFrame,
-    bucket_cols: list[str],
-    item_col: str,
-    cap: int = PAIR_BUCKET_CAP,
-) -> DataFrame:
-    """Candidate pairs from bucket co-membership, via ONE shuffle.
-
-    groupBy(bucket) → sorted member array → chunked explode of the
-    C(m,2) combinations (see `chunked_members`: no single row ever
-    holds more than cap² pair structs; pair multiplicity — one
-    emission per co-membership — is preserved, which
-    ngram_jaccard_pairs' n_common count depends on). Replaces the
-    self-join-on-bucket plan (which shuffles the index twice and
-    sort-merges); pair fan-out is still Σ m²/2 per bucket, so
-    stop-bucket pruning remains the scale lever. Emits (a, b) with
-    a < b, once per shared bucket.
-    """
-    # No `spread` of the member arrays before the explode: measured,
-    # it helps only when bucket fan-out is huge (e.g. the perceptual-
-    # hash banding, which verifies in-stage in
-    # multimodal.hamming_banded_pairs) and is break-even-to-negative
-    # for the shingle consumers here.
-    members = (
-        df.groupBy(*bucket_cols)
-        .agg(F.sort_array(F.collect_set(item_col)).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    pair = chunk_pairs_sql(
-        lambda x, y: f"named_struct('a', {x}, 'b', {y})"
-    )
-    pairs = chunked_members(members, cap).select(
-        F.explode(F.expr(pair)).alias("p")
-    )
-    return pairs.select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+def _id_pairs(df: DataFrame, bucket_cols: list[str]) -> DataFrame:
+    """(doc_a, doc_b) with doc_a < doc_b, once per shared bucket, for
+    a (doc, *bucket_cols) frame."""
+    return bucket_pairs(
+        df, bucket_cols, "doc", lambda x, y: f"named_struct('a', {x}, 'b', {y})"
+    ).toDF("doc_a", "doc_b")
 
 
 def _shingle_overlap(
@@ -230,7 +237,7 @@ def _shingle_overlap(
     idx = shingle_index(spread(docs), id_col, n, max_shingle_df)
     sizes = idx.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     common = (
-        _bucket_pairs(idx, ["sh"], "doc")
+        _id_pairs(idx, ["sh"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
@@ -459,12 +466,20 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash LSH + exact verification.
 
-    Candidate pairs collide in ≥1 of `bands` bands (rows = num_hashes /
-    bands); every candidate is then verified with exact shingle-set
-    Jaccard, so the output has no false positives — LSH only bounds
-    recall. Pair enumeration is per-bucket, so the cost tracks bucket
-    sizes, not n².
+    Candidate pairs collide in ≥1 of `bands` bands (rows = num_hashes //
+    bands, so a non-divisor leaves the trailing slots unbanded); every
+    candidate is then verified with exact shingle-set Jaccard, so the
+    output has no false positives — LSH only bounds recall. Pair
+    enumeration is per-bucket, so the cost tracks bucket sizes, not n².
+    ``num_hashes < 1`` or ``bands`` outside [1, num_hashes] raises
+    ValueError before any job runs.
     """
+    if num_hashes < 1:
+        raise ValueError(f"num_hashes must be >= 1, got {num_hashes}")
+    if not 1 <= bands <= num_hashes:
+        raise ValueError(
+            f"bands must be in [1, num_hashes={num_hashes}], got {bands}"
+        )
     rows_per_band = num_hashes // bands
     sigs = minhash_signature(docs, num_hashes=num_hashes, n=n, id_col=id_col)
 
@@ -488,7 +503,7 @@ def minhash_lsh_pairs(
         ).alias("bb"),
     ).select("doc", "bb.band", "bb.bucket")
 
-    candidates = _bucket_pairs(banded, ["band", "bucket"], "doc").distinct()
+    candidates = _id_pairs(banded, ["band", "bucket"]).distinct()
     candidates = candidates.localCheckpoint(eager=False)
 
     # exact verification: join shingle sets back on, Jaccard via
@@ -528,27 +543,26 @@ def minhash_lsh_pairs(
     )
 
 
-def _simhash_chunks_udf(bits: int = 64):
-    """Arrow-batched pandas UDF: token-hash array → 16-bit chunk array.
+def _simhash_udf():
+    """Arrow-batched pandas UDF: token-hash array → 64-bit SimHash long.
 
     Per doc: bit-matrix of the int64 hashes, per-bit one-count, majority
-    bit, packed into bits/16 little-endian 16-bit chunks. numpy views
-    the signed hashes as uint64 so >> is a logical shift; bit i extracted
+    bit, packed into one signed long (two's complement, the pHash
+    packing) so bit i of the long is the vote of bit i. numpy views the
+    signed hashes as uint64 so >> is a logical shift; bit i extracted
     by &1 is identical to the JVM's arithmetic shiftright(h, i) & 1.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql.pandas.functions import pandas_udf
 
-    n_chunks = bits // 16
-    weights = (1 << np.arange(16, dtype=np.int64))
     # bound the unpacked bit matrix (64 B/hash after unpackbits) to
     # ~64 MB per sub-batch regardless of Arrow batch size / doc length
     budget = 1 << 20
 
-    def chunks(th):
+    def votes(th):
         n = len(th)
-        out = np.zeros((n, n_chunks), dtype=np.int64)
+        out = np.zeros(n, dtype=np.int64)
         arrs = [np.asarray(a, dtype="<i8") for a in th]
         lens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=n)
         start = 0
@@ -574,95 +588,183 @@ def _simhash_chunks_udf(bits: int = 64):
             # increasing; dtype widens the uint8 columns before summing
             ones = np.add.reduceat(bits_mat, offsets, axis=0, dtype=np.int64)
             maj = ones * 2 > seg_lens[nz][:, None]
-            out[start + nz] = (
-                maj.reshape(nz.size, n_chunks, 16) * weights
-            ).sum(axis=2)
+            # the inverse of the unpack: column i → bit i of the long
+            out[start + nz] = np.packbits(
+                maj, axis=1, bitorder="little"
+            ).view("<i8")[:, 0]
             start = end
-        return pd.Series(list(out))
+        return pd.Series(out)
 
     # registered without annotations (see hyperplane_signatures note)
-    return pandas_udf(chunks, "array<long>")
+    return pandas_udf(votes, "long")
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", bits: int = 64) -> DataFrame:
-    """64-bit SimHash as 4×16-bit chunk columns (`sh0`..`sh3`).
+def simhash(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, simhash long): 64-bit SimHash of each document — the
+    signature frame shape of phash64 and audio_fingerprint64.
 
-    Per-bit majority vote over token hashes, computed as a per-document
-    higher-order fold: tokens → hash array (one xxhash64 per token,
-    materialized so it isn't re-evaluated per bit) → aggregate() folds
-    the ±1 votes into a 64-slot accumulator. Entirely within a single
-    projection — NO shuffle, no explode, no UDF — so it scales as a map
-    over the corpus. Chunked layout feeds Hamming-band LSH directly.
+    Per-bit majority vote over token hashes. The hash family stays
+    JVM-side (one xxhash64 per token — deterministic across
+    runs/partitionings); the vote is an Arrow-batched pandas UDF. Both
+    pure-SQL shapes lose badly here: a 64-way unrolled vote fold
+    compiles a codegen tree whose JIT dominates, and compact
+    higher-order lambdas are interpreted per element (~tokens×64
+    closure calls per doc). One numpy bit-matrix per batch replaces
+    both. Majority(+1) ⟺ ones*2 > n — identical bits to the ±1-vote
+    form (ties → 0 in both). A pure map over the corpus: no shuffle.
     """
     hashed = tokenize(spread(docs)).withColumn(
         "__th", F.transform("tokens", lambda t: F.xxhash64(t))
     )
-    # The hash family stays JVM-side (xxhash64 — deterministic across
-    # runs/partitionings); the per-bit majority vote is an Arrow-batched
-    # pandas UDF. Both pure-SQL shapes lose badly here: a 64-way
-    # unrolled vote fold compiles a codegen tree whose JIT dominates,
-    # and compact higher-order lambdas are interpreted per element
-    # (~tokens×64 closure calls per doc). One numpy bit-matrix per
-    # batch replaces both. Majority(+1) ⟺ ones*2 > n — identical bits
-    # to the ±1-vote form (ties → 0 in both).
-    chunk_udf = _simhash_chunks_udf(bits)
-    voted = hashed.withColumn("__chunks", chunk_udf(F.col("__th")))
-    return voted.select(
-        F.col(id_col),
-        *[
-            F.element_at("__chunks", c + 1).alias(f"sh{c}")
-            for c in range(bits // 16)
-        ],
+    return hashed.select(
+        F.col(id_col).alias("id"),
+        _simhash_udf()(F.col("__th")).alias("simhash"),
     )
 
 
 def simhash_pairs(
     docs: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
 ) -> DataFrame:
-    """Near-dup pairs with Hamming distance ≤ max_hamming.
+    """(doc_a, doc_b, hamming) for every doc pair whose SimHashes differ
+    in ≤ max_hamming bits, doc_a < doc_b: the lossless Hamming banding
+    (hamming_banded_pairs) over `simhash`, so the result equals the
+    all-pairs popcount scan for every max_hamming in [0, 15]."""
+    band_layout(max_hamming)  # fail before planning the signature scan
+    # one materialization: with band pruning the signature plan feeds
+    # the cost aggregate AND the banding; without the cut the whole
+    # tokenize→hash→vote pipeline runs twice. Signatures are tiny.
+    sig = simhash(docs, id_col).localCheckpoint(eager=False)
+    return hamming_banded_pairs(sig, max_hamming, "simhash").toDF(
+        "doc_a", "doc_b", "hamming"
+    )
 
-    Band trick: with 4 chunks and distance ≤ 3, at least one chunk is
-    identical (pigeonhole) — candidates are generated by joining on
-    each chunk, then verified with exact popcount of the XOR.
+
+def band_layout(max_hamming: int) -> tuple[int, int]:
+    """(bands, width) for the pigeonhole-lossless banding of a 64-bit
+    hash: the fewest equal bands with bands > max_hamming. Raises
+    ValueError outside [0, 15]; the near-dup operators call it before
+    they plan their signature scan."""
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
+    for bands, width in ((4, 16), (8, 8), (16, 4)):
+        if max_hamming < bands:
+            return bands, width
+    raise ValueError(
+        f"max_hamming={max_hamming} needs > 16 bands of a 64-bit "
+        f"hash; use a brute-force scan instead"
+    )
+
+
+def hamming_banded_pairs(
+    sig: DataFrame,
+    max_hamming: int,
+    hash_col: str,
+) -> DataFrame:
+    """Near-duplicate (id_a, id_b, hamming) pairs, id_a < id_b, over ANY
+    64-bit signature frame (id, <hash_col> long) — the one join of the
+    SimHash, pHash and audio-fingerprint near-dups, so every 64-bit
+    signature gets the identical banding. ``max_hamming`` outside
+    [0, 15] raises ValueError before any job runs.
+
+    Band trick (pigeonhole, LOSSLESS for the Hamming metric): split
+    the 64 bits into `bands` equal chunks with bands > max_hamming —
+    any pair within distance max_hamming is identical in ≥ 1 chunk, so
+    banded candidate generation has ZERO recall loss vs the O(n²)
+    brute-force scan (pinned in tests/test_dedup.py,
+    tests/test_multimodal.py and tests/test_audio_fp.py). Candidates
+    are bucket co-members per (band, chunk) — ONE shuffle: the bucket
+    rollup collects (doc, h) structs, so the exact XOR-popcount
+    verification runs in the SAME stage the pairs are exploded in (no
+    join-back; non-matches never reach a shuffle); only verified pairs
+    hit the final cross-band distinct. The binary column never enters
+    any exchange (signatures are id + one long, tiny at any corpus
+    size).
+
+    Band pruning (STILL lossless): pigeonhole needs only
+    max_hamming + 1 bands — a pair differing in ≤ max_hamming bits
+    can touch at most max_hamming of any max_hamming+1 kept bands, so
+    ≥ 1 kept band stays identical. When the layout has more bands
+    than that (e.g. 8 bands at max_hamming=4), the surplus is spent
+    dropping the bands with the LARGEST candidate volume
+    (Σ_buckets n·(n−1)/2, measured exactly in one bounded aggregate
+    over the signature frame). This is what keeps low-entropy
+    signatures scalable: a band over bit positions that are constant
+    across the corpus (zero-padded tails, saturated filters) puts the
+    WHOLE corpus in one bucket — an O(n²) explosion pruning removes
+    without losing a single pair (pinned banded≡brute in
+    tests/test_audio_fp.py at a pruned layout).
+
+    ``sig`` should already be materialized (localCheckpoint) by the
+    caller when it is expensive: with pruning, the signature plan
+    feeds the cost aggregate and the banding.
     """
-    # one materialization: the signature plan feeds THREE branches
-    # (banding + both verification sides); without the cut the whole
-    # tokenize→hash→vote pipeline runs three times. Signatures are
-    # tiny (id + 4 longs) at any corpus size.
-    sh = simhash(docs, id_col=id_col).localCheckpoint(eager=False)
-    chunk_cols = [c for c in sh.columns if c.startswith("sh")]
+    bands, width = band_layout(max_hamming)
 
-    banded = sh.select(
-        F.col(id_col).alias("doc"),
+    mask = (1 << width) - 1
+    banded = sig.select(
+        F.col("id").alias("doc"),
+        F.col(hash_col).alias("h"),
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(i).alias("band"), F.col(c).alias("chunk"))
-                    for i, c in enumerate(chunk_cols)
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.shiftrightunsigned(F.col(hash_col), b * width)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("chunk"),
+                    )
+                    for b in range(bands)
                 ]
             )
         ).alias("bb"),
-    ).select("doc", "bb.band", "bb.chunk")
-
-    candidates = _bucket_pairs(banded, ["band", "chunk"], "doc").distinct()
-
-    fa = sh.select(
-        F.col(id_col).alias("doc_a"),
-        *[F.col(c).alias(f"a_{c}") for c in chunk_cols],
-    )
-    fb = sh.select(
-        F.col(id_col).alias("doc_b"),
-        *[F.col(c).alias(f"b_{c}") for c in chunk_cols],
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"a_{c}").bitwiseXOR(F.col(f"b_{c}")))
-        for c in chunk_cols
+    ).select("doc", "h", "bb.band", "bb.chunk")
+    keep = max_hamming + 1
+    if keep < bands:
+        # exact per-band candidate volume: bounded collect (≤ bands
+        # rows); ties break on band index for determinism
+        cost = {
+            r["band"]: r["pairs"]
+            for r in banded.groupBy("band", "chunk")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .groupBy("band")
+            .agg(
+                F.sum(
+                    F.col("n") * (F.col("n") - 1) / 2
+                ).alias("pairs")
+            )
+            .collect()
+        }
+        kept = sorted(
+            range(bands), key=lambda b: (cost.get(b, 0.0), b)
+        )[:keep]
+        banded = banded.filter(F.col("band").isin(kept))
+    # The signature rides the bucket rollup as a (doc, h) struct, so
+    # candidate pairs carry both hashes the moment they are exploded:
+    # the popcount filter kills non-matches in the explode's stage.
+    # collect_set of (doc, h) structs dedups per bucket (one hash per
+    # id), the doc-first struct sort keeps id_a < id_b, and the final
+    # distinct removes multi-band duplicates.
+    pairs = bucket_pairs(
+        banded,
+        ["band", "chunk"],
+        F.struct(F.col("doc"), F.col("h")),
+        lambda x, y: (
+            f"named_struct('id_a', {x}.doc, 'id_b', {y}.doc, "
+            f"'hamming', bit_count({x}.h ^ {y}.h))"
+        ),
+        spread_members=True,
     )
     return (
-        candidates.join(fa, "doc_a")
-        .join(fb, "doc_b")
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        pairs
+        # id_a != id_b: the (doc, h) struct rollup makes a self-pair
+        # possible IF an id ever arrives with two different hashes;
+        # every current caller emits one hash per id, so this is a
+        # guard, not a semantic change.
+        .filter(
+            (F.col("hamming") <= max_hamming)
+            & (F.col("id_a") != F.col("id_b"))
+        )
+        .distinct()
     )
 
 

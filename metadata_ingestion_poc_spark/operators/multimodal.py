@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from ..execution import spread
+from .dedup import band_layout, hamming_banded_pairs
 
 BLOB_SCHEMA = StructType(
     [
@@ -270,161 +271,6 @@ def phash64(
     )
 
 
-def _band_layout(max_hamming: int) -> tuple[int, int]:
-    """(bands, width) for the pigeonhole-lossless banding — validated
-    EAGERLY so callers reject a bad threshold before any signature
-    work is planned."""
-    if max_hamming < 0:
-        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
-    for bands, width in ((4, 16), (8, 8), (16, 4)):
-        if max_hamming < bands:
-            return bands, width
-    raise ValueError(
-        f"max_hamming={max_hamming} needs > 16 bands of a 64-bit "
-        f"hash; use a brute-force scan instead"
-    )
-
-
-def hamming_banded_pairs(
-    sig: DataFrame,
-    max_hamming: int,
-    hash_col: str,
-) -> DataFrame:
-    """Near-duplicate (id_a, id_b, hamming) pairs over ANY 64-bit
-    signature frame (id, <hash_col> long) — the shared tail of the
-    pHash and audio-fingerprint near-dup joins (factored out round 12
-    so every 64-bit perceptual signature gets the identical banding).
-
-    Band trick (pigeonhole, LOSSLESS for the Hamming metric): split
-    the 64 bits into `bands` equal chunks with bands > max_hamming —
-    any pair within distance max_hamming is identical in ≥ 1 chunk, so
-    banded candidate generation has ZERO recall loss vs the O(n²)
-    brute-force scan (pinned in tests/test_multimodal.py and
-    tests/test_audio_fp.py). Candidates are bucket co-members per
-    (band, chunk) — ONE shuffle: the bucket rollup collects (doc, h)
-    structs, so the exact XOR-popcount verification runs in the SAME
-    stage the C(m,2) pairs are exploded in (round 14 — no join-back,
-    non-matches never reach a shuffle); only verified pairs hit the
-    final cross-band distinct. The binary column never enters any
-    exchange (signatures are id + one long, tiny at any corpus size).
-
-    Band pruning (round 12, STILL lossless): pigeonhole needs only
-    max_hamming + 1 bands — a pair differing in ≤ max_hamming bits
-    can touch at most max_hamming of any max_hamming+1 kept bands, so
-    ≥ 1 kept band stays identical. When the layout has more bands
-    than that (e.g. 8 bands at max_hamming=4), the surplus is spent
-    dropping the bands with the LARGEST candidate volume
-    (Σ_buckets n·(n−1)/2, measured exactly in one bounded aggregate
-    over the signature frame). This is what keeps low-entropy
-    signatures scalable: a band over bit positions that are constant
-    across the corpus (zero-padded tails, saturated filters) puts the
-    WHOLE corpus in one bucket — an O(n²) explosion pruning removes
-    without losing a single pair (pinned banded≡brute in
-    tests/test_audio_fp.py at a pruned layout).
-
-    ``sig`` should already be materialized (localCheckpoint) by the
-    caller: the signature plan (decode + UDF) feeds banding AND both
-    verification sides — without the cut the UDF would run three
-    times over the corpus.
-    """
-    bands, width = _band_layout(max_hamming)
-
-    mask = (1 << width) - 1
-    banded = sig.select(
-        F.col("id").alias("doc"),
-        F.col(hash_col).alias("h"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col(hash_col), b * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "h", "bb.band", "bb.chunk")
-    keep = max_hamming + 1
-    if keep < bands:
-        # exact per-band candidate volume: bounded collect (≤ bands
-        # rows); ties break on band index for determinism
-        cost = {
-            r["band"]: r["pairs"]
-            for r in banded.groupBy("band", "chunk")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .groupBy("band")
-            .agg(
-                F.sum(
-                    F.col("n") * (F.col("n") - 1) / 2
-                ).alias("pairs")
-            )
-            .collect()
-        }
-        kept = sorted(
-            range(bands), key=lambda b: (cost.get(b, 0.0), b)
-        )[:keep]
-        banded = banded.filter(F.col("band").isin(kept))
-    # Verify INSIDE the bucket stage (round 14): the signature rides
-    # the bucket rollup as a (doc, h) struct, so candidate pairs carry
-    # both hashes the moment they are exploded — the exact popcount
-    # filter kills non-matches in the SAME stage, before any shuffle,
-    # and only the (rare) verified pairs reach the final distinct.
-    # The previous shape distinct'ed the full candidate explosion
-    # (3.4M rows at sf0.1 for q292's low-entropy fingerprints) and
-    # paid two join-backs to re-attach the hashes it had just dropped.
-    # Output is the identical pair set: collect_set of (doc, h)
-    # structs dedups per bucket (one hash per id), the C(m,2) explode
-    # keeps doc_a < doc_b via the doc-first struct sort order, and the
-    # final distinct removes multi-band duplicates exactly as before
-    # (pinned banded≡brute in tests/test_multimodal.py +
-    # tests/test_audio_fp.py).
-    from .dedup import PAIR_BUCKET_CAP, chunk_pairs_sql, chunked_members
-
-    # spread the bucket arrays before the C(m,2) explode: the member
-    # frame is tiny in BYTES (one row per bucket), so AQE coalesces it
-    # onto a couple of partitions — and the quadratic pair fan-out +
-    # popcount then runs nearly serially. Stats-gated no-op at scale.
-    members = spread(
-        banded.groupBy("band", "chunk")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct(F.col("doc"), F.col("h")))
-            ).alias("ms")
-        )
-        .filter(F.size("ms") >= 2)
-    )
-    # Chunked pair explode (round 15): no single row ever builds more
-    # than cap² pair structs, whatever one low-entropy bucket holds —
-    # the enforced form of the stop-bucket lever (see dedup.py
-    # PAIR_BUCKET_CAP; pair set and order identical, a bucket with
-    # m ≤ cap degenerates to the pre-cap expression).
-    pair = chunk_pairs_sql(
-        lambda x, y: (
-            f"named_struct('id_a', {x}.doc, 'id_b', {y}.doc, "
-            f"'hamming', bit_count({x}.h ^ {y}.h))"
-        )
-    )
-    pairs = chunked_members(members, PAIR_BUCKET_CAP).select(
-        F.explode(F.expr(pair)).alias("p")
-    )
-    return (
-        pairs.select("p.id_a", "p.id_b", "p.hamming")
-        # id_a != id_b: the (doc, h) struct rollup makes a self-pair
-        # possible IF an id ever arrives with two different hashes
-        # (the old collect_set(doc) shape made that structurally
-        # impossible); every current caller emits one hash per id, so
-        # this is a pure guard, not a semantic change.
-        .filter(
-            (F.col("hamming") <= max_hamming)
-            & (F.col("id_a") != F.col("id_b"))
-        )
-        .distinct()
-    )
-
-
 def phash_near_dup_pairs(
     blobs: DataFrame,
     max_hamming: int = 3,
@@ -435,7 +281,7 @@ def phash_near_dup_pairs(
     max_hamming — the multimodal twin of simhash_pairs (dedup.py).
     Signature = phash64, join = the shared lossless Hamming banding
     (see hamming_banded_pairs)."""
-    _band_layout(max_hamming)  # fail loud before planning the UDF scan
+    band_layout(max_hamming)  # fail before planning the UDF scan
     sig = phash64(blobs, id_col, content_col).localCheckpoint(eager=False)
     return hamming_banded_pairs(sig, max_hamming, "phash")
 
@@ -603,7 +449,7 @@ def audio_near_dup_pairs(
     differs in ~half the bits; the default threshold sits between
     (planted-edit recovery and banded≡brute-force are pinned in
     tests/test_audio_fp.py)."""
-    _band_layout(max_hamming)  # fail loud before planning the UDF scan
+    band_layout(max_hamming)  # fail before planning the UDF scan
     sig = audio_fingerprint64(blobs, id_col, content_col).localCheckpoint(
         eager=False
     )

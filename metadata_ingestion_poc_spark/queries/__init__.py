@@ -203,7 +203,7 @@ def _load_all() -> None:
 # changes touch: q244 (max_by vote + lazy loop), q253 (distributed
 # covered set), q200/q190 (redundant distinct + explode trap),
 # q296/q300 (_sign_sums frame factor), q249 (Connect guard),
-# q51/q54/q126/q142/q147/q158 (chunked _bucket_pairs),
+# q51/q54/q126/q142/q147/q158 (chunked dedup.bucket_pairs),
 # q125/q251 (ivf_assign literal argmin / lazy build checkpoints);
 # (d) the round-14 passthrough de-ROUNDs (q09 q14 q16 q46 q49 q59
 # q103 q154 q166 — J14-verified at 3 SFs, driver credit due);

@@ -304,7 +304,7 @@ def q291_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fingerprint per waveform (Arrow-batched pandas UDF — FFT has no
 # built-in form; decode stubbed to a fixed 576-sample grid, filter
 # math real), then the SAME pigeonhole-LOSSLESS Hamming banding the
-# pHash join uses (factored into hamming_banded_pairs this round).
+# pHash join uses (dedup.hamming_banded_pairs).
 # Corpus = every document's bytes as a synthetic waveform PLUS a
 # planted 2-char-edit variant of every 7th (the q262 augmentation
 # discipline), so the detector must surface the planted edits

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, MapType, StringType
 
 from ..catalog import load_table
-from ..execution import spread
+from ..operators.dedup import bucket_pairs
 from ..operators.similarity import dot, with_norm
 from ..operators.skew import salted_agg
 from . import query
@@ -112,58 +112,34 @@ def q58_cosine_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("__norm").alias("n"),
         F.posexplode(sig_udf(F.col("embedding"))).alias("tbl", "bucket"),
     )
-    # In-stage verification (round 15, the q292 hamming_banded_pairs
-    # shape): the vector+norm ride the bucket rollup as a
-    # (doc, e, n) struct, so the exact cosine evaluates IN the
-    # C(m,2)-explode stage and only verified pairs reach the cross-
-    # table distinct — the old plan distinct'ed the full candidate
-    # explosion and paid two join-backs to re-attach the vectors it
-    # had just dropped (guide §2.3/§2.4). Output is identical: the
-    # doc-first struct sort keeps doc_a < doc_b, the rounded cosine
-    # is the same IEEE expression per pair, and the final distinct
-    # removes multi-table duplicates exactly as before. Scale note:
-    # the rollup exchange now carries each vector n_tables times
-    # where the old exchange carried ids only — the explicit
+    # In-stage verification (the hamming_banded_pairs shape): the
+    # vector+norm ride the bucket rollup as a (doc, e, n) struct, so
+    # the exact cosine evaluates IN the C(m,2)-explode stage and only
+    # verified pairs reach the cross-table distinct — no join-back to
+    # re-attach vectors, and no distinct of the unverified candidate
+    # set (guide §2.3/§2.4). The doc-first struct sort keeps
+    # id_a < id_b, and the final distinct removes multi-table
+    # duplicates. Scale note: the rollup exchange carries each vector
+    # n_tables times where an id-only rollup would carry ids — the
     # trade-off of §8 ("move heavy bytes once") taken in reverse
-    # because it deletes two corpus-wide shuffles and a distinct of
-    # the unverified candidate set; the spread keeps the quadratic
-    # verify stage on every core and no-ops at scale.
-    members = spread(
-        banded.groupBy("tbl", "bucket")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct(
-                    F.col("vec_id").alias("doc"),
-                    F.col("e"),
-                    F.col("n"),
-                ))
-            ).alias("ms")
-        )
-        .filter(F.size("ms") >= 2)
-    )
-    from ..operators.dedup import (
-        PAIR_BUCKET_CAP,
-        chunk_pairs_sql,
-        chunked_members,
-    )
-
-    # chunked explode (dedup.PAIR_BUCKET_CAP): a hot bucket never
-    # materializes more than cap² pair structs in one row
-    pair = chunk_pairs_sql(
+    # because it deletes two corpus-wide shuffles; the member spread
+    # keeps the quadratic verify stage on every core and no-ops at
+    # scale.
+    pairs = bucket_pairs(
+        banded,
+        ["tbl", "bucket"],
+        F.struct(F.col("vec_id").alias("doc"), F.col("e"), F.col("n")),
         lambda a, b: (
             f"named_struct("
             f"'id_a', {a}.doc, 'id_b', {b}.doc, "
             f"'cosine', round(aggregate(zip_with({a}.e, {b}.e, "
             f"(xx, yy) -> xx * yy), 0.0D, (acc, v) -> acc + v)"
             f" / ({a}.n * {b}.n), 6))"
-        )
-    )
-    pairs = chunked_members(members, PAIR_BUCKET_CAP).select(
-        F.explode(F.expr(pair)).alias("p")
+        ),
+        spread_members=True,
     )
     return (
-        pairs.select("p.id_a", "p.id_b", "p.cosine")
-        .filter(F.col("cosine") >= 0.3)
+        pairs.filter(F.col("cosine") >= 0.3)
         .distinct()
         .orderBy("id_a", "id_b")
     )

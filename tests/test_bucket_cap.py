@@ -1,9 +1,10 @@
-"""The enforced hot-bucket cap (round 15): no pair-generation row may
-materialize more than cap² pair structs, however large one bucket is —
-the executor-OOM class the docstring-only stop-bucket lever left open.
-Pins (a) chunked ≡ unchunked pair multisets including per-bucket
-multiplicity (ngram_jaccard's n_common counts on it), (b) a planted
-10⁴-member bucket passing end-to-end under the default cap, and
+"""The enforced hot-bucket cap of ``dedup.bucket_pairs``: no
+pair-generation row may materialize more than cap² pair structs,
+however large one bucket is (one low-entropy bucket would otherwise
+build its whole C(m,2) array in one executor row). Pins (a) chunked ≡
+unchunked pair multisets including per-bucket multiplicity
+(ngram_jaccard's n_common counts on it), (b) a planted 10⁴-member
+bucket passing end-to-end under the default cap, and
 (c) hamming_banded_pairs unchanged under a cap small enough to force
 cross-chunk pairs."""
 
@@ -13,13 +14,22 @@ from itertools import combinations
 
 from pyspark.sql import functions as F
 
-from metadata_ingestion_poc_spark.operators.dedup import _bucket_pairs
+from metadata_ingestion_poc_spark.operators.dedup import bucket_pairs
+
+
+def _id_pairs(df, cap=None):
+    return bucket_pairs(
+        df,
+        ["bk"],
+        "item",
+        lambda x, y: f"named_struct('doc_a', {x}, 'doc_b', {y})",
+        cap=cap,
+    )
 
 
 def _pairs(df, cap):
     return sorted(
-        (r["doc_a"], r["doc_b"])
-        for r in _bucket_pairs(df, ["bk"], "item", cap=cap).collect()
+        (r["doc_a"], r["doc_b"]) for r in _id_pairs(df, cap).collect()
     )
 
 
@@ -52,18 +62,15 @@ def test_planted_hot_bucket_default_cap(spark):
         [("hot", i) for i in range(n)], "bk string, item long"
     )
     # default cap: the 10⁴-member bucket fans out over ⌈n/cap⌉² chunk
-    # pairs; no row holds the quadratic array, and the pair COUNT is
-    # exactly C(n, 2)
-    got = _bucket_pairs(big, ["bk"], "item").count()
-    assert got == n * (n - 1) // 2
-    # ordering invariant on a sample: a < b for every emitted pair
-    sample = (
-        _bucket_pairs(big, ["bk"], "item")
-        .filter(F.col("doc_a") >= F.col("doc_b"))
-        .limit(1)
-        .count()
-    )
-    assert sample == 0
+    # pairs; no row holds the quadratic array, the pair COUNT is
+    # exactly C(n, 2), and a < b for every emitted pair — both counted
+    # in one pass over the pairs
+    got = _id_pairs(big).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(F.col("doc_a") >= F.col("doc_b")).alias("misordered"),
+    ).first()
+    assert got["n"] == n * (n - 1) // 2
+    assert got["misordered"] == 0
 
 
 def test_hamming_banded_capped_equals_uncapped(spark, monkeypatch):

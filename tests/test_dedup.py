@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -10,6 +11,7 @@ from metadata_ingestion_poc_spark.operators.dedup import (
     ngram_jaccard_pairs,
     shingles,
     simhash_pairs,
+    tokenize,
 )
 
 
@@ -70,6 +72,63 @@ def test_simhash_pairs_are_near_duplicates(spark, docs):
     }
     hits = [p for p in pairs if (p.doc_a, p.doc_b) in exact]
     assert len(hits) >= len(pairs) * 0.5
+
+
+@pytest.fixture(scope="module")
+def driver_simhash(docs):
+    """doc_id -> SimHash computed on the driver, independently of
+    `simhash`: each doc's xxhash64 token hashes (the same JVM hash
+    family) are voted bit by bit in numpy, bit i of the signature being
+    the majority of bit i."""
+    rows = (
+        tokenize(docs)
+        .select("doc_id", F.transform("tokens", lambda t: F.xxhash64(t)))
+        .toDF("doc_id", "th")
+        .collect()
+    )
+    sigs = {}
+    for r in rows:
+        th = np.array(r.th or [], dtype=np.int64).view(np.uint64)
+        ones = ((th[:, None] >> np.arange(64, dtype=np.uint64)) & 1).sum(0)
+        sigs[r.doc_id] = sum(1 << i for i in range(64) if ones[i] * 2 > th.size)
+    return sigs
+
+
+@pytest.mark.parametrize("max_hamming", [3, 5, 8])
+def test_simhash_pairs_equal_brute_force(docs, driver_simhash, max_hamming):
+    """The banded join returns exactly the pairs a popcount over ALL
+    doc pairs finds, beyond 3 bits too; thresholds the 64-bit banding
+    cannot serve losslessly are refused."""
+    ids = sorted(driver_simhash)
+    want = set()
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            d = (driver_simhash[a] ^ driver_simhash[b]).bit_count()
+            if d <= max_hamming:
+                want.add((a, b, d))
+    got = {
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in simhash_pairs(docs, max_hamming=max_hamming).collect()
+    }
+    assert want, "degenerate fixture: no pairs within the threshold"
+    assert got == want
+    for bad in (-1, 16):
+        with pytest.raises(ValueError, match="max_hamming"):
+            simhash_pairs(docs, max_hamming=bad)
+
+
+def test_minhash_lsh_rejects_degenerate_arguments(docs):
+    for kwargs, name in (
+        ({"num_hashes": 0}, "num_hashes"),
+        ({"bands": 0}, "bands"),
+        ({"num_hashes": 16, "bands": 32}, "bands"),
+    ):
+        with pytest.raises(ValueError, match=name):
+            minhash_lsh_pairs(docs, **kwargs)
+    # the edges of the range and a non-divisor still build
+    for bands in (1, 5, 16):
+        out = minhash_lsh_pairs(docs, num_hashes=16, bands=bands)
+        assert out.columns == ["doc_a", "doc_b", "jaccard"]
 
 
 def test_default_call_engages_stop_shingle_cap(spark, docs):

@@ -26,6 +26,10 @@
   those modules outside the two, whose other read resolves the record,
   and no ``staging_dir``/``commit_swap`` call outside ``staging.py``
   but in ``rewrite_table``.
+- One bucket-pair generator: the chunked C(m,2) explode is written
+  only in ``dedup.bucket_pairs``, and no module outside
+  ``operators/dedup.py`` names the pair-generation internals
+  (``PAIR_BUCKET_CAP``, ``chunked_members``, ``chunk_pairs_sql``).
 - Tools and tests check the checkout they run from: none names the
   checkout's absolute path, and each tool puts its own checkout first
   on ``sys.path``.
@@ -273,6 +277,28 @@ def test_one_exact_rerank(needle, what):
     sites = _functions_with_text(needle)
     assert len(sites) == 1, (
         f"the {what} is written in more than one function: {sorted(sites)}"
+    )
+
+
+# The chunk fan-out of the C(m,2) explode in ``dedup.bucket_pairs``.
+CHUNK_EXPLODE = "named_struct('ci', ci, 'cj', cj)"
+PAIR_INTERNALS = re.compile(r"\b(PAIR_BUCKET_CAP|chunked_members|chunk_pairs_sql)\b")
+
+
+def test_one_bucket_pair_generator():
+    sites = _functions_with_text(CHUNK_EXPLODE)
+    assert sites == {("operators/dedup.py", "bucket_pairs")}, (
+        f"the chunked pair explode is written outside "
+        f"dedup.bucket_pairs: {sorted(sites)}"
+    )
+    named = sorted(
+        str(rel)
+        for rel, text in _modules()
+        if rel != Path("operators/dedup.py") and PAIR_INTERNALS.search(text)
+    )
+    assert not named, (
+        f"modules naming pair-generation internals (call "
+        f"dedup.bucket_pairs): {named}"
     )
 
 
