@@ -140,6 +140,7 @@ def bucket_pairs(
     pair_sql,
     spread_members: bool = False,
     cap: int | None = None,
+    max_members: int | None = None,
 ) -> DataFrame:
     """Candidate pairs from bucket co-membership, via ONE shuffle — the
     one pair generator of every near-dup join.
@@ -170,12 +171,20 @@ def bucket_pairs(
     per bucket, so AQE coalesces it onto a couple of partitions and the
     quadratic fan-out runs nearly serially. Measured break-even-to-
     negative for the id-only shingle and MinHash callers.
+
+    ``max_members`` drops every bucket with more members than that: a
+    document-frequency cap for callers whose bucket size IS the df (the
+    span index's stop grams), applied in the one grouping the pairs
+    already need.
     """
     cap = PAIR_BUCKET_CAP if cap is None else cap
+    keep = F.size("ms") >= 2
+    if max_members is not None:
+        keep = keep & (F.size("ms") <= max_members)
     members = (
         df.groupBy(*bucket_cols)
         .agg(F.sort_array(F.collect_set(member)).alias("ms"))
-        .filter(F.size("ms") >= 2)
+        .filter(keep)
     )
     if spread_members:
         members = spread(members)

@@ -13,6 +13,12 @@ partitioning-dependent). The distributed equivalent:
    + intra-partition row_number (a window WITH partitioning, so it
    runs parallel).
 
+Steps 1-2 are ``range_partition_aggregate``, the one scan shared by
+every operator that collects per-partition state and joins a prefix of
+it back: the row numbering and running sum here, the global
+percentiles (``percentiles.exact_percentiles_continuous``) and the
+skyline's global sweep (``skyline.skyline2d``).
+
 The order key must be a TOTAL order (include a unique tiebreaker):
 with ties, rows at a range boundary can land in either partition and
 the numbering of tied rows would depend on sampling. With a total
@@ -27,6 +33,50 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def range_partition_aggregate(
+    df: DataFrame,
+    order_cols: list[str | Column],
+    agg: Column,
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, dict]:
+    """The scan every offset-collect operator shares: `df`
+    range-partitioned and sorted within partitions on `order_cols`
+    (into `num_partitions` when given), tagged with its partition id
+    `__pid` and lazily checkpointed, plus ``{pid: agg}`` over each
+    non-empty partition from one bounded collect (one row per
+    partition, never data).
+
+    Partitions hold disjoint, internally sorted key ranges in pid
+    order, so the caller folds the per-partition values into a prefix
+    on the driver (row offsets, running-sum offsets, a running min) and
+    joins it back broadcast on `__pid`.
+    """
+    if not order_cols:
+        raise ValueError("need at least one order column")
+    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+    parted = (
+        df.repartitionByRange(num_partitions, *cols)
+        if num_partitions
+        else df.repartitionByRange(*cols)
+    ).sortWithinPartitions(*cols)
+    # Materialize BEFORE collecting: the collect and the caller's final
+    # join are separate jobs, and without a lineage cut each
+    # re-evaluates the range shuffle — where AQE may coalesce to a
+    # DIFFERENT partition count the second time, so the join on __pid
+    # silently drops whole partitions (observed at sf0.1: q180 lost
+    # deciles 5-10). The checkpoint pins one partition layout for both
+    # consumers and the sort runs once.
+    ranged = parted.withColumn(
+        "__pid", F.spark_partition_id()
+    ).localCheckpoint(eager=False)
+    # bounded: one row per partition (materializes the checkpoint)
+    per_pid = {
+        r["__pid"]: r["t"]
+        for r in ranged.groupBy("__pid").agg(agg.alias("t")).collect()
+    }
+    return ranged, per_pid
+
+
 def global_row_number(
     df: DataFrame,
     order_cols: list[str | Column],
@@ -39,30 +89,9 @@ def global_row_number(
     last key); ascending order only — wrap columns with F.desc-style
     expressions by pre-computing a negated sort column instead.
     """
-    if not order_cols:
-        raise ValueError("need at least one order column")
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    parted = (
-        df.repartitionByRange(num_partitions, *cols)
-        if num_partitions
-        else df.repartitionByRange(*cols)
-    ).sortWithinPartitions(*cols)
-    # Materialize BEFORE collecting counts: the counts collect and the
-    # final join/window are separate jobs, and without a lineage cut
-    # each re-evaluates the range shuffle — where AQE may coalesce to a
-    # DIFFERENT partition count the second time, so the inner join on
-    # __pid silently drops whole partitions (observed at sf0.1: q180
-    # lost deciles 5-10). The checkpoint pins one partition layout for
-    # both consumers and halves the work (the sort runs once).
-    with_pid = parted.withColumn(
-        "__pid", F.spark_partition_id()
-    ).localCheckpoint(eager=False)
-
-    # bounded: one row per partition (materializes the checkpoint)
-    counts = {
-        r["__pid"]: r["c"]
-        for r in with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
+    with_pid, counts = range_partition_aggregate(
+        df, order_cols, F.count(F.lit(1)), num_partitions
+    )
     offsets, acc = {}, 0
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -73,7 +102,7 @@ def global_row_number(
             "__pid int, __offset long",
         )
     )
-    w = Window.partitionBy("__pid").orderBy(*cols)
+    w = Window.partitionBy("__pid").orderBy(*order_cols)
     return (
         with_pid.join(offset_df, "__pid")
         .withColumn(
@@ -98,9 +127,9 @@ def global_running_sum(
     broadcast exclusive-prefix offsets, and a parallel intra-partition
     running sum.
 
-    Same lineage-cut rule as global_row_number: the ranged frame is
-    checkpointed BEFORE the totals collect so both jobs see one
-    partition layout (the AQE/sampling re-evaluation trap).
+    The totals come from range_partition_aggregate, whose checkpoint
+    before the collect keeps both jobs on one partition layout (the
+    AQE/sampling re-evaluation trap).
 
     For cross-engine-exact results pass a DECIMAL value column —
     decimal addition is associative, so partition totals + offsets
@@ -108,24 +137,9 @@ def global_running_sum(
     subject to the usual float reassociation (offsets group additions
     differently than a sequential scan would).
     """
-    if not order_cols:
-        raise ValueError("need at least one order column")
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    parted = (
-        df.repartitionByRange(num_partitions, *cols)
-        if num_partitions
-        else df.repartitionByRange(*cols)
-    ).sortWithinPartitions(*cols)
-    with_pid = parted.withColumn(
-        "__pid", F.spark_partition_id()
-    ).localCheckpoint(eager=False)
-
-    totals = {
-        r["__pid"]: r["t"]
-        for r in with_pid.groupBy("__pid")
-        .agg(F.sum(value_col).alias("t"))
-        .collect()
-    }
+    with_pid, totals = range_partition_aggregate(
+        df, order_cols, F.sum(value_col), num_partitions
+    )
     value_type = dict(with_pid.dtypes)[value_col]
     offsets, acc = {}, None
     for pid in sorted(totals):
@@ -141,7 +155,7 @@ def global_running_sum(
     )
     w = (
         Window.partitionBy("__pid")
-        .orderBy(*cols)
+        .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     # Sequential SUM(...) OVER semantics: the running sum is NULL only

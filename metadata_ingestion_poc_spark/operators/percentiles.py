@@ -1,33 +1,42 @@
-"""Distributed exact percentiles (rank-based, shuffle-only).
+"""Distributed exact percentiles (SQL ``percentile_cont``, no object-agg).
 
 Spark's built-in ``percentile`` is an ObjectHashAggregate whose buffer
 holds EVERY (value → count) of a group on one executor — at 100 TB a
 single hot group OOMs, and even locally the per-group merge is a
-single-threaded sort. This operator computes the same continuous
-percentile (SQL ``percentile_cont`` interpolation, identical to
-Spark's and DuckDB's) out of distributed primitives only:
+single-threaded sort. The operators here compute the same continuous
+percentile (``pos = p·(n−1)``, linear interpolation between the values
+at ranks ⌊pos⌋ and ⌊pos⌋+1, identical to Spark's and DuckDB's) out of
+distributed primitives only, by one of three algorithms:
 
-1. ``groupBy(group, value).count()``            — one shuffle, combiner
-2. running rank per group via a value-ordered window — one shuffle
-3. per-group totals + the tiny (group × percentile) target frame
-4. broadcast range-join: target rank → covering value row
-5. linear interpolation between the two covering values
+1. **Rank window over a (group, value, count) histogram** —
+   ``exact_percentiles``, for discrete / binned / low-cardinality
+   values at any group count: ``groupBy(group, value).count()``
+   collapses duplicates (map-side combine), a value-ordered window
+   gives each distinct value its covering rank range, and a broadcast
+   range join picks the two bracketing values per (group, percentile).
+   The window sorts each group's DISTINCT values in one task, so its
+   limit is distinct-value cardinality per group, not row count.
+2. **Grouped histogram descent** — ``exact_percentile_iterative_grouped``
+   (``exact_percentile_iterative`` is its no-group case), for
+   near-unique values where the histogram collapses nothing: every
+   group's bracketing ranks descend together through equal-width
+   histograms, one scan aggregate per round, O(log_bins n) rounds,
+   driver state one interval per (group, rank), no sort of a whole
+   group anywhere.
+3. **Range-offset rank lookup** — ``exact_percentiles_continuous``, for
+   ONE global near-unique column: the range-partitioned scan of
+   ``indexing.range_partition_aggregate`` yields per-partition counts,
+   so each global rank maps to (partition, offset) and only the
+   bracketing rows are collected: two driver collects.
 
-No state ever exceeds one (group, distinct-value) row; every stage is
-a plain shuffle Catalyst/AQE can plan. Cost: two shuffles of the
-distinct-value table instead of one object-agg — strictly better
-whenever values-per-group is large (the case that matters).
+``exact_percentiles_bounded`` is the driver-side finish over a collected
+histogram, for several bounded-distinct columns with no group: one
+job, interpolated on the driver.
 
-Scale bound, stated honestly: the running-rank window sorts each
-group's DISTINCT (value, count) rows in one task. Raw row count per
-group is irrelevant (the first aggregate collapses duplicates), so
-the limit is distinct-value cardinality per group — fine for priced /
-binned / integer domains at any corpus size. For a truly continuous
-column whose distincts ≈ rows, ``exact_percentile_iterative`` below
-is the scale path: histogram-descent selection, O(log_bins n) scan
-aggregates, constant driver memory, no sort anywhere. The object-agg
-both replace hits the same wall earlier and in memory instead of in
-a spillable sort.
+Every entry point checks its percentiles with ``_check_percentiles``
+before any job runs, and the Python-side rank bracket is ``_bracket``;
+``exact_percentiles`` writes the same bracket as Column expressions
+because it runs inside the plan.
 """
 
 from __future__ import annotations
@@ -35,6 +44,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .indexing import range_partition_aggregate
+
+
+def _check_percentiles(percentiles: dict[str, float]) -> None:
+    """Reject an empty request and any p outside [0, 1] (NaN included)."""
+    if not percentiles:
+        raise ValueError("need at least one percentile")
+    for name, p in percentiles.items():
+        if not 0.0 <= p <= 1.0:
+            raise ValueError(f"percentile {name}={p} must be in [0, 1]")
+
+
+def _bracket(p: float, n: int) -> tuple[int, int, float]:
+    """(r_lo, r_hi, frac) for percentile p of n sorted values: the
+    0-indexed ranks around pos = p·(n−1) and the interpolation weight,
+    so the percentile is v[r_lo] + frac·(v[r_hi] − v[r_lo])."""
+    pos = float(p) * (n - 1)
+    r_lo = int(pos)
+    return r_lo, min(r_lo + 1, n - 1), pos - r_lo
 
 
 def exact_percentile_iterative(
@@ -45,97 +74,15 @@ def exact_percentile_iterative(
     direct_threshold: int = 100_000,
     max_rounds: int = 8,
 ) -> float:
-    """Exact continuous percentile of one column by iterative selection.
-
-    The scale path for the case ``exact_percentiles`` documents as its
-    limit: a continuous column whose per-group distinct count ≈ row
-    count. Classic distributed selection — each round histograms the
-    candidate interval into `bins` equal-width buckets (one
-    distributed aggregate; driver sees only `bins` counts), descends
-    into the bucket(s) containing the target rank(s), and stops when
-    few enough rows remain to select exactly. Rounds are O(log_bins n)
-    — 100 TB of doubles needs ~4 rounds of one scan-agg each, constant
-    driver memory, no sort anywhere.
-
-    Returns the same percentile_cont interpolation as the built-in
-    (verified differentially in tests).
-    """
-    if not 0.0 <= p <= 1.0:
-        raise ValueError(f"p must be in [0,1], got {p}")
-    v = F.col(value_col).cast("double")
-    base = df.filter(v.isNotNull()).select(v.alias("v"))
-
-    row = base.agg(
-        F.count("v").alias("n"), F.min("v").alias("lo"), F.max("v").alias("hi")
-    ).first()
-    n, lo, hi = row["n"], row["lo"], row["hi"]
-    if n == 0:
+    """Exact continuous percentile of one column: the grouped histogram
+    descent with no group columns. Raises ValueError when the column
+    holds no non-null value."""
+    rows = exact_percentile_iterative_grouped(
+        df, [], value_col, p, bins, direct_threshold, max_rounds
+    ).collect()
+    if not rows:
         raise ValueError("no non-null values")
-    pos = p * (n - 1)
-    r_lo, r_hi = int(pos // 1), min(int(pos // 1) + 1, n - 1)
-    frac = pos - (pos // 1)
-
-    def kth(rank: int, lo: float, hi: float, skipped: int) -> float:
-        """Value at 0-indexed `rank` via histogram descent.
-
-        Invariant each round: `skipped` == #{v < lo}; the rank-th value
-        lies in [lo, hi]. One distributed aggregate per round; the
-        driver holds only `bins` counts.
-        """
-        for _ in range(max_rounds):
-            remaining = rank - skipped
-            width = (hi - lo) / bins
-            if width <= 0.0:
-                # interval collapsed to one double value: every
-                # remaining candidate equals lo, so return it directly
-                # — the duplicate-dominated case (e.g. p99 of a column
-                # that is one value ~everywhere) must not fall through
-                # to a rank+1-row driver collect
-                return lo
-            bucket = F.least(
-                F.lit(bins - 1),
-                F.floor((F.col("v") - F.lit(lo)) / F.lit(width)).cast("int"),
-            )
-            hist = {
-                r["b"]: r["c"]
-                for r in base.filter(
-                    (F.col("v") >= lo) & (F.col("v") <= hi)
-                )
-                .groupBy(bucket.alias("b"))
-                .agg(F.count(F.lit(1)).alias("c"))
-                .collect()
-            }
-            if sum(hist.values()) <= direct_threshold:
-                break
-            acc = 0
-            target_bin = bins - 1
-            for b in range(bins):
-                c = hist.get(b, 0)
-                if acc + c > remaining:
-                    target_bin = b
-                    break
-                acc += c
-            skipped += acc
-            new_hi = (
-                lo + (target_bin + 1) * width if target_bin < bins - 1 else hi
-            )
-            # bucket b < target holds only values < its upper edge, so
-            # skipped stays exactly #{v < new lo}; the last bucket is
-            # closed on top (floor clamps), so the rank can't escape.
-            lo, hi = lo + target_bin * width, min(new_hi, hi)
-        # exact finish on the (now small) interval
-        remaining = rank - skipped
-        vals = (
-            base.filter((F.col("v") >= lo) & (F.col("v") <= hi))
-            .orderBy("v")
-            .limit(remaining + 1)
-            .collect()
-        )
-        return vals[remaining]["v"]
-
-    v_lo = kth(r_lo, lo, hi, 0)
-    v_hi = v_lo if r_hi == r_lo or frac == 0.0 else kth(r_hi, lo, hi, 0)
-    return float(v_lo + frac * (v_hi - v_lo))
+    return rows[0][0]
 
 
 def exact_percentile_iterative_grouped(
@@ -150,31 +97,33 @@ def exact_percentile_iterative_grouped(
 ) -> DataFrame:
     """Grouped continuous percentile by simultaneous histogram descent.
 
-    The grouped twin of ``exact_percentile_iterative``: ALL groups
-    descend together — each round is ONE distributed aggregate
-    (`groupBy(task, bucket)`) over the rows still inside any group's
-    candidate interval, driver state is one (lo, hi, skipped) triple
-    per outstanding rank task (≤ 2 × #groups — the same boundedness
-    any grouped report already assumes), and unresolved tasks narrow
-    by ~bins× per round. The exact finish for every resolved task runs
-    as one windowed job over ≤ direct_threshold rows per task — no
-    value collect, no per-group object buffer, no one-task sort over a
-    whole group.
+    The scale path for the case ``exact_percentiles`` documents as its
+    limit: a continuous column whose per-group distinct count ≈ row
+    count. Classic distributed selection — ALL groups descend together:
+    each round is ONE distributed aggregate (`groupBy(task, bucket)`)
+    that histograms every outstanding rank task's candidate interval
+    into `bins` equal-width buckets, and each task descends into the
+    bucket holding its rank. Driver state is one (lo, hi, skipped)
+    triple per task (≤ 2 × #groups — the same boundedness any grouped
+    report already assumes); tasks narrow by ~bins× per round, so 100 TB
+    of doubles needs ~4 rounds. A task whose interval collapses to one
+    value takes that value directly; the others finish in one windowed
+    job over ≤ direct_threshold rows per task — no value collect, no
+    per-group object buffer, no one-task sort over a whole group.
 
-    Returns one row per group: group_cols + `out_col` (percentile_cont
-    interpolation, differentially tested against the built-in).
+    ``group_cols=[]`` is one global group. Returns one row per group:
+    group_cols + `out_col` (percentile_cont interpolation,
+    differentially tested against the built-in).
     """
-    if not 0.0 <= p <= 1.0:
-        raise ValueError(f"p must be in [0,1], got {p}")
-    if not group_cols:
-        raise ValueError("need at least one group column")
+    _check_percentiles({"p": p})
     v = F.col(value_col).cast("double")
     base = df.filter(v.isNotNull()).select(
         *[F.col(c) for c in group_cols], v.alias("__v")
     )
     # unit-separator join + null marker: distinct group tuples must map
     # to distinct keys ("a","b" vs "ab",""; concat_ws silently SKIPS
-    # nulls, so (x, null) and (null, x) would otherwise collide)
+    # nulls, so (x, null) and (null, x) would otherwise collide). No
+    # group columns give one constant key.
     gkey = F.concat_ws(
         "\x1f",
         *[
@@ -194,10 +143,7 @@ def exact_percentile_iterative_grouped(
     # task id = group key + which bracketing rank ("L"/"H")
     state: dict[tuple[str, str], dict] = {}
     for r in head.collect():  # one row per group — bounded driver data
-        pos = p * (r["n"] - 1)
-        r_lo = int(pos // 1)
-        r_hi = min(r_lo + 1, r["n"] - 1)
-        frac = pos - (pos // 1)
+        r_lo, r_hi, frac = _bracket(p, r["n"])
         meta[r["__g"]] = {
             "frac": frac,
             "cols": tuple(r[f"__gc_{c}"] for c in group_cols),
@@ -212,100 +158,107 @@ def exact_percentile_iterative_grouped(
 
     spark = df.sparkSession
 
-    def bounds_df(keys):
-        rows = [
-            (g, which, state[(g, which)]["lo"], state[(g, which)]["hi"])
-            for (g, which) in keys
-        ]
-        return spark.createDataFrame(
-            rows, "__g string, __which string, __lo double, __hi double"
+    def candidates(keys) -> DataFrame:
+        """The rows inside each task's [lo, hi], one copy per task,
+        beside the task's rank within its interval (`__want`)."""
+        bounds = spark.createDataFrame(
+            [
+                (*key, st["lo"], st["hi"], st["rank"] - st["skipped"])
+                for key, st in state.items()
+                if key in keys
+            ],
+            "__g string, __which string, __lo double, __hi double, "
+            "__want long",
+        )
+        return base.join(F.broadcast(bounds), "__g").filter(
+            (F.col("__v") >= F.col("__lo")) & (F.col("__v") <= F.col("__hi"))
         )
 
-    open_keys = set(state)
+    # A task whose interval has collapsed to one value holds only rows
+    # equal to lo, so lo is its value: it needs no further round and
+    # stays out of the exact finish, whose per-task window would sort
+    # every one of those rows in one task (the duplicate-dominated
+    # case, e.g. p99 of a column that is one value almost everywhere).
+    picked: dict[tuple[str, str], float] = {}
+
+    def still_open(keys) -> set:
+        live = set()
+        for key in keys:
+            st = state[key]
+            if st["lo"] == st["hi"]:
+                picked[key] = st["lo"]
+            else:
+                live.add(key)
+        return live
+
+    open_keys = still_open(state)
     for _ in range(max_rounds):
         if not open_keys:
             break
-        b = F.broadcast(bounds_df(open_keys))
         width = F.col("__hi") - F.col("__lo")
-        bucket = F.least(
-            F.lit(bins - 1),
-            F.floor((F.col("__v") - F.col("__lo")) / (width / bins)).cast(
-                "int"
-            ),
-        )
         hist_rows = (
-            base.join(b, "__g")
-            .filter(
-                (F.col("__v") >= F.col("__lo"))
-                & (F.col("__v") <= F.col("__hi"))
-            )
+            candidates(open_keys)
             .withColumn(
                 "__b",
-                F.when(width > 0.0, bucket).otherwise(F.lit(0)),
+                F.least(
+                    F.lit(bins - 1),
+                    F.floor(
+                        (F.col("__v") - F.col("__lo")) / (width / bins)
+                    ).cast("int"),
+                ),
             )
             .groupBy("__g", "__which", "__b")
-            .agg(F.count(F.lit(1)).alias("c"))
+            .agg(
+                F.count(F.lit(1)).alias("c"),
+                F.min("__v").alias("lo"),
+                F.max("__v").alias("hi"),
+            )
             .collect()  # ≤ tasks × bins rows — bounded driver data
         )
-        hists: dict[tuple[str, str], dict[int, int]] = {}
+        hists: dict[tuple[str, str], dict[int, tuple]] = {}
         for r in hist_rows:
-            hists.setdefault((r["__g"], r["__which"]), {})[r["__b"]] = r["c"]
+            hists.setdefault((r["__g"], r["__which"]), {})[r["__b"]] = (
+                r["c"], r["lo"], r["hi"]
+            )
         next_open = set()
         for key in open_keys:
             st = state[key]
             hist = hists.get(key, {})
-            in_range = sum(hist.values())
-            width_f = (st["hi"] - st["lo"]) / bins
-            if in_range <= direct_threshold or width_f <= 0.0:
-                continue  # resolved: exact finish handles it
+            if sum(c for c, _, _ in hist.values()) <= direct_threshold:
+                continue  # small enough: the exact finish selects it
+            # The bucket index is monotone in the value, so every value
+            # of an earlier bucket lies below the target bucket's min
+            # and every later one above its max: the new interval
+            # [min, max] holds exactly the target bucket's rows, and
+            # skipped stays #{v < lo}. A bucket of one distinct value
+            # collapses the interval.
             remaining = st["rank"] - st["skipped"]
             acc = 0
-            target = bins - 1
-            for bkt in range(bins):
-                c = hist.get(bkt, 0)
+            for bkt in sorted(hist):
+                c, b_lo, b_hi = hist[bkt]
                 if acc + c > remaining:
-                    target = bkt
                     break
                 acc += c
             st["skipped"] += acc
-            new_hi = (
-                st["lo"] + (target + 1) * width_f
-                if target < bins - 1
-                else st["hi"]
-            )
-            st["lo"] = st["lo"] + target * width_f
-            st["hi"] = min(new_hi, st["hi"])
+            st["lo"], st["hi"] = b_lo, b_hi
             next_open.add(key)
-        open_keys = next_open
+        open_keys = still_open(next_open)
 
-    # exact finish: ONE windowed job over all tasks' small intervals
-    fin = F.broadcast(bounds_df(state.keys()))
-    w = Window.partitionBy("__g", "__which").orderBy("__v")
-    ranked = (
-        base.join(fin, "__g")
-        .filter(
-            (F.col("__v") >= F.col("__lo")) & (F.col("__v") <= F.col("__hi"))
+    # exact finish: ONE windowed job over the remaining tasks' small
+    # intervals
+    finish = state.keys() - picked.keys()
+    if finish:
+        w = Window.partitionBy("__g", "__which").orderBy("__v")
+        picked.update(
+            {
+                (r["__g"], r["__which"]): r["__v"]
+                for r in candidates(finish)
+                .withColumn("__rn", F.row_number().over(w) - 1)
+                .filter(F.col("__rn") == F.col("__want"))
+                .select("__g", "__which", "__v")
+                .collect()  # one row per task — bounded driver data
+            }
         )
-        .withColumn("__rn", F.row_number().over(w) - 1)
-    )
-    want = spark.createDataFrame(
-        [
-            (g, which, st["rank"] - st["skipped"])
-            for (g, which), st in state.items()
-        ],
-        "__g string, __which string, __want long",
-    )
-    picked = {
-        (r["__g"], r["__which"]): r["__v"]
-        for r in ranked.join(
-            F.broadcast(want),
-            (ranked["__g"] == want["__g"])
-            & (ranked["__which"] == want["__which"])
-            & (F.col("__rn") == F.col("__want")),
-        )
-        .select(ranked["__g"], ranked["__which"], "__v")
-        .collect()  # one row per task — bounded driver data
-    }
     out_rows = []
     for g, m in meta.items():
         v_lo = picked[(g, "L")]
@@ -341,9 +294,7 @@ def exact_percentiles(
     (map-side combine), and every internal branch of this operator
     then re-reads the histogram, not the raw table.
     """
-    if not percentiles:
-        raise ValueError("need at least one percentile")
-    g = [F.col(c) for c in group_cols]
+    _check_percentiles(percentiles)
     v = F.col(value_col)
 
     # 1. distinct-value counts (map-side combine collapses duplicates);
@@ -461,47 +412,30 @@ def exact_percentiles_continuous(
     becomes a single-partition sort of the whole column — the exact
     cliff the operator exists to avoid. This variant is the
     continuous-path twin: a distributed range-partitioned sort
-    (operators/indexing.py global_row_number, which already carries
-    the checkpoint-before-offsets-collect lineage rule), then a filter
-    to the <= 2·|percentiles| bracketing ranks and a bounded collect —
+    (indexing.range_partition_aggregate, which carries the
+    checkpoint-before-offsets-collect lineage rule), then a filter to
+    the <= 2·|percentiles| bracketing ranks and a bounded collect —
     interpolation v_lo + frac·(v_hi − v_lo) happens on those few rows,
     never on the column.
 
     tiebreak_cols must extend value_col to a total order (any unique
     key): tie ORDER among equal values is irrelevant to the value at a
-    rank, but global_row_number requires it for determinism. NULL
-    values are excluded (percentile_cont semantics).
+    rank, but the range-partitioned numbering requires it for
+    determinism. NULL values are excluded (percentile_cont semantics).
     """
-    if not percentiles:
-        raise ValueError("need at least one percentile")
-    for name, p in percentiles.items():
-        if not 0.0 <= p <= 1.0:
-            raise ValueError(f"percentile {name}={p} must be in [0, 1]")
+    _check_percentiles(percentiles)
     if not tiebreak_cols:
         raise ValueError("need a tiebreak column for a total order")
-    cols = [F.col(value_col), *[F.col(c) for c in tiebreak_cols]]
-    vals = df.filter(F.col(value_col).isNotNull()).select(
-        value_col, *tiebreak_cols
+    order = [value_col, *tiebreak_cols]
+    vals = df.filter(F.col(value_col).isNotNull()).select(*order)
+    # TWO collects: (1) the shared range scan's per-partition counts,
+    # which also yield n; (2) join the broadcast offsets back and
+    # filter to the bracketing global ranks. Calling global_row_number
+    # instead would number every row before the filter — on a
+    # driver-latency budget, job COUNT is the cost, not rows.
+    with_pid, counts = range_partition_aggregate(
+        vals, order, F.count(F.lit(1))
     )
-    # TWO jobs total: (1) range-sort, checkpoint (the mandatory
-    # lineage cut — indexing.py's AQE rule), and collect per-partition
-    # counts, which also yields n; (2) join the broadcast offsets back
-    # and filter to the bracketing global ranks. Inlining the
-    # global_row_number skeleton instead of calling it avoids its
-    # separate count/checkpoint round-trips — on a driver-latency
-    # budget, job COUNT is the cost, not rows.
-    with_pid = (
-        vals.repartitionByRange(*cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    counts = {
-        r["__pid"]: r["c"]
-        for r in with_pid.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
     n = sum(counts.values())
     if n == 0:
         raise ValueError("no non-null values to take percentiles of")
@@ -509,21 +443,16 @@ def exact_percentiles_continuous(
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    want: dict[str, tuple[int, int, float]] = {}
-    ranks: set[int] = set()
-    for name, p in percentiles.items():
-        pos = float(p) * (n - 1)
-        r_lo = int(pos)
-        r_hi = min(r_lo + 1, n - 1)
-        want[name] = (r_lo, r_hi, pos - r_lo)
-        ranks.update((r_lo + 1, r_hi + 1))  # ranks are 1-based
+    want = {name: _bracket(p, n) for name, p in percentiles.items()}
+    # ranks are 1-based
+    ranks = {r + 1 for r_lo, r_hi, _ in want.values() for r in (r_lo, r_hi)}
     offset_df = F.broadcast(
         with_pid.sparkSession.createDataFrame(
             [(pid, off) for pid, off in offsets.items()],
             "__pid int, __offset long",
         )
     )
-    w = Window.partitionBy("__pid").orderBy(*cols)
+    w = Window.partitionBy("__pid").orderBy(*order)
     by_rank = {
         r["__rn"]: r[value_col]
         for r in with_pid.join(offset_df, "__pid")
@@ -566,11 +495,7 @@ def exact_percentiles_bounded(
     exact_percentiles_continuous instead — this one's collect would
     not be bounded there.
     """
-    if not percentiles:
-        raise ValueError("need at least one percentile")
-    for name, p in percentiles.items():
-        if not 0.0 <= p <= 1.0:
-            raise ValueError(f"percentile {name}={p} must be in [0, 1]")
+    _check_percentiles(percentiles)
     if not value_cols:
         raise ValueError("need at least one value column")
     fused = df.select(
@@ -615,9 +540,8 @@ def exact_percentiles_bounded(
 
         cuts = {}
         for name, p in percentiles.items():
-            pos = float(p) * (n - 1)
-            lo, hi = int(pos), min(int(pos) + 1, n - 1)
+            lo, hi, frac = _bracket(p, n)
             v_lo, v_hi = at(lo), at(hi)
-            cuts[name] = v_lo + (pos - lo) * (v_hi - v_lo)
+            cuts[name] = v_lo + frac * (v_hi - v_lo)
         out[c] = cuts
     return out

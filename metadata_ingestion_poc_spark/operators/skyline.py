@@ -14,9 +14,10 @@ Distributed shape (the classic two-phase skyline):
 2. **Global sweep, without a 1-task sort.** Candidates are
    range-partitioned on (x, y); each partition needs the min-y of all
    PRECEDING partitions, which is a bounded per-partition aggregate
-   (one row per partition) joined back broadcast — the same
-   offset-collect trick as operators/indexing.py's global row number.
-   Then the per-partition sweep finishes locally in parallel.
+   (one row per partition) joined back broadcast — the offset-collect
+   scan shared with the global row number
+   (``indexing.range_partition_aggregate``). Then the per-partition
+   sweep finishes locally in parallel.
 
 The sweep rule is exact on DISTINCT points: a preceding point b (in
 (x asc, y asc) order) has b.x < a.x, or b.x = a.x ∧ b.y < a.y; in both
@@ -34,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .indexing import range_partition_aggregate
 
 
 def skyline2d(
@@ -74,19 +77,16 @@ def skyline2d(
     # sweep must also see min-y of all preceding partitions: one row
     # per partition (bounded), prefix-min'd on the driver, broadcast
     # back.
-    ranged = local.repartitionByRange(
-        partitions, F.col(xcol).asc(), F.col(ycol).asc()
-    ).withColumn("__pid", F.spark_partition_id())
-    ranged = ranged.localCheckpoint(eager=False)  # feeds offsets + sweep
-    mins = ranged.groupBy("__pid").agg(F.min(ycol).alias("__my")).collect()
+    ranged, mins = range_partition_aggregate(
+        local, [xcol, ycol], F.min(ycol), partitions
+    )
     prefix: dict[int, float] = {}
     best = None
-    for r in sorted(mins, key=lambda r: r["__pid"]):
-        prefix[r["__pid"]] = best
-        best = r["__my"] if best is None else min(best, r["__my"])
-    spark = df.sparkSession
-    pre = spark.createDataFrame(
-        [(pid, v) for pid, v in prefix.items()],
+    for pid in sorted(mins):
+        prefix[pid] = best
+        best = mins[pid] if best is None else min(best, mins[pid])
+    pre = df.sparkSession.createDataFrame(
+        list(prefix.items()),
         ranged.select(
             F.col("__pid"), F.col(ycol).alias("__pre")
         ).schema,

@@ -11,8 +11,9 @@ array does not shard; the Spark-native shape is:
 2. stop-gram pruning: grams occurring more than ``max_gram_df`` times
    carry no dedup signal but cost O(df²) candidate pairs (same skew
    lever as the shingle index in dedup.py);
-3. candidate pair generation by gram-bucket co-membership (ONE
-   shuffle, groupBy→combinations — never a self-join);
+3. candidate pair generation by gram-bucket co-membership
+   (``dedup.bucket_pairs``: ONE shuffle, groupBy→chunked combinations
+   — never a self-join, and no row above cap² pairs);
 4. diagonal run-merge: a shared span of L tokens appears as L-k+1
    consecutive positions on one (doc_a, doc_b, pa-pb) diagonal, so a
    per-diagonal sorted-array fold (gaps-and-islands, computed inside
@@ -33,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import bucket_pairs
 
 # A gram occurring more often than this is index-pruned. The default is
 # deliberately finite (see dedup.DEFAULT_MAX_SHINGLE_DF for the
@@ -81,44 +84,18 @@ def positional_grams(
 def _occurrence_pairs(
     grams: DataFrame, max_gram_df: int | None
 ) -> DataFrame:
-    """All ((doc,pos), (doc,pos)) occurrence pairs per gram bucket via
-    ONE shuffle: groupBy(gram) → sorted occurrence array → C(m,2)
-    combinations. Rows are unique by (doc, pos), so each occurrence
-    pair appears exactly once (its gram is fixed). sort_array orders
-    by (doc, pos): a.doc <= b.doc, and a.pos < b.pos within a doc.
-
-    The stop-gram df cap is applied HERE, as a bucket-size filter: a
-    gram's df is exactly its member count, so pruning inside the one
-    groupBy the pair generation already needs costs nothing — a
-    window-count pre-pass would shuffle (and sort) the whole index on
-    the same key a second time for no extra information."""
-    members = grams.groupBy("g").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("doc"), F.col("pos")))
-        ).alias("ms")
-    )
-    cap = (
-        (F.size("ms") <= max_gram_df)
-        if max_gram_df is not None
-        else F.lit(True)
-    )
-    members = members.filter((F.size("ms") >= 2) & cap)
-    ms = F.col("ms")
-    return members.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(ms) - 2),
-                    lambda i: F.transform(
-                        F.sequence(i + 1, F.size(ms) - 1),
-                        lambda j: F.struct(
-                            F.element_at(ms, (i + 1).cast("int")).alias("a"),
-                            F.element_at(ms, (j + 1).cast("int")).alias("b"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
+    """(a, b) occurrence structs (doc, pos) of every pair of
+    occurrences sharing a gram, from ``dedup.bucket_pairs`` over the
+    gram buckets. Rows are unique by (doc, pos), so each occurrence
+    pair appears once (its gram is fixed), ordered by (doc, pos):
+    a.doc <= b.doc, and a.pos < b.pos within a doc. A gram's df is its
+    member count, so the stop-gram cap is the bucket-size cap."""
+    return bucket_pairs(
+        grams,
+        ["g"],
+        F.struct("doc", "pos"),
+        lambda x, y: f"named_struct('a', {x}, 'b', {y})",
+        max_members=max_gram_df,
     )
 
 
@@ -190,12 +167,12 @@ def duplicated_spans(
         _occurrence_pairs(grams, max_gram_df)
         # sort_array orders by (doc, pos), so a.doc <= b.doc always;
         # cross-doc filter leaves strictly doc_a < doc_b.
-        .filter(F.col("p.a.doc") != F.col("p.b.doc"))
+        .filter(F.col("a.doc") != F.col("b.doc"))
         .select(
-            F.col("p.a.doc").alias("doc_a"),
-            F.col("p.b.doc").alias("doc_b"),
-            F.col("p.a.pos").alias("pa"),
-            (F.col("p.a.pos") - F.col("p.b.pos")).alias("d"),
+            F.col("a.doc").alias("doc_a"),
+            F.col("b.doc").alias("doc_b"),
+            F.col("a.pos").alias("pa"),
+            (F.col("a.pos") - F.col("b.pos")).alias("d"),
         )
     )
     diag = _diagonal_spans(pairs, ["doc_a", "doc_b"], k, min_run)
@@ -235,11 +212,11 @@ def self_repeated_spans(
     grams = positional_grams(docs, id_col=id_col, k=k)
     pairs = (
         _occurrence_pairs(grams, max_gram_df)
-        .filter(F.col("p.a.doc") == F.col("p.b.doc"))
+        .filter(F.col("a.doc") == F.col("b.doc"))
         .select(
-            F.col("p.a.doc").alias("doc"),
-            F.col("p.a.pos").alias("pa"),
-            (F.col("p.b.pos") - F.col("p.a.pos")).alias("d"),
+            F.col("a.doc").alias("doc"),
+            F.col("a.pos").alias("pa"),
+            (F.col("b.pos") - F.col("a.pos")).alias("d"),
         )
     )
     diag = _diagonal_spans(pairs, ["doc"], k, min_run)

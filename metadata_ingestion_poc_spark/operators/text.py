@@ -527,7 +527,7 @@ def tfidf_cosine_pairs(
     )
     # Lineage cut: `w` feeds the norm aggregate and BOTH sides of the
     # pair join — without a cut the tokenize/explode/count chain runs
-    # three times (the round-5 exact_percentiles lesson).
+    # once per consumer, three times.
     w = w.localCheckpoint(eager=False)
     norms = w.groupBy("doc_id").agg(
         F.sqrt(

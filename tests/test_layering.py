@@ -26,10 +26,17 @@
   those modules outside the two, whose other read resolves the record,
   and no ``staging_dir``/``commit_swap`` call outside ``staging.py``
   but in ``rewrite_table``.
-- One bucket-pair generator: the chunked C(m,2) explode is written
-  only in ``dedup.bucket_pairs``, and no module outside
+- One bucket-pair generator: the chunked C(m,2) explode and the
+  inner ``sequence(i + 1, …)`` loop of any combinations explode are
+  written only in ``dedup.bucket_pairs``, and no module outside
   ``operators/dedup.py`` names the pair-generation internals
   (``PAIR_BUCKET_CAP``, ``chunked_members``, ``chunk_pairs_sql``).
+- One range-offset scan: the ``__pid`` partition-id tag is written
+  only in ``indexing.range_partition_aggregate``, whose checkpoint
+  before the per-partition collect every offset-collect operator
+  needs.
+- One percentile bracket: the Python-side rank bracket
+  ``pos = p·(n−1)`` is written in one function of ``percentiles.py``.
 - Tools and tests check the checkout they run from: none names the
   checkout's absolute path, and each tool puts its own checkout first
   on ``sys.path``.
@@ -280,17 +287,20 @@ def test_one_exact_rerank(needle, what):
     )
 
 
-# The chunk fan-out of the C(m,2) explode in ``dedup.bucket_pairs``.
+# The chunk fan-out of the C(m,2) explode in ``dedup.bucket_pairs``,
+# and the inner loop of any C(m,2) explode, in SQL or Column form.
 CHUNK_EXPLODE = "named_struct('ci', ci, 'cj', cj)"
+PAIR_LOOP = "sequence(i + 1, "
 PAIR_INTERNALS = re.compile(r"\b(PAIR_BUCKET_CAP|chunked_members|chunk_pairs_sql)\b")
 
 
 def test_one_bucket_pair_generator():
-    sites = _functions_with_text(CHUNK_EXPLODE)
-    assert sites == {("operators/dedup.py", "bucket_pairs")}, (
-        f"the chunked pair explode is written outside "
-        f"dedup.bucket_pairs: {sorted(sites)}"
-    )
+    for needle in (CHUNK_EXPLODE, PAIR_LOOP):
+        sites = _functions_with_text(needle)
+        assert sites == {("operators/dedup.py", "bucket_pairs")}, (
+            f"a pair explode ({needle!r}) is written outside "
+            f"dedup.bucket_pairs: {sorted(sites)}"
+        )
     named = sorted(
         str(rel)
         for rel, text in _modules()
@@ -299,6 +309,35 @@ def test_one_bucket_pair_generator():
     assert not named, (
         f"modules naming pair-generation internals (call "
         f"dedup.bucket_pairs): {named}"
+    )
+
+
+PID_TAG = "'__pid', F.spark_partition_id()"
+
+
+def test_one_range_offset_scan():
+    sites = _functions_with_text(PID_TAG)
+    assert sites == {("operators/indexing.py", "range_partition_aggregate")}, (
+        f"partitions are tagged for an offset collect outside "
+        f"indexing.range_partition_aggregate: {sorted(sites)}"
+    )
+
+
+# ``pos = p·(n−1)`` as the descent, the global lookup and the
+# driver-side finish each wrote it.
+PERCENTILE_BRACKETS = ("pos = p * (", "pos = float(p) * (")
+
+
+def test_one_percentile_bracket():
+    sites = {
+        site
+        for needle in PERCENTILE_BRACKETS
+        for site in _functions_with_text(needle)
+        if site[0] == "operators/percentiles.py"
+    }
+    assert sites == {("operators/percentiles.py", "_bracket")}, (
+        f"the percentile rank bracket is written outside "
+        f"percentiles._bracket: {sorted(sites)}"
     )
 
 

@@ -106,6 +106,32 @@ def test_rejects_empty_percentiles(spark):
     df = spark.createDataFrame([("a", 1.0)], "g: string, v: double")
     with pytest.raises(ValueError):
         exact_percentiles(df, ["g"], "v", {})
+    for p in (1.5, -0.5):
+        with pytest.raises(ValueError, match=r"\[0, 1\]"):
+            exact_percentiles(df, ["g"], "v", {"q": p})
+
+
+@pytest.mark.parametrize("p", [1.5, -0.5, float("nan")])
+def test_every_entry_point_checks_p_before_planning(p):
+    """A p outside [0, 1] fails before the frame is touched: None
+    stands in for it."""
+    from metadata_ingestion_poc_spark.operators.percentiles import (
+        exact_percentile_iterative,
+        exact_percentile_iterative_grouped,
+        exact_percentiles_bounded,
+        exact_percentiles_continuous,
+    )
+
+    calls = [
+        lambda: exact_percentiles(None, ["g"], "v", {"q": p}),
+        lambda: exact_percentile_iterative(None, "v", p),
+        lambda: exact_percentile_iterative_grouped(None, ["g"], "v", p),
+        lambda: exact_percentiles_continuous(None, "v", {"q": p}, ["id"]),
+        lambda: exact_percentiles_bounded(None, ["v"], {"q": p}),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match=r"\[0, 1\]"):
+            call()
 
 
 def test_iterative_matches_builtin_continuous(spark):
@@ -146,6 +172,7 @@ def test_iterative_duplicate_heavy_and_bounds(spark):
 def test_iterative_duplicate_dominated_stays_bounded(spark):
     from metadata_ingestion_poc_spark.operators.percentiles import (
         exact_percentile_iterative,
+        exact_percentile_iterative_grouped,
     )
 
     # one value dominates: high percentiles land inside a collapsed
@@ -165,6 +192,57 @@ def test_iterative_duplicate_dominated_stays_bounded(spark):
     assert exact_percentile_iterative(
         one, "v", 0.75, bins=16, direct_threshold=10
     ) == pytest.approx(3.5)
+    # grouped: group "d" is dominated by one value, next to the
+    # continuous group "c"; every task of "d" collapses to 7.0
+    grouped = spark.range(0, 20_000).selectExpr(
+        "IF(id % 2 = 0, 'c', 'd') AS g",
+        "CASE WHEN id % 2 = 0 THEN CAST(xxhash64(id) AS DOUBLE) / 9.3e18 "
+        "WHEN id < 19800 THEN 7.0 ELSE CAST(id AS DOUBLE) END AS v",
+    )
+    for p in (0.5, 0.9, 0.99):
+        got = {
+            r.g: r.q
+            for r in exact_percentile_iterative_grouped(
+                grouped, ["g"], "v", p, bins=16, direct_threshold=50
+            ).collect()
+        }
+        ref = {
+            r.g: r.q
+            for r in grouped.groupBy("g")
+            .agg(F.percentile("v", F.lit(p)).alias("q"))
+            .collect()
+        }
+        assert got.keys() == ref.keys()
+        for k in ref:
+            assert got[k] == pytest.approx(ref[k], abs=1e-12), (p, k)
+
+
+def test_iterative_collapsed_tasks_skip_the_exact_finish(spark, monkeypatch):
+    """A task whose interval collapses to one value takes it directly:
+    the exact finish's window, which would sort every row of that
+    value in one task, never runs for it."""
+    from metadata_ingestion_poc_spark.operators import percentiles
+
+    class NoFinish:
+        @staticmethod
+        def partitionBy(*cols):
+            raise AssertionError("a collapsed task reached the exact finish")
+
+    monkeypatch.setattr(percentiles, "Window", NoFinish)
+    # "d": 9,900 of 10,000 values are 7.0; "e": one value throughout
+    df = spark.range(0, 20_000).selectExpr(
+        "IF(id % 2 = 0, 'e', 'd') AS g",
+        "CASE WHEN id % 2 = 0 THEN -2.5 "
+        "WHEN id < 19800 THEN 7.0 ELSE CAST(id AS DOUBLE) END AS v",
+    )
+    for p in (0.5, 0.9):
+        got = {
+            r.g: r.q
+            for r in percentiles.exact_percentile_iterative_grouped(
+                df, ["g"], "v", p, bins=16, direct_threshold=50
+            ).collect()
+        }
+        assert got == {"d": 7.0, "e": -2.5}, p
 
 
 def test_iterative_grouped_matches_builtin(spark, sf_dir):
@@ -286,9 +364,11 @@ def test_weighted_mode_null_group_kept(spark):
 
 
 def test_single_filescan_plan(spark, sf_dir):
-    """The round-5 judge found 9 FileScans of the raw table in q14's
-    plan (every internal branch re-derived the collapsed histogram).
-    The lineage cut in exact_percentiles must hold it at exactly 1."""
+    """Every internal branch of exact_percentiles (the rank window,
+    the totals, one target arm per percentile, both rank lookups)
+    reads the collapsed histogram; without the lineage cut each one
+    re-derives it, and q14's plan scanned the raw table 9 times. The
+    cut must hold it at one scan."""
     from metadata_ingestion_poc_spark.catalog import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
